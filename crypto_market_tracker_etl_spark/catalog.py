@@ -13,9 +13,25 @@ with ``spark.sql.legacy.parquet.nanosAsLong=true`` (scan-level,
 pushdown-safe) and convert ns→µs with integer division — the same truncation
 DuckDB applies casting TIMESTAMP_NS to TIMESTAMP — so oracle comparisons line
 up exactly either way. ``load_table`` branches on the observed dtype.
+
+Schema cache: ``spark.read.parquet(path)`` launches a Spark job that infers
+the schema from the file footers, on every call. A dashboard session re-builds
+the same views over the same files all the time, so ``read_parquet`` infers
+each file's ``StructType`` once and reads with ``spark.read.schema(s)``, which
+launches no job. The cache key is the absolute path, the file's
+``st_mtime_ns`` and ``st_size``, and the ``nanosAsLong`` setting (it decides
+whether a TIMESTAMP(NANOS) column infers as bigint): a file rewritten at the
+same path, or read under the other setting, is inferred afresh. Only the
+schema is cached, never the DataFrame: two loads of one table stay
+independent relations with their own attribute ids, so a self-join of them
+resolves without ambiguity. A path ``os.stat`` cannot see (a remote URI, or a
+missing file, which raises Spark's PATH_NOT_FOUND) is inferred on every call.
 """
 
 from __future__ import annotations
+
+import functools
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -81,10 +97,33 @@ DAILY_METRICS_SCHEMA = T.StructType(
 )
 
 
+@functools.lru_cache(maxsize=256)
+def _schema_slot(path: str, mtime_ns: int, size: int, nanos_as_long: str) -> list:
+    """One cache entry per key, empty until ``read_parquet`` fills it. The
+    session stays out of the key, so an entry serves every session."""
+    return []
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the schema inferred once per version
+    of the file (see the module docstring for the key)."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        schema = spark.read.parquet(path).schema
+    else:
+        nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+        slot = _schema_slot(os.path.abspath(path), st.st_mtime_ns, st.st_size, nanos)
+        if not slot:
+            slot.append(spark.read.parquet(path).schema)
+        schema = slot[0]
+    return spark.read.schema(schema).parquet(path)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table, normalizing types for engine use."""
     tune_for_testdata(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr(_NS_LONG_TO_TS.format(col="ts")))
     return df

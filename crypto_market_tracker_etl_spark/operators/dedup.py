@@ -414,8 +414,12 @@ def set_similarity_join(
     prefix filtering guarantees NONE while still never enumerating all
     pairs.
 
-    ``tokens``: (doc_id, w) DISTINCT membership rows. Three PPJoin filters,
-    all zero-false-negative by construction:
+    ``tokens``: (doc_id, w) membership rows. A repeated row is the same
+    set element, never a second one: the arrays are grouped with
+    ``collect_set`` (a caller's ``sets`` pass through ``array_distinct``)
+    and prefix positions are dense ranks, so duplicates change neither the
+    sizes, the prefixes nor J. Three PPJoin filters, all
+    zero-false-negative by construction:
 
     1. PREFIX filter — order each doc's tokens by global rarity
        ((corpus freq, token); the order only has to be CONSISTENT, so no
@@ -471,17 +475,21 @@ def set_similarity_join(
     33.5M intermediate rows for 481k candidates / 6k true pairs at
     sf0.1 — then paid a pair-grain aggregate; the exact overlap is now
     ``size(array_intersect(ws_a, ws_b))`` over two array lookups per
-    pair (same J by construction: membership rows are distinct, so the
-    grouped arrays are sets). At 100 TB the verify joins shuffle one
-    array row per doc side instead of |doc| token rows."""
+    pair (same J by construction: the grouped arrays are sets). At 100 TB
+    the verify joins shuffle one array row per doc side instead of |doc|
+    token rows."""
     if persist:
         tokens = tokens.persist()
     if sets is None:
-        sets = tokens.groupBy("doc_id").agg(F.collect_list("w").alias("ws"))
+        sets = tokens.groupBy("doc_id").agg(F.collect_set("w").alias("ws"))
+    else:
+        sets = sets.select("doc_id", F.array_distinct("ws").alias("ws"))
     sizes = sets.select("doc_id", F.size("ws").alias("sz"))
     freq = tokens.groupBy("w").agg(F.count(F.lit(1)).alias("freq"))
     ordered = tokens.join(freq, "w")
-    rn = F.row_number().over(
+    # dense_rank: a duplicated (doc_id, w) row takes its element's position
+    # instead of pushing the doc's later elements out of the prefix.
+    rn = F.dense_rank().over(
         Window.partitionBy("doc_id").orderBy("freq", "w")
     )
     # ceil() over double(tau)·sz OVERSHOOTS when tau·sz is an exact integer

@@ -23,7 +23,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .catalog import load_table
+from .catalog import load_table, read_parquet
 from .functions.hashing import hex_prefix_to_long_sql
 from .operators.change import change_vs_asof, lag_change
 from .operators.latest import latest_per_key
@@ -394,7 +394,7 @@ def q_ts_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .session import tune_for_testdata
 
     tune_for_testdata(spark)
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    raw = read_parquet(spark, f"{sf_dir}/events.parquet")
     if dict(raw.dtypes)["ts"] == "bigint":  # TIMESTAMP(NANOS) read as long
         ms = F.expr("ts div 1000000")
     else:  # native µs timestamp; session tz is UTC so the cast is identity

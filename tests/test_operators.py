@@ -2336,6 +2336,50 @@ def test_setsim_prefix_length_float_boundary(spark):
     assert got == {(0, 1): 0.07}
 
 
+def test_setsim_keeps_set_semantics_with_duplicate_rows(spark):
+    """Repeated (doc_id, w) rows, and repeated elements in a caller's
+    ``sets`` arrays, are one set element: duplicates must neither inflate a
+    doc's size (skewing J down) nor take prefix positions (pushing shared
+    elements out of the prefix). Compared against brute-force Jaccard over
+    the distinct sets, on both the grouped and the ``sets=`` path."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from crypto_market_tracker_etl_spark.operators.dedup import (
+        set_similarity_join,
+    )
+
+    rnd = random.Random(7)
+    docs = [
+        rnd.sample(range(14), rnd.randint(2, 7)) for _ in range(12)
+    ] + [[0, 1, 2, 3], [0, 1, 2, 4], [5, 6, 7, 8, 9], [5, 6, 7, 8, 9, 10]]
+    rows = [
+        (i, f"e{e}") for i, d in enumerate(docs) for e in d
+        for _ in range(rnd.choice([1, 1, 2, 4]))
+    ]
+    assert len(rows) > sum(map(len, docs))  # duplicates are present
+    tokens = spark.createDataFrame(rows, "doc_id long, w string")
+    sets = tokens.groupBy("doc_id").agg(F.collect_list("w").alias("ws"))
+    for tau in (0.3, 0.5, 0.8):
+        want = {}
+        for a in range(len(docs)):
+            for b in range(a + 1, len(docs)):
+                sa, sb = set(docs[a]), set(docs[b])
+                j = len(sa & sb) / len(sa | sb)
+                if j >= tau:
+                    want[(a, b)] = round(j, 4)
+        assert want  # some pairs qualify at every tau
+        for kw in ({}, {"sets": sets}):
+            got = {
+                (r["doc_a"], r["doc_b"]): r["jaccard"]
+                for r in set_similarity_join(
+                    tokens, tau, persist=False, **kw
+                ).collect()
+            }
+            assert got == want, (tau, sorted(kw), got, want)
+
+
 def test_triangle_stats_rejects_out_of_range_ids(spark):
     """The packed (deg, id) rank needs ids in [0, 2^32); violating the
     precondition must FAIL LOUD (assert_true), never silently drop edges
