@@ -57,15 +57,21 @@ def exact_dedup(
 def word_shingles(text: Column, n: int = 3) -> Column:
     """Distinct n-word shingles of normalized text; whole text when shorter
     than n words (so short docs still get a signature)."""
-    toks = F.split(normalize_ws(text), " ")
-    idx = F.sequence(F.lit(1), F.size(toks) - (n - 1))
-    parts = lambda i: [F.element_at(toks, i + j) for j in range(n)]  # noqa: E731
-    shingled = F.transform(idx, lambda i: F.concat_ws(" ", *parts(i)))
-    return F.array_distinct(
-        F.when(F.size(toks) >= n, shingled).otherwise(
-            F.array(F.concat_ws(" ", toks))
+
+    def shingle(toks: Column) -> Column:
+        idx = F.sequence(F.lit(1), F.size(toks) - (n - 1))
+        parts = lambda i: [F.element_at(toks, i + j) for j in range(n)]  # noqa: E731
+        shingled = F.transform(idx, lambda i: F.concat_ws(" ", *parts(i)))
+        return F.array_distinct(
+            F.when(F.size(toks) >= n, shingled).otherwise(
+                F.array(F.concat_ws(" ", toks))
+            )
         )
-    )
+
+    # bind the tokens as a lambda variable: an inline `split(normalize)` inside
+    # the shingle lambda re-evaluates per element (no CSE across lambdas).
+    toks = F.split(normalize_ws(text), " ")
+    return F.element_at(F.transform(F.array(toks), shingle), 1)
 
 
 # Universal-hash permutation constants: perm_i(h) = (A_i·h + B_i) mod P.

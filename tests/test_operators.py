@@ -2380,6 +2380,27 @@ def test_setsim_keeps_set_semantics_with_duplicate_rows(spark):
             assert got == want, (tau, sorted(kw), got, want)
 
 
+def test_word_shingles_normalizes_each_row_once(spark):
+    """The token array is built once per row, not once per shingle token:
+    Spark does no common-subexpression elimination across a lambda
+    boundary, so a `split(normalize_ws(text))` referenced inside the
+    shingle lambda shows up in the optimized plan once per reference (6
+    `regexp_replace` calls per row at n=3). The shingle column is aliased
+    because an unaliased column's name repeats the expression text."""
+    from crypto_market_tracker_etl_spark.operators.dedup import (
+        minhash_signatures,
+        word_shingles,
+    )
+
+    docs = load_table(spark, SF_DIR, "documents")
+    for df in (
+        docs.select(word_shingles(F.col("text")).alias("shingles")),
+        minhash_signatures(docs),
+    ):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("regexp_replace(") == 1, plan
+
+
 def test_triangle_stats_rejects_out_of_range_ids(spark):
     """The packed (deg, id) rank needs ids in [0, 2^32); violating the
     precondition must FAIL LOUD (assert_true), never silently drop edges

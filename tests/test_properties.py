@@ -5,6 +5,8 @@ empty keys, single-row groups, all-duplicate batches)."""
 from __future__ import annotations
 
 import datetime as dt
+import hashlib
+import re
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -1051,3 +1053,85 @@ def test_bpe_ids_decode_roundtrip(word):
     toks = kernel_encode_tokens(enc, _kernel_table(merges))
     ids = [vocab[t] for t in toks]
     assert "".join(inv[i] for i in ids) == enc, (word, toks, ids)
+
+
+# ---------------------------------------------------------------- shingles
+
+# Whitespace that Spark and Python disagree on: Spark's `trim` strips only
+# U+0020 and Java-regex `\s` matches only the six ASCII whitespace chars,
+# while Python's `strip()`/`\s` also take NBSP, U+2003 and U+001C. Σ covers
+# the final-sigma rule of `lower`; the few letters make shingles repeat.
+_SHINGLE_ALPHABET = " \t\n\x0b\x0c\r\xa0\u2003\x1cABCΣ"
+_JAVA_WS = re.compile(r"[ \t\n\x0b\x0c\r]+")
+_SHINGLE_EDGES = {
+    None: [""],
+    "": [""],
+    "   ": [""],
+    "A  B": ["a b"],
+    "\tA B": [" a b"],  # trim leaves the tab; split keeps the empty token
+    "A\xa0B\u2003C\x1cD": ["a\xa0b\u2003c\x1cd"],  # one token in Java
+    "ΣΑΣ B ΣΑΣ B ΣΑΣ": ["σας b σας", "b σας b"],
+}
+
+
+def _py_word_shingles(text, n=3):
+    """Pure-Python model of ``word_shingles`` under Spark's semantics."""
+    if text is None:
+        return [""]
+    toks = _JAVA_WS.sub(" ", text.strip(" ").lower()).split(" ")
+    if len(toks) < n:
+        return [" ".join(toks)]
+    return list(dict.fromkeys(
+        " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
+    ))
+
+
+def _py_minhash(shingles, num_hashes=12):
+    """md5_long (first 6 digest bytes) mod P, then the permutation minima."""
+    from crypto_market_tracker_etl_spark.operators.dedup import (
+        MINHASH_P,
+        minhash_perm_constants,
+    )
+
+    hs = [
+        int.from_bytes(hashlib.md5(s.encode("utf-8")).digest()[:6], "big")
+        % MINHASH_P
+        for s in shingles
+    ]
+    return [
+        min((h * a + b) % MINHASH_P for h in hs)
+        for a, b in minhash_perm_constants(num_hashes)
+    ]
+
+
+@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    texts=st.lists(
+        st.one_of(
+            st.none(),
+            st.just(""),
+            st.text(alphabet=_SHINGLE_ALPHABET, max_size=30),
+        ),
+        min_size=1,
+        max_size=20,
+    )
+)
+def test_word_shingles_and_minhash_match_python_model(spark, texts):
+    """``word_shingles`` and portable ``minhash_signatures`` reproduce the
+    Python model bit for bit, fixed edge rows included (one Spark job per
+    example)."""
+    from crypto_market_tracker_etl_spark.operators.dedup import (
+        minhash_signatures,
+    )
+
+    for t, want in _SHINGLE_EDGES.items():
+        assert _py_word_shingles(t) == want, t
+    texts = [*_SHINGLE_EDGES, *texts]
+    df = spark.createDataFrame(list(enumerate(texts)), "i long, text string")
+    got = {
+        r["i"]: (list(r["shingles"]), list(r["minhash"]))
+        for r in minhash_signatures(df, portable=True).collect()
+    }
+    for i, t in enumerate(texts):
+        sh = _py_word_shingles(t)
+        assert got[i] == (sh, _py_minhash(sh)), (t, got[i], sh)
