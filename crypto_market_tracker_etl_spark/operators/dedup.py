@@ -24,13 +24,13 @@ see functions.hashing); pass ``portable=False`` to use xxhash64 instead
 from __future__ import annotations
 
 from collections.abc import Sequence
-from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import fast_long, md5_long
 from ..functions.textstats import normalize_ws
+from .cache import materialize
 
 
 def exact_dedup(
@@ -264,19 +264,17 @@ def connected_components(
 
     Output: (node, component) for every node appearing in ``pairs``.
     """
-    edges = (
+    edges = materialize(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionByName(
             pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
         )
         .distinct()
-        .localCheckpoint()
     )
-    labels = (
+    labels = materialize(
         edges.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
-        .localCheckpoint()
     )
     for _ in range(max_iter):
         neighbor_min = (
@@ -284,7 +282,7 @@ def connected_components(
             .groupBy("src")
             .agg(F.min("component").alias("nbr_component"))
         )
-        new_labels = (
+        new_labels = materialize(
             labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
             .select(
                 "node",
@@ -292,7 +290,6 @@ def connected_components(
                     F.col("component"), F.coalesce("nbr_component", F.col("component"))
                 ).alias("component"),
             )
-            .localCheckpoint()
         )
         changed = (
             new_labels.alias("n")
@@ -411,7 +408,6 @@ def simhash_near_dups(
 def set_similarity_join(
     tokens: DataFrame,
     tau: float,
-    persist: bool = True,
     sets: DataFrame | None = None,
 ) -> DataFrame:
     """EXACT all-pairs set-similarity join, Jaccard ≥ ``tau``, via
@@ -459,16 +455,11 @@ def set_similarity_join(
     membership table. 100 TB shape: partition by token for the candidate
     step, by pair for the verify step — both plain shuffles the engine
     plans. The membership table feeds FOUR consumers (sizes, frequencies
-    → the ordered prefix, both verify sides), so ``persist=True``
-    (default) caches it rather than re-running the upstream explode per
-    consumer. CALLER OWNS CLEANUP of that cache: materialize the result
-    (the bench protocol does), then ``spark.catalog.clearCache()`` or
-    re-invoke with ``persist=False`` — repeated persist=True invocations
-    in one session otherwise accumulate cached copies until LRU eviction.
-    For session-embedded use, ``set_similarity_join_scoped`` is the
-    leak-proof form (context manager: persists on entry, unpersists on
-    exit). At warehouse scale pass ``persist=False`` and materialize
-    ``tokens`` as a table instead.
+    → the ordered prefix, both verify sides); the join caches nothing
+    itself, so a caller whose ``tokens`` is expensive to recompute holds
+    it in a ``cache_scope`` (operators/cache.py) and materializes the
+    result inside that scope. At warehouse scale, materialize ``tokens``
+    as a table instead.
 
     ``sets`` (r13, guide §2.3): optionally the per-doc element ARRAYS
     (doc_id, ws) the caller already has (e.g. the un-exploded
@@ -484,8 +475,6 @@ def set_similarity_join(
     pair (same J by construction: the grouped arrays are sets). At 100 TB
     the verify joins shuffle one array row per doc side instead of |doc|
     token rows."""
-    if persist:
-        tokens = tokens.persist()
     if sets is None:
         sets = tokens.groupBy("doc_id").agg(F.collect_set("w").alias("ws"))
     else:
@@ -553,25 +542,3 @@ def set_similarity_join(
             ).alias("jaccard"),
         )
     )
-
-
-@contextmanager
-def set_similarity_join_scoped(tokens: DataFrame, tau: float):
-    """Context-manager form of ``set_similarity_join`` that OWNS the
-    membership cache (ADVICE r7: the ``persist=True`` default is a
-    footgun in long sessions — repeated invocations accumulate cached
-    copies until LRU eviction). Persists ``tokens`` on entry, yields the
-    (lazy) pair DataFrame, and unpersists on exit — so the caller must
-    materialize the result INSIDE the ``with`` block::
-
-        with set_similarity_join_scoped(tokens, 0.8) as pairs:
-            out = pairs.count()           # or .write / .collect
-
-    A DataFrame consumed after exit still computes correctly (unpersist
-    only drops the cache), it just pays the re-computation the cache
-    existed to avoid."""
-    cached = tokens.persist()
-    try:
-        yield set_similarity_join(cached, tau, persist=False)
-    finally:
-        cached.unpersist()

@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .cache import cache_scope, materialize
+
 
 def co_occurrence_edges(
     df: DataFrame, group_col: str, item_col: str
@@ -84,9 +86,10 @@ def pagerank(
     40M      1M         181.3 s   41.6 s
     ======== ========== ========= ==========
 
-    Eager (the default): persist the share-normalized edge list and node
-    set, run the loop, ``localCheckpoint`` the node-count-sized result,
-    unpersist both — nothing cached outlives the call. This is the
+    Eager (the default): hold the share-normalized edge list and node
+    set in a ``cache_scope``, run the loop, ``materialize`` the
+    node-count-sized result; the scope releases both on exit, also on
+    error, so nothing cached outlives the call. This is the
     scale-correct shape: each iteration re-joins cached edges instead of
     re-running the edge build (whose cost the lazy plan pays roughly once
     per iteration once graphs outgrow the broadcast/reuse-friendly small
@@ -99,46 +102,43 @@ def pagerank(
         F.col(src).alias("src"), F.col(dst).alias("dst"), w.alias("w")
     )
     out = e.groupBy("src").agg(F.sum("w").alias("out_w"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    if persist:
-        nodes = nodes.persist()
-    # N as a broadcast 1-row aggregate (the max-ts anchor pattern) — the
-    # plan stays fully lazy, nothing row-shaped reaches the driver.
-    nn = nodes.agg(F.count("*").cast("double").alias("n"))
-    ranks = nodes.crossJoin(F.broadcast(nn)).select(
-        "node", (F.lit(1.0) / F.col("n")).alias("rank")
-    )
-    contrib_edges = e.join(out, "src").select(
-        "src", "dst", (F.col("w") / F.col("out_w")).alias("share")
-    )
-    if persist:
-        contrib_edges = contrib_edges.persist()
-    for _ in range(iterations):
-        contribs = (
-            contrib_edges.join(ranks, contrib_edges.src == ranks.node)
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") * F.col("share")).alias("contrib"))
+    with cache_scope() as hold:
+        keep = hold if persist else (lambda df: df)
+        nodes = keep(
+            e.select(F.col("src").alias("node"))
+            .union(e.select(F.col("dst").alias("node")))
+            .distinct()
         )
-        ranks = (
-            nodes.join(contribs, nodes.node == contribs.dst, "left")
-            .crossJoin(F.broadcast(nn))
-            .select(
-                "node",
-                (
-                    F.lit(1.0 - damping) / F.col("n")
-                    + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))
-                ).alias("rank"),
+        # N as a broadcast 1-row aggregate (the max-ts anchor pattern) —
+        # the plan stays fully lazy, nothing row-shaped reaches the driver.
+        nn = nodes.agg(F.count("*").cast("double").alias("n"))
+        ranks = nodes.crossJoin(F.broadcast(nn)).select(
+            "node", (F.lit(1.0) / F.col("n")).alias("rank")
+        )
+        contrib_edges = keep(
+            e.join(out, "src").select(
+                "src", "dst", (F.col("w") / F.col("out_w")).alias("share")
             )
         )
-    if persist:
-        ranks = ranks.localCheckpoint()  # eager: runs the loop, truncates lineage
-        contrib_edges.unpersist()
-        nodes.unpersist()
-    return ranks
+        for _ in range(iterations):
+            contribs = (
+                contrib_edges.join(ranks, contrib_edges.src == ranks.node)
+                .groupBy("dst")
+                .agg(F.sum(F.col("rank") * F.col("share")).alias("contrib"))
+            )
+            ranks = (
+                nodes.join(contribs, nodes.node == contribs.dst, "left")
+                .crossJoin(F.broadcast(nn))
+                .select(
+                    "node",
+                    (
+                        F.lit(1.0 - damping) / F.col("n")
+                        + F.lit(damping)
+                        * F.coalesce(F.col("contrib"), F.lit(0.0))
+                    ).alias("rank"),
+                )
+            )
+        return materialize(ranks) if persist else ranks
 
 
 def triangle_stats(edges: DataFrame) -> DataFrame:

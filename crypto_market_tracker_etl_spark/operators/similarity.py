@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import as_double, cosine_with_norms, norm
+from .cache import cache_scope, materialize
 from .latest import top_k_per_key
 
 
@@ -225,7 +226,6 @@ def embedding_near_dup_pairs(
     round_scale: int = 4,
     multiprobe: bool = True,
     bucket_cap: int | None = None,
-    scoped: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs via LSH bucket blocking.
 
@@ -238,54 +238,49 @@ def embedding_near_dup_pairs(
     hyperplanes are missed) — the documented LSH trade; raise probes, not
     the pair space.
 
-    ``scoped=True`` (r12 opt round) eagerly materializes the (small)
-    pair result and releases the internal bucket-index cache before
-    returning — the leak-proof form for session-embedded callers (the
-    bare return otherwise leaves one persisted bucket index per
-    invocation in the CacheManager). Default False keeps the lazy plan
-    for plan-shape inspection and warehouse use (where the bucket index
-    is a real table).
+    The (small) pair result is materialized before returning, so the
+    bucket-index cache is released inside the call.
     """
     planes = hyperplanes(dim, num_planes)
-    # consumed by BOTH join sides: persist so bucketing/cap/norm run once
-    # (at corpus scale this is the persisted bucket-index table, written
-    # once and probed many times)
-    base = _cap_buckets(
-        vectors.select(
-            F.col(id_col).alias("vec_id"), as_double(F.col(vec_col)).alias("v")
-        ).withColumn("bucket", bucket_key(F.col("v"), planes)),
-        "vec_id",
-        bucket_cap,
-    ).withColumn("n", norm(F.col("v"))).persist()
-    probing = base.select(
-        "vec_id",
-        "v",
-        "n",
-        F.explode(
-            probe_keys(F.col("bucket"), num_planes)
-            if multiprobe
-            else F.array(F.col("bucket"))
-        ).alias("bucket"),
-    )
-    a = probing.alias("a")
-    b = base.alias("b")
-    cos = F.round(
-        cosine_with_norms(F.col("a.v"), F.col("b.v"), F.col("a.n"), F.col("b.n")),
-        round_scale,
-    )
-    out = (
-        a.join(b, "bucket")
-        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("id_a"),
-            F.col("b.vec_id").alias("id_b"),
-            cos.alias("cosine"),
+    with cache_scope() as hold:
+        # consumed by BOTH join sides: persist so bucketing/cap/norm run
+        # once (at corpus scale this is the persisted bucket-index table,
+        # written once and probed many times)
+        base = hold(
+            _cap_buckets(
+                vectors.select(
+                    F.col(id_col).alias("vec_id"),
+                    as_double(F.col(vec_col)).alias("v"),
+                ).withColumn("bucket", bucket_key(F.col("v"), planes)),
+                "vec_id",
+                bucket_cap,
+            ).withColumn("n", norm(F.col("v")))
         )
-        .filter(F.col("cosine") >= threshold)
-    )
-    if scoped:
-        try:
-            return out.localCheckpoint(eager=True)
-        finally:
-            base.unpersist()
-    return out
+        probing = base.select(
+            "vec_id",
+            "v",
+            "n",
+            F.explode(
+                probe_keys(F.col("bucket"), num_planes)
+                if multiprobe
+                else F.array(F.col("bucket"))
+            ).alias("bucket"),
+        )
+        a = probing.alias("a")
+        b = base.alias("b")
+        cos = F.round(
+            cosine_with_norms(
+                F.col("a.v"), F.col("b.v"), F.col("a.n"), F.col("b.n")
+            ),
+            round_scale,
+        )
+        return materialize(
+            a.join(b, "bucket")
+            .filter(F.col("a.vec_id") < F.col("b.vec_id"))
+            .select(
+                F.col("a.vec_id").alias("id_a"),
+                F.col("b.vec_id").alias("id_b"),
+                cos.alias("cosine"),
+            )
+            .filter(F.col("cosine") >= threshold)
+        )

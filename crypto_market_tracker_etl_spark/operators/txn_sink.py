@@ -61,6 +61,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .cache import materialize
 from .upsert import dedup_keep_latest, merge_upsert, merge_upsert_partitioned
 
 _MANIFEST_RE = re.compile(r"^v(\d+)\.json$")
@@ -1215,7 +1216,7 @@ class ManifestParquetSink:
     def _prep_batch(self, batch: DataFrame, what: str) -> tuple[DataFrame, list]:
         """Derive the day column, pin the batch, and list its days.
 
-        localCheckpoint keeps the job count deterministic across CAS
+        The eager checkpoint keeps the job count deterministic across CAS
         retries: the (small) batch materializes once and each retry
         re-joins it against a fresh snapshot. NULL days are rejected
         loudly: a date-partitioned MERGE needs a date per row — a NULL day
@@ -1223,7 +1224,7 @@ class ManifestParquetSink:
         touched-days lookup keys by None, silently repointing the existing
         NULL partition without merging it (a lost update)."""
         batch = batch.withColumn("dt", F.to_date(self.ts_col).cast("string"))
-        batch = batch.localCheckpoint(eager=True)
+        batch = materialize(batch)
         days = [r["dt"] for r in batch.select("dt").distinct().collect()]
         if None in days:
             raise ValueError(

@@ -29,6 +29,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .cache import materialize
 from .latest import latest_per_key
 
 
@@ -240,7 +241,7 @@ class ParquetUpsertSink:
         day the batch mentions).
 
         The change feed diffs against the PRE-swap table, so it is
-        materialized (localCheckpoint) before the write replaces the
+        materialized (eager checkpoint) before the write replaces the
         files its plan reads — the same lazy-read hazard stage-and-swap
         exists to prevent, solved the same way.
         """
@@ -254,7 +255,7 @@ class ParquetUpsertSink:
         else:
             merged = dedup_keep_latest(batch, self.keys, self.order)
             changes = merged.withColumn("action", F.lit("insert"))
-        changes = changes.localCheckpoint(eager=True)
+        changes = materialize(changes)
         self._stage_and_swap(merged)
         return changes
 

@@ -13,9 +13,8 @@ adds the COMPOSITION):
 4. **near-dup keep-best** — MinHash → banded LSH candidates (source-
    blocked) → shingle-Jaccard verify → connected components → keep the
    LONGEST member per cluster (tie: lowest id). The signature table is
-   persisted across its two consumers and released once the (small)
-   loser set is materialized — the cache-scoping discipline from
-   q_contamination.
+   held in a ``cache_scope`` across its two consumers and released once
+   the (small) loser set is materialized.
 5. **split** — deterministic 80/10/10 train/valid/test by seeded md5 key
    (same constants as the attested ``hash_split`` query), so reruns and
    backfills never migrate documents between splits.
@@ -43,6 +42,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long
 from ..functions.textstats import lang_id, n_tokens, normalize_ws, quality_score
+from ..operators.cache import cache_scope, materialize
 from ..operators.dedup import (
     connected_components,
     exact_dedup,
@@ -148,18 +148,15 @@ def run_curation(
     kept_exact = exact_dedup(gated).select("doc_id")
     survivors_exact = gated.join(kept_exact, "doc_id", "left_semi")
 
-    # project to what the two consumers read before caching — the band
-    # join needs (doc_id, source, minhash), the Jaccard verify needs
-    # shingles; text/quality/lang/n_tok are dead weight in the cache
-    # (r13, guide §2.3/§5)
-    sigs = (
-        minhash_signatures(
-            survivors_exact, num_hashes=num_hashes, portable=portable
+    with cache_scope() as hold:
+        # project to what the two consumers read before caching — the
+        # band join needs (doc_id, source, minhash), the Jaccard verify
+        # needs shingles; text/quality/lang/n_tok are dead weight
+        sigs = hold(
+            minhash_signatures(
+                survivors_exact, num_hashes=num_hashes, portable=portable
+            ).select("doc_id", "source", "shingles", "minhash")
         )
-        .select("doc_id", "source", "shingles", "minhash")
-        .persist()
-    )
-    try:
         pairs = lsh_candidate_pairs(
             sigs,
             num_hashes=num_hashes,
@@ -175,11 +172,9 @@ def run_curation(
             F.col("doc_id").alias("node"),
             F.length(normalize_ws(t)).alias("len"),
         )
-        # eager: materialize the (duplicate-bounded) loser set NOW so
-        # the signature cache can be released before returning
-        losers = keep_best_losers(nd, lens).localCheckpoint()
-    finally:
-        sigs.unpersist()
+        # the (duplicate-bounded) loser set is materialized so the
+        # signature cache can be released before returning
+        losers = materialize(keep_best_losers(nd, lens))
     clean = survivors_exact.join(F.broadcast(losers), "doc_id", "left_anti")
 
     # deterministic split — SAME constants as the attested hash_split query

@@ -62,6 +62,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.textstats import lang_id, n_tokens, normalize_ws, quality_score
+from ..operators.cache import cache_scope, materialize
 from ..operators.dedup import exact_dedup, ngram_jaccard, word_shingles
 from ..operators.incremental_dedup import MinHashSignatureStore
 from ..operators.latest import latest_per_key
@@ -434,17 +435,18 @@ class CurationStream:
         counts. Safe to call directly or from foreachBatch (batch_id
         keys the ledger row, making at-least-once retries idempotent)."""
         t = F.col("text")
-        stats = batch.select(
-            "doc_id",
-            "source",
-            "text",
-            quality_score(t).alias("quality"),
-            lang_id(t).alias("lang"),
-            n_tokens(t).alias("n_tok"),
-            F.md5(normalize_ws(t)).alias("content_fp"),
-        ).persist()
-        batch_kept = None
-        try:
+        with cache_scope() as hold:
+            stats = hold(
+                batch.select(
+                    "doc_id",
+                    "source",
+                    "text",
+                    quality_score(t).alias("quality"),
+                    lang_id(t).alias("lang"),
+                    n_tokens(t).alias("n_tok"),
+                    F.md5(normalize_ws(t)).alias("content_fp"),
+                )
+            )
             counts = stats.agg(
                 F.count(F.lit(1)).alias("raw"),
                 F.sum(
@@ -455,14 +457,15 @@ class CurationStream:
             gated = stats.filter(F.col("quality") >= F.lit(self.quality_min))
             # within-batch exact dedup — the batch funnel's own operator;
             # cross-batch resolution is merge-on-read at clean() time.
-            # Persisted (scoped to this batch): the kept rows feed the
-            # corpus append, the visual hash write, and the signature
-            # upsert — without the cache each consumer re-runs the
-            # exact-dedup shuffle (r12 opt round, guide §5 cache-when-
-            # reused; measured in OPTIMIZATION_r12.md).
-            batch_kept = gated.join(
-                exact_dedup(gated).select("doc_id"), "doc_id", "left_semi"
-            ).persist()
+            # Held for this batch: the kept rows feed the corpus append,
+            # the visual hash write, and the signature upsert — without
+            # the cache each consumer re-runs the exact-dedup shuffle
+            # (measured in OPTIMIZATION_r12.md).
+            batch_kept = hold(
+                gated.join(
+                    exact_dedup(gated).select("doc_id"), "doc_id", "left_semi"
+                )
+            )
             # bkey rides every corpus row: merge-on-read picks the LATEST
             # delivery of a doc (matching the signature store's
             # latest-per-key), not an arbitrary one — without it a
@@ -488,34 +491,24 @@ class CurationStream:
             # close any pair-emission gap from a previously crashed batch
             # BEFORE committing new signatures (see protocol note above)
             self._recover_pairs()
-            # ONE store read per batch (r12 opt round): the pre-append
-            # latest-per-doc view feeds BOTH the upsert's changed-doc
-            # anti-join and the pair search's band index (as
-            # pre ∪ new-batch rows — identical to re-reading the store
-            # post-append, since the new batch shadows exactly its own
-            # doc ids), where r11 scanned + window-collapsed the whole
-            # store twice per batch.
+            # ONE store read per batch: the pre-append latest-per-doc
+            # view feeds BOTH the upsert's changed-doc anti-join and the
+            # pair search's band index (as pre ∪ new-batch rows —
+            # identical to re-reading the store post-append, since the
+            # new batch shadows exactly its own doc ids).
             pre = self.sigs.read_or_none()
             if pre is not None:
-                pre = pre.persist()
-            try:
-                new_sigs = self.sigs.upsert_batch(
-                    # content_fp rides along: the store reuses it instead
-                    # of re-hashing the batch (same md5-of-normalized
-                    # expression, computed once in stats above)
-                    batch_kept.select("doc_id", "text", "content_fp"),
-                    known=pre,
-                )
-                pairs = self.sigs.incremental_pairs(new_sigs, base=pre)
-                pairs.write.mode("append").parquet(self.pairs_path)
-                self._mark_pairs_done(self.sigs.last_seq)
-            finally:
-                if pre is not None:
-                    pre.unpersist()
-        finally:
-            if batch_kept is not None:
-                batch_kept.unpersist()
-            stats.unpersist()
+                pre = hold(pre)
+            new_sigs = self.sigs.upsert_batch(
+                # content_fp rides along: the store reuses it instead of
+                # re-hashing the batch (same md5-of-normalized
+                # expression, computed once in stats above)
+                batch_kept.select("doc_id", "text", "content_fp"),
+                known=pre,
+            )
+            pairs = self.sigs.incremental_pairs(new_sigs, base=pre)
+            pairs.write.mode("append").parquet(self.pairs_path)
+            self._mark_pairs_done(self.sigs.last_seq)
         self._seq = max(self._seq, bkey) + 1
         self.spark.createDataFrame(
             [(bkey, n_raw, n_gated)], "bkey long, raw long, quality long"
@@ -630,17 +623,16 @@ class CurationStream:
         (plus the visual near-dup stage when the stream is
         media-bearing — see _visual_from).
 
-        The exact-survivor view is materialized ONCE (eager
-        localCheckpoint): _clean_from consumes it five ways (pair meta
-        ×2, candidate-doc shingles, length table, final anti-join) and
-        each consumer would otherwise re-run the corpus read + window
-        collapse + fingerprint groupBy from parquet (r12 opt round —
-        clean() was the largest phase of the stream-eq queries,
-        OPTIMIZATION_r12.md has the numbers). localCheckpoint rather
-        than persist: the returned frame stays lazy for the caller, and
-        the checkpoint blocks are released by the ContextCleaner when
-        the frame is dropped — no CacheManager entry to leak."""
-        surv = self.exact_survivors().localCheckpoint(eager=True)
+        The exact-survivor view is materialized ONCE: _clean_from
+        consumes it five ways (pair meta ×2, candidate-doc shingles,
+        length table, final anti-join) and each consumer would otherwise
+        re-run the corpus read + window collapse + fingerprint groupBy
+        from parquet (clean() was the largest phase of the stream-eq
+        queries, OPTIMIZATION_r12.md has the numbers). A checkpoint
+        rather than a cache: the returned frame stays lazy for the
+        caller, and the ContextCleaner releases the blocks when the
+        frame is dropped."""
+        surv = materialize(self.exact_survivors())
         return self._visual_from(self._clean_from(surv))
 
     def _visual_from(self, surv: DataFrame) -> DataFrame:
@@ -662,17 +654,13 @@ class CurationStream:
         vh = _latest_per_doc(vh).join(
             surv.select("doc_id"), "doc_id", "left_semi"
         )
-        pairs, bands = visual_band_pairs(
-            vh.select("doc_id", "ahash_lo", "ahash_hi", "dhash")
-        )
-        try:
-            drop = (
-                pairs.select(F.col("doc_b").alias("doc_id"))
-                .distinct()
-                .localCheckpoint(eager=True)
+        with cache_scope() as hold:
+            pairs = visual_band_pairs(
+                vh.select("doc_id", "ahash_lo", "ahash_hi", "dhash"), hold
             )
-        finally:
-            bands.unpersist()
+            drop = materialize(
+                pairs.select(F.col("doc_b").alias("doc_id")).distinct()
+            )
         return surv.join(drop, "doc_id", "left_anti")
 
     def _clean_from(self, surv: DataFrame) -> DataFrame:
@@ -683,65 +671,58 @@ class CurationStream:
         if cand is None:
             return surv
         meta = surv.select("doc_id", "source")
-        # scoped cache: the blocked candidate set feeds BOTH the
-        # touched-doc sliver and the Jaccard verify join; without it the
-        # pair-store read + distinct + two meta joins re-run per
-        # consumer (r12 opt round). Unpersisted after the component
-        # labels are materialized inside keep_best_losers — nothing in
-        # the returned plan references it.
-        cand = (
-            cand.distinct()
-            .join(
-                meta.select(
-                    F.col("doc_id").alias("id_a"), F.col("source").alias("src_a")
-                ),
-                "id_a",
+        with cache_scope() as hold:
+            # the blocked candidate set feeds BOTH the touched-doc sliver
+            # and the Jaccard verify join; without the cache the
+            # pair-store read + distinct + two meta joins re-run per
+            # consumer
+            cand = hold(
+                cand.distinct()
+                .join(
+                    meta.select(
+                        F.col("doc_id").alias("id_a"),
+                        F.col("source").alias("src_a"),
+                    ),
+                    "id_a",
+                )
+                .join(
+                    meta.select(
+                        F.col("doc_id").alias("id_b"),
+                        F.col("source").alias("src_b"),
+                    ),
+                    "id_b",
+                )
+                .filter(F.col("src_a") == F.col("src_b"))  # re-apply blocking
+                .select("id_a", "id_b")
             )
-            .join(
-                meta.select(
-                    F.col("doc_id").alias("id_b"), F.col("source").alias("src_b")
-                ),
-                "id_b",
-            )
-            .filter(F.col("src_a") == F.col("src_b"))  # re-apply blocking
-            .select("id_a", "id_b")
-            .persist()
-        )
-        try:
             # verify on candidate docs only: shingles, not minhash — the
             # verify stage never consumes the permutations. The shingle
-            # sliver is persisted across the verify join's two sides
-            # (id_a and id_b both probe it) — one shingling pass, not two.
+            # sliver is held across the verify join's two sides (id_a and
+            # id_b both probe it) — one shingling pass, not two.
             touched = (
                 cand.select(F.col("id_a").alias("doc_id"))
                 .union(cand.select("id_b"))
                 .distinct()
             )
-            sh = (
-                surv.join(touched, "doc_id", "left_semi")
-                .select("doc_id", word_shingles(F.col("text")).alias("shingles"))
-                .persist()
+            sh = hold(
+                surv.join(touched, "doc_id", "left_semi").select(
+                    "doc_id", word_shingles(F.col("text")).alias("shingles")
+                )
             )
-            try:
-                nd = (
-                    ngram_jaccard(cand, sh)
-                    .filter(F.col("jaccard") >= self.jaccard_threshold)
-                    .select("id_a", "id_b")
-                )
-                lens = surv.select(
-                    F.col("doc_id").alias("node"),
-                    F.length(normalize_ws(F.col("text"))).alias("len"),
-                )
-                # keep_best_losers materializes the pair graph eagerly
-                # (connected_components checkpoints each label round), so
-                # the caches above are drained by the time it returns;
-                # the surviving references (component labels, lens) do
-                # not touch cand/sh.
-                losers = keep_best_losers(nd, lens)
-            finally:
-                sh.unpersist()
-        finally:
-            cand.unpersist()
+            nd = (
+                ngram_jaccard(cand, sh)
+                .filter(F.col("jaccard") >= self.jaccard_threshold)
+                .select("id_a", "id_b")
+            )
+            lens = surv.select(
+                F.col("doc_id").alias("node"),
+                F.length(normalize_ws(F.col("text"))).alias("len"),
+            )
+            # keep_best_losers materializes the pair graph eagerly
+            # (connected_components checkpoints each label round), so the
+            # caches are drained by the time it returns; the surviving
+            # references (component labels, lens) do not touch cand/sh.
+            losers = keep_best_losers(nd, lens)
         return surv.join(F.broadcast(losers), "doc_id", "left_anti")
 
     def funnel(self) -> dict[str, int]:
@@ -765,8 +746,8 @@ class CurationStream:
             .agg(F.sum("raw").alias("raw"), F.sum("quality").alias("quality"))
             .collect()[0]
         )
-        surv = self.exact_survivors().persist()
-        try:
+        with cache_scope() as hold:
+            surv = hold(self.exact_survivors())
             n_exact = surv.count()
             row = (
                 self._visual_from(self._clean_from(surv))
@@ -776,8 +757,6 @@ class CurationStream:
                 )
                 .collect()[0]
             )
-        finally:
-            surv.unpersist()
         return {
             "raw": int(ing["raw"]),
             "quality": int(ing["quality"]),

@@ -34,12 +34,14 @@ from .functions.textstats import (
     quality_score,
     stopword_hits,
 )
+from .operators.cache import cache_scope, materialize
 from .operators.dedup import (
     exact_dedup,
     lsh_band_keys,
     lsh_candidate_pairs,
     minhash_signatures,
     ngram_jaccard,
+    set_similarity_join,
     simhash,
     word_shingles,
 )
@@ -180,40 +182,30 @@ def q_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hash work is per-row CPU; small file reads must not serialize it onto
     2 tasks), and signatures are persisted because both the LSH pair join
     and the Jaccard verification consume them — at 100 TB this is the
-    'write the signature table once' step.
+    'write the signature table once' step. The (duplicate-bounded) pair
+    result is materialized before the signature cache is released.
     """
-    pairs, sigs = near_dup_pairs_lazy(spark, sf_dir)
-    try:
-        # eager-materialize the (duplicate-bounded) pair result and
-        # release the signature cache before returning — the
-        # q_contamination cache-scope discipline (r12 opt round: the
-        # lazily returned persist leaked one cached signature table per
-        # invocation into the session; the lazy plan lives in
-        # near_dup_pairs_lazy for the plan-shape test)
-        return pairs.localCheckpoint(eager=True)
-    finally:
-        sigs.unpersist()
+    return _near_dup_pairs(spark, sf_dir, portable=True)
 
 
-def near_dup_pairs_lazy(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """The lazy pairing plan: (pairs, sigs) where ``sigs`` is the
-    persisted signature table both the band join and the Jaccard verify
-    consume — the caller must unpersist it once ``pairs`` is
-    materialized (q_near_dup_pairs does; so must any other consumer)."""
+def _near_dup_pairs(
+    spark: SparkSession, sf_dir: str, portable: bool
+) -> DataFrame:
     corpus = _augmented_corpus(spark, sf_dir)  # already spread by _documents
-    # drop text before the persist: the band join reads (doc_id, source,
-    # minhash) and the verify reads shingles — the raw text column is dead
-    # weight in the cached signature table (r13, guide §2.3/§5: don't
-    # cache bytes no consumer reads)
-    sigs = (
-        minhash_signatures(corpus, num_hashes=12).drop("text").persist()
-    )
-    pairs = lsh_candidate_pairs(
-        sigs, num_hashes=12, band_size=4, blocking_cols=["source"]
-    )
-    return ngram_jaccard(pairs, sigs).filter(F.col("jaccard") >= 0.5), sigs
+    with cache_scope() as hold:
+        # drop text before the persist: the band join reads (doc_id,
+        # source, minhash) and the verify reads shingles — the raw text
+        # column is dead weight in the cached signature table
+        sigs = hold(
+            minhash_signatures(corpus, num_hashes=12, portable=portable)
+            .drop("text")
+        )
+        pairs = lsh_candidate_pairs(
+            sigs, num_hashes=12, band_size=4, blocking_cols=["source"]
+        )
+        return materialize(
+            ngram_jaccard(pairs, sigs).filter(F.col("jaccard") >= 0.5)
+        )
 
 
 _SQL_ND_CTES = f"""{SQL_AUG},
@@ -618,26 +610,7 @@ def near_dup_pairs_fast_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The raw xxhash64 near-dup pipeline (bench surface: quantifies the
     portable-hash tax against [near_dup_pairs]); the registry twin
     q_near_dup_pairs_fast wraps it in the differential oracle."""
-    corpus = _augmented_corpus(spark, sf_dir)
-    # same dead-text-column rule as near_dup_pairs_lazy (guide §2.3/§5)
-    sigs = (
-        minhash_signatures(corpus, num_hashes=12, portable=False)
-        .drop("text")
-        .persist()
-    )
-    try:
-        pairs = lsh_candidate_pairs(
-            sigs, num_hashes=12, band_size=4, blocking_cols=["source"]
-        )
-        # scoped cache (r12 opt round): materialize the small pair set,
-        # drop the signature cache before returning
-        return (
-            ngram_jaccard(pairs, sigs)
-            .filter(F.col("jaccard") >= 0.5)
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        sigs.unpersist()
+    return _near_dup_pairs(spark, sf_dir, portable=False)
 
 
 def simhash_fast_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1666,7 +1639,6 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=0.9,
         multiprobe=True,
         bucket_cap=ANN_BUCKET_CAP,
-        scoped=True,  # r12 opt round: release the bucket-index cache
     )
 
 
@@ -1896,42 +1868,20 @@ def q_setsim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation with no prefix filter), so hash parity is a differential
     proof that the filter loses no pairs — the filter's correctness
     argument, machine-checked at every attestation."""
-    # scoped membership cache (r12 opt round): the context-manager form
-    # persists the four-consumer token table on entry and releases it on
-    # exit — the bare persist=True default leaked one cached membership
-    # table per invocation into the session (the exact footgun the r7
-    # ADVICE called out; set_similarity_join_scoped is its leak-proof
-    # twin). The pair result is materialized inside the scope; the lazy
-    # plan lives in setsim_join_lazy for the plan-shape test.
-    pairs, _tokens = setsim_join_lazy(spark, sf_dir, persist=True)
-    try:
-        return pairs.localCheckpoint(eager=True)
-    finally:
-        _tokens.unpersist()
-
-
-def setsim_join_lazy(
-    spark: SparkSession, sf_dir: str, persist: bool = False
-) -> tuple[DataFrame, DataFrame]:
-    """The lazy PPJoin plan: (pairs, cached); when ``persist`` the
-    caller owns unpersisting ``cached`` after materializing pairs.
-
-    r13 (guide §2.3/§2.4): the cached table is the per-doc shingle-ARRAY
-    view (doc_id, ws) — word_shingles already yields the distinct set,
-    so sizes cost ``size(ws)`` with NO count shuffle, the verify stage
-    reads one array row per pair side (set_similarity_join ``sets=``),
-    and the exploded membership rows are derived from the cache."""
-    from .operators.dedup import set_similarity_join, word_shingles
-
+    # The cached table is the per-doc shingle-ARRAY view (doc_id, ws):
+    # word_shingles already yields the distinct set, so sizes cost
+    # ``size(ws)`` with no count shuffle, the verify stage reads one array
+    # row per pair side (set_similarity_join ``sets=``), and the exploded
+    # membership rows are derived from the cache.
     docs = _augmented_corpus(spark, sf_dir)
-    sets = docs.select("doc_id", word_shingles(F.col("text")).alias("ws"))
-    if persist:
-        sets = sets.persist()
-    tokens = sets.select("doc_id", F.explode("ws").alias("w"))
-    return (
-        set_similarity_join(tokens, SETSIM_TAU, persist=False, sets=sets),
-        sets,
-    )
+    with cache_scope() as hold:
+        sets = hold(
+            docs.select("doc_id", word_shingles(F.col("text")).alias("ws"))
+        )
+        tokens = sets.select("doc_id", F.explode("ws").alias("w"))
+        return materialize(
+            set_similarity_join(tokens, SETSIM_TAU, sets=sets)
+        )
 
 
 SQL_SETSIM_JOIN = f"""
@@ -4579,80 +4529,64 @@ def q_ahash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stack the optimizer happily re-plants per branch, measured 248 s
     unpersisted vs 8.8 s persisted at 200k docs (the near_dup_pairs /
     contamination persist rationale); the (small) pair result is
-    materialized eagerly via localCheckpoint and the cache released
-    before returning (the q_contamination cache-scope discipline; the
-    lazy plan lives in ahash_near_dup_lazy for the plan-shape test)."""
-    cand, bands = ahash_near_dup_lazy(spark, sf_dir)
-    try:
-        return cand.localCheckpoint(eager=True)
-    finally:
-        bands.unpersist()
-
-
-def ahash_near_dup_lazy(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """The lazy pairing plan: returns (pairs, bands) where ``bands`` is
-    the persisted band table all three join branches consume — the
-    caller must unpersist it once ``pairs`` is materialized
-    (q_ahash_near_dup does; so must any other consumer)."""
+    materialized before the band cache is released."""
     ah = _ahash_df(spark, sf_dir)
     lo, hi = F.col("ahash_lo"), F.col("ahash_hi")
-    bands = (
-        ah.select(
-            "doc_id", "ahash_lo", "ahash_hi",
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.lit(0).alias("idx"), (lo % 65536).alias("val")
-                    ),
-                    F.struct(
-                        F.lit(1).alias("idx"),
-                        F.shiftright(lo, 16).alias("val"),
-                    ),
-                    F.struct(
-                        F.lit(2).alias("idx"), (hi % 65536).alias("val")
-                    ),
-                    F.struct(
-                        F.lit(3).alias("idx"),
-                        F.shiftright(hi, 16).alias("val"),
-                    ),
-                )
-            ).alias("b"),
+    with cache_scope() as hold:
+        bands = hold(
+            ah.select(
+                "doc_id", "ahash_lo", "ahash_hi",
+                F.explode(
+                    F.array(
+                        F.struct(
+                            F.lit(0).alias("idx"), (lo % 65536).alias("val")
+                        ),
+                        F.struct(
+                            F.lit(1).alias("idx"),
+                            F.shiftright(lo, 16).alias("val"),
+                        ),
+                        F.struct(
+                            F.lit(2).alias("idx"), (hi % 65536).alias("val")
+                        ),
+                        F.struct(
+                            F.lit(3).alias("idx"),
+                            F.shiftright(hi, 16).alias("val"),
+                        ),
+                    )
+                ).alias("b"),
+            )
+            .select("doc_id", "ahash_lo", "ahash_hi", "b.idx", "b.val")
         )
-        .select("doc_id", "ahash_lo", "ahash_hi", "b.idx", "b.val")
-        .persist()
-    )
-    ok = (
-        bands.groupBy("idx", "val")
-        .count()
-        .filter(F.col("count") <= AHASH_MAX_BUCKET)
-        .select("idx", "val")
-    )
-    capped = bands.join(ok, ["idx", "val"], "left_semi")
-    a, b = capped.alias("a"), capped.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.idx") == F.col("b.idx"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        ok = (
+            bands.groupBy("idx", "val")
+            .count()
+            .filter(F.col("count") <= AHASH_MAX_BUCKET)
+            .select("idx", "val")
         )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            (
-                F.bit_count(
-                    F.col("a.ahash_lo").bitwiseXOR(F.col("b.ahash_lo"))
-                )
-                + F.bit_count(
-                    F.col("a.ahash_hi").bitwiseXOR(F.col("b.ahash_hi"))
-                )
-            ).cast("long").alias("hamming"),
+        capped = bands.join(ok, ["idx", "val"], "left_semi")
+        a, b = capped.alias("a"), capped.alias("b")
+        cand = (
+            a.join(
+                b,
+                (F.col("a.idx") == F.col("b.idx"))
+                & (F.col("a.val") == F.col("b.val"))
+                & (F.col("a.doc_id") < F.col("b.doc_id")),
+            )
+            .select(
+                F.col("a.doc_id").alias("doc_a"),
+                F.col("b.doc_id").alias("doc_b"),
+                (
+                    F.bit_count(
+                        F.col("a.ahash_lo").bitwiseXOR(F.col("b.ahash_lo"))
+                    )
+                    + F.bit_count(
+                        F.col("a.ahash_hi").bitwiseXOR(F.col("b.ahash_hi"))
+                    )
+                ).cast("long").alias("hamming"),
+            )
+            .distinct()
         )
-        .distinct()
-    )
-    return cand.filter(F.col("hamming") <= AHASH_HAM_MAX), bands
+        return materialize(cand.filter(F.col("hamming") <= AHASH_HAM_MAX))
 
 
 SQL_AHASH_NEAR_DUP = f"""
@@ -4709,11 +4643,11 @@ def q_dhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     second decode pass), the band table is persisted across its three
     consumers and carries the dHash alongside, and the verify runs on
     the banded candidate sliver only — never all-pairs (plan test)."""
-    cand, bands = dhash_near_dup_lazy(spark, sf_dir)
-    try:
-        return cand.localCheckpoint(eager=True)
-    finally:
-        bands.unpersist()
+    docs = _documents(spark, sf_dir).select("doc_id")
+    with cache_scope() as hold:
+        return materialize(
+            visual_band_pairs(visual_hash_pair(docs, _ahash_tile_expr()), hold)
+        )
 
 
 def visual_hash_pair(docs: DataFrame, payload: F.Column) -> DataFrame:
@@ -4755,13 +4689,16 @@ def visual_hash_pair(docs: DataFrame, payload: F.Column) -> DataFrame:
     )
 
 
-def visual_band_pairs(both: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(pairs, persisted bands) from a (doc_id, ahash_lo, ahash_hi,
-    dhash) table: 4 × 16-bit aHash bands candidate, deterministic
-    hot-bucket cap, combined aHash+dHash Hamming verify. The caller
-    must unpersist ``bands`` once ``pairs`` is materialized."""
+def visual_band_pairs(
+    both: DataFrame, hold: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
+    """Lazy pairs from a (doc_id, ahash_lo, ahash_hi, dhash) table:
+    4 × 16-bit aHash bands candidate, deterministic hot-bucket cap,
+    combined aHash+dHash Hamming verify. The band table is cached with
+    the caller's ``cache_scope`` ``hold``; materialize what the pairs feed
+    inside that scope."""
     lo, hi = F.col("ahash_lo"), F.col("ahash_hi")
-    bands = (
+    bands = hold(
         both.select(
             "doc_id", "ahash_lo", "ahash_hi", "dhash",
             F.explode(
@@ -4784,7 +4721,6 @@ def visual_band_pairs(both: DataFrame) -> tuple[DataFrame, DataFrame]:
             ).alias("b"),
         )
         .select("doc_id", "ahash_lo", "ahash_hi", "dhash", "b.idx", "b.val")
-        .persist()
     )
     ok = (
         bands.groupBy("idx", "val")
@@ -4818,22 +4754,10 @@ def visual_band_pairs(both: DataFrame) -> tuple[DataFrame, DataFrame]:
         )
         .distinct()
     )
-    return (
-        cand.filter(
-            (F.col("hamming") <= AHASH_HAM_MAX)
-            & (F.col("dhash_hamming") <= DHASH_HAM_MAX)
-        ),
-        bands,
+    return cand.filter(
+        (F.col("hamming") <= AHASH_HAM_MAX)
+        & (F.col("dhash_hamming") <= DHASH_HAM_MAX)
     )
-
-
-def dhash_near_dup_lazy(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """The lazy combined-verify pairing plan: (pairs, persisted bands);
-    the caller must unpersist bands once pairs is materialized."""
-    docs = _documents(spark, sf_dir).select("doc_id")
-    return visual_band_pairs(visual_hash_pair(docs, _ahash_tile_expr()))
 
 
 SQL_DHASH_NEAR_DUP = f"""
@@ -4920,17 +4844,13 @@ def q_curation_media_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("pass_qual"),
     )
     gated = flags.filter(F.col("pass_qual")).select("doc_id", "nt")
-    pairs, bands = visual_band_pairs(
-        visual_hash_pair(gated.select("doc_id"), _ahash_tile_expr())
-    )
-    try:
-        drop = (
-            pairs.select(F.col("doc_b").alias("doc_id"))
-            .distinct()
-            .localCheckpoint(eager=True)
+    with cache_scope() as hold:
+        pairs = visual_band_pairs(
+            visual_hash_pair(gated.select("doc_id"), _ahash_tile_expr()), hold
         )
-    finally:
-        bands.unpersist()
+        drop = materialize(
+            pairs.select(F.col("doc_b").alias("doc_id")).distinct()
+        )
     surv = gated.join(drop, "doc_id", "left_anti")
 
     def n_of(c: str) -> F.Column:

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from .catalog import load_table
 from .functions.hashing import hex_prefix_to_long_sql, md5_long
+from .operators.cache import cache_scope, materialize
 from .queries import E_CTE, QueryFn, _events
 from .queries_ext import (
     SQL_NORM,
@@ -422,46 +423,28 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-evaluates the expression per emitted row: measured 20× on this
     corpus; same reason near_dup_pairs persists its signatures).
 
-    The shingle cache is scoped to THIS call: the (small) flagged-pairs
-    result is materialized eagerly via localCheckpoint, then the shingle
-    table is unpersisted before returning — Spark's CacheManager holds
-    persisted plans until explicit unpersist, so returning lazily would
-    leak one cached shingle copy per invocation into the session (it
-    showed up as storage-memory pressure across bench runs). The lazy
-    plan itself lives in ``contamination_flagged`` so the plan-shape
-    regression test can still inspect it pre-checkpoint."""
-    flagged, docs = contamination_flagged(spark, sf_dir)
-    try:
-        return flagged.localCheckpoint(eager=True)
-    finally:
-        docs.unpersist()
-
-
-def contamination_flagged(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """The lazy contamination plan: returns (flagged_pairs, docs) where
-    ``docs`` is the persisted shingle table BOTH join branches consume —
-    the caller must unpersist it once ``flagged_pairs`` is materialized
-    (q_contamination does; so must any other consumer)."""
+    The (small) flagged-pairs result is materialized before the shingle
+    cache is released."""
     from .operators.dedup import word_shingles
 
-    docs = _documents(spark, sf_dir).select(
-        "doc_id", word_shingles(F.col("text")).alias("sh")
-    ).persist()
-    ex = docs.select("doc_id", F.explode("sh").alias("shingle"))
-    ev = (
-        ex.filter(F.col("doc_id") % 97 == 0)
-        .select(F.col("doc_id").alias("eval_id"), "shingle")
-    )
-    flagged = (
-        ex.filter(F.col("doc_id") % 97 != 0)
-        .join(F.broadcast(ev), "shingle")
-        .groupBy(F.col("doc_id").alias("train_id"), "eval_id")
-        .agg(F.count_distinct("shingle").alias("n_shared"))
-        .filter(F.col("n_shared") >= 2)
-    )
-    return flagged, docs
+    with cache_scope() as hold:
+        docs = hold(
+            _documents(spark, sf_dir).select(
+                "doc_id", word_shingles(F.col("text")).alias("sh")
+            )
+        )
+        ex = docs.select("doc_id", F.explode("sh").alias("shingle"))
+        ev = (
+            ex.filter(F.col("doc_id") % 97 == 0)
+            .select(F.col("doc_id").alias("eval_id"), "shingle")
+        )
+        return materialize(
+            ex.filter(F.col("doc_id") % 97 != 0)
+            .join(F.broadcast(ev), "shingle")
+            .groupBy(F.col("doc_id").alias("train_id"), "eval_id")
+            .agg(F.count_distinct("shingle").alias("n_shared"))
+            .filter(F.col("n_shared") >= 2)
+        )
 
 
 SQL_CONTAMINATION = f"""
@@ -852,7 +835,10 @@ def q_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("w_sum"),
         F.sum("n_docs").alias("n_total"),
     )
-    mix = (
+    # eager checkpoint of the |sources|-row schedule: it feeds BOTH the
+    # selection scan and the output join — without it Spark recomputes
+    # the whole counts subtree (an extra corpus scan) per consumer
+    mix = materialize(
         wr.crossJoin(F.broadcast(anchor))
         .select(
             "source",
@@ -866,10 +852,6 @@ def q_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("quota"),
         )
-        # eager checkpoint of the |sources|-row schedule: it feeds BOTH the
-        # selection scan and the output join — without it Spark recomputes
-        # the whole counts subtree (an extra corpus scan) per consumer
-        .localCheckpoint()
     )
     h = _h24(F.col("doc_id"), MIX_SEED)
     sel = (

@@ -26,6 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F
 
 from crypto_market_tracker_etl_spark.operators.asof import asof_join
+from crypto_market_tracker_etl_spark.operators.cache import cache_scope
 from crypto_market_tracker_etl_spark.operators.latest import latest_per_key_agg
 from crypto_market_tracker_etl_spark.operators.ohlc import ohlc_daily, ohlc_tumbling
 from crypto_market_tracker_etl_spark.operators.upsert import dedup_keep_latest
@@ -1672,9 +1673,9 @@ def probe_r7(spark) -> None:
                 ).alias("w"),
             ).distinct()
             t0 = time.perf_counter()
-            cnt = set_similarity_join(toks, 0.8, persist=True).count()
+            with cache_scope() as hold:
+                cnt = set_similarity_join(hold(toks), 0.8).count()
             t = time.perf_counter() - t0
-            spark.catalog.clearCache()
             print(
                 f"setsim_join n={n} tau=0.8: {t:.1f}s pairs={cnt}",
                 flush=True,
@@ -2294,10 +2295,9 @@ def probe_r12(spark) -> None:
             for k in range(4)
         ]))
         t0 = time.perf_counter()
-        pairs, bands = visual_band_pairs(visual_hash_pair(ids, tile))
-        n_pairs = pairs.count()
+        with cache_scope() as hold:
+            n_pairs = visual_band_pairs(visual_hash_pair(ids, tile), hold).count()
         t = time.perf_counter() - t0
-        bands.unpersist()
         print(
             f"dhash_combined_{m // 1000}k: {t:.1f}s, {n_pairs} pairs",
             flush=True,

@@ -315,6 +315,7 @@ def test_curation_stream_visual_tier_equals_batch(spark, tmp_path):
     result must be compaction-invariant, funnel()'s clean count must
     reflect the visual stage, and erasure must purge the vhash store
     (perceptual hashes are content-derived data)."""
+    from crypto_market_tracker_etl_spark.operators.cache import cache_scope
     from crypto_market_tracker_etl_spark.queries_ext import (
         _ahash_tile_expr,
         visual_band_pairs,
@@ -332,13 +333,12 @@ def test_curation_stream_visual_tier_equals_batch(spark, tmp_path):
     # batch oracle: the text funnel's clean set, then the SAME visual
     # tier over those survivors' tiles
     batch_clean = run_curation(spark, corpus).clean
-    pairs, bands = visual_band_pairs(
-        visual_hash_pair(batch_clean.select("doc_id"), _ahash_tile_expr())
-    )
-    try:
+    with cache_scope() as hold:
+        pairs = visual_band_pairs(
+            visual_hash_pair(batch_clean.select("doc_id"), _ahash_tile_expr()),
+            hold,
+        )
         drop = {r.doc_b for r in pairs.collect()}
-    finally:
-        bands.unpersist()
     assert drop  # the stage must have real work (planted twins survive)
     want = _clean_ids(batch_clean) - drop
 

@@ -325,138 +325,6 @@ def test_streaming_dedup_keys(spark, tmp_path):
     assert n2 == 0
 
 
-def test_running_stats_processor_contract():
-    """The transformWithState operator (streaming/stateful_v2.py) cannot
-    execute end-to-end here — its state protocol needs google.protobuf,
-    absent in this container — so its StatefulProcessor is tested
-    DIRECTLY against the API contract with an in-memory state handle:
-    init() binds one named ValueState, handleInputRows accumulates
-    across micro-batches through state exactly like the
-    applyInPandasWithState twin (whose engine-level battery does run),
-    null values are skipped, and every emitted row is the new cumulative.
-    No engine, no skip — this keeps the suite at 0 skipped while the
-    module stays the documented forward path for real clusters."""
-    import pandas as pd
-
-    from crypto_market_tracker_etl_spark.streaming.stateful_v2 import (
-        RunningStatsProcessor,
-        running_stats_tws,
-    )
-
-    class FakeValueState:
-        def __init__(self):
-            self.v = None
-
-        def get(self):
-            return self.v
-
-        def update(self, v):
-            self.v = v
-
-    class FakeHandle:
-        def __init__(self):
-            self.states = {}
-
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            assert name == "stats" and "n BIGINT" in schema
-            return self.states.setdefault(name, FakeValueState())
-
-    proc = RunningStatsProcessor()
-    handle = FakeHandle()
-    proc.init(handle)
-    # micro-batch 1: two arrow chunks for key (1,), one null skipped
-    [out1] = list(
-        proc.handleInputRows(
-            (1,),
-            iter(
-                [
-                    pd.DataFrame({"value": [10.0, None]}),
-                    pd.DataFrame({"value": [30.0]}),
-                ]
-            ),
-            None,
-        )
-    )
-    assert out1.iloc[0].to_dict() == {
-        "user_id": 1, "n": 2, "total": 40.0, "vmin": 10.0, "vmax": 30.0
-    }
-    # micro-batch 2: state carried — cumulative, new min
-    [out2] = list(
-        proc.handleInputRows(
-            (1,), iter([pd.DataFrame({"value": [2.0]})]), None
-        )
-    )
-    assert out2.iloc[0].to_dict() == {
-        "user_id": 1, "n": 3, "total": 42.0, "vmin": 2.0, "vmax": 30.0
-    }
-    assert handle.states["stats"].get() == (3, 42.0, 2.0, 30.0)
-    proc.close()
-    assert callable(running_stats_tws)  # plan builder importable
-
-
-def test_running_stats_tws_engine_if_available(spark, tmp_path):
-    """End-to-end transformWithState run (RocksDB state store,
-    checkpointed restart, stream≡batch equality) — executes only where
-    google.protobuf exists, i.e. on real clusters. In this container it
-    SKIPS (visibly — advisor r5: an early `return` made this a silent
-    pass, so '0 skipped' overstated coverage; the suite report must show
-    that the e2e branch did not run). The processor arithmetic is covered
-    un-gated by test_running_stats_processor_contract."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState e2e needs protobuf (real clusters "
-        "only); processor contract covered un-gated",
-    )
-
-    from crypto_market_tracker_etl_spark.streaming.stateful_v2 import (
-        running_stats_tws,
-    )
-
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    saved = spark.conf.get(conf_key, None)
-    spark.conf.set(
-        conf_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        src = str(tmp_path / "src")
-        schema = "user_id long, ts timestamp, value double"
-        _write_stream_batch(
-            spark,
-            src,
-            [
-                (1, dt.datetime(2024, 1, 1, 1), 10.0),
-                (1, dt.datetime(2024, 1, 1, 2), 30.0),
-                (2, dt.datetime(2024, 1, 1, 1), 5.0),
-            ],
-        )
-        out1 = str(tmp_path / "out1")
-        stream = spark.readStream.schema(schema).parquet(src)
-        _drain_to_parquet(
-            running_stats_tws(stream), out1, str(tmp_path / "ck")
-        )
-        got = {r["user_id"]: r for r in spark.read.parquet(out1).collect()}
-        assert got[1]["n"] == 2 and got[1]["total"] == 40.0
-        assert got[1]["vmin"] == 10.0 and got[1]["vmax"] == 30.0
-        assert got[2]["n"] == 1
-
-        _write_stream_batch(spark, src, [(1, dt.datetime(2024, 1, 1, 3), 2.0)])
-        out2 = str(tmp_path / "out2")
-        stream2 = spark.readStream.schema(schema).parquet(src)
-        _drain_to_parquet(
-            running_stats_tws(stream2), out2, str(tmp_path / "ck")
-        )
-        got2 = {r["user_id"]: r for r in spark.read.parquet(out2).collect()}
-        assert got2[1]["n"] == 3 and got2[1]["total"] == 42.0
-        assert got2[1]["vmin"] == 2.0 and got2[1]["vmax"] == 30.0
-    finally:
-        if saved is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, saved)
-
-
 def test_ewma_stream_matches_batch_fold(spark, tmp_path):
     """Streaming EWMA across two drains (state carried through the
     checkpoint) must equal the batch sorted-fold over the full history —

@@ -1105,12 +1105,15 @@ def test_synth_headers_roundtrip(spark):
         )
 
 
-def test_set_similarity_join_scoped_releases_cache(spark):
-    """The scoped form must produce the same pairs as the plain call AND
-    leave no cached membership table behind (the ADVICE r7 footgun)."""
+def test_cache_scope_releases_on_exit_and_on_error(spark):
+    """A held frame is cached inside the block and released on exit, also
+    when the body raises; the join reads the same pairs through it."""
+    from crypto_market_tracker_etl_spark.operators.cache import (
+        cache_scope,
+        live_caches,
+    )
     from crypto_market_tracker_etl_spark.operators.dedup import (
         set_similarity_join,
-        set_similarity_join_scoped,
         word_shingles,
     )
 
@@ -1118,17 +1121,72 @@ def test_set_similarity_join_scoped_releases_cache(spark):
     tokens = docs.select(
         "doc_id", F.explode(word_shingles(F.col("text"))).alias("w")
     ).distinct()
-    want = {
-        (r.doc_a, r.doc_b)
-        for r in set_similarity_join(tokens, 0.5, persist=False).collect()
-    }
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
-    with set_similarity_join_scoped(tokens, 0.5) as pairs:
+    want = {(r.doc_a, r.doc_b) for r in set_similarity_join(tokens, 0.5).collect()}
+    before = live_caches(spark)
+    with cache_scope() as hold:
+        pairs = set_similarity_join(hold(tokens), 0.5)
         got = {(r.doc_a, r.doc_b) for r in pairs.collect()}
-        assert jsc.getPersistentRDDs().size() > before  # cache live inside
+        inside = live_caches(spark)
+        assert inside[0] > before[0] and inside[1] > before[1]
     assert got == want
-    assert jsc.getPersistentRDDs().size() == before  # released on exit
+    assert live_caches(spark) == before
+    with pytest.raises(RuntimeError, match="body failed"):
+        with cache_scope() as hold:
+            hold(tokens).count()
+            assert live_caches(spark) != before
+            raise RuntimeError("body failed")
+    assert live_caches(spark) == before
+
+
+def test_operators_leave_no_cache_behind(spark):
+    """set_similarity_join, embedding_near_dup_pairs and the eager pagerank
+    return with every table they cached released."""
+    from crypto_market_tracker_etl_spark.operators.cache import live_caches
+    from crypto_market_tracker_etl_spark.operators.dedup import (
+        set_similarity_join,
+    )
+    from crypto_market_tracker_etl_spark.operators.graph import pagerank
+    from crypto_market_tracker_etl_spark.operators.similarity import (
+        embedding_near_dup_pairs,
+    )
+
+    tokens = spark.createDataFrame(
+        [(d, f"e{e}") for d in range(6) for e in range(d, d + 4)],
+        "doc_id long, w string",
+    )
+    vecs = spark.createDataFrame(
+        [(i, [1.0, 0.1 * i, 0.5]) for i in range(8)], "vec_id long, v array<double>"
+    )
+    edges = spark.createDataFrame(
+        [(0, 1, 1.0), (1, 0, 1.0), (1, 2, 2.0), (2, 1, 2.0)], ["src", "dst", "w"]
+    )
+    before = live_caches(spark)
+    assert set_similarity_join(tokens, 0.5).count() > 0
+    assert live_caches(spark) == before
+    assert embedding_near_dup_pairs(vecs, dim=3, num_planes=2).count() > 0
+    assert live_caches(spark) == before
+    assert pagerank(edges, iterations=3, persist=True).count() == 3
+    assert live_caches(spark) == before
+
+
+def test_pagerank_releases_caches_when_the_loop_fails(spark):
+    """A task failure inside the eager power loop still releases the
+    held node set and edge list."""
+    from crypto_market_tracker_etl_spark.operators.cache import live_caches
+    from crypto_market_tracker_etl_spark.operators.graph import pagerank
+
+    edges = spark.createDataFrame(
+        [(0, 1, 1.0), (1, 0, 1.0), (1, 2, 2.0), (2, 1, 2.0)], ["src", "dst", "w"]
+    ).withColumn(
+        "w",
+        F.when(F.col("src") == 2, F.raise_error(F.lit("edge weight failed")))
+        .otherwise(F.col("w"))
+        .cast("double"),
+    )
+    before = live_caches(spark)
+    with pytest.raises(Exception, match="edge weight failed"):
+        pagerank(edges, iterations=3, persist=True)
+    assert live_caches(spark) == before
 
 
 def _py_jpeg_dims(b: bytes):
@@ -2373,9 +2431,7 @@ def test_setsim_keeps_set_semantics_with_duplicate_rows(spark):
         for kw in ({}, {"sets": sets}):
             got = {
                 (r["doc_a"], r["doc_b"]): r["jaccard"]
-                for r in set_similarity_join(
-                    tokens, tau, persist=False, **kw
-                ).collect()
+                for r in set_similarity_join(tokens, tau, **kw).collect()
             }
             assert got == want, (tau, sorted(kw), got, want)
 

@@ -15,6 +15,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
+from crypto_market_tracker_etl_spark.operators.cache import live_caches
 from tests.conftest import TABLES, assert_frames_match
 
 PARITY_SF_DIR = os.environ.get(
@@ -74,7 +75,10 @@ def duck01():
 def test_query_matches_oracle(spark, duck01, name):
     qfn = entrymod.queries()[name]
     sql = entrymod.oracle_sql().get(name)
+    before = live_caches(spark)
     spark_pdf = qfn(spark, PARITY_SF_DIR).toPandas()
+    # no table a query caches may outlive it (checkpoints are not counted)
+    assert live_caches(spark) == before, (name, before, live_caches(spark))
     if sql is None:
         assert len(spark_pdf) >= 0  # rows-only check, same as the driver
         return

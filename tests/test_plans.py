@@ -21,6 +21,25 @@ def plan_of(spark, name: str) -> str:
     return explain_formatted(spark, entrymod.queries()[name](spark, SF_DIR))
 
 
+def plan_at_materialize(spark, monkeypatch, module, name: str) -> str:
+    """The plan the registered builder ``name`` hands to ``materialize``.
+
+    Builders that hold a cache return an eager checkpoint, whose own plan
+    is a bare ``Scan ExistingRDD``. Substituting ``module.materialize``
+    with a capture fake yields the pre-checkpoint plan, explained while
+    the query's ``cache_scope`` still holds its tables."""
+    plans = []
+
+    def capture(df):
+        plans.append(explain_formatted(spark, df))
+        return df
+
+    monkeypatch.setattr(module, "materialize", capture)
+    entrymod.queries()[name](spark, SF_DIR)
+    assert len(plans) == 1, len(plans)
+    return plans[0]
+
+
 def test_dim_join_broadcasts_all_dims(spark):
     s = plan_of(spark, "dim_join")
     assert "BroadcastHashJoin" in s
@@ -323,19 +342,10 @@ def test_rrf_fusion_no_corpus_shuffle(spark):
     assert "CartesianProduct" not in s
 
 
-def test_contamination_corpus_never_shuffles_for_join(spark):
-    # the registered query returns a checkpointed result (cache scoping),
-    # so inspect the LAZY plan builder it wraps
-    from crypto_market_tracker_etl_spark.queries_ext2 import contamination_flagged
+def test_contamination_corpus_never_shuffles_for_join(spark, monkeypatch):
+    import crypto_market_tracker_etl_spark.queries_ext2 as qe2
 
-    flagged, docs = contamination_flagged(spark, SF_DIR)
-    try:
-        jvm = spark._jvm
-        s = flagged._jdf.queryExecution().explainString(
-            jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
-    finally:
-        docs.unpersist()
+    s = plan_at_materialize(spark, monkeypatch, qe2, "contamination")
     # the eval shingle sliver broadcasts; a SortMergeJoin would mean the
     # whole exploded corpus reshuffled on the shingle key
     assert "BroadcastHashJoin" in s
@@ -502,23 +512,17 @@ def test_market_view_sql_pushdown_dashboard_path(spark, tmp_path):
     assert "EqualTo(asset_id,btc)" in s7
 
 
-def test_near_dup_pairs_banded_join_never_all_pairs(spark):
+def test_near_dup_pairs_banded_join_never_all_pairs(spark, monkeypatch):
     """Pin the near_dup_pairs shape the r5 drift pin relied on (the
     knn_lsh lesson: a timing watch without its own plan test proves
     nothing): candidate pairs come from an equi-join on the MinHash band
     key -- never a cartesian or nested-loop all-pairs product -- and the
     Jaccard verify (array_intersect/array_union) rides a hash-join
     condition over those candidates only, after a distinct-pair
-    aggregate. (r12: the registry fn materializes eagerly to release
-    its signature cache — inspect the lazy plan, the contamination
-    pattern.)"""
-    from crypto_market_tracker_etl_spark.queries_ext import near_dup_pairs_lazy
+    aggregate."""
+    import crypto_market_tracker_etl_spark.queries_ext as qe
 
-    pairs, sigs = near_dup_pairs_lazy(spark, SF_DIR)
-    try:
-        s = explain_formatted(spark, pairs)
-    finally:
-        sigs.unpersist()
+    s = plan_at_materialize(spark, monkeypatch, qe, "near_dup_pairs")
     assert "CartesianProduct" not in s
     assert "BroadcastNestedLoopJoin" not in s
     assert "SortMergeJoin" not in s
@@ -527,32 +531,21 @@ def test_near_dup_pairs_banded_join_never_all_pairs(spark):
     assert "doc_id" in s and "array_intersect" in s
 
 
-def test_registered_fns_route_through_lazy_helpers(spark, monkeypatch):
-    """ADVICE r12: the plan-shape guards above inspect the LAZY helpers,
-    so nothing pinned that the registered queries actually delegate to
-    them — a future edit to the eager wrappers could reintroduce an
-    unguarded all-pairs plan. Assert the delegation itself."""
-    import crypto_market_tracker_etl_spark.queries_ext as qe
+def test_embedding_near_dup_bucket_join_never_all_pairs(spark, monkeypatch):
+    """Embedding near-dup pairs come from the LSH bucket equi-join over
+    the held bucket index, never a cartesian or nested-loop all-pairs
+    product."""
+    import re
 
-    calls = []
+    import crypto_market_tracker_etl_spark.operators.similarity as sim
 
-    def fake_ndp(spark_, sf_dir, *a, **k):
-        calls.append("ndp")
-        raise RuntimeError("routed")
-
-    def fake_ssj(spark_, sf_dir, *a, **k):
-        calls.append("ssj")
-        raise RuntimeError("routed")
-
-    monkeypatch.setattr(qe, "near_dup_pairs_lazy", fake_ndp)
-    monkeypatch.setattr(qe, "setsim_join_lazy", fake_ssj)
-    import pytest as _pytest
-
-    with _pytest.raises(RuntimeError, match="routed"):
-        qe.q_near_dup_pairs(spark, SF_DIR)
-    with _pytest.raises(RuntimeError, match="routed"):
-        qe.q_setsim_join(spark, SF_DIR)
-    assert calls == ["ndp", "ssj"]
+    s = plan_at_materialize(spark, monkeypatch, sim, "embedding_near_dup")
+    assert "CartesianProduct" not in s
+    assert "BroadcastNestedLoopJoin" not in s
+    assert "HashJoin" in s
+    assert re.search(r"Left keys \[1\]: \[bucket#\d+\]", s)
+    assert re.search(r"Right keys \[1\]: \[bucket#\d+\]", s)
+    assert "InMemoryTableScan" in s or "InMemoryRelation" in s
 
 
 def test_doc_repetition_gram_aggregate_shape(spark):
@@ -780,24 +773,14 @@ def test_image_ahash_expression_only_zero_shuffle(spark):
     assert "BatchEvalPython" not in s and "ArrowEvalPython" not in s
 
 
-def test_ahash_near_dup_banded_join_never_all_pairs(spark):
+def test_ahash_near_dup_banded_join_never_all_pairs(spark, monkeypatch):
     """Visual near-dup pairing is the banded-LSH shape: one Generate
     (the 4-band explode), the band-keyed bucket join, never a
     cartesian/nested-loop product, and no Python — the
     MinHash/SimHash discipline on the visual modality."""
-    from crypto_market_tracker_etl_spark.queries_ext import (
-        ahash_near_dup_lazy,
-    )
+    import crypto_market_tracker_etl_spark.queries_ext as qe
 
-    cand, bands = ahash_near_dup_lazy(spark, SF_DIR)
-    try:
-        s = cand._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-    finally:
-        bands.unpersist()
+    s = plan_at_materialize(spark, monkeypatch, qe, "ahash_near_dup")
     assert "CartesianProduct" not in s
     assert "BroadcastNestedLoopJoin" not in s
     # the 4-band explode textualizes once per consumer of the persisted
@@ -834,24 +817,14 @@ def test_ahash_near_dup_recall_on_planted_twins(spark):
     assert all(0 <= h <= 8 for h in got.values())
 
 
-def test_dhash_near_dup_banded_join_never_all_pairs(spark):
+def test_dhash_near_dup_banded_join_never_all_pairs(spark, monkeypatch):
     """The combined-verify tier keeps the ahash_near_dup plan shape:
     banded bucket join over the persisted hash table (which now carries
     the dHash alongside — no second decode pass, no extra join), never
     a cartesian/nested-loop product, no Python."""
-    from crypto_market_tracker_etl_spark.queries_ext import (
-        dhash_near_dup_lazy,
-    )
+    import crypto_market_tracker_etl_spark.queries_ext as qe
 
-    cand, bands = dhash_near_dup_lazy(spark, SF_DIR)
-    try:
-        s = cand._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-    finally:
-        bands.unpersist()
+    s = plan_at_materialize(spark, monkeypatch, qe, "dhash_near_dup")
     assert "CartesianProduct" not in s
     assert "BroadcastNestedLoopJoin" not in s
     assert 1 <= s.count(") Generate") <= 4
@@ -1010,17 +983,14 @@ def test_multimodal_task_binaries_stay_bounded(spark):
         assert size < cap, f"{name} task binary {size}B > {cap}B budget"
 
 
-def test_setsim_join_prefix_filter_no_cartesian(spark):
+def test_setsim_join_prefix_filter_no_cartesian(spark, monkeypatch):
     """The exact similarity join must stay prefix-filtered: candidates
     come from equi-joins (hash) on the shingle key, the per-doc prefix
     rank is a window riding the doc grain (no global rangepartitioning
-    rank), and nothing may produce a cartesian corpus-squared product.
-    (r12: the registry fn materializes eagerly inside its cache scope —
-    inspect the lazy plan.)"""
-    from crypto_market_tracker_etl_spark.queries_ext import setsim_join_lazy
+    rank), and nothing may produce a cartesian corpus-squared product."""
+    import crypto_market_tracker_etl_spark.queries_ext as qe
 
-    pairs, _ = setsim_join_lazy(spark, SF_DIR)
-    s = explain_formatted(spark, pairs)
+    s = plan_at_materialize(spark, monkeypatch, qe, "setsim_join")
     assert "CartesianProduct" not in s
     assert "BroadcastNestedLoopJoin" not in s  # no unconditioned join
     assert "rangepartitioning" not in s.lower()

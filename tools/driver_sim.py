@@ -3,7 +3,10 @@
 Mirrors the external driver: vanilla SparkSession, entry() smoke at
 sf0.001, every queries() entry at sf0.01 diffed against oracle_sql()
 via DuckDB (row count + sorted column names + order-insensitive value
-hash). Prints one status line per query and a final PASS/FAIL summary.
+hash). A query also fails if it leaves a cached table behind: the count
+of persisted non-checkpoint RDDs and of CacheManager entries must be the
+same after it as before. Prints one status line per query and a final
+PASS/FAIL summary.
 """
 
 from __future__ import annotations
@@ -55,6 +58,7 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__ as m
+    from crypto_market_tracker_etl_spark.operators.cache import live_caches
 
     rows = m.entry(spark).collect()
     assert len(rows) > 0, "entry() returned zero rows"
@@ -77,11 +81,18 @@ def main() -> int:
     t_start = time.time()
     for i, (name, fn) in enumerate(qs.items()):
         t0 = time.time()
+        before = live_caches(spark)
         try:
             sp = fn(spark, SF01).toPandas()
         except Exception as exc:  # noqa: BLE001
             failures.append(f"{name}: spark error {exc}")
             print(f"[{i + 1}/{len(qs)}] {name}: SPARK ERROR {exc}", flush=True)
+            continue
+        after = live_caches(spark)
+        if after != before:
+            # (persisted non-checkpoint RDDs, CacheManager entries)
+            failures.append(f"{name}: cache leak {before} -> {after}")
+            print(f"[{i + 1}/{len(qs)}] {name}: CACHE LEAK", flush=True)
             continue
         if name not in osql:
             print(
