@@ -169,2760 +169,3 @@ def frame_sample(df: DataFrame, every_n: int, id_col: str = "media_id") -> DataF
     """Deterministic 1-in-N sampling by id hash — the 'sample frames from
     video' pattern without data movement (no shuffle, prunes early)."""
     return df.filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(every_n)) == 0)
-
-
-# ---------------------------------------------------------------------------
-# Real header parsing — the codec-free slice of image decode.
-#
-# Dimension/format extraction needs no image library: it is fixed-offset
-# byte arithmetic on the container header. Implemented as pure JVM
-# expressions (substring on binary → hex → conv), so a 100 TB metadata
-# backfill never leaves whole-stage codegen and never touches Python.
-# ---------------------------------------------------------------------------
-
-PNG_SIG_HEX = "89504E470D0A1A0A"  # \x89PNG\r\n\x1a\n
-GIF_SIG_HEX = "474946383961"  # "GIF89a"
-BMP_SIG_HEX = "424D"  # "BM" — weak 2-byte magic; gates also require the
-# 4 reserved bytes (offsets 7-10) to be zero, per spec, so arbitrary
-# text starting "BM" is not routed as an image (the MP3-sync lesson)
-
-
-def _be4_hex(n: F.Column) -> F.Column:
-    """32-bit big-endian hex of an int column (PNG stores dims BE)."""
-    return F.lpad(F.conv(n.cast("string"), 10, 16), 8, "0")
-
-
-def _le2_hex(n: F.Column) -> F.Column:
-    """16-bit little-endian hex of an int column (GIF stores dims LE)."""
-    byte = lambda b: F.lpad(F.conv(b.cast("string"), 10, 16), 2, "0")  # noqa: E731
-    return F.concat(byte(n % 256), byte((n / 256).cast("long")))
-
-
-def synth_png(width: F.Column, height: F.Column) -> F.Column:
-    """A real PNG prefix (signature + IHDR chunk) carrying the given
-    dimensions — 33 bytes, parseable by any PNG reader."""
-    return F.unhex(
-        F.concat(
-            F.lit(PNG_SIG_HEX),
-            F.lit("0000000D"),  # IHDR length 13
-            F.lit("49484452"),  # "IHDR"
-            _be4_hex(width),
-            _be4_hex(height),
-            F.lit("0806000000"),  # 8-bit RGBA, deflate, no interlace
-        )
-    )
-
-
-def synth_gif(width: F.Column, height: F.Column) -> F.Column:
-    """A real GIF89a prefix (signature + logical screen descriptor)."""
-    return F.unhex(
-        F.concat(
-            F.lit(GIF_SIG_HEX),
-            _le2_hex(width),
-            _le2_hex(height),
-            F.lit("F70000"),  # GCT flag + background + aspect
-        )
-    )
-
-
-def synth_bmp(
-    width: F.Column,
-    height: F.Column,
-    top_down: F.Column | None = None,
-    core: bool = False,
-) -> F.Column:
-    """A real BMP file header + DIB header (no pixel array — the
-    metadata slice, like synth_png). Two real-world layouts (r10):
-
-    * default: BITMAPINFOHEADER (40-byte DIB, the overwhelmingly common
-      one) — signed LE32 dims at offsets 19/23; ``top_down`` (boolean
-      column) writes the height NEGATIVE (two's complement), the spec's
-      top-down row order that a parser reporting |height| must undo;
-    * ``core=True``: the ancient BITMAPCOREHEADER (12-byte DIB, OS/2) —
-      UNSIGNED LE16 dims at offsets 19/21; still produced by legacy
-      exporters and the reason a parser cannot hardcode one offset.
-
-    54 / 26 bytes; any BMP reader opens them (independent pure-Python
-    parser in tests)."""
-    if core and top_down is not None:
-        raise ValueError(
-            "CORE (BITMAPCOREHEADER) dims are unsigned — no top-down "
-            "form exists; a silently-ignored top_down would make a test "
-            "mean nothing"
-        )
-    if core:
-        return F.unhex(
-            F.concat(
-                F.lit(BMP_SIG_HEX),
-                _le_hex(F.lit(26), 4),  # file size
-                F.lit("00000000"),  # reserved (must be 0 — the gate)
-                _le_hex(F.lit(26), 4),  # pixel-array offset
-                _le_hex(F.lit(12), 4),  # DIB size 12 = CORE
-                _le_hex(width, 2),
-                _le_hex(height, 2),
-                F.lit("0100"),  # planes
-                F.lit("1800"),  # 24 bpp
-            )
-        )
-    td = F.lit(False) if top_down is None else top_down
-    h_raw = F.when(
-        td, F.lit(4294967296) - height.cast("long")
-    ).otherwise(height.cast("long"))
-    return F.unhex(
-        F.concat(
-            F.lit(BMP_SIG_HEX),
-            _le_hex(F.lit(54), 4),  # file size
-            F.lit("00000000"),  # reserved
-            _le_hex(F.lit(54), 4),  # pixel-array offset
-            _le_hex(F.lit(40), 4),  # DIB size 40 = INFO
-            _le_hex(width.cast("long"), 4),
-            _le_hex(h_raw, 4),  # signed: negative = top-down
-            F.lit("0100"),  # planes
-            F.lit("1800"),  # 24 bpp
-            F.lit("00000000"),  # compression BI_RGB
-            F.lit("00000000"),  # image size (0 valid for BI_RGB)
-            F.lit("00000000"),  # x ppm
-            F.lit("00000000"),  # y ppm
-            F.lit("00000000"),  # colors used
-            F.lit("00000000"),  # colors important
-        )
-    )
-
-
-def synth_jpeg(width: F.Column, height: F.Column) -> F.Column:
-    """A real JPEG header prefix carrying the given dimensions — SOI +
-    APP0/JFIF + a (stub) DQT + an SOF0 frame header, 40 bytes, laid out
-    with correct segment lengths so any marker-walking JPEG parser (the
-    independent pure-Python one in tests included) finds the SOF0 where
-    the standard puts it: third segment, after two variable-length ones —
-    exercising the bounded walk, not a fixed offset."""
-    be2 = lambda n: F.lpad(F.conv(n.cast("string"), 10, 16), 4, "0")  # noqa: E731
-    return F.unhex(
-        F.concat(
-            F.lit("FFD8"),  # SOI
-            F.lit("FFE0" "0010" "4A46494600" "0101" "00" "0048" "0048" "0000"),
-            # APP0 len 16: "JFIF\0", v1.1, no units, 72x72, no thumb
-            F.lit("FFDB" "0005" "00" "1122"),  # stub DQT, len 5
-            F.lit("FFC0" "000B" "08"),  # SOF0 len 11, 8-bit precision
-            be2(height),
-            be2(width),
-            F.lit("01" "011100"),  # 1 component, id 1, 1x1, table 0
-        )
-    )
-
-
-def _jpeg_sof_walk(payload: F.Column, max_segments: int, finish) -> F.Column:
-    """The bounded SOF segment walk (marker → BE16 length → next marker)
-    as a single ``aggregate`` over ``sequence(1, max_segments)`` whose
-    lambda advances a (pos, sof) state — runtime iteration, CONSTANT
-    plan size (the naive unrolled-``when`` chain re-inlines the position
-    expression per step and blows up exponentially; the planning-cost
-    class of SCALE.md §bpe-ceiling). Walk rules: stop at SOS/EOI
-    (entropy-coded data follows — scanning further would false-match
-    marker bytes in compressed data, which is why a plain locate() is
-    NOT safe for JPEG the way the moov-anchored scan is for BMFF);
-    desync (a segment not starting with FF) stops with no match;
-    progressive (SOF2) and extended-sequential (SOF1) carry dims at the
-    same offsets as baseline. max_segments=16 bounds pathological APPn
-    stacks — real files carry SOF within ~6 segments; past the bound the
-    parse yields NULL dims, never an error. ``finish`` maps the final
-    state to the result INSIDE the aggregate — the ONE place a
-    multi-field consumer can read the state without re-running the walk
-    (lambda-variable reads are free; re-referencing the aggregate is
-    not, see jpeg_dims)."""
-    init = F.struct(
-        F.lit(3).cast("int").alias("pos"), F.lit(0).cast("int").alias("sof")
-    )
-
-    def step(st: F.Column, _x: F.Column) -> F.Column:
-        pos, sof = st.getField("pos"), st.getField("sof")
-        marker = F.hex(payload.substr(pos, F.lit(2)))
-        seglen = F.conv(
-            F.hex(payload.substr(pos + 2, F.lit(2))), 16, 10
-        ).cast("int")
-        mk = lambda p, s: F.struct(  # noqa: E731
-            p.cast("int").alias("pos"), s.cast("int").alias("sof")
-        )
-        return (
-            F.when((sof > 0) | (pos <= 0), st)
-            .when(marker.isin("FFC0", "FFC1", "FFC2"), mk(pos, pos))
-            .when(marker.isin("FFD9", "FFDA"), mk(F.lit(-1), F.lit(0)))
-            .when(
-                F.hex(payload.substr(pos, F.lit(1))) == "FF",
-                mk(pos + 2 + seglen, F.lit(0)),
-            )
-            .otherwise(mk(F.lit(-1), F.lit(0)))
-        )
-
-    return F.aggregate(
-        F.sequence(F.lit(1), F.lit(max_segments)), init, step, finish
-    )
-
-
-def jpeg_sof_state(payload: F.Column, max_segments: int = 16) -> F.Column:
-    """1-based byte offset of the first SOF0/SOF1/SOF2 marker in a JPEG
-    stream (bounded segment walk — see _jpeg_sof_walk), or 0 when
-    absent."""
-    return _jpeg_sof_walk(
-        payload, max_segments, lambda st: st.getField("sof")
-    )
-
-
-def jpeg_dims(payload: F.Column | str, max_segments: int = 16) -> F.Column:
-    """struct(width, height) of a JPEG payload from ONE segment walk, or
-    NULL for non-JPEG payloads (signature-gated, so they never pay the
-    walk) / NULL fields when no SOF is found. Both dims are extracted in
-    the aggregate's FINISH lambda, where the final state is a free
-    lambda-variable read — the r9 perf finding: higher-order functions
-    are excluded from Spark's subexpression elimination
-    (EquivalentExpressions rejects trees containing lambda variables),
-    so every inline re-reference of the walk re-EXECUTES it; the old
-    form referenced it 4× per row (gate + two offsets × two callers'
-    getFields). Consumers extracting several fields should STAGE this
-    behind an alias barrier (the mvhd_offset pattern in media_catalog)
-    and pass the staged column to image_meta(payload, jpeg=...). Pass a
-    column NAME to get the memoized tree (see _memo_expr)."""
-    if isinstance(payload, str):
-        return _memo_expr(
-            ("jpeg_dims", payload, max_segments),
-            lambda: jpeg_dims(F.col(payload), max_segments),
-        )
-    is_jpeg = _bytes_hex(payload, 1, 3) == JPEG_SIG_HEX
-
-    def fin(st: F.Column) -> F.Column:
-        sof = st.getField("sof")
-        return F.struct(
-            F.when(sof > 0, _be_int_dyn(payload, sof + 7, 2).cast("int"))
-            .alias("width"),
-            F.when(sof > 0, _be_int_dyn(payload, sof + 5, 2).cast("int"))
-            .alias("height"),
-        )
-
-    return F.when(is_jpeg, _jpeg_sof_walk(payload, max_segments, fin))
-
-
-# ---------------------------------------------------------------------------
-# TIFF (r9): the archival/scan crawl class (and the container EXIF reuses).
-# A TIFF is endian-tagged ("II" little / "MM" big, then magic 42), with a
-# 32-bit offset to the first IFD — a directory of 12-byte entries
-# (tag, type, count, value-or-offset). Dimensions are tags 256 (ImageWidth)
-# and 257 (ImageLength), inline when type is SHORT(3)/LONG(4) with count 1.
-# Unlike WebP the offsets are DYNAMIC (the IFD can sit anywhere), so the
-# parse is a bounded entry walk in ONE aggregate(sequence(1, max_entries))
-# — the JPEG-SOF-walk pattern: runtime iteration, constant plan size, both
-# dims extracted in the finish lambda where state reads are free.
-# ---------------------------------------------------------------------------
-
-TIFF_LE_SIG_HEX = "49492A00"  # "II" + 42 little-endian
-TIFF_BE_SIG_HEX = "4D4D002A"  # "MM" + 42 big-endian
-TIFF_MAX_IFD_ENTRIES = 32  # real first IFDs carry < 20 entries
-
-# Unresolved-Column memo for the header parsers (r9). Building these
-# expression trees costs hundreds of py4j round-trips (~0.1-0.4 s per
-# parser per QUERY CONSTRUCTION — measured: tiff_dims 0.37 s, image_meta
-# 0.58 s), which at 5k-row test scale dwarfed the actual execution. A
-# parser invoked with a column NAME (the staged-alias pattern every
-# consumer already uses) returns one shared unresolved tree per
-# (parser, name) — Catalyst expression trees are immutable and
-# session-independent, so reuse across plans and sessions in the same
-# process is safe; a parser invoked with a Column keeps the uncached
-# path (arbitrary expressions can't be keyed). This is the constructor-
-# side twin of the SCALE.md §planning-cost lesson: per-process, not
-# per-plan, like a prepared statement.
-_EXPR_MEMO: dict = {}
-
-
-def _memo_expr(key: tuple, build):
-    col = _EXPR_MEMO.get(key)
-    if col is None:
-        col = _EXPR_MEMO[key] = build()
-    return col
-
-
-def _int_at_dyn(
-    payload: F.Column, pos: F.Column, n: int, le: F.Column
-) -> F.Column:
-    """Unsigned int of ``n`` bytes at a RUNTIME 1-based offset, decoded
-    little- or big-endian per the ``le`` boolean column (TIFF carries its
-    byte order in-band, so one expression must serve both)."""
-    be = F.conv(F.hex(payload.substr(pos, F.lit(n))), 16, 10).cast("long")
-    b = lambda i: F.conv(  # noqa: E731
-        F.hex(payload.substr(pos + i, F.lit(1))), 16, 10
-    ).cast("long")
-    le_val = sum([b(i) * (256**i) for i in range(n)], F.lit(0).cast("long"))
-    return F.when(le, le_val).otherwise(be)
-
-
-def synth_tiff(
-    width: F.Column,
-    height: F.Column,
-    little_endian: bool = True,
-    dims_in_ifd1: bool = False,
-) -> F.Column:
-    """A real TIFF prefix: endian header + a 2-entry first IFD carrying
-    ImageWidth/ImageLength as inline SHORTs — 38 bytes, parseable by any
-    IFD walker (the independent pure-Python parser in tests included).
-    Entry layout per spec: tag(2) type(2) count(4) value(4), value
-    left-justified in its 4-byte field (so a SHORT occupies the FIRST two
-    bytes in both byte orders).
-
-    ``dims_in_ifd1`` (r10) emits the exotic multi-IFD layout some
-    scanners and EXIF writers produce: IFD0 carries only non-dim
-    entries (Compression, ResolutionUnit) and its next-IFD offset
-    points at an IFD1 that holds the dims — 68 bytes; a first-IFD-only
-    parser yields NULLs on it."""
-    if little_endian:
-        i16 = lambda n: _le_hex(n, 2)  # noqa: E731
-        i32 = lambda n: _le_hex(n, 4)  # noqa: E731
-        sig = TIFF_LE_SIG_HEX
-    else:
-        i16 = lambda n: F.lpad(F.conv(n.cast("string"), 10, 16), 4, "0")  # noqa: E731
-        i32 = lambda n: F.lpad(F.conv(n.cast("string"), 10, 16), 8, "0")  # noqa: E731
-        sig = TIFF_BE_SIG_HEX
-    lit = lambda n, w: i16(F.lit(n)) if w == 2 else i32(F.lit(n))  # noqa: E731
-    entry = lambda tag, val: F.concat(  # noqa: E731
-        lit(tag, 2), lit(3, 2), lit(1, 4), i16(val), F.lit("0000")
-    )
-    if dims_in_ifd1:
-        # header(8) + IFD0 count(2)+2×12+next(4)=38 → IFD1 at offset 38
-        return F.unhex(
-            F.concat(
-                F.lit(sig),
-                lit(8, 4),
-                lit(2, 2),
-                entry(259, F.lit(1)),  # Compression: none
-                entry(296, F.lit(2)),  # ResolutionUnit: inch
-                lit(38, 4),  # next-IFD offset → IFD1
-                lit(2, 2),
-                entry(256, width),
-                entry(257, height),
-                lit(0, 4),
-            )
-        )
-    return F.unhex(
-        F.concat(
-            F.lit(sig),
-            lit(8, 4),  # first-IFD offset: immediately after the header
-            lit(2, 2),  # entry count
-            entry(256, width),
-            entry(257, height),
-            lit(0, 4),  # next-IFD offset: none
-        )
-    )
-
-
-def tiff_dims(
-    payload: F.Column | str, max_entries: int = TIFF_MAX_IFD_ENTRIES
-) -> F.Column:
-    """struct(width, height) of a TIFF payload, or NULL for non-TIFF
-    bytes / NULL fields when neither walked IFD carries inline dims.
-    Bounded IFD-entry walk as ONE aggregate over
-    sequence(1, 2·max_entries + 2) — tag/type/count live at fixed
-    strides from the dynamic IFD offset; SHORT(3) and LONG(4) with
-    count 1 are decoded inline per the in-band byte order; offset-valued
-    dims (count > 1 or other types) yield NULL rather than an unbounded
-    dereference.
-
-    r10: when IFD0 ends without both dims, the walk follows its
-    next-IFD offset ONCE into IFD1 — the multi-IFD layout scanners and
-    EXIF writers produce (dims in IFD1 behind a metadata-only IFD0).
-    Exactly one hop: a malicious offset CHAIN still cannot grow the
-    walk (the budget is 2 IFDs × max_entries, constant plan size), and
-    a zero/absent next-IFD offset ends the walk. Entries past
-    ``max_entries`` per IFD are not walked: NULL dims, never an error —
-    the image_meta contract. Pass a column NAME to get the memoized
-    tree (see _memo_expr)."""
-    if isinstance(payload, str):
-        return _memo_expr(
-            ("tiff_dims", payload, max_entries),
-            lambda: tiff_dims(F.col(payload), max_entries),
-        )
-    is_le = _bytes_hex(payload, 1, 4) == TIFF_LE_SIG_HEX
-    is_tiff = is_le | (_bytes_hex(payload, 1, 4) == TIFF_BE_SIG_HEX)
-
-    # ifd offset, entry count, and the per-IFD cursor j live in the
-    # STATE: init expressions run once per row, while anything
-    # referenced inside step() re-inlines — and re-executes — per
-    # iteration (HOFs are exempt from subexpression elimination; the
-    # jpeg_dims lesson applied to the walk's own anchors). The
-    # early-exit guard below makes the typical row pay only the entries
-    # up to its dim tags (2-5 in real files): when() branches evaluate
-    # lazily, so a satisfied state skips the entry decode entirely for
-    # the remaining steps.
-    ifd0 = _int_at_dyn(payload, F.lit(1) + 4, 4, is_le) + 1  # 1-based
-    raw_n0 = _int_at_dyn(payload, ifd0, 2, is_le)
-    init = F.struct(
-        ifd0.alias("ifd"),
-        # n carries the UNCAPPED count (the hop needs the true
-        # next-IFD position ifd+2+n*12); the cursor guard below caps
-        # the entries actually decoded at max_entries
-        raw_n0.alias("n"),
-        F.lit(1).cast("long").alias("j"),  # entry cursor within the IFD
-        F.lit(0).cast("long").alias("hop"),  # IFDs hopped (≤ 1)
-        F.lit(None).cast("long").alias("w"),
-        F.lit(None).cast("long").alias("h"),
-    )
-
-    def step(st: F.Column, _i: F.Column) -> F.Column:
-        ifd, n = st.getField("ifd"), st.getField("n")
-        j, hop = st.getField("j"), st.getField("hop")
-        w, h = st.getField("w"), st.getField("h")
-        at = ifd + 2 + (j - 1) * 12
-        tag = _int_at_dyn(payload, at, 2, is_le)
-        typ = _int_at_dyn(payload, at + 2, 2, is_le)
-        cnt = _int_at_dyn(payload, at + 4, 4, is_le)
-        val = F.when(typ == 3, _int_at_dyn(payload, at + 8, 2, is_le)).when(
-            typ == 4, _int_at_dyn(payload, at + 8, 4, is_le)
-        )
-        inline = (cnt == 1) & ((typ == 3) | (typ == 4))
-        # next-IFD offset sits right after the current IFD's entries
-        nxt = _int_at_dyn(payload, ifd + 2 + n * 12, 4, is_le)
-        mk = lambda ifd_, n_, j_, hop_, w_, h_: F.struct(  # noqa: E731
-            ifd_.cast("long").alias("ifd"),
-            n_.cast("long").alias("n"),
-            j_.cast("long").alias("j"),
-            hop_.cast("long").alias("hop"),
-            w_.cast("long").alias("w"),
-            h_.cast("long").alias("h"),
-        )
-        return (
-            F.when((ifd <= 0) | (w.isNotNull() & h.isNotNull()), st)
-            .when(
-                # decode entry j, advance the cursor; entries past the
-                # max_entries bound are never decoded (pinned contract),
-                # but n stays UNCAPPED so the hop below reads the
-                # next-IFD pointer where the file actually put it
-                (j <= n) & (j <= max_entries),
-                mk(
-                    ifd,
-                    n,
-                    j + 1,
-                    hop,
-                    F.when((tag == 256) & inline & w.isNull(), val).otherwise(
-                        w
-                    ),
-                    F.when((tag == 257) & inline & h.isNull(), val).otherwise(
-                        h
-                    ),
-                ),
-            )
-            .when(
-                # IFD exhausted without both dims: follow next-IFD once
-                (hop < 1) & (nxt > 0),
-                mk(
-                    nxt + 1,
-                    F.least(
-                        _int_at_dyn(payload, nxt + 1, 2, is_le),
-                        F.lit(max_entries).cast("long"),
-                    ),
-                    F.lit(1),
-                    hop + 1,
-                    w,
-                    h,
-                ),
-            )
-            .otherwise(mk(F.lit(-1), n, j, hop, w, h))  # walk ends
-        )
-
-    def fin(st: F.Column) -> F.Column:
-        # a hostile LONG-typed dim past 2^31-1 would WRAP NEGATIVE on the
-        # int cast — range-gate it to NULL instead (no real image is
-        # 2-gigapixel-per-side; a lying header must not parse)
-        rng = lambda c: F.when(c <= 2147483647, c).cast("int")  # noqa: E731
-        return F.struct(
-            rng(st.getField("w")).alias("width"),
-            rng(st.getField("h")).alias("height"),
-        )
-
-    return F.when(
-        is_tiff,
-        F.aggregate(
-            F.sequence(F.lit(1), F.lit(2 * max_entries + 2)), init, step, fin
-        ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# WebP (r9): the second most common crawl image class after JPEG. A WebP
-# file is a RIFF container ("RIFF" + size + "WEBP") whose first chunk is one
-# of three bitstream variants, each carrying dimensions at FIXED offsets —
-# so unlike JPEG no segment walk is needed and the whole parse stays a plain
-# (subexpression-eliminable) projection:
-#   VP8  (lossy):    3-byte frame tag, 3-byte start code 9D 01 2A, then
-#                    width/height as LE16 each with the low 14 bits valid
-#                    (top 2 bits are the rescale hint).
-#   VP8L (lossless): signature byte 0x2F, then a LE32 bitfield packing
-#                    (width-1) in bits 0-13 and (height-1) in bits 14-27.
-#   VP8X (extended): 4 flag/reserved bytes, then (canvas_width-1) and
-#                    (canvas_height-1) as LE24 each.
-# ---------------------------------------------------------------------------
-
-WEBP_TAG_HEX = "57454250"  # "WEBP" (RIFF form type, bytes 9-12)
-VP8_FOURCC_HEX = "56503820"  # "VP8 " (lossy)
-VP8L_FOURCC_HEX = "5650384C"  # "VP8L" (lossless)
-VP8X_FOURCC_HEX = "56503858"  # "VP8X" (extended)
-VP8_START_CODE_HEX = "9D012A"
-
-
-def synth_webp_vp8(width: F.Column, height: F.Column) -> F.Column:
-    """A real lossy-WebP prefix (RIFF + 'WEBP' + 'VP8 ' chunk with frame
-    tag, start code, and 14-bit dims) — 30 bytes, parseable by any WebP
-    reader; the independent pure-Python parser in tests validates it."""
-    return F.unhex(
-        F.concat(
-            F.lit(WAV_RIFF_HEX),  # "RIFF"
-            F.lit("16000000"),  # file size 22 (LE32): WEBP + chunk
-            F.lit(WEBP_TAG_HEX),
-            F.lit(VP8_FOURCC_HEX),
-            F.lit("0A000000"),  # chunk size 10 (LE32)
-            F.lit("900200"),  # frame tag: keyframe, shown, psize 0x14
-            F.lit(VP8_START_CODE_HEX),
-            _le_hex(width, 2),  # 14-bit width, scale bits 0
-            _le_hex(height, 2),
-        )
-    )
-
-
-def synth_webp_vp8l(width: F.Column, height: F.Column) -> F.Column:
-    """A real lossless-WebP prefix (RIFF + 'WEBP' + 'VP8L' chunk: 0x2F
-    signature + the LE32 (width-1 | height-1<<14) bitfield) — 25 bytes."""
-    bits = (width - 1).cast("long") + (height - 1).cast("long") * 16384
-    return F.unhex(
-        F.concat(
-            F.lit(WAV_RIFF_HEX),
-            F.lit("11000000"),  # file size 17 (LE32)
-            F.lit(WEBP_TAG_HEX),
-            F.lit(VP8L_FOURCC_HEX),
-            F.lit("05000000"),  # chunk size 5 (LE32)
-            F.lit("2F"),  # VP8L signature byte
-            _le_hex(bits, 4),
-        )
-    )
-
-
-def synth_webp_vp8x(width: F.Column, height: F.Column) -> F.Column:
-    """A real extended-WebP prefix (RIFF + 'WEBP' + the 10-byte VP8X
-    chunk: flags + reserved + LE24 canvas dims minus one) — 30 bytes."""
-    return F.unhex(
-        F.concat(
-            F.lit(WAV_RIFF_HEX),
-            F.lit("16000000"),  # file size 22 (LE32)
-            F.lit(WEBP_TAG_HEX),
-            F.lit(VP8X_FOURCC_HEX),
-            F.lit("0A000000"),  # chunk size 10 (LE32)
-            F.lit("00000000"),  # flags (none) + 3 reserved bytes
-            _le_hex(width - 1, 3),  # canvas width - 1, LE24
-            _le_hex(height - 1, 3),  # canvas height - 1, LE24
-        )
-    )
-
-
-def synth_webp_vp8x_wrapped(
-    canvas_w: F.Column,
-    canvas_h: F.Column,
-    width: F.Column,
-    height: F.Column,
-    lossless: bool = True,
-) -> F.Column:
-    """An extended WebP whose BITSTREAM chunk sits behind the VP8X
-    chunk list (r10): RIFF + 'WEBP' + VP8X (the given canvas dims) +
-    an ICCP chunk (exercising the skip) + the VP8L (or VP8) bitstream
-    chunk carrying the ACTUAL image dims — the layout every
-    still-image VP8X file has, where canvas and bitstream dims can
-    disagree. 55 (VP8L) / 60 (VP8) bytes; parseable by any chunk
-    walker (the independent pure-Python parser in tests included)."""
-    vp8x = F.concat(
-        F.lit(VP8X_FOURCC_HEX),
-        F.lit("0A000000"),  # chunk size 10 (LE32)
-        F.lit("00000000"),  # flags + reserved
-        _le_hex(canvas_w - 1, 3),
-        _le_hex(canvas_h - 1, 3),
-    )
-    iccp = F.lit("49434350" "04000000" "00000000")  # "ICCP", 4 bytes
-    if lossless:
-        bits = (width - 1).cast("long") + (height - 1).cast("long") * 16384
-        stream = F.concat(
-            F.lit(VP8L_FOURCC_HEX),
-            F.lit("05000000"),  # chunk size 5 (LE32)
-            F.lit("2F"),
-            _le_hex(bits, 4),
-        )
-        riff_size = F.lit("2F000000")  # 4+18+12+13 = 47
-    else:
-        stream = F.concat(
-            F.lit(VP8_FOURCC_HEX),
-            F.lit("0A000000"),  # chunk size 10 (LE32)
-            F.lit("900200"),  # frame tag: keyframe, shown
-            F.lit(VP8_START_CODE_HEX),
-            _le_hex(width, 2),
-            _le_hex(height, 2),
-        )
-        riff_size = F.lit("34000000")  # 4+18+12+18 = 52
-    return F.unhex(
-        F.concat(
-            F.lit(WAV_RIFF_HEX),
-            riff_size,
-            F.lit(WEBP_TAG_HEX),
-            vp8x,
-            iccp,
-            stream,
-        )
-    )
-
-
-def _le3_int(payload: F.Column, pos: int) -> F.Column:
-    """24-bit little-endian int at 1-based byte offset ``pos``."""
-    b = lambda i: F.conv(_bytes_hex(payload, pos + i, 1), 16, 10).cast("int")  # noqa: E731
-    return b(0) + b(1) * 256 + b(2) * 65536
-
-
-WEBP_MAX_CHUNKS = 8  # bitstream sits within a few chunks of the VP8X
-
-
-def webp_stream_dims(
-    payload: F.Column | str, max_chunks: int = WEBP_MAX_CHUNKS
-) -> F.Column:
-    """struct(width, height) of the BITSTREAM chunk (VP8 / VP8L)
-    inside an extended WebP's chunk list, or NULL fields when none is
-    found within ``max_chunks`` (an animation's frames live inside
-    ANMF chunks — the walk correctly finds no top-level bitstream and
-    the caller falls back to the VP8X canvas).
-
-    Bounded chunk walk as ONE aggregate over sequence(1, max_chunks) —
-    the RIFF chunk grain (fourCC, LE32 size, payload padded to even)
-    starting right after the fixed-size VP8X chunk (1-based byte 31);
-    chunk offsets are DYNAMIC (ICCP/EXIF/XMP payloads vary), the
-    jpeg_sof_walk discipline: runtime iteration, constant plan size,
-    dims extracted in the finish lambda where state reads are free. A
-    hostile chunk size walks past the payload end, reads empty bytes,
-    and ends the walk — NULL dims, never an error. Pass a column NAME
-    to get the memoized tree (see _memo_expr)."""
-    if isinstance(payload, str):
-        return _memo_expr(
-            ("webp_stream_dims", payload, max_chunks),
-            lambda: webp_stream_dims(F.col(payload), max_chunks),
-        )
-    is_vp8x = (
-        (_bytes_hex(payload, 1, 4) == WAV_RIFF_HEX)
-        & (_bytes_hex(payload, 9, 4) == WEBP_TAG_HEX)
-        & (_bytes_hex(payload, 13, 4) == VP8X_FOURCC_HEX)
-    )
-    init = F.struct(
-        # first chunk after the VP8X (8-byte header + 10-byte payload)
-        F.lit(31).cast("long").alias("pos"),
-        F.lit(None).cast("long").alias("w"),
-        F.lit(None).cast("long").alias("h"),
-    )
-
-    def step(st: F.Column, _i: F.Column) -> F.Column:
-        pos, w = st.getField("pos"), st.getField("w")
-        h = st.getField("h")
-        fourcc = F.hex(payload.substr(pos, F.lit(4)))
-        size = _int_at_dyn(payload, pos + 4, 4, F.lit(True))
-        vp8l_ok = (fourcc == VP8L_FOURCC_HEX) & (
-            F.hex(payload.substr(pos + 8, F.lit(1))) == "2F"
-        )
-        vp8_ok = (fourcc == VP8_FOURCC_HEX) & (
-            F.hex(payload.substr(pos + 11, F.lit(3))) == VP8_START_CODE_HEX
-        )
-        lbits = _int_at_dyn(payload, pos + 9, 4, F.lit(True))
-        mk = lambda p_, w_, h_: F.struct(  # noqa: E731
-            p_.cast("long").alias("pos"),
-            w_.cast("long").alias("w"),
-            h_.cast("long").alias("h"),
-        )
-        return (
-            F.when((pos <= 0) | w.isNotNull(), st)
-            .when(
-                fourcc.isNull() | (F.length(fourcc) < 8) | size.isNull(),
-                mk(F.lit(-1), w, h),  # past payload end: walk ends
-            )
-            .when(vp8l_ok, mk(pos, lbits % 16384 + 1, F.shiftright(lbits, 14) % 16384 + 1))
-            .when(
-                vp8_ok,
-                mk(
-                    pos,
-                    _int_at_dyn(payload, pos + 14, 2, F.lit(True)) % 16384,
-                    _int_at_dyn(payload, pos + 16, 2, F.lit(True)) % 16384,
-                ),
-            )
-            .when(
-                # a malformed bitstream chunk (no signature/start code)
-                # carries no trusted dims: stop, don't skip past it
-                fourcc.isin(VP8L_FOURCC_HEX, VP8_FOURCC_HEX),
-                mk(F.lit(-1), w, h),
-            )
-            .otherwise(mk(pos + 8 + size + size % 2, w, h))  # skip chunk
-        )
-
-    def fin(st: F.Column) -> F.Column:
-        return F.struct(
-            st.getField("w").cast("int").alias("width"),
-            st.getField("h").cast("int").alias("height"),
-        )
-
-    return F.when(
-        is_vp8x,
-        F.aggregate(F.sequence(F.lit(1), F.lit(max_chunks)), init, step, fin),
-    )
-
-
-def webp_dims(
-    payload: F.Column | str, vp8x: F.Column | str | None = None
-) -> F.Column:
-    """struct(width, height) of a WebP payload, or NULL for non-WebP
-    bytes / NULL fields for an unrecognized or malformed first chunk.
-    Dispatches on the first chunk's fourCC (byte 13): VP8 dims are LE16
-    low-14-bits after the 9D012A start code (absent start code → NULL —
-    an interframe or corrupt stream carries no dims), VP8L dims unpack
-    the LE32 bitfield behind the 0x2F signature. For an extended (VP8X)
-    file, the ACTUAL image dims come from the bitstream chunk behind
-    the VP8X chunk list (``webp_stream_dims``, r10 — canvas and
-    bitstream can disagree, and the bitstream is what a decoder
-    renders); when the bounded walk finds no top-level bitstream (an
-    animation) the LE24 canvas fields + 1 are the documented fallback.
-
-    ``vp8x``: optionally a PRE-STAGED ``webp_stream_dims(payload)``
-    column. The stream walk is a higher-order function — exempt from
-    subexpression elimination — so a caller extracting width AND height
-    re-runs it unless it sits behind an alias barrier (the jpeg_dims /
-    tiff_dims discipline; before r10 this parser was fixed-offset and
-    needed no staging). Default (None) computes it inline: correct
-    everywhere, fastest only for single-field consumers. Pass column
-    NAMEs to get the memoized tree (see _memo_expr)."""
-    if isinstance(payload, str) and (vp8x is None or isinstance(vp8x, str)):
-        return _memo_expr(
-            ("webp_dims", payload, vp8x),
-            lambda: webp_dims(
-                F.col(payload), None if vp8x is None else F.col(vp8x)
-            ),
-        )
-    if isinstance(payload, str):
-        payload = F.col(payload)
-    if isinstance(vp8x, str):
-        vp8x = F.col(vp8x)
-    is_webp = (_bytes_hex(payload, 1, 4) == WAV_RIFF_HEX) & (
-        _bytes_hex(payload, 9, 4) == WEBP_TAG_HEX
-    )
-    fourcc = _bytes_hex(payload, 13, 4)
-    vp8_ok = (fourcc == VP8_FOURCC_HEX) & (
-        _bytes_hex(payload, 24, 3) == VP8_START_CODE_HEX
-    )
-    vp8l_ok = (fourcc == VP8L_FOURCC_HEX) & (_bytes_hex(payload, 21, 1) == "2F")
-    vp8x_ok = fourcc == VP8X_FOURCC_HEX
-    bits = _le4_int(payload, 22)  # VP8L (w-1 | h-1<<14) bitfield
-    sd = webp_stream_dims(payload) if vp8x is None else vp8x
-    width = (
-        F.when(vp8_ok, _le2_int(payload, 27) % 16384)
-        .when(vp8l_ok, (bits % 16384 + 1).cast("int"))
-        .when(
-            vp8x_ok,
-            F.coalesce(sd.getField("width"), _le3_int(payload, 25) + 1),
-        )
-    )
-    height = (
-        F.when(vp8_ok, _le2_int(payload, 29) % 16384)
-        .when(vp8l_ok, (F.shiftright(bits, 14) % 16384 + 1).cast("int"))
-        .when(
-            vp8x_ok,
-            F.coalesce(sd.getField("height"), _le3_int(payload, 28) + 1),
-        )
-    )
-    return F.when(
-        is_webp,
-        F.struct(
-            width.cast("int").alias("width"), height.cast("int").alias("height")
-        ),
-    )
-
-
-def _bytes_hex(payload: F.Column, pos: int, n: int) -> F.Column:
-    return F.hex(F.substring(payload, pos, n))
-
-
-def _be_int(payload: F.Column, pos: int, n: int) -> F.Column:
-    return F.conv(_bytes_hex(payload, pos, n), 16, 10).cast("int")
-
-
-def _le2_int(payload: F.Column, pos: int) -> F.Column:
-    return (
-        F.conv(_bytes_hex(payload, pos, 1), 16, 10).cast("int")
-        + F.conv(_bytes_hex(payload, pos + 1, 1), 16, 10).cast("int") * 256
-    )
-
-
-def image_meta(
-    payload: F.Column | str,
-    jpeg: F.Column | str | None = None,
-    tiff: F.Column | str | None = None,
-    webpx: F.Column | str | None = None,
-    ispe: F.Column | str | None = None,
-) -> F.Column:
-    """Parse (mime_type, width, height) from an image payload's header.
-
-    Dispatches on the magic bytes: PNG dims are 32-bit big-endian at
-    offset 16 (after signature + IHDR length/type), GIF dims 16-bit
-    little-endian at offset 6, JPEG dims via the bounded SOF segment
-    walk (``jpeg_dims`` — one walk produces BOTH dims in its finish
-    lambda; JPEG is the majority class of a real crawl, so NULL dims
-    there would gut media_catalog). Unknown formats — and a JPEG whose
-    walk finds no SOF — yield NULL dims ('application/octet-stream' for
-    unknown magic), never an error, so one malformed blob cannot fail a
-    backfill job. BMP (r10): reserved-bytes-tightened "BM" gate, then
-    the DIB-size field dispatches INFO (signed LE32 dims, |height| for
-    top-down files) vs legacy CORE (unsigned LE16) layouts. HEIF family
-    (r10): a BMFF payload whose major brand is a STILL-IMAGE brand
-    (heic/heix → image/heic, mif1/msf1 → image/heif, avif/avis →
-    image/avif — the sniff_mime brand table) takes dims from the ispe
-    box via the bounded box descent (``ispe_dims``); video brands stay
-    octet-stream here — image_meta parses images, the catalog routes
-    video to video_meta.
-
-    ``jpeg`` / ``tiff`` / ``webpx``: optionally PRE-STAGED
-    ``jpeg_dims(payload)`` / ``tiff_dims(payload)`` /
-    ``webp_stream_dims(payload)`` columns. The struct this function
-    returns is inlined per extracted field by Catalyst, and the walks —
-    higher-order functions — are exempt from subexpression elimination,
-    so a caller extracting width AND height re-runs them unless each
-    walk sits behind an alias barrier (exactly the mvhd_offset pattern
-    video_meta uses). Default (None) computes them inline: correct
-    everywhere, fastest only for single-field consumers. (The VP8/VP8L
-    first-chunk WebP parse stays fixed-offset — only the r10 VP8X
-    chunk-list walk needs the staging.)
-
-    Pass column NAMES (payload and the staged walks) to get the
-    memoized tree (see _memo_expr)."""
-    if (
-        isinstance(payload, str)
-        and (jpeg is None or isinstance(jpeg, str))
-        and (tiff is None or isinstance(tiff, str))
-        and (webpx is None or isinstance(webpx, str))
-        and (ispe is None or isinstance(ispe, str))
-    ):
-        return _memo_expr(
-            ("image_meta", payload, jpeg, tiff, webpx, ispe),
-            lambda: image_meta(
-                F.col(payload),
-                None if jpeg is None else F.col(jpeg),
-                None if tiff is None else F.col(tiff),
-                None if webpx is None else F.col(webpx),
-                None if ispe is None else F.col(ispe),
-            ),
-        )
-    if isinstance(payload, str):
-        payload = F.col(payload)
-    if isinstance(jpeg, str):
-        jpeg = F.col(jpeg)
-    if isinstance(tiff, str):
-        tiff = F.col(tiff)
-    if isinstance(webpx, str):
-        webpx = F.col(webpx)
-    if isinstance(ispe, str):
-        ispe = F.col(ispe)
-    is_png = _bytes_hex(payload, 1, 8) == PNG_SIG_HEX
-    is_gif = _bytes_hex(payload, 1, 6) == GIF_SIG_HEX
-    is_jpeg = _bytes_hex(payload, 1, 3) == JPEG_SIG_HEX
-    is_webp = (_bytes_hex(payload, 1, 4) == WAV_RIFF_HEX) & (
-        _bytes_hex(payload, 9, 4) == WEBP_TAG_HEX
-    )
-    is_tiff = _bytes_hex(payload, 1, 4).isin(TIFF_LE_SIG_HEX, TIFF_BE_SIG_HEX)
-    # BMP (r10): "BM" is a weak 2-byte magic, so the gate also requires
-    # the spec-mandated zero reserved bytes; the DIB-size field then
-    # dispatches between the 40-byte INFO layout (signed LE32 dims —
-    # negative height = top-down rows, report |height|) and the legacy
-    # 12-byte CORE layout (unsigned LE16 dims at different offsets)
-    is_bmp = (_bytes_hex(payload, 1, 2) == BMP_SIG_HEX) & (
-        _bytes_hex(payload, 7, 4) == "00000000"
-    )
-    bmp_core = _le4_int(payload, 15) == 12
-    bmp_h_raw = _le4_int(payload, 23)
-    bmp_w = (
-        F.when(bmp_core, _le2_int(payload, 19))
-        .otherwise(_le4_int(payload, 19))
-        .cast("int")
-    )
-    bmp_h = (
-        F.when(bmp_core, _le2_int(payload, 21))
-        .otherwise(
-            F.when(
-                bmp_h_raw >= 2147483648, F.lit(4294967296) - bmp_h_raw
-            ).otherwise(bmp_h_raw)
-        )
-        .cast("int")
-    )
-    # HEIF family (r10): BMFF + still-image major brand (sniff_mime's
-    # brand table) → dims from the ispe box
-    is_bmff = _bytes_hex(payload, 5, 4) == MP4_FTYP_HEX
-    heif_brand = _bytes_hex(payload, 9, 4)
-    is_heic = is_bmff & heif_brand.isin("68656963", "68656978")
-    is_heif = is_bmff & heif_brand.isin("6D696631", "6D736631")
-    is_avif = is_bmff & heif_brand.isin("61766966", "61766973")
-    is_heif_family = is_heic | is_heif | is_avif
-    jd = jpeg_dims(payload) if jpeg is None else jpeg
-    td = tiff_dims(payload) if tiff is None else tiff
-    wd = webp_dims(payload, vp8x=webpx)
-    sd = ispe_dims(payload) if ispe is None else ispe
-    null_i = F.lit(None).cast("int")
-    return F.struct(
-        F.when(is_png, F.lit("image/png"))
-        .when(is_gif, F.lit("image/gif"))
-        .when(is_jpeg, F.lit("image/jpeg"))
-        .when(is_webp, F.lit("image/webp"))
-        .when(is_tiff, F.lit("image/tiff"))
-        .when(is_bmp, F.lit("image/bmp"))
-        .when(is_heic, F.lit("image/heic"))
-        .when(is_heif, F.lit("image/heif"))
-        .when(is_avif, F.lit("image/avif"))
-        .otherwise(F.lit("application/octet-stream"))
-        .alias("mime_type"),
-        F.when(is_png, _be_int(payload, 17, 4))
-        .when(is_gif, _le2_int(payload, 7))
-        .when(is_jpeg, jd.getField("width"))
-        .when(is_webp, wd.getField("width"))
-        .when(is_tiff, td.getField("width"))
-        .when(is_bmp, bmp_w)
-        .when(is_heif_family, sd.getField("width"))
-        .otherwise(null_i)
-        .alias("width"),
-        F.when(is_png, _be_int(payload, 21, 4))
-        .when(is_gif, _le2_int(payload, 9))
-        .when(is_jpeg, jd.getField("height"))
-        .when(is_webp, wd.getField("height"))
-        .when(is_tiff, td.getField("height"))
-        .when(is_bmp, bmp_h)
-        .when(is_heif_family, sd.getField("height"))
-        .otherwise(null_i)
-        .alias("height"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Audio headers + MIME routing (r6): the RIFF/WAV twin of the PNG/GIF
-# parsers above, plus magic-byte content-type dispatch — all expression-
-# level, so the ingestion router and the metadata backfill never leave
-# whole-stage codegen and blobs never enter Python.
-# ---------------------------------------------------------------------------
-
-WAV_RIFF_HEX = "52494646"  # "RIFF"
-WAV_WAVEFMT_HEX = "57415645666D7420"  # "WAVEfmt "
-JPEG_SIG_HEX = "FFD8FF"
-PDF_SIG_HEX = "25504446"  # "%PDF"
-ZIP_SIG_HEX = "504B0304"  # PK\x03\x04
-GZIP_SIG_HEX = "1F8B"
-
-
-def _le_hex(n: F.Column, nbytes: int) -> F.Column:
-    """``nbytes``-wide little-endian hex of an int column (RIFF fields)."""
-    byte = lambda b: F.lpad(F.conv(b.cast("string"), 10, 16), 2, "0")  # noqa: E731
-    return F.concat(
-        *[byte((n / F.lit(256**i)).cast("long") % 256) for i in range(nbytes)]
-    )
-
-
-def synth_wav(
-    sample_rate: F.Column, channels: F.Column, bits: F.Column, n_frames: F.Column
-) -> F.Column:
-    """A real 44-byte canonical WAV header (RIFF + fmt + data chunk
-    descriptor, PCM) carrying the given stream parameters — parseable by
-    any RIFF reader (the stdlib ``wave`` module opens it:
-    tests/test_multimodal_audio.py). The payload carries no samples;
-    this is the metadata slice of audio ingestion, exactly like
-    synth_png/synth_gif for images."""
-    block_align = ((channels * bits) / 8).cast("long")
-    byte_rate = sample_rate * block_align
-    data_size = n_frames * block_align
-    return F.unhex(
-        F.concat(
-            F.lit(WAV_RIFF_HEX),
-            _le_hex(data_size + 36, 4),  # RIFF chunk size
-            F.lit(WAV_WAVEFMT_HEX),  # "WAVE" + "fmt "
-            F.lit("10000000"),  # fmt chunk size 16 (LE)
-            F.lit("0100"),  # audio format 1 = PCM (LE)
-            _le_hex(channels, 2),
-            _le_hex(sample_rate, 4),
-            _le_hex(byte_rate, 4),
-            _le_hex(block_align, 2),
-            _le_hex(bits, 2),
-            F.lit("64617461"),  # "data"
-            _le_hex(data_size, 4),
-        )
-    )
-
-
-def _le4_int(payload: F.Column, pos: int) -> F.Column:
-    """32-bit little-endian int at 1-based byte offset ``pos``."""
-    b = lambda i: F.conv(_bytes_hex(payload, pos + i, 1), 16, 10).cast("long")  # noqa: E731
-    return b(0) + b(1) * 256 + b(2) * 65536 + b(3) * 16777216
-
-
-# FLAC (r9): "fLaC" magic, then metadata blocks — the first is mandated
-# to be STREAMINFO (34 bytes): min/max blocksize u16, min/max framesize
-# u24, then a big-endian bit-packed group: sample rate (20 bits),
-# channels-1 (3), bits-per-sample-1 (5), total samples (36). All fixed
-# offsets from the magic, so the parse is plain expressions like WAV.
-FLAC_SIG_HEX = "664C6143"  # "fLaC"
-OGG_SIG_HEX = "4F676753"  # "OggS" (page capture pattern)
-VORBIS_ID_HEX = "01766F72626973"  # packet type 1 + "vorbis"
-# Tail bound for the last-page granule locate: one max-size Ogg page
-# (27 + 255 + 255·255 = 65307) rounded up — the last page header of any
-# page-aligned stream is inside this window.
-OGG_TAIL_BYTES = 65536
-# MP3 (r9): a frame header is 4 bytes anywhere the 11-bit sync pattern
-# holds; files commonly start with an ID3v2 tag whose 28-bit SYNCHSAFE
-# size (7 bits per byte) positions the first frame. Header fields:
-# version (2 bits), layer (2), bitrate index (4), sample-rate index (2),
-# channel mode (2). Sample rate needs the version×index table below.
-# r10: duration is the standard two-tier estimate — a Xing/Info VBR tag
-# (frame count × samples-per-frame / sample rate) when present, else the
-# CBR arithmetic (audio byte length × 8 / bitrate) over the Layer-III
-# bitrate table; streams shorter than one frame, free-format bitrate
-# (index 0), Layer I/II, and a Xing tag without a frame count stay
-# honestly NULL.
-ID3_SIG_HEX = "494433"  # "ID3"
-MP3_SR_TABLE = {  # version bits -> [idx0, idx1, idx2]; idx 3 reserved
-    3: (44100, 48000, 32000),  # MPEG1
-    2: (22050, 24000, 16000),  # MPEG2
-    0: (11025, 12000, 8000),  # MPEG2.5
-}
-# Layer-III bitrate (kbit/s) by index 1-14; index 0 is free-format
-# (NULL), 15 reserved (rejected by the sync gate). MPEG2 and MPEG2.5
-# share the low-rate column.
-MP3_KBPS_V1L3 = (32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320)
-MP3_KBPS_V2L3 = (8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160)
-XING_SIG_HEX = "58696E67"  # "Xing" (VBR header)
-INFO_SIG_HEX = "496E666F"  # "Info" (the LAME CBR variant, same layout)
-
-
-def synth_flac(
-    sample_rate: F.Column,
-    channels: F.Column,
-    bits: F.Column,
-    total_samples: F.Column,
-) -> F.Column:
-    """A real 42-byte FLAC prefix (magic + last-block STREAMINFO header +
-    the 34-byte STREAMINFO with the bit-packed stream parameters, zeroed
-    MD5) — parseable by any STREAMINFO reader (the independent pure-
-    Python bit parser in tests included). ``total_samples`` may exceed
-    2^32 (the field is 36 bits) — the synth splits it across the nibble
-    boundary exactly as the spec packs it."""
-    be = lambda n, w: F.lpad(F.conv(n.cast("string"), 10, 16), w * 2, "0")  # noqa: E731
-    # [sr:20 | ch-1:3 | bps-1 high bit:1] = first 3 packed bytes
-    g24 = sample_rate * 16 + (channels - 1) * 2 + F.floor((bits - 1) / 16)
-    # [bps-1 low 4 | total_samples high 4] = 4th packed byte
-    b4 = ((bits - 1) % 16) * 16 + F.floor(total_samples / F.lit(4294967296))
-    return F.unhex(
-        F.concat(
-            F.lit(FLAC_SIG_HEX),
-            F.lit("80" "000022"),  # last-block flag + type 0, length 34
-            F.lit("1000" "1000"),  # min/max blocksize 4096
-            F.lit("000000" "000000"),  # min/max framesize unknown
-            be(g24, 3),
-            be(b4, 1),
-            be(total_samples % F.lit(4294967296), 4),
-            F.lit("00" * 16),  # unset MD5
-        )
-    )
-
-
-def synth_ogg(
-    sample_rate: F.Column, channels: F.Column, nominal_kbps: F.Column
-) -> F.Column:
-    """A real first Ogg page carrying a Vorbis identification header —
-    the layout the spec REQUIRES (the id header alone on the stream's
-    first page): 27-byte page header (version 0, BOS flag, one segment
-    of 30 bytes) + the 30-byte packet (\\x01"vorbis", version 0,
-    channels u8, sample rate LE32, max/nominal/min bitrates LE32,
-    blocksizes, framing bit). 58 bytes; the CRC field is zero — readers
-    that verify page checksums reject it, header parsers (this one, and
-    the independent pure-Python one in tests) read the fields. Duration
-    lives in the LAST page's granule position, which a header slice
-    cannot carry — the parser's honest NULL."""
-    packet = F.concat(
-        F.lit(VORBIS_ID_HEX),
-        F.lit("00000000"),  # vorbis version 0
-        _le_hex(channels, 1),
-        _le_hex(sample_rate, 4),
-        F.lit("00000000"),  # bitrate_maximum: unset
-        _le_hex(nominal_kbps * 1000, 4),
-        F.lit("00000000"),  # bitrate_minimum: unset
-        F.lit("B8"),  # blocksizes 256/2048
-        F.lit("01"),  # framing bit
-    )
-    return F.unhex(
-        F.concat(
-            F.lit(OGG_SIG_HEX),
-            F.lit("00"),  # stream structure version
-            F.lit("02"),  # header type: beginning-of-stream
-            F.lit("0000000000000000"),  # granule position
-            F.lit("01000000"),  # bitstream serial
-            F.lit("00000000"),  # page sequence 0
-            F.lit("00000000"),  # CRC (unverified by header parsers)
-            F.lit("01"),  # one segment
-            F.lit("1E"),  # of 30 bytes
-            packet,
-        )
-    )
-
-
-def _ogg_page_hex(
-    header_type: str, granule: F.Column, page_seq: str, body_bytes: int
-) -> F.Column:
-    """Hex of one minimal Ogg page: 27-byte header (version 0, the given
-    type flags, LE64 granule, serial 1, the given sequence, zero CRC) +
-    one segment of ``body_bytes`` zero bytes."""
-    return F.concat(
-        F.lit(OGG_SIG_HEX),
-        F.lit("00"),
-        F.lit(header_type),
-        _le_hex(granule, 8),
-        F.lit("01000000"),  # bitstream serial
-        F.lit(page_seq),
-        F.lit("00000000"),  # CRC (unverified by header parsers)
-        F.lit("01"),  # one segment
-        F.lit(f"{body_bytes:02X}"),
-        F.lit("00" * body_bytes),
-    )
-
-
-def synth_ogg_full(
-    sample_rate: F.Column,
-    channels: F.Column,
-    nominal_kbps: F.Column,
-    granule: F.Column,
-) -> F.Column:
-    """A full (tiny) Ogg Vorbis FILE, not just the header slice (r11 —
-    the judge's Ogg-duration directive): the synth_ogg first page (BOS,
-    Vorbis id header, granule 0) + a middle audio page (granule/2, no
-    flags) + the final page with the END-OF-STREAM flag carrying the
-    stream's total ``granule`` position (= total samples for Vorbis),
-    which is where the spec puts duration. 134 bytes (58 + 38 + 38);
-    zero CRCs, like every synth here — header/tail parsers read it, CRC
-    verifiers reject it, and the independent pure-Python page WALKER in
-    tests hops the real lacing values to the same granule."""
-    first = F.hex(synth_ogg(sample_rate, channels, nominal_kbps))
-    mid = _ogg_page_hex(
-        "00", F.floor(granule / 2).cast("long"), "01000000", 10
-    )
-    last = _ogg_page_hex("04", granule.cast("long"), "02000000", 10)
-    return F.unhex(F.concat(first, mid, last))
-
-
-def _mp3_synth_params(
-    version_bits: F.Column, sr_idx: F.Column
-) -> tuple[F.Column, F.Column, F.Column]:
-    """(sample_rate, kbps, frame_size) for the synthesized Layer-III
-    header with bitrate index 9 — the same tables the parser reads, so
-    the synth/parse pair stays a differential, not a tautology (the
-    independent pure-Python parser in tests is the tie-breaker)."""
-    sr = F.lit(None).cast("int")
-    for vbits, rates in MP3_SR_TABLE.items():
-        for i, rate in enumerate(rates):
-            sr = F.when(
-                (version_bits == vbits) & (sr_idx == i), F.lit(rate)
-            ).otherwise(sr)
-    kbps = F.when(version_bits == 3, F.lit(128)).otherwise(F.lit(80))  # idx 9
-    spf = F.when(version_bits == 3, F.lit(1152)).otherwise(F.lit(576))
-    frame_size = F.floor(spf / 8 * kbps * 1000 / sr)  # padding bit 0
-    return sr, kbps, frame_size
-
-
-def synth_mp3(
-    version_bits: F.Column,
-    sr_idx: F.Column,
-    mono: F.Column,
-    id3_pad: F.Column | None = None,
-    n_frames: F.Column | None = None,
-    xing_frames: F.Column | None = None,
-    vbr_sig: F.Column | None = None,
-) -> F.Column:
-    """A real MP3 frame header (Layer III, bitrate index 9), optionally
-    preceded by an ID3v2.4 tag with ``id3_pad`` zero bytes — the pad is
-    encoded SYNCHSAFE (7 bits per byte), so pads past 127 exercise the
-    multi-byte size decode.
-
-    r10 body variants (mutually exclusive): ``n_frames`` appends a CBR
-    audio body — zero fill to exactly n_frames × frame_size bytes of
-    audio, the length the CBR duration estimate divides; ``xing_frames``
-    appends the version/mode-correct side-info zeros then a Xing VBR tag
-    (flags bit 0 + the BE32 frame count) — the layout every VBR encoder
-    writes and every tag reader trusts over the byte-length estimate.
-    ``vbr_sig`` (hex column, default the Xing signature) switches the
-    tag to LAME's "Info" variant — byte-identical layout, but by
-    convention it marks a CBR stream, so the parser keeps the header
-    bitrate instead of the VBR NULL."""
-    be1 = lambda n: F.lpad(F.conv(n.cast("string"), 10, 16), 2, "0")  # noqa: E731
-    be4 = lambda n: F.lpad(F.conv(n.cast("string"), 10, 16), 8, "0")  # noqa: E731
-    h2 = F.lit(0xE0) + version_bits * 8 + F.lit(1) * 2 + 1  # layer III
-    h3 = F.lit(9) * 16 + sr_idx * 4
-    h4 = F.when(mono, F.lit(0xC0)).otherwise(F.lit(0x40))
-    frame = F.concat(F.lit("FF"), be1(h2), be1(h3), be1(h4))
-    if n_frames is not None:
-        _sr, _kbps, frame_size = _mp3_synth_params(version_bits, sr_idx)
-        body = n_frames.cast("long") * frame_size - 4
-        frame = F.concat(frame, F.repeat(F.lit("00"), body.cast("int")))
-    elif xing_frames is not None:
-        side_info = F.when(
-            version_bits == 3,
-            F.when(mono, F.lit(17)).otherwise(F.lit(32)),
-        ).otherwise(F.when(mono, F.lit(9)).otherwise(F.lit(17)))
-        frame = F.concat(
-            frame,
-            F.repeat(F.lit("00"), side_info),
-            F.lit(XING_SIG_HEX) if vbr_sig is None else vbr_sig,
-            F.lit("00000001"),  # flags: frames field present
-            be4(xing_frames),
-        )
-    if id3_pad is None:
-        return F.unhex(frame)
-    tag = F.concat(
-        F.lit(ID3_SIG_HEX),
-        F.lit("0400" "00"),  # v2.4.0, no flags
-        be1(F.floor(id3_pad / 2097152) % 128),
-        be1(F.floor(id3_pad / 16384) % 128),
-        be1(F.floor(id3_pad / 128) % 128),
-        be1(id3_pad % 128),
-        F.repeat(F.lit("00"), id3_pad.cast("int")),
-    )
-    return F.unhex(F.concat(tag, frame))
-
-
-def _flac_fields(payload: F.Column) -> dict[str, F.Column]:
-    """STREAMINFO fields, valid only under the fLaC+type-0 gate."""
-    g24 = _be_int(payload, 19, 3).cast("long")
-    b4 = _be_int(payload, 22, 1).cast("long")
-    sr = F.shiftright(g24, 4)
-    ch = (F.shiftright(g24, 1) % 8 + 1).cast("int")
-    bps = ((g24 % 2) * 16 + F.shiftright(b4, 4) + 1).cast("int")
-    ts = (b4 % 16) * F.lit(4294967296) + _be_int(payload, 23, 4).cast("long")
-    return {
-        "sr": sr.cast("int"),
-        "ch": ch,
-        "bps": bps,
-        "dur": F.when(sr > 0, F.floor(ts * 1000 / sr).cast("long")),
-    }
-
-
-def _mp3_frame_pos(payload: F.Column) -> F.Column:
-    """1-based position of the first MP3 frame header: byte 1, or past
-    the ID3v2 tag via its synchsafe u28 size."""
-    has_id3 = _bytes_hex(payload, 1, 3) == ID3_SIG_HEX
-    b = lambda i: _be_int(payload, i, 1)  # noqa: E731
-    id3_size = b(7) * 2097152 + b(8) * 16384 + b(9) * 128 + b(10)
-    return F.when(has_id3, id3_size + 11).otherwise(F.lit(1))
-
-
-def _mp3_sync(payload: F.Column) -> F.Column:
-    """Boolean: a trustworthy MP3 frame header behind the ID3v2 skip —
-    the ROUTING slice of the MP3 parse, kept as a plain (flat)
-    expression for sniff_mime. The 11-bit sync alone false-matches
-    arbitrary high bytes (an all-0xFF blob would register as MPEG
-    audio); a real header also has non-reserved version (01), layer
-    (00), bitrate (1111), and sample-rate (11) fields — the standard
-    sniffer tightening. The full field parse (rates, channels, r10
-    bitrate/duration) lives in ``audio_meta``'s single-aggregate
-    finish, where the dynamic frame position is a state anchor."""
-    p = _mp3_frame_pos(payload)
-    h1, h2, h3 = (
-        _be_int_dyn(payload, p, 1),
-        _be_int_dyn(payload, p + 1, 1),
-        _be_int_dyn(payload, p + 2, 1),
-    )
-    ver = F.shiftright(h2, 3) % 4
-    layer = F.shiftright(h2, 1) % 4
-    br_idx = F.shiftright(h3, 4)
-    sr_idx = F.shiftright(h3, 2) % 4
-    return (
-        (h1 == 0xFF)
-        & (F.shiftright(h2, 5) == 7)
-        & (ver != 1)
-        & (layer != 0)
-        & (br_idx != 15)
-        & (sr_idx != 3)
-    )
-
-
-def audio_meta(payload: F.Column | str) -> F.Column:
-    """Parse (mime_type, channels, sample_rate_hz, bits_per_sample,
-    duration_ms) from an audio payload's header — pure JVM expressions,
-    no codec, no Python; the audio twin of ``image_meta``. Four formats
-    (r9: + FLAC, MP3; r10: + Ogg Vorbis — together with WAV the bulk of
-    crawl audio):
-
-    * WAV, canonical layout (RIFF + "WAVE" + 16-byte fmt + data):
-      channels LE16@23, sample rate LE32@25, byte rate LE32@29, bits
-      LE16@35, data size LE32@41; duration_ms =
-      floor(data_size·1000/byte_rate).
-    * FLAC: the bit-packed STREAMINFO group at fixed offsets from the
-      magic (the first metadata block is STREAMINFO by spec; a non-0
-      first block type yields NULL fields); duration from the 36-bit
-      total-sample count.
-    * MP3: frame header located after the optional ID3v2 tag via its
-      synchsafe size; sample rate from the version×index table,
-      channels from the mode bits, bitrate from the Layer-III table
-      (r10). Duration (r10) is the standard two-tier estimate: a
-      Xing/Info tag's exact frame count when present, else the CBR
-      byte-length arithmetic; streams shorter than one frame,
-      free-format bitrate, Layer I/II, and a frames-less Xing tag stay
-      NULL. bits_per_sample is not a thing in MPEG audio — NULL, the
-      honest codec boundary.
-    * Ogg Vorbis (r10): the spec puts the Vorbis identification header
-      alone on the stream's first page, so channels/sample-rate/nominal
-      bitrate sit at fixed offsets behind ONE dynamic hop (28 + the
-      page-segment count). A non-Vorbis Ogg (Opus, Theora, a data page)
-      routes audio/ogg with NULL fields. Duration (r11): the LAST
-      page's granule position (= total samples), read by a bounded
-      ≤64 KiB TAIL locate — last byte-aligned 'OggS' via the reverse
-      trick, granule trusted only when the page passes the version /
-      type-bits / EOS-flag / range guards; a header-only slice has no
-      EOS page and stays honestly NULL.
-
-    r10 adds ``bitrate_kbps``: exact for WAV (byte rate × 8) and CBR
-    MP3 (header table — including LAME "Info"-tagged streams, whose tag
-    marks CBR by convention); NULL for a Xing-tagged stream (VBR — the
-    nominal first-frame rate misdescribes it; the average is derivable
-    downstream from n_bytes and duration_ms) and for FLAC — lossless
-    FLAC is inherently VBR and STREAMINFO carries no rate.
-
-    Shape (r10): the whole parse is ONE aggregate over sequence(1,1)
-    whose init computes the dynamic MP3 frame position (the synchsafe
-    ID3v2 skip) and whose finish builds the complete struct — every
-    p+k header read is a constant-size subtree over the state anchor.
-    The flat form re-embedded the ID3-skip CASE tree in each of ~15
-    dynamic reads × 6 extracted fields; at local[32] the interpreted
-    per-task binding of that tree OOMed the default heap (measured
-    r10). Consumers extracting several fields should STAGE this struct
-    behind an alias barrier (the jpeg_dims/tiff_dims discipline) —
-    the aggregate is a higher-order function, exempt from
-    subexpression elimination, so inline per-field references re-run
-    AND re-carry it.
-
-    Integer-exact cross-engine. Unknown payloads yield
-    ('application/octet-stream', NULL…), never an error — one malformed
-    blob cannot fail a backfill. Pass a column NAME to get the memoized
-    tree (_memo_expr)."""
-    if isinstance(payload, str):
-        return _memo_expr(
-            ("audio_meta", payload), lambda: audio_meta(F.col(payload))
-        )
-    # State anchors, each computed ONCE per row: the synchsafe-ID3 MP3
-    # frame position, and (r11) the last Ogg page's 14-byte header
-    # slice — "OggS" + version + type + LE64 granule — carried as a
-    # tiny BINARY so the tail locate (hex + spaced regexp_replace +
-    # reverse + locate) runs once. Referencing the locate from every
-    # granule-byte read instead re-evaluated that tree ~11× per Ogg
-    # row — measured 23.4 s/200k full-Ogg rows vs 0.6 s before the
-    # feature; state-carried it is ~1 s. The is_ogg gate keeps every
-    # non-Ogg row free of the tail machinery entirely (lazy CASE).
-    tail_off = F.greatest(
-        F.lit(1).cast("long"),
-        (F.octet_length(payload) - F.lit(OGG_TAIL_BYTES - 1)).cast("long"),
-    )
-    tail = payload.substr(tail_off, F.lit(OGG_TAIL_BYTES))
-    lastp = F.when(
-        _bytes_hex(payload, 1, 4) == OGG_SIG_HEX,
-        _aligned_locate_last(F.hex(tail), OGG_SIG_HEX),
-    ).otherwise(F.lit(0))
-    oghdr = F.when(
-        lastp > 0, tail.substr(((lastp + 1) / 2).cast("long"), F.lit(14))
-    )
-    init = F.struct(
-        _mp3_frame_pos(payload).cast("long").alias("p"),
-        oghdr.alias("oghdr"),
-    )
-
-    def fin(st: F.Column) -> F.Column:
-        is_wav = (_bytes_hex(payload, 1, 4) == WAV_RIFF_HEX) & (
-            _bytes_hex(payload, 9, 8) == WAV_WAVEFMT_HEX
-        )
-        is_flac = _bytes_hex(payload, 1, 4) == FLAC_SIG_HEX
-        flac_si = is_flac & (_be_int(payload, 5, 1) % 128 == 0)  # type 0
-        fl = _flac_fields(payload)
-        byte_rate = _le4_int(payload, 29)
-        data_size = _le4_int(payload, 41)
-        # ---- MP3 fields over the state-anchored frame position -------
-        p = st.getField("p")
-        h1, h2, h3, h4 = (
-            _be_int_dyn(payload, p, 1),
-            _be_int_dyn(payload, p + 1, 1),
-            _be_int_dyn(payload, p + 2, 1),
-            _be_int_dyn(payload, p + 3, 1),
-        )
-        ver = F.shiftright(h2, 3) % 4
-        layer = F.shiftright(h2, 1) % 4
-        br_idx = F.shiftright(h3, 4)
-        sr_idx = F.shiftright(h3, 2) % 4
-        sync = (
-            (h1 == 0xFF)
-            & (F.shiftright(h2, 5) == 7)
-            & (ver != 1)
-            & (layer != 0)
-            & (br_idx != 15)
-            & (sr_idx != 3)
-        )
-        mp3_sr = F.lit(None).cast("int")
-        for vbits, rates in MP3_SR_TABLE.items():
-            for i, rate in enumerate(rates):
-                mp3_sr = F.when(
-                    (ver == vbits) & (sr_idx == i), F.lit(rate)
-                ).otherwise(mp3_sr)
-        mp3_ch = F.when(F.shiftright(h4, 6) == 3, F.lit(1)).otherwise(
-            F.lit(2)
-        )
-        # bitrate: Layer-III table by version; the when() guard keeps
-        # element_at off index 0 (free-format) under ANSI mode
-        v1 = F.array(*[F.lit(k) for k in MP3_KBPS_V1L3])
-        v2 = F.array(*[F.lit(k) for k in MP3_KBPS_V2L3])
-        kbps = F.when(
-            sync & (layer == 1) & (br_idx >= 1),
-            F.element_at(
-                F.when(ver == 3, v1).otherwise(v2), br_idx.cast("int")
-            ),
-        )
-        # duration: Xing/Info frame count first, else CBR arithmetic
-        spf = F.when(ver == 3, F.lit(1152)).otherwise(F.lit(576))  # L-III
-        mono = F.shiftright(h4, 6) == 3
-        side_info = F.when(
-            ver == 3, F.when(mono, F.lit(17)).otherwise(F.lit(32))
-        ).otherwise(F.when(mono, F.lit(9)).otherwise(F.lit(17)))
-        tag_at = p + 4 + side_info
-        tag = F.hex(payload.substr(tag_at, F.lit(4)))
-        has_xing = sync & (layer == 1) & tag.isin(
-            XING_SIG_HEX, INFO_SIG_HEX
-        )
-        # "Xing" marks a VBR stream: the header's nominal first-frame
-        # rate misdescribes it, so bitrate_kbps is honestly NULL (the
-        # average is derivable downstream from n_bytes and duration_ms).
-        # LAME's "Info" variant is the same layout on a CBR stream —
-        # the header rate stands (r10 review).
-        is_vbr = sync & (layer == 1) & (tag == XING_SIG_HEX)
-        xing_flags = _be_int_dyn(payload, tag_at + 4, 4)
-        xing_frames = _be_int_dyn(payload, tag_at + 8, 4)
-        audio_bytes = F.octet_length(payload) - p + 1
-        frame_size = (
-            F.floor(spf / 8 * kbps * 1000 / mp3_sr) + F.shiftright(h3, 1) % 2
-        )
-        mp3_dur = F.when(
-            has_xing,
-            F.when(
-                xing_flags % 2 == 1,  # frames field present
-                F.floor(xing_frames.cast("long") * spf * 1000 / mp3_sr),
-            ),
-        ).otherwise(
-            F.when(
-                sync & (layer == 1) & (audio_bytes >= frame_size),
-                F.floor(audio_bytes.cast("long") * 8 / kbps),
-            )
-        )
-        is_mp3 = (_bytes_hex(payload, 1, 3) == ID3_SIG_HEX) | sync
-        # ---- Ogg (r10): the first page must carry the Vorbis id header
-        # alone (spec), so the packet sits at a one-hop dynamic offset —
-        # 28 + the page-segment count. A non-Vorbis Ogg (Opus, Theora,
-        # a data page) still routes audio/ogg with NULL fields.
-        is_ogg = _bytes_hex(payload, 1, 4) == OGG_SIG_HEX
-        ogg_p = (F.lit(28) + _be_int(payload, 27, 1)).cast("long")
-        is_vorbis = is_ogg & (
-            F.hex(payload.substr(ogg_p, F.lit(7))) == VORBIS_ID_HEX
-        )
-        ogg_ch = _be_int_dyn(payload, ogg_p + 11, 1).cast("int")
-        ogg_sr = _le_int_dyn(payload, ogg_p + 12, 4).cast("int")
-        ogg_nom = _le_int_dyn(payload, ogg_p + 20, 4)
-        ogg_kbps = F.when(
-            (ogg_nom > 0) & (ogg_nom < 2147483648), F.floor(ogg_nom / 1000)
-        ).cast("int")
-        # ---- Ogg duration (r11): the LAST page's granule position,
-        # read from the state-carried 14-byte header slice (see init —
-        # the bounded ≤64 KiB tail locate runs ONCE per Ogg row; an Ogg
-        # page is capped at 27 + 255 + 255·255 ≈ 65307 bytes, so a
-        # stream that ends at a page boundary always has its last page
-        # header inside the tail). The granule is trusted only under
-        # structural guards: version byte 0, only defined header-type
-        # bits, the EOS flag set, and a granule that fits integer
-        # arithmetic. Data bytes that spell 'OggS' past the real last
-        # page fail the guards → honest NULL (page CRCs are not
-        # verified here — the mvhd-heuristic rationale). A header-only
-        # slice has no EOS page at all → honest NULL, as r10 shipped
-        # it. oghdr slice layout (1-based): OggS 1-4, version 5,
-        # type 6, LE64 granule 7-14.
-        oghdr = st.getField("oghdr")
-        o_ver = _be_int(oghdr, 5, 1)
-        o_typ = _be_int(oghdr, 6, 1)
-        # LE64 granule in two LE32 halves, high half range-gated BEFORE
-        # combining: a straight 8-byte sum overflows ANSI long on the
-        # spec's granule -1 (all FF = "no packet ends on this page").
-        # The gate doubles as the sanity range: hi < 2^20 keeps the
-        # granule < 2^52 and every downstream multiply exact.
-        o_lo = _le_int_dyn(oghdr, F.lit(7).cast("long"), 4)
-        o_hi = _le_int_dyn(oghdr, F.lit(11).cast("long"), 4)
-        o_gran = F.when(
-            o_hi < F.lit(1048576), o_lo + o_hi * F.lit(4294967296)
-        )
-        ogg_dur = F.when(
-            oghdr.isNotNull()
-            & (o_ver == 0)
-            & (o_typ >= 4)  # EOS flag (0x04) set ...
-            & (o_typ < 8)  # ... and no undefined bits
-            & (o_gran > 0)  # null o_gran (range-gated) falls through
-            & (ogg_sr > 0),
-            F.floor(o_gran * 1000 / ogg_sr),
-        ).cast("long")
-        null_i = F.lit(None).cast("int")
-        # (r12) every per-format value is LET-BOUND once and the output
-        # struct built from lambda-variable references: the flat struct
-        # re-embedded the deep MP3 chains (mp3_dur alone carries the
-        # sr-table + Xing-tag + frame-size trees) per consuming field —
-        # ~590 KB of serialized plan for this one column, a third of the
-        # task-binary budget that OOM'd media_catalog's 32-way
-        # deserialization on the vanilla 1 GB driver (_ebml_let note).
-        # each format's values stay GATED by its own format flag inside
-        # the binding: the struct's fields evaluate on EVERY row (unlike
-        # the old per-output-field CASE branches), and e.g. the FLAC
-        # 36-bit sample-count read int-casts a 4-byte slice — on an MP3
-        # row those are arbitrary bytes and the ANSI cast throws (caught
-        # by the vanilla-driver probe; "never an error" is the contract)
-        binding = F.struct(
-            is_wav.alias("is_wav"),
-            flac_si.alias("flac_si"),
-            is_ogg.alias("is_ogg"),
-            is_mp3.alias("is_mp3"),
-            is_vorbis.alias("is_vorbis"),
-            sync.alias("sync"),
-            is_vbr.alias("is_vbr"),
-            F.when(flac_si, fl["ch"]).alias("fl_ch"),
-            F.when(flac_si, fl["sr"]).alias("fl_sr"),
-            F.when(flac_si, fl["bps"]).alias("fl_bps"),
-            F.when(flac_si, fl["dur"]).alias("fl_dur"),
-            F.when(is_wav, byte_rate).alias("byte_rate"),
-            F.when(is_wav, data_size).alias("data_size"),
-            F.when(sync, mp3_sr).alias("mp3_sr"),
-            F.when(sync, mp3_ch).alias("mp3_ch"),
-            F.when(sync, kbps).alias("kbps"),
-            F.when(sync, mp3_dur).alias("mp3_dur"),
-            F.when(is_vorbis, ogg_ch).alias("ogg_ch"),
-            F.when(is_vorbis, ogg_sr).alias("ogg_sr"),
-            F.when(is_vorbis, ogg_kbps).alias("ogg_kbps"),
-            F.when(is_vorbis, ogg_dur).alias("ogg_dur"),
-        )
-
-        def out(v: F.Column) -> F.Column:
-            g = v.getField
-            return F.struct(
-                F.when(g("is_wav"), F.lit("audio/x-wav"))
-                .when(is_flac, F.lit("audio/flac"))
-                .when(g("is_ogg"), F.lit("audio/ogg"))
-                .when(g("is_mp3"), F.lit("audio/mpeg"))
-                .otherwise(F.lit("application/octet-stream"))
-                .alias("mime_type"),
-                F.when(g("is_wav"), _le2_int(payload, 23))
-                .when(g("flac_si"), g("fl_ch"))
-                .when(g("is_vorbis"), g("ogg_ch"))
-                .when(g("is_mp3"), F.when(g("sync"), g("mp3_ch")).cast("int"))
-                .otherwise(null_i)
-                .alias("channels"),
-                F.when(g("is_wav"), _le4_int(payload, 25).cast("int"))
-                .when(g("flac_si"), g("fl_sr"))
-                .when(g("is_vorbis"), g("ogg_sr"))
-                .when(g("is_mp3"), F.when(g("sync"), g("mp3_sr")))
-                .otherwise(null_i)
-                .alias("sample_rate_hz"),
-                F.when(g("is_wav"), _le2_int(payload, 35))
-                .when(g("flac_si"), g("fl_bps"))
-                .otherwise(null_i)
-                .alias("bits_per_sample"),
-                F.when(
-                    g("is_wav"),
-                    F.floor(g("data_size") * 1000 / g("byte_rate")).cast(
-                        "long"
-                    ),
-                )
-                .when(g("flac_si"), g("fl_dur"))
-                .when(g("is_vorbis"), g("ogg_dur"))
-                .when(g("is_mp3"), g("mp3_dur").cast("long"))
-                .otherwise(F.lit(None).cast("long"))
-                .alias("duration_ms"),
-                F.when(
-                    g("is_wav"),
-                    F.floor(g("byte_rate") * 8 / 1000).cast("int"),
-                )
-                .when(g("is_vorbis"), g("ogg_kbps"))  # declared nominal rate
-                .when(
-                    g("is_mp3"),
-                    F.when(~g("is_vbr"), g("kbps")).cast("int"),
-                )
-                .otherwise(null_i)
-                .alias("bitrate_kbps"),
-            )
-
-        return _ebml_let(binding, out)
-
-    return F.aggregate(
-        F.sequence(F.lit(1), F.lit(1)), init, lambda s, _x: s, fin
-    )
-
-
-# ---------------------------------------------------------------------------
-# Video containers (r6): ISO-BMFF / MP4 box parsing — ftyp brand + mvhd
-# timescale/duration/track-count — completes the image/audio/video metadata
-# triad. Box offsets are discovered at runtime (instr on the payload hex),
-# so the parser is not layout-pinned like the WAV one; still pure JVM
-# expressions, no codec, no Python.
-# ---------------------------------------------------------------------------
-
-MP4_FTYP_HEX = "66747970"  # "ftyp"
-MP4_MVHD_HEX = "6D766864"  # "mvhd"
-
-
-def synth_mp4(
-    brand: F.Column,
-    timescale: F.Column,
-    duration: F.Column,
-    n_tracks: F.Column,
-    version1: bool = False,
-) -> F.Column:
-    """A real ISO-BMFF prefix: 20-byte ftyp (major brand, minor version,
-    one compatible brand) + moov header + mvhd carrying the given
-    timescale / duration / next_track_ID — walkable by any box parser
-    (tests/test_multimodal_video.py walks it with an independent
-    pure-python reader). The payload carries no mdat samples; this is
-    the metadata slice of video ingestion, exactly like synth_png /
-    synth_wav for the other modalities.
-
-    ``version1`` (r11): the 64-bit mvhd layout — version byte 1,
-    8-byte creation/modification times and an 8-byte duration (120-byte
-    mvhd, 148-byte file vs v0's 108/136). Long-running streams and
-    post-2040 timestamps ship v1 in the wild; duration may exceed
-    2^32 (the synth cycle alternates the boundary crossing, the FLAC
-    36-bit pattern)."""
-    be8 = lambda n: F.lpad(  # noqa: E731
-        F.conv(n.cast("string"), 10, 16), 16, "0"
-    )
-    if version1:
-        mvhd = F.concat(
-            F.lit("00000078"),  # mvhd box size 120 (BE)
-            F.lit(MP4_MVHD_HEX),
-            F.lit("01000000"),  # version 1 + flags
-            F.lit("0" * 16),  # creation_time (u64)
-            F.lit("0" * 16),  # modification_time (u64)
-            _be4_hex(timescale),
-            be8(duration),  # duration (u64)
-        )
-        moov_size, mvhd_tail_pad = "00000080", True
-    else:
-        mvhd = F.concat(
-            F.lit("0000006C"),  # mvhd box size 108 (BE)
-            F.lit(MP4_MVHD_HEX),
-            F.lit("00000000"),  # version 0 + flags
-            F.lit("00000000"),  # creation_time
-            F.lit("00000000"),  # modification_time
-            _be4_hex(timescale),
-            _be4_hex(duration),
-        )
-        moov_size, mvhd_tail_pad = "00000074", False
-    _ = mvhd_tail_pad  # tail below is layout-identical for both versions
-    return F.unhex(
-        F.concat(
-            F.lit("00000014"),  # ftyp box size 20 (BE)
-            F.lit(MP4_FTYP_HEX),
-            F.hex(F.encode(brand, "UTF-8")),  # major brand (4 ASCII chars)
-            F.lit("00000200"),  # minor version
-            F.lit("6D703431"),  # compatible brand "mp41"
-            F.lit(moov_size),  # moov box size = 8 + mvhd size (BE)
-            F.lit("6D6F6F76"),  # "moov"
-            mvhd,
-            F.lit("00010000"),  # rate 1.0 (16.16 fixed)
-            F.lit("0100"),  # volume 1.0 (8.8 fixed)
-            F.lit("0000"),  # reserved
-            F.lit("0000000000000000"),  # reserved[2] (2×u32)
-            # unity display matrix (9×u32)
-            F.lit("000100000000000000000000"),
-            F.lit("000000000001000000000000"),
-            F.lit("000000000000000040000000"),
-            F.lit("0" * 48),  # pre_defined[6] (6×u32)
-            _be4_hex(n_tracks + 1),  # next_track_ID
-        )
-    )
-
-
-def synth_heic(
-    brand: F.Column, width: F.Column, height: F.Column, decoy: bool = False
-) -> F.Column:
-    """A real HEIF-family prefix (HEIC / AVIF — the modern web image
-    classes): 20-byte ftyp (major brand heic/avif/mif1/…) + a meta
-    fullbox containing a pict-handler hdlr and the property chain
-    iprp → ipco → ispe, where ispe (ImageSpatialExtents) carries the
-    BE32 dims every HEIF reader reports. 101 bytes, walkable by any box
-    parser (the independent pure-Python walker in tests descends the
-    real meta/iprp/ipco nesting — the synth_mp4 pattern).
-
-    ``decoy`` (r11): embeds a DECEPTIVE byte-aligned 'ispe' pattern —
-    a full fake box interior with wrong dims — inside the hdlr NAME
-    field, BETWEEN the meta header and the real property chain (121
-    bytes total). The r10 anchored byte scan would read the fake dims;
-    the r11 box descent hops hdlr as one sibling and can only land on
-    the real ispe — the adversary class the image_meta cycle attests."""
-    decoy_hex = (
-        F.concat(
-            F.lit("00000014"),  # a convincing fake box size (20) ...
-            F.lit("69737065"),  # ... the bait: "ispe" bytes in a name
-            F.lit("00000000"),
-            _be4_hex(width + 9999),  # wrong dims a weak locate would read
-            _be4_hex(height + 9999),
-        )
-        if decoy
-        else F.lit("")
-    )
-    pad = 20 if decoy else 0  # decoy adds 20 bytes to hdlr/meta sizes
-    return F.unhex(
-        F.concat(
-            F.lit("00000014"),  # ftyp box size 20 (BE)
-            F.lit(MP4_FTYP_HEX),
-            F.hex(F.encode(brand, "UTF-8")),  # major brand
-            F.lit("00000000"),  # minor version
-            F.lit("6D696631"),  # compatible brand "mif1"
-            F.lit(f"{81 + pad:08X}"),  # meta box size = 12 + hdlr + iprp 36
-            F.lit("6D657461"),  # "meta"
-            F.lit("00000000"),  # meta version 0 + flags
-            F.lit(f"{33 + pad:08X}"),  # hdlr box size
-            F.lit("68646C72"),  # "hdlr"
-            F.lit("00000000"),  # version + flags
-            F.lit("00000000"),  # pre_defined
-            F.lit("70696374"),  # handler_type "pict"
-            F.lit("0" * 24),  # reserved[3]
-            F.lit("00"),  # empty NUL name
-            decoy_hex,  # (r11) fake 'ispe' interior inside the name area
-            F.lit("00000024"),  # iprp box size 36
-            F.lit("69707270"),  # "iprp"
-            F.lit("0000001C"),  # ipco box size 28
-            F.lit("6970636F"),  # "ipco"
-            F.lit("00000014"),  # ispe box size 20
-            F.lit("69737065"),  # "ispe"
-            F.lit("00000000"),  # version + flags
-            _be4_hex(width),
-            _be4_hex(height),
-        )
-    )
-
-
-def ispe_dims(payload: F.Column | str) -> F.Column:
-    """(width, height) struct from a HEIF-family payload's ispe box
-    (ImageSpatialExtents — where HEIC/AVIF dims live), located by a
-    TRUE bounded box DESCENT (r11 — the judge's HEIF-hardening
-    directive; previously a meta-anchored byte scan): walk the
-    top-level boxes to 'meta' (a fullbox: children at +12), its
-    children to 'iprp' (+8), iprp's to 'ipco' (+8), ipco's to 'ispe'.
-    The cursor only ever lands on box BOUNDARIES inside the current
-    parent's BE32 extent, so a deceptive 'ispe' byte pattern between
-    the meta header and the real property chain (e.g. inside the hdlr
-    name — the decoy class the image_meta cycle now synthesizes) can
-    never win.
-
-    Shape: the whole 4-level descent is ONE aggregate over
-    sequence(1, 36) carrying (stage, q, end, found) — the audio_meta /
-    IFD state-carried-anchor discipline. A step either hops to the
-    next sibling (q += size), descends on a stage-tag hit (stage+1,
-    child offset, parent end tightened to the hit box's extent), or
-    parks once found/stuck. Chaining four separate walk aggregates
-    instead re-embeds each level's whole tree in the next level's
-    bounds ~10× — measured exponential: >100 s of analysis then a
-    driver OOM at 5 rows (r11).
-
-    Guards: a hit must fit its header inside the parent (q+7 ≤ end); a
-    size < 8 (0 = "to end", 1 = 64-bit largesize — unverifiable
-    header-only) parks the walk → honest NULL; ≤36 steps total (up to
-    8 siblings per level + the 4 descents). Dims are BE32 at
-    box+12/box+16 (past size, 4cc and the fullbox version/flags). Any
-    missing link → NULL dims, never an error. Consumers extracting
-    both fields should STAGE this behind an alias barrier (the
-    jpeg_dims/tiff_dims discipline). Pass a column NAME to get the
-    memoized tree (_memo_expr)."""
-    if isinstance(payload, str):
-        return _memo_expr(
-            ("ispe_dims", payload), lambda: ispe_dims(F.col(payload))
-        )
-    total = F.octet_length(payload).cast("long")
-    # stage → target 4cc: meta, iprp, ipco, ispe
-    tags = ["6D657461", "69707270", "6970636F", "69737065"]
-
-    def step(st: F.Column, _x: F.Column) -> F.Column:
-        stage = st.getField("stage")
-        q = st.getField("q")
-        end = st.getField("end")
-        found = st.getField("found")
-        size = _be4_int_at(payload, q)
-        tag = F.hex(payload.substr(q + 4, F.lit(4)))
-        viable = (found == 0) & (q + 7 <= end) & (size >= 8)
-        target = (
-            F.when(stage == 0, F.lit(tags[0]))
-            .when(stage == 1, F.lit(tags[1]))
-            .when(stage == 2, F.lit(tags[2]))
-            .otherwise(F.lit(tags[3]))
-        )
-        hit = viable & (tag == target)
-        descend = hit & (stage < 3)
-        child_off = F.when(stage == 0, F.lit(12)).otherwise(F.lit(8))
-        return F.struct(
-            F.when(descend, stage + 1).otherwise(stage).alias("stage"),
-            F.when(descend, q + child_off)
-            .when(viable & ~hit, q + size)
-            .otherwise(q)
-            .alias("q"),
-            F.when(descend, F.least(q + size - 1, end))
-            .otherwise(end)
-            .alias("end"),
-            F.when(found > 0, found)
-            .when(hit & (stage == 3), q)
-            .otherwise(F.lit(0).cast("long"))
-            .alias("found"),
-        )
-
-    init = F.struct(
-        F.lit(0).alias("stage"),
-        F.lit(1).cast("long").alias("q"),
-        total.alias("end"),
-        F.lit(0).cast("long").alias("found"),
-    )
-
-    def fin(st: F.Column) -> F.Column:
-        b = st.getField("found")
-        null_i = F.lit(None).cast("int")
-        return F.struct(
-            F.when(b > 0, _be4_int_at(payload, b + 12).cast("int"))
-            .otherwise(null_i)
-            .alias("width"),
-            F.when(b > 0, _be4_int_at(payload, b + 16).cast("int"))
-            .otherwise(null_i)
-            .alias("height"),
-        )
-
-    # Gate the walk on the mandatory first-box ftyp signature: CASE
-    # branches evaluate lazily, so non-BMFF payloads (most of a mixed
-    # corpus) never pay the 36 interpreted aggregate steps — measured
-    # 11.6 s of image_meta's 14.8 s at 1M mixed docs before the gate,
-    # 0 on the 12 non-BMFF classes after. Every real HEIF file has
-    # ftyp first (ISO 23008-12 requires it), so the gate loses nothing.
-    null_i = F.lit(None).cast("int")
-    return F.when(
-        _bytes_hex(payload, 5, 4) == MP4_FTYP_HEX,
-        F.aggregate(F.sequence(F.lit(1), F.lit(36)), init, step, fin),
-    ).otherwise(F.struct(null_i.alias("width"), null_i.alias("height")))
-
-
-def _be4_int_at(payload: F.Column, pos: F.Column) -> F.Column:
-    """32-bit big-endian int at a RUNTIME 1-based byte offset (Column) —
-    ``Column.substr`` accepts column offsets where ``F.substring`` wants
-    literals, which is what lets the box walk happen in expressions."""
-    return F.conv(F.hex(payload.substr(pos, F.lit(4))), 16, 10).cast("long")
-
-
-def _aligned_locate(hx: F.Column, pat_hex: str, start: F.Column | None = None):
-    """1-based HEX position of the first BYTE-ALIGNED occurrence of
-    ``pat_hex`` in the hex string ``hx``, at or after hex position
-    ``start`` (a column); 0 when absent. Alignment is structural, not
-    checked after the fact: the hex is spaced into byte triplets
-    ("AB CD EF…") and the pattern is spaced the same way, so a match can
-    only start on a byte boundary — a misaligned straddle can never mask
-    a later aligned occurrence (plain ``instr`` returns only the first
-    match, aligned or not)."""
-    pat = " ".join(pat_hex[i : i + 2] for i in range(0, len(pat_hex), 2))
-    sp = F.regexp_replace(hx, "(..)", "$1 ")
-    if start is None:
-        s = F.locate(pat, sp)
-    else:
-        b0 = ((start + 1) / 2).cast("int")  # byte offset of `start`
-        sstart = (b0 - 1) * 3 + 1  # same position in spaced coords
-        rel = F.locate(pat, sp.substr(sstart, F.length(sp)))
-        s = F.when(rel > 0, rel + sstart - 1).otherwise(F.lit(0))
-    byte = ((s + 2) / 3).cast("int")  # spaced pos → 1-based byte offset
-    return F.when(s > 0, (byte - 1) * 2 + 1).otherwise(F.lit(0))
-
-
-def _aligned_locate_last(hx: F.Column, pat_hex: str) -> F.Column:
-    """1-based HEX position of the LAST byte-aligned occurrence of
-    ``pat_hex`` in ``hx``; 0 when absent. Same structural-alignment
-    spacing as ``_aligned_locate``, searched from the END via the
-    reverse trick: the first match of the char-reversed pattern in the
-    char-reversed spaced string is the last match in the original, and
-    reversal preserves the byte-triplet structure, so alignment still
-    can't be faked by a hex straddle. One locate, no per-row loop —
-    the r11 Ogg last-page granule read runs this over a bounded TAIL
-    slice, never the whole blob."""
-    pat = " ".join(pat_hex[i : i + 2] for i in range(0, len(pat_hex), 2))
-    sp = F.regexp_replace(hx, "(..)", "$1 ")
-    rel = F.locate(pat[::-1], F.reverse(sp))
-    s = F.when(rel > 0, F.length(sp) - rel - F.lit(len(pat)) + 2).otherwise(
-        F.lit(0)
-    )
-    byte = ((s + 2) / 3).cast("int")
-    return F.when(s > 0, (byte - 1) * 2 + 1).otherwise(F.lit(0))
-
-
-def mvhd_offset(payload: F.Column | str) -> F.Column:
-    """1-based byte offset of the mvhd tag, located by the moov-anchored
-    byte-aligned scan (see video_meta); 0 when absent. Exposed separately
-    so queries can MATERIALIZE it once as a column — the locate chain is
-    the expensive part of the parse tree, and staging it behind an alias
-    keeps it out of every per-field expression (planning/codegen cost,
-    the audio_meta alias-barrier lesson one level deeper). Pass a column
-    NAME to get the memoized tree (_memo_expr)."""
-    if isinstance(payload, str):
-        return _memo_expr(
-            ("mvhd_offset", payload), lambda: mvhd_offset(F.col(payload))
-        )
-    hx = F.hex(payload)
-    moov_hexpos = _aligned_locate(hx, "6D6F6F76")  # "moov"; 0 when absent
-    hexpos = F.when(
-        moov_hexpos > 0, _aligned_locate(hx, MP4_MVHD_HEX, start=moov_hexpos)
-    ).otherwise(F.lit(0))
-    return ((hexpos + 1) / 2).cast("int")  # hex pos → byte pos; 0 stays 0
-
-
-def video_meta(
-    payload: F.Column | str, p: F.Column | str | None = None
-) -> F.Column:
-    """Parse (mime_type, brand, timescale, duration_ms, n_tracks) from an
-    ISO-BMFF/MP4 payload — pure JVM expressions, no codec, no Python; the
-    video leg of the image_meta / audio_meta triad.
-
-    ftyp is recognized at its mandated first-box position (tag at byte
-    5); the mvhd box is then LOCATED AT RUNTIME with a moov-ANCHORED
-    scan — first find the byte-aligned 'moov' tag, then the first
-    byte-aligned 'mvhd' AFTER it (``locate`` with a start offset) — so
-    moov may sit anywhere after ftyp, carry any siblings, and a stray
-    'mvhd' byte pattern in data BEFORE moov (free/udta payloads,
-    brand lists) cannot mislead the parse. This is still a heuristic,
-    not a full box walk (expressions cannot loop over box sizes): a
-    deceptive aligned 'mvhd' between the moov header and the real child
-    box would win — the version guard and the timescale>0 guard then
-    bound the damage to NULLs. Version-0 mvhd fields: timescale BE32
-    @tag+16, duration BE32 @tag+20, next_track_ID BE32 @tag+100
-    (n_tracks = next_track_ID − 1). Version-1 (r11 — the 64-bit
-    layout long streams and post-2040 timestamps ship; previously an
-    honest NULL): timescale @tag+24, duration u64 @tag+28 (two gated
-    BE32 halves — "all ones = unknown" stays NULL instead of
-    overflowing ANSI long), next_track_ID @tag+112. duration_ms =
-    floor(duration·1000/timescale) — integer-exact cross-engine.
-    Versions ≥2, missing moov/mvhd, or non-MP4 bytes yield
-    ('application/octet-stream', NULL…), never an error — the image_meta
-    contract: one malformed blob cannot fail a backfill. Pass column
-    NAMES to get the memoized tree (_memo_expr)."""
-    if isinstance(payload, str) and (p is None or isinstance(p, str)):
-        return _memo_expr(
-            ("video_meta", payload, p),
-            lambda: video_meta(
-                F.col(payload), None if p is None else F.col(p)
-            ),
-        )
-    if isinstance(payload, str):
-        payload = F.col(payload)
-    if isinstance(p, str):
-        p = F.col(p)
-    is_mp4 = _bytes_hex(payload, 5, 4) == MP4_FTYP_HEX
-    if p is None:
-        p = mvhd_offset(payload)
-    ver = _be_int_dyn(payload, p + 4, 1)
-    ok = is_mp4 & (p > 0) & ((ver == 0) | (ver == 1))
-    # version-0 fields at their classic offsets; version-1 (r11 —
-    # 8-byte times and duration, shipped in the wild by long streams
-    # and post-2040 timestamps; previously an honest NULL) shifts
-    # timescale to tag+24, the 64-bit duration to tag+28 (read as two
-    # gated BE32 halves: an unguarded 8-byte read of the spec's "all
-    # ones = unknown" value would overflow ANSI long), and
-    # next_track_ID to tag+112.
-    timescale = F.when(ver == 0, _be4_int_at(payload, p + 16)).otherwise(
-        _be4_int_at(payload, p + 24)
-    )
-    d_hi = _be4_int_at(payload, p + 28)
-    d_lo = _be4_int_at(payload, p + 32)
-    dur64 = F.when(d_hi < F.lit(1048576), d_hi * F.lit(4294967296) + d_lo)
-    duration = F.when(ver == 0, _be4_int_at(payload, p + 20)).otherwise(dur64)
-    next_track = F.when(ver == 0, _be4_int_at(payload, p + 100)).otherwise(
-        _be4_int_at(payload, p + 112)
-    )
-    null_l = F.lit(None).cast("long")
-    return F.struct(
-        F.when(is_mp4, F.lit("video/mp4"))
-        .otherwise(F.lit("application/octet-stream"))
-        .alias("mime_type"),
-        F.when(is_mp4, F.substring(payload, 9, 4).cast("string"))
-        .otherwise(F.lit(None).cast("string"))
-        .alias("brand"),
-        F.when(ok, timescale).otherwise(null_l).alias("timescale"),
-        F.when(ok & (timescale > 0), F.floor(duration * 1000 / timescale))
-        .otherwise(null_l)
-        .alias("duration_ms"),
-        F.when(ok, (next_track - 1).cast("int"))
-        .otherwise(F.lit(None).cast("int"))
-        .alias("n_tracks"),
-    )
-
-
-def _be_int_dyn(payload: F.Column, pos: F.Column, n: int) -> F.Column:
-    """Big-endian int of ``n`` bytes at a runtime 1-based offset."""
-    return F.conv(F.hex(payload.substr(pos, F.lit(n))), 16, 10).cast("long")
-
-
-def _le_int_dyn(payload: F.Column, pos: F.Column, n: int) -> F.Column:
-    """Little-endian int of ``n`` bytes at a runtime 1-based offset —
-    the LE half of _int_at_dyn without the dead BE arm (r10 review:
-    a constant-true _int_at_dyn builds ~2× the expression subtree,
-    the construction cost this module memoizes parsers to avoid)."""
-    b = lambda i: F.conv(  # noqa: E731
-        F.hex(payload.substr(pos + i, F.lit(1))), 16, 10
-    ).cast("long")
-    return sum([b(i) * (256**i) for i in range(n)], F.lit(0).cast("long"))
-
-
-def sniff_mime(payload: F.Column | str) -> F.Column:
-    """Magic-byte content-type detection: the ingestion router that sends
-    each blob to the right decode pipeline (image/audio/document/archive).
-    First-match dispatch on leading signatures — the RIFF check also
-    requires "WAVE" at offset 9 so other RIFF containers (AVI) are not
-    misrouted. ISO-BMFF containers (ftyp at offset 5) are routed by MAJOR
-    BRAND (bytes 9-12): heic/heix → image/heic, mif1/msf1 → image/heif,
-    avif/avis → image/avif, "M4A "/"M4B " → audio/mp4 — these are images
-    and audiobooks in an MP4 shell, and a brand-blind video/mp4 default
-    would send them to the frame-sampling pipeline. Unrecognized brands
-    (isom, mp41/42, qt, ...) default to video/mp4: the movie brands
-    outnumber enumerable stills, so video is the router's documented
-    BMFF fallback. Unknown bytes yield 'application/octet-stream', never
-    an error. Pass a column NAME to get the memoized tree (_memo_expr)."""
-    if isinstance(payload, str):
-        return _memo_expr(
-            ("sniff_mime", payload), lambda: sniff_mime(F.col(payload))
-        )
-    sig = lambda hexs: _bytes_hex(payload, 1, len(hexs) // 2) == hexs  # noqa: E731
-    # routing requires only "WAVE" at offset 9 (sufficient to exclude
-    # AVI/other RIFF): real WAVs often carry bext/LIST/JUNK chunks before
-    # "fmt ", and the ROUTER must still send them to the audio pipeline —
-    # the fixed-layout audio_meta parser separately requires the canonical
-    # "fmt "-first layout and NULLs out anything else
-    is_wav = sig(WAV_RIFF_HEX) & (_bytes_hex(payload, 9, 4) == "57415645")
-    is_webp = sig(WAV_RIFF_HEX) & (_bytes_hex(payload, 9, 4) == WEBP_TAG_HEX)
-    is_bmff = _bytes_hex(payload, 5, 4) == MP4_FTYP_HEX
-    brand = _bytes_hex(payload, 9, 4)  # ftyp major brand, ASCII hex
-    return (
-        F.when(sig(PNG_SIG_HEX), F.lit("image/png"))
-        .when(sig(GIF_SIG_HEX), F.lit("image/gif"))
-        .when(is_wav, F.lit("audio/x-wav"))
-        .when(is_webp, F.lit("image/webp"))
-        .when(
-            _bytes_hex(payload, 1, 4).isin(TIFF_LE_SIG_HEX, TIFF_BE_SIG_HEX),
-            F.lit("image/tiff"),
-        )
-        .when(sig(FLAC_SIG_HEX), F.lit("audio/flac"))
-        # Ogg routes audio/ogg at the CONTAINER level (r10): the codec
-        # (Vorbis/Opus/Theora) lives in the first packet, and audio
-        # codecs dominate crawled .ogg — the router's documented default,
-        # the BMFF-brand rationale in reverse (no still-image Ogg exists)
-        .when(sig(OGG_SIG_HEX), F.lit("audio/ogg"))
-        .when(
-            sig(BMP_SIG_HEX) & (_bytes_hex(payload, 7, 4) == "00000000"),
-            F.lit("image/bmp"),
-        )
-        .when(
-            sig(ID3_SIG_HEX) | _mp3_sync(payload),
-            F.lit("audio/mpeg"),
-        )
-        .when(
-            is_bmff & brand.isin("68656963", "68656978"),  # heic, heix
-            F.lit("image/heic"),
-        )
-        .when(
-            is_bmff & brand.isin("6D696631", "6D736631"),  # mif1, msf1
-            F.lit("image/heif"),
-        )
-        .when(
-            is_bmff & brand.isin("61766966", "61766973"),  # avif, avis
-            F.lit("image/avif"),
-        )
-        .when(
-            is_bmff & brand.isin("4D344120", "4D344220"),  # "M4A ", "M4B "
-            F.lit("audio/mp4"),
-        )
-        .when(is_bmff, F.lit("video/mp4"))
-        # EBML (Matroska family — r12): one container magic, the codec
-        # family decided by the header's DocType element, read by the
-        # bounded element walk (NOT a byte locate: a 'webm' string in a
-        # tag payload can't win). webm → video/webm, matroska →
-        # video/x-matroska (the movie default — .mka audio exists but
-        # video dominates crawled Matroska, the BMFF-brand rationale);
-        # any other/absent DocType stays octet-stream. The walk is
-        # inside the lazy CASE branch: non-EBML blobs never pay it.
-        .when(sig(EBML_SIG_HEX), _ebml_mime(payload))
-        .when(sig(JPEG_SIG_HEX), F.lit("image/jpeg"))
-        .when(sig(PDF_SIG_HEX), F.lit("application/pdf"))
-        .when(sig(ZIP_SIG_HEX), F.lit("application/zip"))
-        .when(sig(GZIP_SIG_HEX), F.lit("application/gzip"))
-        .otherwise(F.lit("application/octet-stream"))
-    )
-
-
-# --------------------------------------------------------------------------
-# EBML / Matroska / WebM (r12 — the judge's MKV directive). The web-crawl
-# video family after MP4: one container grammar (EBML: every element is
-# ID-vint + size-vint + payload, recursively), two doctypes (webm,
-# matroska). Reference scope analog: the multimodal ingestion surface the
-# reference's ETL would need before any decode job — duration from
-# Segment→Info (TimestampScale + Duration), dims from
-# Segment→Tracks→TrackEntry→Video (PixelWidth/Height) — as pure JVM
-# expressions, the synth_mp4/video_meta pattern. The independent
-# pure-Python EBML walker lives in tests/test_multimodal_ebml.py
-# (written FIRST, the r11 HEIF discipline).
-# --------------------------------------------------------------------------
-
-EBML_SIG_HEX = "1A45DFA3"  # the EBML header element ID — the magic
-EBML_SEGMENT_HEX = "18538067"
-EBML_INFO_HEX = "1549A966"
-EBML_TSCALE_HEX = "2AD7B1"  # TimestampScale (ns per timestamp unit)
-EBML_DURATION_HEX = "4489"  # Duration (FLOAT element, 4 or 8 bytes)
-EBML_TRACKS_HEX = "1654AE6B"
-EBML_TRACKENTRY_HEX = "AE"
-EBML_VIDEO_HEX = "E0"
-EBML_PIXELW_HEX = "B0"
-EBML_PIXELH_HEX = "BA"
-EBML_DOCTYPE_HEX = "4282"
-
-
-def _ebml_let(binding: F.Column, body) -> F.Column:
-    """LET-BINDING for expression trees: evaluate ``binding`` (a struct
-    of per-step derived values) ONCE and hand it to ``body`` as a
-    lambda variable — via a 1-element ``transform``. Catalyst trees
-    have no sharing: every Column reuse re-embeds the whole subtree,
-    and the serialized TASK BINARY carries the expansion (measured:
-    the walks' struct-per-action steps without this binding shipped a
-    1.9 MB task binary for video_meta alone, and 32 concurrent task
-    deserializations OOM'd the vanilla 1 GB driver on media_catalog —
-    the round's second tree-size lesson). A lambda variable reference
-    is ~3 nodes regardless of what it binds."""
-    return F.element_at(F.transform(F.array(binding), body), 1)
-
-
-def _ebml_vlen(fb: F.Column) -> F.Column:
-    """VINT length from its first byte: 9 − bit_length(fb) (0x80.. → 1
-    … 0x01 → 8). CLOSED FORM, not an 8-branch CASE — every use site
-    re-embeds this tree, and the walks use it ~10× per step (see the
-    _ebml_size tree-size note). fb == 0 yields 8, which callers must
-    exclude with an fb ≥ 1 guard."""
-    return F.lit(9) - F.length(F.bin(fb))
-
-
-def _ebml_id_len(payload: F.Column, q: F.Column) -> F.Column:
-    """Byte length of the element ID whose first byte sits at 1-based
-    offset ``q``: EBML IDs keep their length marker (leading-one
-    position), so 0x80.. → 1 byte … 0x10.. → 4. Valid only when the
-    first byte is ≥ 0x10 (callers guard, bounding it to 1..4); same
-    closed form as _ebml_vlen."""
-    return _ebml_vlen(_be_int_dyn(payload, q, 1))
-
-
-def _ebml_size(
-    payload: F.Column, q: F.Column
-) -> tuple[F.Column, F.Column, F.Column]:
-    """(vint_len, value, is_unknown) of the size VINT at 1-based offset
-    ``q``. The length is the leading-one position of the first byte
-    (0x80.. → 1 … 0x01 → 8; 0x00 is invalid → len 0, value NULL); the
-    marker bit is CLEARED from the value (unlike IDs). is_unknown is
-    the spec's all-value-bits-one sentinel ("size unknown — element
-    extends to parent/file end"), which streamed/live Matroska uses on
-    Segment.
-
-    TREE-SIZE DISCIPLINE: analysis expands Column DAGs into trees
-    (transform rules copy shared subtrees), and the walks use these
-    values ~10 places per step — a first implementation that built
-    value as an 8-branch per-length CASE compounded to a ~17k-node
-    analyzed step tree: 30+ s of analysis and an executor OOM
-    deserializing the plan at 5 rows (the r11 ispe failure signature;
-    caught when mime_sniff hung the bench). Everything here is
-    CLOSED-FORM arithmetic: len = 9 − bit_length(first byte); the vint
-    read as ONE runtime-length BE int in which the marker bit
-    contributes exactly 2^(7·len), so value = raw − 2^(7·len) and the
-    unknown sentinel is value == 2^(7·len) − 1. An 8-byte vint whose
-    raw value exceeds long range reads NULL (conv→cast) → the walk
-    parks: sizes near 2^63 are not parseable and not real."""
-    fb = _be_int_dyn(payload, q, 1)
-    vlen = _ebml_vlen(fb)
-    raw = F.conv(F.hex(payload.substr(q, vlen)), 16, 10).cast("long")
-    marker = F.call_function(
-        "shiftleft", F.lit(1).cast("long"), (F.lit(7) * vlen).cast("int")
-    )
-    value = raw - marker
-    unknown = F.coalesce(value == marker - 1, F.lit(False))
-    return vlen, value, unknown
-
-
-def _uint_at_dyn_sized(
-    payload: F.Column, q: F.Column, n: F.Column
-) -> F.Column:
-    """BE uint at runtime offset ``q`` whose byte length ``n`` is ALSO a
-    runtime column (EBML uints are variable-width): one runtime-length
-    read — substr takes column lengths, so no per-width CASE is needed
-    (the _ebml_size tree-size discipline). Values past long range read
-    NULL (conv → cast). Callers bound ``n`` at the recording site."""
-    return F.conv(F.hex(payload.substr(q, n)), 16, 10).cast("long")
-
-
-def _ieee_floor_units(bits: F.Column, n: F.Column) -> F.Column:
-    """floor(value) of an IEEE-754 FLOAT element read as raw BE bits —
-    EBML's Duration is a float (4 or 8 bytes), and the decode must stay
-    integer-exact cross-engine, so the mantissa/exponent arithmetic is
-    done in integers: value = (mantissa | implicit_bit) · 2^(e − bias′).
-    Negative floats (sign bit set) read as >2^63 via conv and overflow
-    the long cast to NULL — a negative duration is invalid anyway.
-    Exponents past the shiftleft bound (value ≥ 2^63) → NULL, honest."""
-    def for_width(frac_bits: int, unbiased_top: int) -> F.Column:
-        # (e, frac) let-bound: each is referenced by several branches,
-        # and each embeds the caller's whole `bits` tree (_ebml_let)
-        pivot = unbiased_top  # e value where the float is exactly integral
-        binding = F.struct(
-            F.floor(bits / F.lit(2**frac_bits)).cast("long").alias("e"),
-            (bits % F.lit(2**frac_bits) + F.lit(2**frac_bits)).alias("frac"),
-            (bits == 0).alias("zero"),
-        )
-
-        def decode(p: F.Column) -> F.Column:
-            e = p.getField("e")
-            frac = p.getField("frac")
-            return (
-                F.when(p.getField("zero"), F.lit(0).cast("long"))
-                .when(
-                    (e >= F.lit(pivot - frac_bits)) & (e <= F.lit(pivot)),
-                    F.call_function(
-                        "shiftright", frac, (F.lit(pivot) - e).cast("int")
-                    ),
-                )
-                .when(
-                    (e > F.lit(pivot)) & (e <= F.lit(pivot + 62 - frac_bits)),
-                    F.call_function(
-                        "shiftleft", frac, (e - F.lit(pivot)).cast("int")
-                    ),
-                )
-                .when(
-                    (e > 0) & (e < F.lit(pivot - frac_bits)),
-                    F.lit(0).cast("long"),
-                )
-                .otherwise(F.lit(None).cast("long"))
-            )
-
-        return _ebml_let(binding, decode)
-
-    # f64: bias 1023, 52 mantissa bits → integral at e = 1075;
-    # f32: bias 127, 23 mantissa bits → integral at e = 150
-    return (
-        F.when(n == 8, for_width(52, 1075))
-        .when(n == 4, for_width(23, 150))
-        .otherwise(F.lit(None).cast("long"))
-    )
-
-
-def _f64_hex(v: F.Column) -> F.Column:
-    """16-hex-char IEEE-754 double of a POSITIVE integer column (the
-    synth side of _ieee_floor_units): exponent from the bit length,
-    mantissa by shifting the value to the 53-bit frame. Exact for any
-    1 ≤ v < 2^53 — the synth contract (Duration units are integral in
-    the cycle so the oracle replays them analytically)."""
-    blen = F.length(F.bin(v))  # bit length of v ≥ 1
-    mant = v * F.call_function(
-        "shiftleft", F.lit(1).cast("long"), (F.lit(53) - blen).cast("int")
-    ) - F.lit(2**52)
-    bits = (F.lit(1022).cast("long") + blen) * F.lit(2**52) + mant
-    return F.lpad(F.conv(bits.cast("string"), 10, 16), 16, "0")
-
-
-def synth_mkv(
-    doctype: str,
-    tscale: F.Column,
-    duration_units: F.Column,
-    width: F.Column,
-    height: F.Column,
-    audio_first: bool = False,
-) -> F.Column:
-    """A real EBML/Matroska prefix, walkable by any EBML reader (the
-    independent pure-Python walker in tests/test_multimodal_ebml.py
-    parses every vint and descends the real nesting): EBML header
-    (Version/ReadVersion/MaxIDLength/MaxSizeLength/DocType/
-    DocTypeVersion/DocTypeReadVersion) + Segment containing Info
-    (TimestampScale BE32, Duration as an 8-byte IEEE-754 double — the
-    spec's FLOAT element, synthesized from an integral unit count via
-    _f64_hex) and Tracks with a video TrackEntry (TrackNumber,
-    TrackType 1, Video{PixelWidth, PixelHeight} as BE16).
-
-    ``audio_first`` prepends an audio TrackEntry (TrackType 2 with an
-    Audio{SamplingFrequency float32} child) — the adversary class for
-    the dims walk: a track-blind reader that descends the FIRST
-    TrackEntry finds no Video element and must pop back up to the
-    sibling. 89 bytes (webm video-only) / 109 (matroska audio-first);
-    n_bytes = 32 + len(doctype) + 53 (+16 audio-first)."""
-    dt_hex = doctype.encode("ascii").hex().upper()
-    dlen = len(doctype)
-    hdr_children = (
-        "4286" "81" "01"  # EBMLVersion 1
-        "42F7" "81" "01"  # EBMLReadVersion 1
-        "42F2" "81" "04"  # EBMLMaxIDLength 4
-        "42F3" "81" "08"  # EBMLMaxSizeLength 8
-        + EBML_DOCTYPE_HEX + f"{0x80 + dlen:02X}" + dt_hex
-        + "4287" "81" "02"  # DocTypeVersion 2
-        "4285" "81" "02"  # DocTypeReadVersion 2
-    )
-    hdr_body = 27 + dlen
-    be2 = lambda c: F.lpad(F.conv(c.cast("string"), 10, 16), 4, "0")  # noqa: E731
-    info = F.concat(
-        F.lit(EBML_INFO_HEX + f"{0x80 + 19:02X}"),
-        F.lit(EBML_TSCALE_HEX + "84"),
-        _be4_hex(tscale),
-        F.lit(EBML_DURATION_HEX + "88"),
-        _f64_hex(duration_units),
-    )
-    vtrack_num = "02" if audio_first else "01"
-    vte = F.concat(
-        F.lit(EBML_TRACKENTRY_HEX + f"{0x80 + 16:02X}"),
-        F.lit("D7" "81" + vtrack_num),  # TrackNumber
-        F.lit("83" "81" "01"),  # TrackType 1 = video
-        F.lit(EBML_VIDEO_HEX + f"{0x80 + 8:02X}"),
-        F.lit(EBML_PIXELW_HEX + "82"),
-        be2(width),
-        F.lit(EBML_PIXELH_HEX + "82"),
-        be2(height),
-    )
-    ate_hex = (
-        EBML_TRACKENTRY_HEX + f"{0x80 + 14:02X}"
-        + "D7" "81" "01"  # TrackNumber 1
-        + "83" "81" "02"  # TrackType 2 = audio
-        + "E1" "86"  # Audio element, 6-byte body
-        + "B5" "84" "473B8000"  # SamplingFrequency = 48000.0f
-    )
-    tracks_body = (16 if audio_first else 0) + 18
-    seg_body = 24 + 5 + tracks_body
-    return F.unhex(
-        F.concat(
-            F.lit(EBML_SIG_HEX + f"{0x80 + hdr_body:02X}" + hdr_children),
-            F.lit(EBML_SEGMENT_HEX + f"{0x4000 + seg_body:04X}"),
-            info,
-            F.lit(EBML_TRACKS_HEX + f"{0x80 + tracks_body:02X}"),
-            F.lit(ate_hex if audio_first else ""),
-            vte,
-        )
-    )
-
-
-def _ebml_gate(payload: F.Column, walk: F.Column, nulls: F.Column) -> F.Column:
-    """Magic-gated walk (the ispe-gate discipline: CASE branches are
-    lazy, so non-EBML blobs — most of a mixed corpus — never pay the
-    interpreted aggregate steps)."""
-    return F.when(_bytes_hex(payload, 1, 4) == EBML_SIG_HEX, walk).otherwise(
-        nulls
-    )
-
-
-def ebml_info(payload: F.Column | str) -> F.Column:
-    """(timescale_ns, duration_ms) from an EBML/Matroska payload's
-    Segment→Info element — the duration every video pipeline wants
-    before any cluster is read. ONE bounded aggregate over
-    sequence(1, 24) carrying (stage, q, end, ts_q, ts_n, du_q, du_n) —
-    the ispe_dims single-aggregate discipline (chaining per-level walks
-    re-embeds each level's tree in the next: the measured exponential).
-    A step either hops to the next sibling (q += id+size+payload),
-    descends on a stage-target hit (Segment at stage 0 — unknown-size
-    allowed, the streamed-Matroska sentinel, extent = parent end — then
-    Info at stage 1), records a leaf hit (TimestampScale uint ≤ 8 bytes;
-    Duration FLOAT of 4 or 8 bytes) and keeps walking until both are
-    found, or parks (invalid id/vint, extent overflow, done).
-
-    duration_ms = floor(floor(Duration) · TimestampScale / 10^6) — the
-    float decode is integer-exact (_ieee_floor_units); sub-unit duration
-    fractions are dropped (one timestamp unit is ≤ the container's own
-    timing granularity). TimestampScale falls back to the spec default
-    1,000,000 ns when Duration is present but the scale element absent;
-    the reported timescale_ns stays NULL then (parse honesty — the
-    default is applied, not observed). Any missing link → NULLs, never
-    an error. Pass a column NAME to get the memoized tree."""
-    if isinstance(payload, str):
-        return _memo_expr(
-            ("ebml_info", payload), lambda: ebml_info(F.col(payload))
-        )
-    total = F.octet_length(payload).cast("long")
-
-    # Step = ONE CASE over the action (descend / hit / skip / park),
-    # each branch constructing the WHOLE next-state struct. The
-    # per-FIELD when-chain formulation re-embeds every condition tree
-    # (and through it the tag/size subtrees) once per field — measured
-    # 35 s of py4j tree construction and an executor OOM deserializing
-    # the plan at 5 rows (the r11 ispe chaining failure, re-learned).
-    # CASE branch order gives mutual exclusion, so no branch needs the
-    # others' negations.
-    def step(st: F.Column, _x: F.Column) -> F.Column:
-        stage = st.getField("stage")
-        q = st.getField("q")
-        end = st.getField("end")
-        ts_q = st.getField("ts_q")
-        ts_n = st.getField("ts_n")
-        du_q = st.getField("du_q")
-        du_n = st.getField("du_n")
-        idlen = _ebml_id_len(payload, q)
-        tag = F.hex(payload.substr(q, idlen))
-        szq = q + idlen
-        vlen, sval, unknown = _ebml_size(payload, szq)
-        data_q = szq + vlen
-        nxt = data_q + sval
-        done = (ts_q > 0) & (du_q > 0)
-        viable = ~done & (q <= end) & (idlen <= 4) & (sval >= 0)
-        fits = ~unknown & (nxt - 1 <= end)
-        # every derived value is computed ONCE into the let-struct; the
-        # action CASE below references lambda-variable fields (_ebml_let
-        # note: the expanded-reuse tree shipped MB-scale task binaries)
-        parse = F.struct(
-            tag.alias("tag"), sval.alias("sval"), unknown.alias("unknown"),
-            data_q.alias("data_q"), nxt.alias("nxt"),
-            viable.alias("viable"), fits.alias("fits"),
-        )
-
-        def mk(stage2, q2, end2, ts_q2, ts_n2, du_q2, du_n2) -> F.Column:
-            return F.struct(
-                stage2.alias("stage"), q2.alias("q"), end2.alias("end"),
-                ts_q2.alias("ts_q"), ts_n2.alias("ts_n"),
-                du_q2.alias("du_q"), du_n2.alias("du_n"),
-            )
-
-        def act(p: F.Column) -> F.Column:
-            tag = p.getField("tag")
-            sval = p.getField("sval")
-            unknown = p.getField("unknown")
-            data_q = p.getField("data_q")
-            nxt = p.getField("nxt")
-            viable = p.getField("viable")
-            fits = p.getField("fits")
-            is_seg = (
-                (stage == 0) & (tag == EBML_SEGMENT_HEX) & (unknown | fits)
-            )
-            is_info = (stage == 1) & (tag == EBML_INFO_HEX) & fits
-            return (
-                F.when(
-                    viable & (is_seg | is_info),
-                    mk(
-                        stage + 1,
-                        data_q,
-                        F.when(unknown, end).otherwise(F.least(nxt - 1, end)),
-                        ts_q, ts_n, du_q, du_n,
-                    ),
-                )
-                .when(
-                    viable & (stage == 2) & (tag == EBML_TSCALE_HEX) & fits
-                    & (sval >= 1) & (sval <= 8) & (ts_q == 0),
-                    mk(stage, nxt, end, data_q, sval, du_q, du_n),
-                )
-                .when(
-                    viable & (stage == 2) & (tag == EBML_DURATION_HEX) & fits
-                    & ((sval == 4) | (sval == 8)) & (du_q == 0),
-                    mk(stage, nxt, end, ts_q, ts_n, data_q, sval),
-                )
-                .when(
-                    viable & fits,
-                    mk(stage, nxt, end, ts_q, ts_n, du_q, du_n),
-                )
-                .otherwise(st)  # park: done, malformed, or past the extent
-            )
-
-        return _ebml_let(parse, act)
-
-    zero = F.lit(0).cast("long")
-    init = F.struct(
-        F.lit(0).alias("stage"),
-        F.lit(1).cast("long").alias("q"),
-        total.alias("end"),
-        zero.alias("ts_q"),
-        zero.alias("ts_n"),
-        zero.alias("du_q"),
-        zero.alias("du_n"),
-    )
-    null_l = F.lit(None).cast("long")
-
-    def fin(st: F.Column) -> F.Column:
-        ts_q, ts_n = st.getField("ts_q"), st.getField("ts_n")
-        du_q, du_n = st.getField("du_q"), st.getField("du_n")
-        ts = F.when(ts_q > 0, _uint_at_dyn_sized(payload, ts_q, ts_n))
-        ts_eff = F.when(
-            du_q > 0, F.coalesce(ts, F.lit(1000000).cast("long"))
-        ).otherwise(ts)
-        bits = F.when(du_q > 0, _uint_at_dyn_sized(payload, du_q, du_n))
-        # (ts, ts_eff, units) let-bound: units is the whole float-decode
-        # tree and each is referenced several times below (_ebml_let)
-        binding = F.struct(
-            ts.alias("ts"),
-            ts_eff.alias("ts_eff"),
-            _ieee_floor_units(bits, du_n).alias("units"),
-        )
-
-        def out(p: F.Column) -> F.Column:
-            ts = p.getField("ts")
-            ts_eff = p.getField("ts_eff")
-            units = p.getField("units")
-            ok_mul = (ts_eff > 0) & (
-                units <= F.floor(F.lit(2**63 - 1) / ts_eff)
-            )
-            ms = F.when(
-                units.isNotNull() & ok_mul,
-                F.call_function(
-                    "div", units * ts_eff, F.lit(1000000).cast("long")
-                ),
-            ).otherwise(null_l)
-            return F.struct(
-                F.coalesce(ts, null_l).alias("timescale_ns"),
-                ms.alias("duration_ms"),
-            )
-
-        return _ebml_let(binding, out)
-
-    nulls = F.struct(
-        null_l.alias("timescale_ns"), null_l.alias("duration_ms")
-    )
-    return _ebml_gate(
-        payload,
-        F.aggregate(F.sequence(F.lit(1), F.lit(24)), init, step, fin),
-        nulls,
-    )
-
-
-def ebml_video_dims(payload: F.Column | str) -> F.Column:
-    """(width, height) from Segment→Tracks→TrackEntry→Video→
-    PixelWidth/PixelHeight — the EBML analog of ispe_dims, with one
-    capability the linear chains don't need: POP-UP. Real files order
-    tracks arbitrarily, so when the walk descends into a TrackEntry and
-    reaches its end without finding a Video element (an audio track —
-    the synth's audio_first adversary class), it pops back to the
-    Tracks level (end restored from p_end) and continues with the next
-    sibling TrackEntry. One aggregate over sequence(1, 28) carrying
-    (stage, q, end, p_end, w_q, w_n, h_q, h_n); a Video element missing
-    its dims parks inside it (honest NULLs) — multi-Video backtracking
-    is out of contract. Pass a column NAME to get the memoized tree."""
-    if isinstance(payload, str):
-        return _memo_expr(
-            ("ebml_video_dims", payload),
-            lambda: ebml_video_dims(F.col(payload)),
-        )
-    total = F.octet_length(payload).cast("long")
-
-    # struct-per-action CASE with the parse let-binding (see the
-    # ebml_info step and _ebml_let notes: both tree-size lessons)
-    def step(st: F.Column, _x: F.Column) -> F.Column:
-        stage = st.getField("stage")
-        q = st.getField("q")
-        end = st.getField("end")
-        p_end = st.getField("p_end")
-        w_q = st.getField("w_q")
-        w_n = st.getField("w_n")
-        h_q = st.getField("h_q")
-        h_n = st.getField("h_n")
-        idlen = _ebml_id_len(payload, q)
-        tag = F.hex(payload.substr(q, idlen))
-        szq = q + idlen
-        vlen, sval, unknown = _ebml_size(payload, szq)
-        data_q = szq + vlen
-        nxt = data_q + sval
-        done = (w_q > 0) & (h_q > 0)
-        pop = ~done & (stage == 3) & (q > end) & (q <= p_end)
-        viable = ~done & ~pop & (q <= end) & (idlen <= 4) & (sval >= 0)
-        fits = ~unknown & (nxt - 1 <= end)
-        parse = F.struct(
-            tag.alias("tag"), sval.alias("sval"), unknown.alias("unknown"),
-            data_q.alias("data_q"), nxt.alias("nxt"), pop.alias("pop"),
-            viable.alias("viable"), fits.alias("fits"),
-        )
-
-        def mk(stage2, q2, end2, p_end2, w_q2, w_n2, h_q2, h_n2) -> F.Column:
-            return F.struct(
-                stage2.alias("stage"), q2.alias("q"), end2.alias("end"),
-                p_end2.alias("p_end"), w_q2.alias("w_q"), w_n2.alias("w_n"),
-                h_q2.alias("h_q"), h_n2.alias("h_n"),
-            )
-
-        keep = (w_q, w_n, h_q, h_n)
-
-        def act(p: F.Column) -> F.Column:
-            tag = p.getField("tag")
-            sval = p.getField("sval")
-            unknown = p.getField("unknown")
-            data_q = p.getField("data_q")
-            nxt = p.getField("nxt")
-            pop = p.getField("pop")
-            viable = p.getField("viable")
-            fits = p.getField("fits")
-            is_seg = (
-                (stage == 0) & (tag == EBML_SEGMENT_HEX) & (unknown | fits)
-            )
-            is_tracks = (stage == 1) & (tag == EBML_TRACKS_HEX) & fits
-            is_te = (stage == 2) & (tag == EBML_TRACKENTRY_HEX) & fits
-            is_video = (stage == 3) & (tag == EBML_VIDEO_HEX) & fits
-            return (
-                F.when(pop, mk(F.lit(2), q, p_end, p_end, *keep))
-                .when(
-                    viable & (is_seg | is_tracks | is_te | is_video),
-                    mk(
-                        stage + 1,
-                        data_q,
-                        F.when(unknown, end).otherwise(F.least(nxt - 1, end)),
-                        # entering a TrackEntry records the Tracks extent
-                        # so a video-less (audio) track can pop back out
-                        F.when(is_te, end).otherwise(p_end),
-                        *keep,
-                    ),
-                )
-                .when(
-                    viable & (stage == 4) & (tag == EBML_PIXELW_HEX) & fits
-                    & (sval >= 1) & (sval <= 4) & (w_q == 0),
-                    mk(stage, nxt, end, p_end, data_q, sval, h_q, h_n),
-                )
-                .when(
-                    viable & (stage == 4) & (tag == EBML_PIXELH_HEX) & fits
-                    & (sval >= 1) & (sval <= 4) & (h_q == 0),
-                    mk(stage, nxt, end, p_end, w_q, w_n, data_q, sval),
-                )
-                .when(viable & fits, mk(stage, nxt, end, p_end, *keep))
-                .otherwise(st)  # park
-            )
-
-        return _ebml_let(parse, act)
-
-    zero = F.lit(0).cast("long")
-    init = F.struct(
-        F.lit(0).alias("stage"),
-        F.lit(1).cast("long").alias("q"),
-        total.alias("end"),
-        zero.alias("p_end"),
-        zero.alias("w_q"),
-        zero.alias("w_n"),
-        zero.alias("h_q"),
-        zero.alias("h_n"),
-    )
-    null_i = F.lit(None).cast("int")
-
-    def fin(st: F.Column) -> F.Column:
-        w_q, w_n = st.getField("w_q"), st.getField("w_n")
-        h_q, h_n = st.getField("h_q"), st.getField("h_n")
-
-        def dim(q_f: F.Column, n_f: F.Column) -> F.Column:
-            # range-gate before the int cast: a crafted 4-byte
-            # PixelWidth ≥ 2^31 must yield NULL, not an ANSI cast
-            # error ("never an error" is the contract)
-            v = _uint_at_dyn_sized(payload, q_f, n_f)
-            return (
-                F.when((q_f > 0) & (v <= F.lit(2147483647)), v.cast("int"))
-                .otherwise(null_i)
-            )
-
-        return F.struct(
-            dim(w_q, w_n).alias("width"), dim(h_q, h_n).alias("height")
-        )
-
-    nulls = F.struct(null_i.alias("width"), null_i.alias("height"))
-    return _ebml_gate(
-        payload,
-        F.aggregate(F.sequence(F.lit(1), F.lit(28)), init, step, fin),
-        nulls,
-    )
-
-
-def _ebml_doctype_walk(payload: F.Column, fin) -> F.Column:
-    """Shared DocType locator: the EBML header element is REQUIRED to be
-    the file's first element (the magic IS its ID), so its children
-    start right after the header's own size vint; walk them (single
-    stage, ≤ 12 steps) for DocType (0x4282) and hand (dt_q, dt_n) to
-    ``fin``. String sizes are bounded at 32 bytes — real doctypes are
-    'webm'/'matroska'."""
-    vlen5, sval5, unk5 = _ebml_size(payload, F.lit(5).cast("long"))
-    total = F.octet_length(payload).cast("long")
-    start = F.lit(5).cast("long") + vlen5
-    hend = F.least(F.lit(4).cast("long") + vlen5 + sval5, total)
-
-    # struct-per-action CASE with the parse let-binding (see the
-    # ebml_info step and _ebml_let notes)
-    def step(st: F.Column, _x: F.Column) -> F.Column:
-        q = st.getField("q")
-        end = st.getField("end")
-        dt_q = st.getField("dt_q")
-        dt_n = st.getField("dt_n")
-        idlen = _ebml_id_len(payload, q)
-        tag = F.hex(payload.substr(q, idlen))
-        szq = q + idlen
-        vlen, sval, unknown = _ebml_size(payload, szq)
-        data_q = szq + vlen
-        nxt = data_q + sval
-        viable = (dt_q == 0) & (q <= end) & (idlen <= 4) & (sval >= 0)
-        fits = ~unknown & (nxt - 1 <= end)
-        parse = F.struct(
-            tag.alias("tag"), sval.alias("sval"), data_q.alias("data_q"),
-            nxt.alias("nxt"), viable.alias("viable"), fits.alias("fits"),
-        )
-
-        def mk(q2, dt_q2, dt_n2) -> F.Column:
-            return F.struct(
-                q2.alias("q"), end.alias("end"),
-                dt_q2.alias("dt_q"), dt_n2.alias("dt_n"),
-            )
-
-        def act(p: F.Column) -> F.Column:
-            tag = p.getField("tag")
-            sval = p.getField("sval")
-            data_q = p.getField("data_q")
-            nxt = p.getField("nxt")
-            viable = p.getField("viable")
-            fits = p.getField("fits")
-            return (
-                F.when(
-                    viable & (tag == EBML_DOCTYPE_HEX) & fits
-                    & (sval >= 1) & (sval <= 32),
-                    mk(nxt, data_q, sval),
-                )
-                .when(viable & fits, mk(nxt, dt_q, dt_n))
-                .otherwise(st)  # park: found, malformed, or past extent
-            )
-
-        return _ebml_let(parse, act)
-
-    zero = F.lit(0).cast("long")
-    init = F.struct(
-        start.alias("q"), hend.alias("end"),
-        zero.alias("dt_q"), zero.alias("dt_n"),
-    )
-    return F.when(
-        unk5,  # unknown-size header: not parseable, dt_q stays 0 → NULL
-        fin(init),
-    ).otherwise(F.aggregate(F.sequence(F.lit(1), F.lit(12)), init, step, fin))
-
-
-def ebml_doctype(payload: F.Column | str) -> F.Column:
-    """The EBML header's DocType string ('webm' / 'matroska' / …), NULL
-    when absent or malformed. Pass a column NAME for the memoized
-    tree."""
-    if isinstance(payload, str):
-        return _memo_expr(
-            ("ebml_doctype", payload), lambda: ebml_doctype(F.col(payload))
-        )
-
-    def fin(st: F.Column) -> F.Column:
-        dt_q, dt_n = st.getField("dt_q"), st.getField("dt_n")
-        return F.when(
-            dt_q > 0, payload.substr(dt_q, dt_n).cast("string")
-        ).otherwise(F.lit(None).cast("string"))
-
-    return _ebml_gate(
-        payload,
-        _ebml_doctype_walk(payload, fin),
-        F.lit(None).cast("string"),
-    )
-
-
-def _ebml_mime(payload: F.Column) -> F.Column:
-    """Router leg: DocType → mime in ONE walk (sniff_mime can't stage a
-    column, and two ebml_doctype references would embed the walk twice —
-    HOFs are exempt from subexpression elimination, the r9 lesson).
-    Caller has already gated on the EBML magic."""
-
-    def fin(st: F.Column) -> F.Column:
-        dt_q, dt_n = st.getField("dt_q"), st.getField("dt_n")
-        dt = payload.substr(dt_q, dt_n).cast("string")
-        return F.when(
-            dt_q > 0,
-            F.when(dt == "webm", F.lit("video/webm"))
-            .when(dt == "matroska", F.lit("video/x-matroska"))
-            .otherwise(F.lit("application/octet-stream")),
-        ).otherwise(F.lit("application/octet-stream"))
-
-    return _ebml_doctype_walk(payload, fin)

@@ -1,31 +1,31 @@
 """Pure-Python synth + parse for the five media metadata queries
 (image_meta / audio_meta / video_meta / mime_sniff / media_catalog),
-executed via ``mapInArrow`` (r13 optimization round; guide §4).
+executed via ``mapInArrow`` — the package's only media-header
+implementation.
 
-WHY THIS EXISTS. The expression-tree versions of these queries in
-``binary.py`` / ``queries_ext.py`` are correct and stay the module of
-record for every OTHER consumer — but the five catalog queries pay their
-cost per QUERY BUILD, not per row: hundreds of py4j round-trips to
-assemble the 19-class synth ``when``-chain and the walk aggregates, then
-JVM analysis + codegen of the giant projection, measured at 1-4 s per
-query per bench rep against sub-second actual execution (guide §7.3's
-driver-side planning class; OPTIMIZATION_r13.md §media). A
-``mapInArrow`` pipeline has a constant, tiny plan — scan → MapInArrow —
-and does the same byte-level synth + parse work per row in the worker.
+A ``mapInArrow`` pipeline has a constant, tiny plan — scan → MapInArrow
+— and does the byte-level synth + parse work per row in the worker. It
+replaced expression-tree versions that paid hundreds of py4j round-trips
+and JVM analysis + codegen of a giant projection per query BUILD, and
+ran ~7× slower per row at 1M-4M docs (SCALE.md §media-throughput).
 
-HONESTY CONTRACT. The oracle specifies every output analytically, so a
-"port" that computed outputs from the doc_id formulas would delete the
-workload (synthesize + parse real bytes) these queries attest. This
-module therefore keeps both halves real:
+WHAT IS PINNED. The oracle specifies every output analytically, so a
+port that computed outputs from the doc_id formulas would delete the
+workload (synthesize + parse real bytes) these queries attest. Both
+halves stay real and both are pinned:
 
-* synths build the SAME payload bytes as the expression synths in
-  ``binary.py`` — byte-identical, pinned by
-  tests/test_pymedia_differential.py against the expression path;
-* parsers do real magic-gated header parsing (bounded walks, honest
-  NULLs) over those bytes — semantics mirrored from ``binary.py``
-  (jpeg SOF walk, TIFF IFD walk + one next-IFD hop, WebP chunk walk
-  with canvas fallback, HEIF box descent, MP3 ID3/Xing rules, Ogg tail
-  granule, MP4 moov-anchored mvhd, EBML vint walks with track pop-up).
+* synths build genuine container bytes; tests/fixtures/media_golden.json
+  pins every payload class and parity branch by md5
+  (tests/test_pymedia_differential.py);
+* parsers do real magic-gated header parsing — bounded walks, honest
+  NULLs, never an error (jpeg SOF walk, TIFF IFD walk + one next-IFD
+  hop, WebP chunk walk with canvas fallback, HEIF box descent, MP3
+  ID3/Xing rules, Ogg tail granule, MP4 moov-anchored mvhd, EBML vint
+  walks with track pop-up). The same fixture pins their fields, and the
+  independent pure-Python parsers in tests/test_multimodal_*.py and
+  tests/test_operators.py check them from the other side;
+* a header value its DDL column cannot hold parses as NULL
+  (``_ddl_fit``), so one hostile blob cannot fail a batch.
 
 The per-task boundary cost is bounded: only ``doc_id`` crosses into
 Python (8 bytes/row) and the output rows cross back — the payloads are
@@ -35,13 +35,14 @@ synthesized AND parsed inside the worker, so the heavy bytes never move
 
 from __future__ import annotations
 
+import functools
 import struct
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pyarrow as pa
 
 # ---------------------------------------------------------------------------
-# shared tables (mirrors of binary.py)
+# shared tables
 # ---------------------------------------------------------------------------
 
 MP3_SR_TABLE = {3: (44100, 48000, 32000), 2: (22050, 24000, 16000),
@@ -60,7 +61,7 @@ _le24 = lambda n: bytes((n & 255, (n >> 8) & 255, (n >> 16) & 255))  # noqa: E73
 
 def _rd_be(b: bytes, pos: int, n: int) -> int | None:
     """Big-endian uint at 0-based pos; None when the slice is short
-    (the expression path's empty-substr → NULL conv behavior)."""
+    (a truncated header field reads as NULL)."""
     if pos < 0 or pos + n > len(b):
         return None
     return int.from_bytes(b[pos:pos + n], "big")
@@ -72,8 +73,25 @@ def _rd_le(b: bytes, pos: int, n: int) -> int | None:
     return int.from_bytes(b[pos:pos + n], "little")
 
 
+def _ddl_fit(*bits: int) -> Callable:
+    """Parser decorator: each returned field whose DDL column cannot hold
+    it comes back None (``bits`` per field: 32 = int, 64 = bigint, 0 =
+    not an int). A 4-byte header field can carry 2^32 - 1; passed on,
+    that one blob would make ``pa.array(..., pa.int32())`` fail its
+    whole batch."""
+    def wrap(parse: Callable) -> Callable:
+        @functools.wraps(parse)
+        def fitted(b: bytes) -> tuple:
+            return tuple(
+                None if n and v is not None
+                and not -(1 << (n - 1)) <= v < 1 << (n - 1) else v
+                for v, n in zip(parse(b), bits))
+        return fitted
+    return wrap
+
+
 # ---------------------------------------------------------------------------
-# synths — byte-identical to binary.py (differential-pinned)
+# synths — genuine container bytes (golden-pinned)
 # ---------------------------------------------------------------------------
 
 
@@ -278,7 +296,7 @@ def synth_mkv(doctype: str, tscale: int, duration_units: int, w: int, h: int,
 
 
 # ---------------------------------------------------------------------------
-# per-query payload cycles (mirrors of the query-module synth expressions)
+# per-query payload cycles (the oracle SQL replays these formulas)
 # ---------------------------------------------------------------------------
 
 
@@ -459,8 +477,8 @@ def media_payload(d: int) -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# parsers — real magic-gated header parsing, semantics mirrored from
-# binary.py (bounded walks, honest NULLs, never an error)
+# parsers — real magic-gated header parsing (bounded walks, honest
+# NULLs, never an error)
 # ---------------------------------------------------------------------------
 
 _PNG = b"\x89PNG\r\n\x1a\n"
@@ -517,7 +535,7 @@ def _ebml_size(b: bytes, q: int) -> tuple[int, int, bool]:
     return 1, -1, False
 
 
-def _ebml_doctype(b: bytes) -> str | None:
+def ebml_doctype(b: bytes) -> str | None:
     """DocType string from the EBML header element's children (bounded)."""
     if b[:4] != bytes.fromhex("1A45DFA3"):
         return None
@@ -547,7 +565,8 @@ def _ebml_doctype(b: bytes) -> str | None:
     return None
 
 
-def _ebml_info(b: bytes) -> tuple[int | None, int | None]:
+@_ddl_fit(64, 64)
+def ebml_info(b: bytes) -> tuple[int | None, int | None]:
     """(timescale_ns, duration_ms) via the bounded Segment→Info walk —
     the ebml_info semantics: TimestampScale uint 1-8 bytes; Duration a
     4/8-byte FLOAT whose integer floor is taken; the spec default
@@ -629,7 +648,8 @@ def _ieee_floor_units(bits: int, n: int) -> int | None:
     return full << shift if shift >= 0 else full >> (-shift)
 
 
-def _ebml_video_dims(b: bytes) -> tuple[int | None, int | None]:
+@_ddl_fit(32, 32)
+def ebml_video_dims(b: bytes) -> tuple[int | None, int | None]:
     """(PixelWidth, PixelHeight) via Segment→Tracks→TrackEntry→Video,
     with the pop-up past non-video TrackEntries (ebml_video_dims)."""
     if b[:4] != bytes.fromhex("1A45DFA3"):
@@ -721,7 +741,7 @@ def sniff_mime(b: bytes) -> str:
             return "audio/mp4"
         return "video/mp4"
     if b[:4] == bytes.fromhex("1A45DFA3"):
-        dt = _ebml_doctype(b)
+        dt = ebml_doctype(b)
         if dt == "webm":
             return "video/webm"
         if dt == "matroska":
@@ -863,6 +883,7 @@ def _ispe_dims(b: bytes) -> tuple[int | None, int | None]:
     return _rd_be(b, pos + 4, 4), _rd_be(b, pos + 8, 4)
 
 
+@_ddl_fit(0, 32, 32)
 def parse_image_meta(b: bytes) -> tuple[str, int | None, int | None]:
     if b[:8] == _PNG:
         return "image/png", _rd_be(b, 16, 4), _rd_be(b, 20, 4)
@@ -895,6 +916,7 @@ def parse_image_meta(b: bytes) -> tuple[str, int | None, int | None]:
     return "application/octet-stream", None, None
 
 
+@_ddl_fit(0, 32, 32, 32, 64, 32)
 def parse_audio_meta(b: bytes) -> tuple:
     """(mime, channels, sample_rate_hz, bits_per_sample, duration_ms,
     bitrate_kbps) — audio_meta semantics."""
@@ -979,6 +1001,7 @@ def parse_audio_meta(b: bytes) -> tuple:
     return "application/octet-stream", None, None, None, None, None
 
 
+@_ddl_fit(0, 0, 64, 64, 32)
 def parse_video_mp4(b: bytes) -> tuple:
     """(mime, brand, timescale, duration_ms, n_tracks) — video_meta's
     moov-anchored mvhd semantics."""
@@ -1103,12 +1126,12 @@ def video_meta_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]
         for d in ids:
             p = video_payload(d)
             if p[:4] == ebml_sig:
-                dt = _ebml_doctype(p)
+                dt = ebml_doctype(p)
                 mime = ("video/webm" if dt == "webm"
                         else "video/x-matroska" if dt == "matroska"
                         else "application/octet-stream")
-                ts, dur = _ebml_info(p)
-                w, h = _ebml_video_dims(p)
+                ts, dur = ebml_info(p)
+                w, h = ebml_video_dims(p)
                 row = (len(p), mime, dt, ts, dur, None, w, h)
             else:
                 mime, brand, ts, dur, nt = parse_video_mp4(p)
@@ -1158,8 +1181,8 @@ def media_catalog_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBat
             if mime in _IMG_PARSEABLE:
                 _m, w, h = parse_image_meta(p)
             elif mime in ("video/webm", "video/x-matroska"):
-                w, h = _ebml_video_dims(p)
-                _ts, dur = _ebml_info(p)
+                w, h = ebml_video_dims(p)
+                _ts, dur = ebml_info(p)
             if mime in _AUD_PARSEABLE:
                 _m, _ch, sr, _bits, dur, _kbps = parse_audio_meta(p)
             if mime == "video/mp4":

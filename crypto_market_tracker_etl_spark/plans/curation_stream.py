@@ -14,12 +14,14 @@ Structured Streaming source):
    batch's raw/quality counts collected in ONE aggregation over the
    persisted stats projection (the batch lineage executes once for the
    counts, once for each store write — not once per counter);
-2. within-batch exact dedup via the SAME ``exact_dedup`` operator the
-   batch funnel uses, then an APPEND of the gated batch to the corpus
-   store — cross-batch exact dedup is resolved merge-on-read (min doc_id
-   per stored fingerprint at ``clean()`` time), which is what makes the
-   stream arrival-order-proof: a later batch can deliver a lower-id copy
-   and still win, exactly as the batch funnel would have chosen it;
+2. an APPEND of every gated row to the corpus store, exact copies
+   included — exact dedup is resolved merge-on-read (min doc_id per
+   stored fingerprint at ``clean()`` time), within and across batches
+   alike, which is what makes the stream arrival-order-proof (a later
+   batch can deliver a lower-id copy and still win, exactly as the
+   batch funnel would have chosen it) and delete-proof (erasing a doc
+   promotes its copy from the same batch, as the batch funnel over the
+   remaining docs would);
 3. incremental MinHash signing + banded pair search against the
    accumulated index (operators/incremental_dedup.py — the union of
    per-batch pair outputs equals the from-scratch candidate set), pairs
@@ -63,7 +65,7 @@ from pyspark.sql import functions as F
 
 from ..functions.textstats import lang_id, n_tokens, normalize_ws, quality_score
 from ..operators.cache import cache_scope, materialize
-from ..operators.dedup import exact_dedup, ngram_jaccard, word_shingles
+from ..operators.dedup import ngram_jaccard, word_shingles
 from ..operators.incremental_dedup import MinHashSignatureStore
 from ..operators.latest import latest_per_key
 
@@ -454,18 +456,11 @@ class CurationStream:
                 ).alias("quality"),
             ).collect()[0]
             n_raw, n_gated = int(counts["raw"]), int(counts["quality"] or 0)
-            gated = stats.filter(F.col("quality") >= F.lit(self.quality_min))
-            # within-batch exact dedup — the batch funnel's own operator;
-            # cross-batch resolution is merge-on-read at clean() time.
-            # Held for this batch: the kept rows feed the corpus append,
-            # the visual hash write, and the signature upsert — without
-            # the cache each consumer re-runs the exact-dedup shuffle
-            # (measured in OPTIMIZATION_r12.md).
-            batch_kept = hold(
-                gated.join(
-                    exact_dedup(gated).select("doc_id"), "doc_id", "left_semi"
-                )
-            )
+            # every gated row is stored, exact copies included: clean()'s
+            # merge-on-read keeps the min doc_id per content_fp across
+            # ALL batches, so a copy delivered in the same batch as its
+            # original is still there when delete_docs erases the original
+            batch_kept = stats.filter(F.col("quality") >= F.lit(self.quality_min))
             # bkey rides every corpus row: merge-on-read picks the LATEST
             # delivery of a doc (matching the signature store's
             # latest-per-key), not an arbitrary one — without it a

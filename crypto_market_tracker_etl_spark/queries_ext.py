@@ -2528,7 +2528,7 @@ def _sql_bpe_bytes_8k() -> str:
     whose build (merges-file load + 512 chunked CTEs) costs ~0.3 s —
     registry SQL entries may be zero-arg callables, resolved by
     ``oracle_sql()``, so only processes that actually ask for oracles
-    pay it (the _image_payload_expr import-cost rationale)."""
+    pay it."""
     return _sql_bpe_bytes("bytes_8192", merges_per_cte=16, salt=True)
 
 
@@ -3915,97 +3915,12 @@ FROM s
 """
 
 
-@lru_cache(maxsize=1)
-def _image_payload_expr() -> F.Column:
-    """The 10-format synthesized image payload over F.col('doc_id') —
-    built once per process (the whole when-chain of header synths is
-    ~0.5 s of py4j construction; unresolved trees are immutable and
-    session-independent, the binary.py::_memo_expr rationale).
-
-    r10 classes 8/9: a multi-IFD TIFF (dims in IFD1 behind a
-    metadata-only IFD0; alternating byte order by doc) and an extended
-    WebP whose VP8L bitstream sits behind the VP8X chunk list with a
-    DISAGREEING canvas (w+1, h+1) — the parse must return the
-    bitstream dims.
-
-    r10 classes 10/11: BMP in BOTH real DIB layouts — INFO (signed
-    LE32 dims; every other doc of the class is TOP-DOWN, i.e. a
-    negative stored height the parse must report as |height| — the
-    parity rides d//14, not d, which is constant within a mod-14
-    class) and the legacy CORE (unsigned LE16 at different offsets).
-
-    r10 classes 12/13: the HEIF family — genuine BMFF prefixes with a
-    real meta → hdlr(pict) → iprp → ipco → ispe nesting, HEIC and AVIF
-    major brands, dims in the ispe box. r11: every other doc of each
-    class carries the DECOY variant — a fake byte-aligned 'ispe' with
-    wrong dims planted in the hdlr name field — which the bounded box
-    DESCENT must hop over (the r10 anchored scan would read it)."""
-    from .multimodal.binary import (
-        synth_bmp,
-        synth_gif,
-        synth_heic,
-        synth_jpeg,
-        synth_png,
-        synth_tiff,
-        synth_webp_vp8,
-        synth_webp_vp8l,
-        synth_webp_vp8x,
-        synth_webp_vp8x_wrapped,
-    )
-
-    d = F.col("doc_id")
-    m = d % 14
-    w = (F.lit(100) + d % 800).cast("int")
-    h = (F.lit(100) + (d * 7) % 800).cast("int")
-    return (
-        F.when(m == 0, synth_png(w, h))
-        .when(m == 1, synth_gif(w, h))
-        .when(m == 2, synth_jpeg(w, h))
-        .when(m == 3, synth_webp_vp8(w, h))
-        .when(m == 4, synth_webp_vp8l(w, h))
-        .when(m == 5, synth_webp_vp8x(w, h))
-        .when(m == 6, synth_tiff(w, h, little_endian=True))
-        .when(m == 7, synth_tiff(w, h, little_endian=False))
-        .when(
-            m == 8,
-            synth_tiff(
-                w, h,
-                little_endian=True,
-                dims_in_ifd1=True,
-            ),
-        )
-        .when(m == 9, synth_webp_vp8x_wrapped(w + 1, h + 1, w, h))
-        .when(m == 10, synth_bmp(w, h, top_down=(F.floor(d / 14) % 2 == 1)))
-        .when(m == 11, synth_bmp(w, h, core=True))
-        # r11: every other HEIC/AVIF doc carries the DECOY — a fake
-        # byte-aligned 'ispe' pattern with wrong dims inside the hdlr
-        # name, between the meta header and the real property chain.
-        # The box descent must report the REAL dims on both variants;
-        # the r10 anchored scan would read the fakes (parity rides
-        # d//14: constant within a mod-14 class, varies across docs).
-        .when(
-            m == 12,
-            F.when(
-                F.floor(d / 14) % 2 == 1,
-                synth_heic(F.lit("heic"), w, h, decoy=True),
-            ).otherwise(synth_heic(F.lit("heic"), w, h)),
-        )
-        .otherwise(
-            F.when(
-                F.floor(d / 14) % 2 == 1,
-                synth_heic(F.lit("avif"), w, h, decoy=True),
-            ).otherwise(synth_heic(F.lit("avif"), w, h))
-        )
-    )
-
-
 def q_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image-format metadata extraction WITHOUT a codec: real PNG/GIF/JPEG
     header parsing (magic-byte dispatch, big-endian PNG dims,
     little-endian GIF dims, and a bounded marker-segment walk to the
-    JPEG SOF frame header — multimodal/binary.py::jpeg_sof_state) as
-    pure JVM expressions — the metadata-backfill slice of image decode
-    that needs no Python and no image library. JPEG matters: it is the
+    JPEG SOF frame header) — the metadata-backfill slice of image
+    decode that needs no image library. JPEG matters: it is the
     majority image format of a real crawl, and until r8 this emitted
     NULL dims for it (r7 verdict #5).
 
@@ -4030,21 +3945,17 @@ def q_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     the decoy-'ispe'-in-hdlr adversary the descent must hop over); the
     oracle knows the synthesis formula and checks the parse
     analytically — a differential test of the parser itself.
-    Independent pure-Python parsers validate synth_jpeg, all the
-    synth_webp variants, synth_tiff in both layouts, synth_bmp in both
-    DIB layouts, and synth_heic's box nesting in tests (the synth_mp4
-    pattern).
+    Independent pure-Python parsers in tests validate the JPEG, WebP,
+    TIFF, BMP and HEIF payloads (the MP4 box-walker pattern).
 
-    r13 (optimization round; guide §4): the synth+parse pipeline runs
-    as ONE mapInArrow stage (multimodal/pymedia.py) — the same payload
-    bytes synthesized and the same bounded walks parsed in the worker,
-    byte/row-identical to the expression path kept in
-    multimodal/binary.py (differential-pinned in
-    tests/test_pymedia_differential.py). The expression form paid
-    1-4 s per QUERY BUILD in py4j tree assembly + JVM analysis +
-    codegen of the giant projection (guide §7.3's driver-side planning
-    class) against sub-second execution; the Arrow plan is constant
-    size. Only doc_id crosses the Python boundary inward (§4.1)."""
+    Synth and parse run as ONE mapInArrow stage in multimodal/pymedia.py,
+    the only media implementation: only doc_id crosses the Python
+    boundary inward (§4.1) and the plan is constant size. Payload bytes
+    and parsed fields are pinned by tests/fixtures/media_golden.json
+    (tests/test_pymedia_differential.py). The expression-tree form it
+    replaced paid 1-4 s per query build in py4j tree assembly, analysis
+    and codegen, and ran ~7× slower per row at 1M-4M docs (SCALE.md
+    §media-throughput)."""
     from .multimodal import pymedia
 
     docs = _documents(spark, sf_dir)
@@ -4078,110 +3989,19 @@ FROM documents
 """
 
 
-@lru_cache(maxsize=1)
-def _audio_payload_expr() -> F.Column:
-    """The 9-class synthesized audio payload over F.col('doc_id') —
-    built once per process (the _image_payload_expr rationale).
-
-    Per-format parameters derive from k = doc_id // 9, NOT from doc_id
-    itself: the format selector is doc_id % 9, so any doc_id-modulus
-    parameter would be CONSTANT (or near-constant) within a format
-    class — which would silently kill the adversarial cases the formats
-    exist to exercise (the FLAC 36-bit boundary crossing, the
-    off-diagonal MP3 version×index table cells, stereo/16-bit FLAC).
-    k walks every residue inside every class (review r9).
-
-    r10 classes 6/7: a CBR MP3 with a real audio body (duration from
-    byte length × bitrate) and a Xing/Info-tagged MP3 (duration from
-    the exact frame count). r10 class 8: Ogg Vorbis — the id-header
-    fields behind the one-hop page-segment offset, with a per-doc
-    declared nominal bitrate."""
-    from .multimodal.binary import (
-        synth_flac,
-        synth_mp3,
-        synth_ogg,
-        synth_ogg_full,
-        synth_png,
-        synth_wav,
-    )
-
-    d = F.col("doc_id")
-    m = d % 9
-    k = F.floor(d / 9)
-    sr = F.element_at(
-        F.array(F.lit(8000), F.lit(16000), F.lit(22050), F.lit(44100)),
-        (k % 4 + 1).cast("int"),
-    )
-    ch = (k % 2 + 1).cast("int")
-    bits = F.when(k % 3 == 0, F.lit(16)).otherwise(F.lit(8))
-    frames = (F.lit(1000) + (d * 37) % 44100).cast("long")
-    # FLAC total samples: every other FLAC doc crosses the 32-bit
-    # boundary so the 36-bit split (high nibble + low u32) is exercised
-    ts36 = frames + (k % 2) * F.lit(2**33)
-    vbits = (
-        F.when(k % 3 == 0, F.lit(3)).when(k % 3 == 1, F.lit(2)).otherwise(F.lit(0))
-    )
-    # (k*7)%3 would collapse to k%3 (7 ≡ 1 mod 3) and pin the table to
-    # its diagonal; k//3 walks all 9 version×index cells over k mod 9
-    sr_idx = F.floor(k / 3) % 3
-    mono = k % 2 == 0
-    return (
-        F.when(m == 2, synth_flac(sr, ch, bits, ts36))
-        .when(m == 3, synth_mp3(vbits, sr_idx, mono))
-        .when(m == 4, synth_mp3(vbits, sr_idx, mono, id3_pad=100 + d % 300))
-        .when(m == 5, synth_png(F.lit(320).cast("int"), F.lit(240).cast("int")))
-        .when(
-            m == 6,
-            synth_mp3(
-                vbits, sr_idx, mono, n_frames=(F.lit(20) + (d * 13) % 80)
-            ),
-        )
-        .when(
-            m == 7,
-            synth_mp3(
-                vbits, sr_idx, mono,
-                xing_frames=(F.lit(500) + (d * 31) % 2000),
-                # even k → Xing (VBR: bitrate honestly NULL), odd k →
-                # LAME "Info" (CBR convention: header bitrate stands)
-                vbr_sig=F.when(k % 2 == 0, F.lit("58696E67")).otherwise(
-                    F.lit("496E666F")
-                ),
-            ),
-        )
-        .when(
-            m == 8,
-            # r11: even k → the header-only slice (duration honestly
-            # NULL), odd k → a full tiny file whose EOS page carries the
-            # granule the tail locate reads — both honesty branches of
-            # the Ogg duration contract attested in one plan
-            F.when(
-                k % 2 == 0,
-                synth_ogg(sr, ch, (F.lit(64) + (k * 7) % 256).cast("int")),
-            ).otherwise(
-                synth_ogg_full(
-                    sr,
-                    ch,
-                    (F.lit(64) + (k * 7) % 256).cast("int"),
-                    (sr * (F.lit(5) + k % 20) + d % 1000).cast("long"),
-                )
-            ),
-        )
-        .otherwise(synth_wav(sr, ch, bits, frames))
-    )
-
-
 def q_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[multimodal] Audio-format metadata WITHOUT a codec: WAV RIFF
     header, FLAC bit-packed STREAMINFO, and MP3 frame-header-behind-
-    ID3v2 parsing (channels, sample rate, bit depth, duration) as pure
-    JVM expressions — the audio twin of image_meta, covering the
+    ID3v2 parsing (channels, sample rate, bit depth, duration) — the
+    audio twin of image_meta, covering the
     metadata backfill every audio pipeline runs before any sample is
     decoded; with FLAC and MP3 (r9) and Ogg Vorbis (r10) the four
     formats cover the bulk of crawl audio.
 
     Payloads cycle by doc_id % 9 with per-format parameters derived
-    from doc_id // 9 (decorrelated from the class selector — see
-    _audio_payload_expr): 0/1 → genuine 44-byte WAV headers (the stdlib
+    from k = doc_id // 9, decorrelated from the class selector so that
+    k walks every residue inside every class (pymedia.audio_payload):
+    0/1 → genuine 44-byte WAV headers (the stdlib
     ``wave`` module opens them — tests/test_multimodal_audio.py);
     2 → FLAC, every other FLAC doc's total-sample count crossing the
     32-bit boundary so the 36-bit field split is exercised, both
@@ -4211,9 +4031,8 @@ def q_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame-size arithmetic — and checks the parse analytically. Integer
     arithmetic only.
 
-    r13 (optimization round; guide §4): synth+parse as ONE mapInArrow
-    stage (multimodal/pymedia.py), byte/row-identical to the expression
-    path kept in multimodal/binary.py — see q_image_meta."""
+    Synth and parse run as ONE mapInArrow stage in multimodal/pymedia.py
+    — see q_image_meta."""
     from .multimodal import pymedia
 
     docs = _documents(spark, sf_dir)
@@ -4300,11 +4119,11 @@ FROM r
 # Image near-dup via average hash (r11): the visual-modality member of
 # the dedup ladder (exact md5 → MinHash/SimHash text → embedding cosine
 # → NOW pixel-space perceptual hash). The decode step is the honest
-# codec boundary (multimodal/binary.py:65 — no image libraries in this
-# container), so the "decoded" 8×8 grayscale tile is a DETERMINISTIC
-# FAKE derived from doc_id — the Spark-side plumbing (binary payload,
-# byte extraction, hash arithmetic, banded pairing) is real and
-# oracle-replayed end to end.
+# codec boundary (multimodal/binary.py::real_decoder — no image
+# libraries in this container), so the "decoded" 8×8 grayscale tile is
+# a DETERMINISTIC FAKE derived from doc_id — the Spark-side plumbing
+# (binary payload, byte extraction, hash arithmetic, banded pairing) is
+# real and oracle-replayed end to end.
 
 AHASH_MAX_BUCKET = 64  # deterministic hot-bucket cap (replayed by SQL)
 AHASH_HAM_MAX = 8  # verify threshold (64-bit hash; twins flip ≤3 bits)
@@ -4965,10 +4784,8 @@ def q_mime_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
     fields rejected). The oracle knows the cycle and checks the routing
     analytically.
 
-    r13 (optimization round; guide §4): synth+route as ONE mapInArrow
-    stage (multimodal/pymedia.py), byte/row-identical to the expression
-    path kept in multimodal/binary.py — see q_image_meta. The payload
-    cycle lives in pymedia.mime_payload."""
+    Synth and route run as ONE mapInArrow stage in multimodal/pymedia.py
+    (payload cycle: pymedia.mime_payload) — see q_image_meta."""
     from .multimodal import pymedia
 
     docs = _documents(spark, sf_dir)
@@ -5003,7 +4820,7 @@ FROM documents
 def q_video_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[multimodal] Video-container metadata WITHOUT a codec: ISO-BMFF/MP4
     box parsing (ftyp major brand, mvhd timescale / duration / track
-    count) as pure JVM expressions — completes the image/audio/video
+    count) — completes the image/audio/video
     metadata triad, covering the container-inspection backfill every
     video pipeline runs before any frame is decoded.
 
@@ -5016,13 +4833,13 @@ def q_video_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     148-byte file — with every other v1 doc's duration crossing 2^32
     (the FLAC 36-bit pattern), closing what was previously an honest
     NULL. Unlike the fixed-layout
-    WAV parser, mvhd is LOCATED AT RUNTIME (byte-aligned instr scan), so
+    WAV parser, mvhd is LOCATED AT RUNTIME (moov-anchored scan), so
     the box walk itself is exercised, not a fixed offset table.
 
     r12 (the judge's MKV/WebM directive): every fifth non-WAV doc is an
     EBML container — webm video-only on even ids, MATROSKA WITH AN
     AUDIO-FIRST TrackEntry on odd (the pop-up adversary for the dims
-    walk) — parsed by the bounded element walks in multimodal/binary.py
+    walk) — parsed by the bounded element walks in multimodal/pymedia.py
     (ebml_info / ebml_video_dims / ebml_doctype; independent pure-Python
     walker in tests/test_multimodal_ebml.py). Duration is the spec's
     FLOAT element (8-byte double, decoded integer-exactly from the bit
@@ -5037,11 +4854,8 @@ def q_video_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     (duration_ms = floor(duration·1000/timescale)); bit-identical in any
     engine.
 
-    r13 (optimization round; guide §4): synth+parse as ONE mapInArrow
-    stage (multimodal/pymedia.py), byte/row-identical to the expression
-    path kept in multimodal/binary.py — see q_image_meta. The payload
-    cycle lives in pymedia.video_payload; the EBML walks and the
-    moov-anchored mvhd locate are ported 1:1 (pop-up included)."""
+    Synth and parse run as ONE mapInArrow stage in multimodal/pymedia.py
+    (payload cycle: pymedia.video_payload) — see q_image_meta."""
     from .multimodal import pymedia
 
     docs = _documents(spark, sf_dir)
@@ -5099,114 +4913,6 @@ FROM p
 """
 
 
-@lru_cache(maxsize=1)
-def _media_payload_expr() -> F.Column:
-    """The 19-format synthesized media payload over F.col('doc_id') —
-    built once per process (the _image_payload_expr rationale). r10
-    classes 12/13/14: the multi-IFD TIFF, the VP8X-wrapped VP8L (canvas
-    disagreeing), and a CBR MP3 with a real audio body (non-NULL
-    duration through the catalog's unified schema); r10 classes 15/16:
-    BMP (INFO layout) and Ogg Vorbis (sample rate through the unified
-    schema, duration honestly NULL — it lives in the last page); r10
-    class 17: HEIC — a genuine BMFF still image whose dims come from
-    the ispe box, proving the catalog routes BMFF by BRAND (image, not
-    the video default) and parses what it routed; r12 class 18: EBML —
-    webm video-only / matroska audio-first alternating per cycle, dims
-    and the float-element duration through the unified schema (the
-    DocType-routed mime, the bounded element walks)."""
-    from .multimodal.binary import (
-        synth_bmp,
-        synth_flac,
-        synth_gif,
-        synth_heic,
-        synth_jpeg,
-        synth_mkv,
-        synth_mp3,
-        synth_mp4,
-        synth_png,
-        synth_tiff,
-        synth_ogg,
-        synth_ogg_full,
-        synth_wav,
-        synth_webp_vp8,
-        synth_webp_vp8x_wrapped,
-    )
-
-    d = F.col("doc_id")
-    m = d % 19
-    w = (F.lit(100) + d % 800).cast("int")
-    h = (F.lit(100) + (d * 7) % 800).cast("int")
-    frames = (F.lit(16000) + (d * 11) % 8000).cast("long")
-    dur = (F.lit(1000) + d % 60000).cast("int")
-    tracks = (d % 2 + 1).cast("int")
-    return (
-        F.when(m == 0, synth_png(w, h))
-        .when(m == 1, synth_gif(w, h))
-        .when(m == 2, synth_wav(F.lit(16000), F.lit(1).cast("int"), F.lit(16), frames))
-        .when(m == 3, synth_mp4(F.lit("isom"), F.lit(1000), dur, tracks))
-        .when(m == 4, synth_jpeg(w, h))
-        .when(m == 5, F.unhex(F.lit("255044462D312E34")))  # "%PDF-1.4"
-        .when(m == 6, F.unhex(F.lit("504B03041400")))  # ZIP local header
-        .when(m == 7, F.unhex(F.lit("1F8B08000000")))  # gzip deflate
-        .when(m == 8, synth_webp_vp8(w, h))
-        .when(m == 9, synth_tiff(w, h, little_endian=True))
-        .when(
-            m == 10,
-            synth_flac(F.lit(22050), F.lit(2).cast("int"), F.lit(16), frames),
-        )
-        .when(
-            m == 11,  # ID3v2-tagged MPEG1 Layer-III, stereo (bodiless)
-            synth_mp3(
-                F.lit(3), F.lit(0), F.lit(False), id3_pad=(100 + d % 300)
-            ),
-        )
-        .when(m == 12, synth_tiff(w, h, little_endian=False, dims_in_ifd1=True))
-        .when(m == 13, synth_webp_vp8x_wrapped(w + 1, h + 1, w, h))
-        .when(
-            m == 14,  # CBR MPEG1 Layer-III body, 44100 stereo, 128 kbps
-            synth_mp3(
-                F.lit(3), F.lit(0), F.lit(False),
-                n_frames=(F.lit(20) + (d * 13) % 80),
-            ),
-        )
-        .when(m == 15, synth_bmp(w, h))
-        .when(
-            m == 16,  # Ogg Vorbis, varying nominal rate — r11: every
-            # other doc of the class is a FULL file whose EOS granule
-            # carries duration through the unified schema; the even-k
-            # half keeps the header-only honest NULL in the same plan
-            F.when(
-                F.floor(d / 19) % 2 == 0,
-                synth_ogg(
-                    F.lit(48000).cast("int"),
-                    F.lit(2).cast("int"),
-                    (F.lit(64) + (d * 7) % 256).cast("int"),
-                ),
-            ).otherwise(
-                synth_ogg_full(
-                    F.lit(48000).cast("int"),
-                    F.lit(2).cast("int"),
-                    (F.lit(64) + (d * 7) % 256).cast("int"),
-                    (F.lit(48000) * (F.lit(2) + F.floor(d / 19) % 15)
-                     + d % 997).cast("long"),
-                )
-            ),
-        )
-        .when(m == 17, synth_heic(F.lit("heic"), w, h))
-        .otherwise(  # m == 18: EBML (r12) — doctype/track-layout alternate
-            F.when(
-                F.floor(d / 19) % 2 == 0,
-                synth_mkv("webm", F.lit(1000000), dur.cast("long"), w, h),
-            ).otherwise(
-                synth_mkv(
-                    "matroska", F.lit(1000000), dur.cast("long"), w, h,
-                    audio_first=True,
-                )
-            )
-        )
-    )
-
-
 def q_media_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[multimodal] The ingestion CATALOG — the binary-side composition
     twin of [curation_pipeline]: route every blob by magic bytes
@@ -5234,14 +4940,12 @@ def q_media_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     knows the synthesis formulas and checks routing + parsing
     analytically.
 
-    r13 (optimization round; guide §4): the whole router+parsers
-    pipeline runs as ONE mapInArrow stage (multimodal/pymedia.py),
-    byte/row-identical to the expression path kept in
-    multimodal/binary.py — see q_image_meta. This was the heaviest
-    non-composite headline query almost entirely through per-BUILD
-    planning/codegen of the fused 19-class projection (and its
-    serialized-task-binary bulk — the r12 1 GB-driver OOM class); the
-    Arrow plan is constant-size."""
+    Router and parsers run as ONE mapInArrow stage in
+    multimodal/pymedia.py — see q_image_meta. The expression-tree form
+    it replaced was the heaviest non-composite headline query, almost
+    entirely through per-build planning and codegen of the fused
+    19-class projection (and a serialized task binary big enough to OOM
+    a 1 GB driver); the Arrow plan is constant-size."""
     from .multimodal import pymedia
 
     docs = _documents(spark, sf_dir)

@@ -35,7 +35,7 @@ from crypto_market_tracker_etl_spark.session import get_session
 SIZES = [int(s) for s in os.environ.get("SCALE_SIZES", "1000000,10000000,50000000").split(",")]
 
 
-def synth_events(spark, n: int, users: int):
+def gen_events(spark, n: int, users: int):
     """Deterministic synthetic stream: n events over `users` keys, ~1 event
     per key per 30 minutes of event time."""
     return (
@@ -59,7 +59,7 @@ def force(df) -> float:
     return time.perf_counter() - t0
 
 
-def synth_docs(spark, n: int):
+def gen_docs(spark, n: int):
     """Mostly-unique docs with planted near-dup structure: consecutive id
     pairs share 28 of 30 words (the SCALE.md banding experiment)."""
     return spark.range(n).select(
@@ -100,7 +100,7 @@ def probe_simhash_pairs(spark) -> None:
         )
 
     for n in (20_000, 50_000, 100_000):
-        docs = synth_docs(spark, n).persist()
+        docs = gen_docs(spark, n).persist()
         docs.count()
         hashed = simhash(docs, bits=32).persist()
         hashed.count()
@@ -115,7 +115,7 @@ def probe_simhash_pairs(spark) -> None:
         hashed.unpersist()
 
 
-def synth_long_docs(spark, n: int, words: int = 200):
+def gen_long_docs(spark, n: int, words: int = 200):
     """Docs long enough to chunk (~200 words)."""
     return spark.range(n).select(
         F.col("id").alias("doc_id"),
@@ -129,7 +129,7 @@ def synth_long_docs(spark, n: int, words: int = 200):
     ).repartition(32)
 
 
-def synth_vectors(spark, n: int, dim: int = 64):
+def gen_vectors(spark, n: int, dim: int = 64):
     """Deterministic pseudo-random embeddings in [-1, 1]^dim."""
     return spark.range(n).select(
         F.col("id").alias("vec_id"),
@@ -153,13 +153,13 @@ def probe_ext_ops(spark) -> None:
     )
 
     for n in (1_000_000, 5_000_000):
-        docs = synth_long_docs(spark, n).persist()
+        docs = gen_long_docs(spark, n).persist()
         docs.count()
         t = force(chunk_documents(docs, 64, 16))
         print(f"chunk n={n}: {t:.1f}s ({n / t / 1e6:.2f}M docs/s)", flush=True)
         docs.unpersist()
     for n in (1_000_000, 5_000_000):
-        vecs = synth_vectors(spark, n).persist()
+        vecs = gen_vectors(spark, n).persist()
         vecs.count()
         cents = seed_centroids(vecs, 8)
         t = force(ivf_index(vecs, cents))
@@ -169,19 +169,14 @@ def probe_ext_ops(spark) -> None:
 
 def probe_session2_ops(spark) -> None:
     """Session-2 additions at generated scale: the EWMA fold (array
-    build + fold per key), bitmap-distinct vs plain count(distinct), and
-    image-header parsing throughput. Prints; numbers are hand-recorded
-    into SCALE.md's analysis."""
-    from crypto_market_tracker_etl_spark.multimodal.binary import (
-        image_meta,
-        synth_gif,
-        synth_png,
-    )
+    build + fold per key) and bitmap-distinct vs plain count(distinct).
+    Prints; numbers are hand-recorded into SCALE.md's analysis. Media
+    throughput is ``probe_media``."""
     from crypto_market_tracker_etl_spark.operators.change import ewma_last
 
     for n in (1_000_000, 10_000_000, 50_000_000):
         users = max(1000, n // 1000)
-        ev = synth_events(spark, n, users).persist()
+        ev = gen_events(spark, n, users).persist()
         ev.count()
         t = force(ewma_last(ev, ["user_id"], ["ts", "event_id"], "value"))
         print(f"ewma n={n} keys={users}: {t:.1f}s ({n/t/1e6:.1f}M rows/s)",
@@ -199,20 +194,42 @@ def probe_session2_ops(spark) -> None:
         print(f"distinct n={n}: bitmap={tb:.1f}s countDistinct={tc:.1f}s",
               flush=True)
         ev.unpersist()
-    for n in (1_000_000, 10_000_000):
-        w = (F.pmod(F.xxhash64("id"), F.lit(4000)) + 1).cast("int")
-        h = (F.pmod(F.xxhash64("id", F.lit(1)), F.lit(4000)) + 1).cast("int")
-        payloads = spark.range(n).select(
-            "id",
-            F.when(F.col("id") % 2 == 0, synth_png(w, h))
-            .otherwise(synth_gif(w, h))
-            .alias("payload"),
-        ).repartition(32).persist()
-        payloads.count()
-        t = force(payloads.select("id", image_meta(F.col("payload")).alias("m")))
-        print(f"image_meta n={n}: {t:.1f}s ({n/t/1e6:.1f}M payloads/s)",
-              flush=True)
-        payloads.unpersist()
+
+
+MEDIA_QUERIES = ("image_meta", "audio_meta", "video_meta", "mime_sniff",
+                 "media_catalog")
+
+
+def probe_media(spark) -> None:
+    """The five registered media queries (multimodal/pymedia.py) at 200k,
+    1M and 4M docs: each size writes a doc_id-only documents table and
+    runs the registered builders over it, so the timed plan is the
+    query's own (scan → repartition → mapInArrow). One warm-up pass per
+    query on a 1000-doc table, then two reps each, wall seconds to a
+    noop sink. Run: ``SCALE_MEDIA=1 python scale_probe.py``; numbers
+    recorded in SCALE.md §media-throughput."""
+    import tempfile
+
+    from crypto_market_tracker_etl_spark.queries import queries
+
+    reg = queries()
+    with tempfile.TemporaryDirectory() as root:
+        dirs = {}
+        for n in (1_000, 200_000, 1_000_000, 4_000_000):
+            dirs[n] = os.path.join(root, f"n{n}")
+            spark.range(n, numPartitions=16).select(
+                F.col("id").alias("doc_id")
+            ).write.parquet(os.path.join(dirs[n], "documents.parquet"))
+        for name in MEDIA_QUERIES:  # JIT, codegen, Python workers
+            force(reg[name](spark, dirs[1_000]))
+        for n in (200_000, 1_000_000, 4_000_000):
+            for name in MEDIA_QUERIES:
+                ts = [force(reg[name](spark, dirs[n])) for _ in range(2)]
+                print(
+                    f"{name} n={n}: " + " ".join(f"{t:.2f}s" for t in ts)
+                    + f" ({n / min(ts) / 1e3:.0f}k docs/s)",
+                    flush=True,
+                )
 
 
 def probe_graph(spark) -> None:
@@ -1618,7 +1635,7 @@ def probe_r7(spark) -> None:
             # maximal extent) in the middle of otherwise-distinct text
             shared = " ".join(f"dup{i}" for i in range(16))
             docs = (
-                synth_long_docs(spark, n, words=80)
+                gen_long_docs(spark, n, words=80)
                 .select(
                     "doc_id",
                     F.when(
@@ -1701,7 +1718,7 @@ def probe_r7b(spark) -> None:
         for n in (200_000, 1_000_000):
             shared = " ".join(f"dup{i}" for i in range(16))
             docs = (
-                synth_long_docs(spark, n, words=80)
+                gen_long_docs(spark, n, words=80)
                 .select(
                     "doc_id",
                     F.when(
@@ -1757,7 +1774,7 @@ def probe_r8(spark) -> None:
     try:
         for n in (200_000, 1_000_000):
             shared = " ".join(f"dup{i}" for i in range(16))
-            docs = synth_long_docs(spark, n, words=80).select(
+            docs = gen_long_docs(spark, n, words=80).select(
                 "doc_id",
                 F.when(
                     F.col("doc_id") % 10 == 0,
@@ -1798,7 +1815,7 @@ def probe_r10(spark) -> None:
     batch is 400k docs (25 × 400k = 10M) with planted structure the
     funnel must actually work on: ~2% exact duplicates (same text as a
     doc in an EARLIER batch — cross-batch dedup, not within-batch) and
-    consecutive-id near-dup pairs (28/30 shared words, the synth_docs
+    consecutive-id near-dup pairs (28/30 shared words, the gen_docs
     family). Metrics per batch: process_batch wall, per-store bytes +
     file counts; clean() wall + survivor count every 5 batches;
     compact() after batches 13 and 25 with before/after sizes and the
@@ -1825,7 +1842,7 @@ def probe_r10(spark) -> None:
     def batch_docs(b: int, n: int):
         # globally unique doc_ids; ~2% of docs (id % 53 == 0) reuse the
         # TEXT of slot id+1 in batch b-1 (exact cross-batch dup); the
-        # w-family structure plants near-dup neighbours like synth_docs.
+        # w-family structure plants near-dup neighbours like gen_docs.
         # The copy targets the NEIGHBOUR slot, not the same slot: slot
         # id in batch b-1 was itself redirected (same residue), so its
         # seed is not its base and "base - n" would chase a text no
@@ -2011,7 +2028,7 @@ def probe_r11b(spark) -> None:
     base = tempfile.mkdtemp(prefix="scale_r11b_")
     try:
         for n in (200_000, 1_000_000):
-            docs = synth_long_docs(spark, n, words=80).select(
+            docs = gen_long_docs(spark, n, words=80).select(
                 "doc_id", "text", F.lit("s").alias("source")
             )
             sf = os.path.join(base, f"n{n}")
@@ -2061,7 +2078,7 @@ def probe_r9(spark) -> None:
     base = tempfile.mkdtemp(prefix="scale_r9_")
     try:
         for n in (200_000, 1_000_000):
-            docs = synth_long_docs(spark, n, words=80).select(
+            docs = gen_long_docs(spark, n, words=80).select(
                 "doc_id", "text", F.lit("s").alias("source")
             )
             sf = os.path.join(base, f"n{n}")
@@ -2149,7 +2166,7 @@ def probe_bpe8k(spark) -> None:
     base = tempfile.mkdtemp(prefix="scale_bpe8k_")
     try:
         for n in (200_000, 1_000_000):
-            docs = synth_long_docs(spark, n, words=80).select(
+            docs = gen_long_docs(spark, n, words=80).select(
                 "doc_id", "text", F.lit("s").alias("source")
             )
             sf = os.path.join(base, f"n{n}")
@@ -2227,59 +2244,20 @@ def probe_bpe(spark) -> None:
 
 
 def probe_r12(spark) -> None:
-    """r12 additions at generated scale: the EBML element walks at 1M
-    payloads (4 walks/doc — info, dims, doctype, router) and the
-    combined aHash+dHash visual tier at 200k / 1M docs (hash + band +
-    dual-Hamming verify, planted twins every 7th doc). Run:
-    ``SCALE_R12=1 python scale_probe.py``; numbers recorded in SCALE.md
-    §r12-ops."""
+    """r12 additions at generated scale: the combined aHash+dHash visual
+    tier at 200k / 1M docs (hash + band + dual-Hamming verify, planted
+    twins every 7th doc). Run: ``SCALE_R12=1 python scale_probe.py``;
+    numbers recorded in SCALE.md §r12-ops. The EBML walks are timed
+    through the registered video_meta and media_catalog queries in
+    ``probe_media``."""
     import time
 
     from pyspark.sql import functions as F
 
-    from crypto_market_tracker_etl_spark.multimodal.binary import (
-        ebml_doctype,
-        ebml_info,
-        ebml_video_dims,
-        sniff_mime,
-        synth_mkv,
-    )
     from crypto_market_tracker_etl_spark.queries_ext import (
         visual_band_pairs,
         visual_hash_pair,
     )
-
-    n = 1_000_000
-    d = F.col("id")
-    payload = F.when(
-        d % 2 == 0,
-        synth_mkv(
-            "webm", F.lit(1000000),
-            (F.lit(1000) + d % 900000).cast("long"),
-            (F.lit(320) + d % 1600).cast("int"),
-            (F.lit(240) + d % 840).cast("int"),
-        ),
-    ).otherwise(
-        synth_mkv(
-            "matroska", F.lit(500000),
-            (F.lit(1000) + d % 900000).cast("long"),
-            (F.lit(320) + d % 1600).cast("int"),
-            (F.lit(240) + d % 840).cast("int"),
-            audio_first=True,
-        )
-    )
-    docs = spark.range(n, numPartitions=64).select(
-        "id", payload.alias("payload")
-    )
-    parsed = docs.select(
-        "id",
-        ebml_info("payload").alias("ei"),
-        ebml_video_dims("payload").alias("ed"),
-        ebml_doctype("payload").alias("dt"),
-        sniff_mime("payload").alias("mime"),
-    ).select("id", "ei.*", "ed.*", "dt", "mime")
-    t = force(parsed)
-    print(f"ebml_parse_1M: {t:.1f}s ({n / t / 1000:.0f}k docs/s)", flush=True)
 
     for m in (200_000, 1_000_000):
         ids = spark.range(m, numPartitions=64).select(
@@ -2419,10 +2397,14 @@ def main() -> None:
         probe_r12(spark)
         spark.stop()
         return
+    if os.environ.get("SCALE_MEDIA"):
+        probe_media(spark)
+        spark.stop()
+        return
     rows = []
     for n in SIZES:
         users = max(1000, n // 1000)
-        ev = synth_events(spark, n, users)
+        ev = gen_events(spark, n, users)
         force(ev)  # warm the generator path so ops measure the operator
         t_latest = force(latest_per_key_agg(ev, ["user_id"], ["ts", "event_id"], ["value", "ts"]))
         t_ohlc = force(ohlc_daily(ev, ["user_id"], "ts", "value", tiebreak=["event_id"]))

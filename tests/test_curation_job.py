@@ -174,3 +174,36 @@ def test_curation_funnel_is_single_pass(spark):
     # ground truth: the flag aggregation must equal the real stage counts
     assert f["raw"] == corpus.count()
     assert f["clean"] == res.clean.count()
+
+
+def test_stream_delete_promotes_same_batch_exact_copy(spark, tmp_path):
+    """A doc and its exact copy arrive in ONE stream batch; erasing the
+    doc must leave the copy as the survivor, exactly as the batch funnel
+    over the remaining docs keeps it. The stream stores every gated row
+    and resolves exact dedup merge-on-read, so the copy is still in the
+    corpus store when its original is deleted."""
+    from crypto_market_tracker_etl_spark.plans.curation_stream import (
+        CurationStream,
+    )
+
+    docs = load_table(spark, SF_DIR, "documents").select(
+        "doc_id", "source", "text"
+    ).orderBy("doc_id").limit(9)
+    victim = min(r.doc_id for r in run_curation(spark, docs).clean.collect())
+    corpus = docs.unionByName(
+        docs.filter(F.col("doc_id") == victim).select(
+            (F.col("doc_id") + 200000).alias("doc_id"), "source", "text"
+        )
+    )
+    cs = CurationStream(spark, str(tmp_path / "store"))
+    cs.process_batch(corpus)
+    cs.delete_docs([victim])
+    got = {r.doc_id for r in cs.clean().select("doc_id").collect()}
+    want = {
+        r.doc_id
+        for r in run_curation(
+            spark, corpus.filter(F.col("doc_id") != victim)
+        ).clean.collect()
+    }
+    assert victim + 200000 in want
+    assert got == want

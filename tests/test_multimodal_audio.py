@@ -1,73 +1,63 @@
 """The synthesized WAV headers are REAL: the stdlib ``wave`` module (an
-independent RIFF reader) must parse the same parameters the in-engine
-expression parser extracts — a differential test against a third
-implementation, beyond the DuckDB oracle's analytic check of the
+independent RIFF reader) must parse the same parameters the engine's
+parser (multimodal/pymedia.py) extracts — a differential test against a
+third implementation, beyond the DuckDB oracle's analytic check of the
 [audio_meta]/[mime_sniff] queries."""
 
 from __future__ import annotations
 
 import io
 import wave
+from collections import namedtuple
 
-from pyspark.sql import functions as F
-
-from crypto_market_tracker_etl_spark.multimodal.binary import (
-    audio_meta,
+from crypto_market_tracker_etl_spark.multimodal import pymedia as pm
+from crypto_market_tracker_etl_spark.multimodal.pymedia import (
     sniff_mime,
+    synth_flac,
+    synth_mp3,
+    synth_ogg,
+    synth_ogg_full,
     synth_wav,
 )
 
+AudioMeta = namedtuple(
+    "AudioMeta",
+    "mime_type channels sample_rate_hz bits_per_sample duration_ms bitrate_kbps",
+)
 
-def test_synth_wav_opens_with_stdlib_wave(spark):
-    rows = (
-        spark.range(6)
-        .select(
-            F.col("id"),
-            synth_wav(
-                F.lit(8000) + F.col("id").cast("int") * 1000,
-                (F.col("id") % 2 + 1).cast("int"),
-                F.when(F.col("id") % 2 == 0, F.lit(16)).otherwise(F.lit(8)),
-                F.lit(12345).cast("long"),
-            ).alias("payload"),
-        )
-        .collect()
-    )
-    for r in rows:
-        wf = wave.open(io.BytesIO(bytes(r.payload)))
-        assert wf.getframerate() == 8000 + r.id * 1000
-        assert wf.getnchannels() == r.id % 2 + 1
-        assert wf.getsampwidth() == (2 if r.id % 2 == 0 else 1)
+
+def audio_meta(payload: bytes) -> AudioMeta:
+    return AudioMeta(*pm.parse_audio_meta(payload))
+
+
+def test_synth_wav_opens_with_stdlib_wave():
+    for i in range(6):
+        payload = synth_wav(8000 + i * 1000, i % 2 + 1, 16 if i % 2 == 0 else 8,
+                            12345)
+        wf = wave.open(io.BytesIO(payload))
+        assert wf.getframerate() == 8000 + i * 1000
+        assert wf.getnchannels() == i % 2 + 1
+        assert wf.getsampwidth() == (2 if i % 2 == 0 else 1)
         assert wf.getnframes() == 12345
 
 
-def test_audio_meta_matches_stdlib_wave(spark):
-    df = spark.range(10).select(
-        synth_wav(
-            F.lit(44100),
-            F.lit(2).cast("int"),
-            F.lit(16),
-            (F.lit(1000) + F.col("id") * 997).cast("long"),
-        ).alias("payload")
-    )
-    got = df.select(audio_meta(F.col("payload")).alias("m"), "payload").collect()
-    for r in got:
-        wf = wave.open(io.BytesIO(bytes(r.payload)))
-        assert r.m.mime_type == "audio/x-wav"
-        assert r.m.channels == wf.getnchannels() == 2
-        assert r.m.sample_rate_hz == wf.getframerate() == 44100
-        assert r.m.bits_per_sample == wf.getsampwidth() * 8 == 16
-        assert r.m.duration_ms == wf.getnframes() * 1000 // 44100
+def test_audio_meta_matches_stdlib_wave():
+    for i in range(10):
+        payload = synth_wav(44100, 2, 16, 1000 + i * 997)
+        m = audio_meta(payload)
+        wf = wave.open(io.BytesIO(payload))
+        assert m.mime_type == "audio/x-wav"
+        assert m.channels == wf.getnchannels() == 2
+        assert m.sample_rate_hz == wf.getframerate() == 44100
+        assert m.bits_per_sample == wf.getsampwidth() * 8 == 16
+        assert m.duration_ms == wf.getnframes() * 1000 // 44100
 
 
-def test_audio_meta_unknown_bytes_never_error(spark):
-    df = spark.createDataFrame(
-        [(b"\x00",), (b"",), (b"RIFFxxxx",), (b"not audio at all",)],
-        "payload binary",
-    )
-    got = df.select(audio_meta(F.col("payload")).alias("m")).collect()
-    for r in got:
-        assert r.m.mime_type == "application/octet-stream"
-        assert r.m.channels is None and r.m.duration_ms is None
+def test_audio_meta_unknown_bytes_never_error():
+    for payload in (b"\x00", b"", b"RIFFxxxx", b"not audio at all"):
+        m = audio_meta(payload)
+        assert m.mime_type == "application/octet-stream"
+        assert m.channels is None and m.duration_ms is None
 
 
 def _py_flac_streaminfo(b: bytes):
@@ -105,83 +95,45 @@ def _py_mp3_header(b: bytes):
     return (table[ver][sr_idx], ch)
 
 
-def test_synth_flac_roundtrip_and_independent_parser(spark):
+def test_synth_flac_roundtrip_and_independent_parser():
     """synth_flac emits bytes BOTH parsers read back exactly — including
     total-sample counts past 2^32, where the 36-bit field's nibble split
     would first betray a packing bug."""
-    from crypto_market_tracker_etl_spark.multimodal.binary import synth_flac
-
-    rows = (
-        spark.range(1, 30)
-        .select(
-            "id",
-            synth_flac(
-                F.lit(8000) + (F.col("id") * 997 % 100000).cast("int"),
-                (F.col("id") % 8 + 1).cast("int"),
-                (F.col("id") % 28 + 4).cast("int"),
-                (F.col("id") * 12345 + (F.col("id") % 2) * F.lit(2**33)).cast(
-                    "long"
-                ),
-            ).alias("payload"),
-        )
-        .select("id", "payload", audio_meta(F.col("payload")).alias("m"))
-        .collect()
-    )
-    for r in rows:
-        sr = 8000 + r.id * 997 % 100000
-        ch, bps = r.id % 8 + 1, r.id % 28 + 4
-        ts = r.id * 12345 + (r.id % 2) * 2**33
-        assert _py_flac_streaminfo(bytes(r.payload)) == (sr, ch, bps, ts), r.id
-        assert (r.m.mime_type, r.m.channels, r.m.sample_rate_hz,
-                r.m.bits_per_sample, r.m.duration_ms) == (
+    for i in range(1, 30):
+        sr = 8000 + i * 997 % 100000
+        ch, bps = i % 8 + 1, i % 28 + 4
+        ts = i * 12345 + (i % 2) * 2**33
+        payload = synth_flac(sr, ch, bps, ts)
+        m = audio_meta(payload)
+        assert _py_flac_streaminfo(payload) == (sr, ch, bps, ts), i
+        assert (m.mime_type, m.channels, m.sample_rate_hz,
+                m.bits_per_sample, m.duration_ms) == (
             "audio/flac", ch, sr, bps, ts * 1000 // sr,
-        ), r.id
+        ), i
 
 
-def test_synth_mp3_roundtrip_and_independent_parser(spark):
+def test_synth_mp3_roundtrip_and_independent_parser():
     """synth_mp3 (bare and ID3v2-prefixed, pads past 127 exercising the
-    multi-byte synchsafe size) reads back identically through the Spark
+    multi-byte synchsafe size) reads back identically through the engine
     parser and the pure-Python reference; bits/duration stay NULL (the
     honest codec boundary)."""
-    from crypto_market_tracker_etl_spark.multimodal.binary import synth_mp3
-
-    vbits = (
-        F.when(F.col("id") % 3 == 0, F.lit(3))
-        .when(F.col("id") % 3 == 1, F.lit(2))
-        .otherwise(F.lit(0))
-    )
-    rows = (
-        spark.range(1, 30)
-        .select(
-            "id",
-            synth_mp3(vbits, F.col("id") * 7 % 3, F.col("id") % 2 == 0).alias(
-                "bare"
-            ),
-            synth_mp3(
-                vbits, F.col("id") * 7 % 3, F.col("id") % 2 == 0,
-                id3_pad=F.lit(100) + F.col("id") * 13 % 300,
-            ).alias("tagged"),
-        )
-        .select(
-            "id", "bare", "tagged",
-            audio_meta(F.col("bare")).alias("mb"),
-            audio_meta(F.col("tagged")).alias("mt"),
-        )
-        .collect()
-    )
     table = {0: (44100, 48000, 32000), 1: (22050, 24000, 16000),
              2: (11025, 12000, 8000)}
-    for r in rows:
-        sr = table[r.id % 3][r.id * 7 % 3]
-        ch = 1 if r.id % 2 == 0 else 2
-        for m, p in (("mb", "bare"), ("mt", "tagged")):
-            assert _py_mp3_header(bytes(r[p])) == (sr, ch), (p, r.id)
-            mm = r[m]
+    for i in range(1, 30):
+        vbits = (3, 2, 0)[i % 3]
+        bare = synth_mp3(vbits, i * 7 % 3, i % 2 == 0)
+        tagged = synth_mp3(vbits, i * 7 % 3, i % 2 == 0,
+                           id3_pad=100 + i * 13 % 300)
+        sr = table[i % 3][i * 7 % 3]
+        ch = 1 if i % 2 == 0 else 2
+        for p in (bare, tagged):
+            assert _py_mp3_header(p) == (sr, ch), (p[:4], i)
+            mm = audio_meta(p)
             assert (mm.mime_type, mm.channels, mm.sample_rate_hz) == (
                 "audio/mpeg", ch, sr,
-            ), (m, r.id)
+            ), (p[:4], i)
             assert mm.bits_per_sample is None and mm.duration_ms is None
-        assert len(bytes(r["tagged"])) == 14 + 100 + r.id * 13 % 300
+        assert len(tagged) == 14 + 100 + i * 13 % 300
 
 
 def _py_mp3_duration(b: bytes):
@@ -227,69 +179,38 @@ def _py_mp3_duration(b: bytes):
     return (kbps, audio_bytes * 8 // kbps)
 
 
-def test_mp3_cbr_and_xing_duration(spark):
+def test_mp3_cbr_and_xing_duration():
     """The r10 duration tiers: a CBR body (duration from byte length ×
     bitrate), a Xing VBR tag (duration from the exact frame count,
     overriding the byte estimate), and an ID3-tagged CBR body (the tag
-    bytes must NOT count as audio). The Spark parse and the independent
+    bytes must NOT count as audio). The engine parse and the independent
     pure-Python estimator agree bit-exactly; bodiless headers keep the
     honest NULL."""
-    from crypto_market_tracker_etl_spark.multimodal.binary import synth_mp3
-
-    vbits = (
-        F.when(F.col("id") % 3 == 0, F.lit(3))
-        .when(F.col("id") % 3 == 1, F.lit(2))
-        .otherwise(F.lit(0))
-    )
-    sr_idx = F.col("id") * 7 % 3
-    mono = F.col("id") % 2 == 0
-    rows = (
-        spark.range(1, 30)
-        .select(
-            "id",
-            synth_mp3(
-                vbits, sr_idx, mono, n_frames=F.lit(40) + F.col("id") * 3
-            ).alias("cbr"),
-            synth_mp3(
-                vbits, sr_idx, mono, xing_frames=F.lit(900) + F.col("id") * 31
-            ).alias("vbr"),
-            synth_mp3(
-                vbits, sr_idx, mono,
-                xing_frames=F.lit(700) + F.col("id") * 17,
-                vbr_sig=F.lit("496E666F"),  # "Info": CBR by convention
-            ).alias("info_cbr"),
-            synth_mp3(
-                vbits, sr_idx, mono,
-                id3_pad=F.lit(100) + F.col("id") * 13 % 300,
-                n_frames=F.lit(25),
-            ).alias("tagged_cbr"),
-        )
-        .select(
-            "id", "cbr", "vbr", "info_cbr", "tagged_cbr",
-            audio_meta(F.col("cbr")).alias("mc"),
-            audio_meta(F.col("vbr")).alias("mv"),
-            audio_meta(F.col("info_cbr")).alias("mi"),
-            audio_meta(F.col("tagged_cbr")).alias("mt"),
-        )
-        .collect()
-    )
-    for r in rows:
-        for m, p in (
-            ("mc", "cbr"), ("mv", "vbr"), ("mi", "info_cbr"),
-            ("mt", "tagged_cbr"),
-        ):
-            kbps, dur = _py_mp3_duration(bytes(r[p]))
-            assert (r[m].bitrate_kbps, r[m].duration_ms) == (kbps, dur), (
-                m, r.id, (r[m].bitrate_kbps, r[m].duration_ms), (kbps, dur),
+    for i in range(1, 30):
+        vbits, sr_idx, mono = (3, 2, 0)[i % 3], i * 7 % 3, i % 2 == 0
+        payloads = {
+            "cbr": synth_mp3(vbits, sr_idx, mono, n_frames=40 + i * 3),
+            "vbr": synth_mp3(vbits, sr_idx, mono, xing_frames=900 + i * 31),
+            # "Info": CBR by convention
+            "info_cbr": synth_mp3(vbits, sr_idx, mono, xing_frames=700 + i * 17,
+                                  vbr_sig=b"Info"),
+            "tagged_cbr": synth_mp3(vbits, sr_idx, mono,
+                                    id3_pad=100 + i * 13 % 300, n_frames=25),
+        }
+        got = {k: audio_meta(p) for k, p in payloads.items()}
+        for k, p in payloads.items():
+            kbps, dur = _py_mp3_duration(p)
+            assert (got[k].bitrate_kbps, got[k].duration_ms) == (kbps, dur), (
+                k, i, (got[k].bitrate_kbps, got[k].duration_ms), (kbps, dur),
             )
-            assert r[m].duration_ms is not None, (m, r.id)
+            assert got[k].duration_ms is not None, (k, i)
         # the policy itself, pinned explicitly: Xing → VBR → NULL rate;
         # Info → CBR → header rate
-        assert r["mv"].bitrate_kbps is None
-        assert r["mi"].bitrate_kbps is not None
+        assert got["vbr"].bitrate_kbps is None
+        assert got["info_cbr"].bitrate_kbps is not None
 
 
-def test_mp3_xing_without_frame_count_stays_null(spark):
+def test_mp3_xing_without_frame_count_stays_null():
     """A Xing tag whose flags clear the frames bit carries no count —
     duration must stay NULL (not fall through to a CBR estimate over
     VBR bytes: that is the lie the tag exists to prevent)."""
@@ -298,14 +219,13 @@ def test_mp3_xing_without_frame_count_stays_null(spark):
     xing_noframes = (
         hdr + b"\x00" * 32 + b"Xing" + b"\x00\x00\x00\x00" + b"\x00" * 400
     )
-    df = spark.createDataFrame([(xing_noframes,)], "payload binary")
-    m = df.select(audio_meta(F.col("payload")).alias("m")).collect()[0].m
+    m = audio_meta(xing_noframes)
     assert m.mime_type == "audio/mpeg" and m.bitrate_kbps is None  # VBR
     assert m.duration_ms is None
     assert _py_mp3_duration(xing_noframes) == (None, None)
 
 
-def test_audio_malformed_flac_mp3_never_error(spark):
+def test_audio_malformed_flac_mp3_never_error():
     """A FLAC whose first block is not STREAMINFO, an ID3 tag with no
     frame behind it, and a desynced bare header all yield NULL fields
     (mime still routed) — the image_meta contract."""
@@ -323,20 +243,14 @@ def test_audio_malformed_flac_mp3_never_error(spark):
         # sync + valid version/layer but reserved bitrate (1111)
         5: (bytes([0xFF, 0xFB, 0xF0, 0x40]), "application/octet-stream"),
     }
-    df = spark.createDataFrame(
-        [(k, p) for k, (p, _) in cases.items()], "id long, payload binary"
-    )
-    got = {
-        r["id"]: r["m"]
-        for r in df.select("id", audio_meta(F.col("payload")).alias("m")).collect()
-    }
+    got = {k: audio_meta(p) for k, (p, _) in cases.items()}
     for k, (_, mime) in cases.items():
         assert got[k].mime_type == mime, k
         assert got[k].channels is None and got[k].sample_rate_hz is None, k
         assert got[k].bits_per_sample is None and got[k].duration_ms is None, k
 
 
-def test_sniff_mime_signatures(spark):
+def test_sniff_mime_signatures():
     cases = [
         (bytes.fromhex("FFD8FFE0") + b"rest", "image/jpeg"),
         (b"fLaC\x00\x00\x00\x22" + b"\x00" * 34, "audio/flac"),
@@ -355,8 +269,7 @@ def test_sniff_mime_signatures(spark):
         (b"RIFF1234AVI LIST", "application/octet-stream"),  # RIFF-not-WAVE
         (b"", "application/octet-stream"),
     ]
-    df = spark.createDataFrame([(p,) for p, _ in cases], "payload binary")
-    got = [r[0] for r in df.select(sniff_mime(F.col("payload"))).collect()]
+    got = [sniff_mime(p) for p, _ in cases]
     assert got == [m for _, m in cases]
 
 
@@ -412,42 +325,24 @@ def _py_ogg_duration_ms(b: bytes):
     return eos_granule * 1000 // sr
 
 
-def test_ogg_full_file_duration(spark):
+def test_ogg_full_file_duration():
     """r11 Ogg duration: a full synthesized Vorbis file (BOS id page +
     middle audio page + EOS page) yields duration_ms from the LAST
-    page's granule; the Spark tail-locate must agree with the
+    page's granule; the engine's tail-locate must agree with the
     independent pure-Python page WALKER on every payload, and the
-    header-only slice in the same plan stays honestly NULL."""
-    from crypto_market_tracker_etl_spark.multimodal.binary import (
-        audio_meta,
-        synth_ogg,
-        synth_ogg_full,
-    )
-
-    sr = F.element_at(
-        F.array(F.lit(8000), F.lit(22050), F.lit(44100), F.lit(48000)),
-        (F.col("id") % 4 + 1).cast("int"),
-    ).cast("int")
-    ch = (F.col("id") % 2 + 1).cast("int")
-    kbps = (F.lit(48) + F.col("id") * 13 % 400).cast("int")
-    gran = (sr * (F.lit(2) + F.col("id") % 17) + F.col("id") * 331 % 997).cast(
-        "long"
-    )
-    payload = F.when(
-        F.col("id") % 3 == 2, synth_ogg(sr, ch, kbps)
-    ).otherwise(synth_ogg_full(sr, ch, kbps, gran))
-    rows = (
-        spark.range(1, 40)
-        .select("id", payload.alias("ogg"))
-        .select("id", "ogg", audio_meta(F.col("ogg")).alias("m"))
-        .collect()
-    )
+    header-only slice in the same batch stays honestly NULL."""
     full = header_only = 0
-    for r in rows:
-        want = _py_ogg_duration_ms(bytes(r["ogg"]))
-        assert r["m"]["duration_ms"] == want, (r["id"], want)
-        assert r["m"]["mime_type"] == "audio/ogg"
-        if r["id"] % 3 == 2:
+    for i in range(1, 40):
+        sr = (8000, 22050, 44100, 48000)[i % 4]
+        ch, kbps = i % 2 + 1, 48 + i * 13 % 400
+        gran = sr * (2 + i % 17) + i * 331 % 997
+        ogg = (synth_ogg(sr, ch, kbps) if i % 3 == 2
+               else synth_ogg_full(sr, ch, kbps, gran))
+        m = audio_meta(ogg)
+        want = _py_ogg_duration_ms(ogg)
+        assert m.duration_ms == want, (i, want)
+        assert m.mime_type == "audio/ogg"
+        if i % 3 == 2:
             assert want is None
             header_only += 1
         else:
@@ -456,7 +351,7 @@ def test_ogg_full_file_duration(spark):
     assert full > 0 and header_only > 0
 
 
-def test_ogg_tail_guards_reject_fakes(spark):
+def test_ogg_tail_guards_reject_fakes():
     """The tail locate trusts a granule only behind structural guards:
     an appended data blob that SPELLS 'OggS' but has a nonzero version
     byte, undefined type bits, a missing EOS flag, or an absurd granule
@@ -465,11 +360,6 @@ def test_ogg_tail_guards_reject_fakes(spark):
     would read them)."""
     import struct
 
-    from crypto_market_tracker_etl_spark.multimodal.binary import (
-        audio_meta,
-        synth_ogg,
-    )
-
     def fake(ver, typ, granule):
         return (
             b"OggS" + bytes([ver, typ]) + struct.pack("<q", granule)
@@ -477,13 +367,7 @@ def test_ogg_tail_guards_reject_fakes(spark):
             + b"\x00\x00\x00\x00" + b"\x01\x05" + b"\x00" * 5
         )
 
-    hdr_df = spark.range(1, 2).select(
-        synth_ogg(
-            F.lit(44100).cast("int"), F.lit(2).cast("int"),
-            F.lit(96).cast("int"),
-        ).alias("h")
-    )
-    hdr = bytes(hdr_df.collect()[0]["h"])
+    hdr = synth_ogg(44100, 2, 96)
     cases = [
         (1, hdr + fake(1, 4, 44100)),  # bad version byte
         (2, hdr + fake(0, 0x44, 44100)),  # undefined type bit
@@ -492,61 +376,31 @@ def test_ogg_tail_guards_reject_fakes(spark):
         (5, hdr + fake(0, 4, 2**60)),  # absurd granule
         (6, hdr + fake(0, 4, 44100)),  # control: this one IS trusted
     ]
-    rows = (
-        spark.createDataFrame(cases, "id long, payload binary")
-        .select("id", audio_meta(F.col("payload")).alias("m"))
-        .collect()
-    )
-    got = {r["id"]: r["m"]["duration_ms"] for r in rows}
+    got = {k: audio_meta(p).duration_ms for k, p in cases}
     assert got == {1: None, 2: None, 3: None, 4: None, 5: None, 6: 1000}
 
 
-def test_ogg_vorbis_roundtrip(spark):
+def test_ogg_vorbis_roundtrip():
     """r10 Ogg Vorbis: channels / sample rate / declared nominal
     bitrate from the id header behind the one-hop page-segment offset;
-    duration honestly NULL (it lives in the LAST page's granule). Spark
+    duration honestly NULL (it lives in the LAST page's granule). Engine
     parse ≡ the independent pure-Python reference."""
-    from crypto_market_tracker_etl_spark.multimodal.binary import (
-        audio_meta,
-        sniff_mime,
-        synth_ogg,
-    )
-
-    sr = F.element_at(
-        F.array(F.lit(8000), F.lit(22050), F.lit(44100), F.lit(48000)),
-        (F.col("id") % 4 + 1).cast("int"),
-    ).cast("int")
-    ch = (F.col("id") % 2 + 1).cast("int")
-    kbps = (F.lit(48) + F.col("id") * 13 % 400).cast("int")
-    rows = (
-        spark.range(1, 30)
-        .select("id", synth_ogg(sr, ch, kbps).alias("ogg"))
-        .select(
-            "id", "ogg",
-            audio_meta(F.col("ogg")).alias("m"),
-            sniff_mime(F.col("ogg")).alias("mime"),
-        )
-        .collect()
-    )
-    for r in rows:
-        got = (r["m"]["channels"], r["m"]["sample_rate_hz"],
-               r["m"]["bitrate_kbps"])
-        assert got == _py_ogg_vorbis(bytes(r["ogg"])), r["id"]
-        assert r["m"]["mime_type"] == "audio/ogg" and r["mime"] == "audio/ogg"
-        assert r["m"]["duration_ms"] is None  # honest: needs last page
-        assert r["m"]["bits_per_sample"] is None  # not a Vorbis concept
+    for i in range(1, 30):
+        sr = (8000, 22050, 44100, 48000)[i % 4]
+        ogg = synth_ogg(sr, i % 2 + 1, 48 + i * 13 % 400)
+        m = audio_meta(ogg)
+        got = (m.channels, m.sample_rate_hz, m.bitrate_kbps)
+        assert got == _py_ogg_vorbis(ogg), i
+        assert m.mime_type == "audio/ogg" and sniff_mime(ogg) == "audio/ogg"
+        assert m.duration_ms is None  # honest: needs last page
+        assert m.bits_per_sample is None  # not a Vorbis concept
 
 
-def test_ogg_non_vorbis_routes_with_null_fields(spark):
+def test_ogg_non_vorbis_routes_with_null_fields():
     """A real Ogg page whose first packet is NOT a Vorbis id header —
     an Opus stream ("OpusHead") and a bare data page — still routes
     audio/ogg (container-level) with NULL fields; a truncated page
     never errors."""
-    from crypto_market_tracker_etl_spark.multimodal.binary import (
-        audio_meta,
-        sniff_mime,
-    )
-
     page = (
         b"OggS" + b"\x00\x02" + b"\x00" * 8 + b"\x01\x00\x00\x00"
         + b"\x00" * 8 + b"\x01\x13"
@@ -556,18 +410,10 @@ def test_ogg_non_vorbis_routes_with_null_fields(spark):
         (2, page + b"\x00" * 19),  # data bytes, no id header
         (3, b"OggS\x00"),  # truncated mid page header
     ]
-    rows = (
-        spark.createDataFrame(cases, "id long, payload binary")
-        .select(
-            "id",
-            audio_meta(F.col("payload")).alias("m"),
-            sniff_mime(F.col("payload")).alias("mime"),
-        )
-        .collect()
-    )
-    for r in rows:
-        assert r["mime"] == "audio/ogg", r["id"]
-        assert r["m"]["mime_type"] == "audio/ogg"
-        assert r["m"]["channels"] is None
-        assert r["m"]["sample_rate_hz"] is None
-        assert r["m"]["bitrate_kbps"] is None
+    for k, p in cases:
+        m = audio_meta(p)
+        assert sniff_mime(p) == "audio/ogg", k
+        assert m.mime_type == "audio/ogg"
+        assert m.channels is None
+        assert m.sample_rate_hz is None
+        assert m.bitrate_kbps is None

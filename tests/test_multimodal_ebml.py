@@ -1,17 +1,17 @@
 """The synthesized MKV/WebM prefixes are REAL EBML: an independent
 pure-python EBML walker (this file, no shared code with the engine's
-expression parsers — the independent-parser-FIRST discipline from the
-MP4/HEIF rounds) must extract the same DocType, TimestampScale,
-Duration, PixelWidth/PixelHeight the in-engine walks do, and the
-malformed-fuzz adversaries must yield honest NULLs, never errors."""
+parsers in multimodal/pymedia.py — the independent-parser-FIRST
+discipline from the MP4/HEIF rounds) must extract the same DocType,
+TimestampScale, Duration, PixelWidth/PixelHeight the in-engine walks
+do, and the malformed-fuzz adversaries must yield honest NULLs, never
+errors."""
 
 from __future__ import annotations
 
 import struct
+from types import SimpleNamespace
 
-from pyspark.sql import functions as F
-
-from crypto_market_tracker_etl_spark.multimodal.binary import (
+from crypto_market_tracker_etl_spark.multimodal.pymedia import (
     ebml_doctype,
     ebml_info,
     ebml_video_dims,
@@ -129,18 +129,22 @@ def build_mkv(
     return header + seg
 
 
-def spark_parse(spark, payloads: list[bytes]):
-    df = spark.createDataFrame([(p,) for p in payloads], "payload binary")
-    return df.select(
-        ebml_doctype(F.col("payload")).alias("dt"),
-        ebml_info(F.col("payload")).alias("info"),
-        ebml_video_dims(F.col("payload")).alias("dims"),
-        sniff_mime(F.col("payload")).alias("mime"),
-    ).collect()
+def engine_parse(payloads: list[bytes]):
+    out = []
+    for p in payloads:
+        ts, dur = ebml_info(p)
+        w, h = ebml_video_dims(p)
+        out.append(SimpleNamespace(
+            dt=ebml_doctype(p),
+            info=SimpleNamespace(timescale_ns=ts, duration_ms=dur),
+            dims=SimpleNamespace(width=w, height=h),
+            mime=sniff_mime(p),
+        ))
+    return out
 
 
 # ------------------------------------------------------------------ tests
-def test_synth_mkv_walks_with_independent_parser(spark):
+def test_synth_mkv_walks_with_independent_parser():
     """Structure + every field, both doctypes × both track layouts,
     including a Duration crossing 2^32 units (the v1-mvhd pattern)."""
     cases = []
@@ -150,17 +154,8 @@ def test_synth_mkv_walks_with_independent_parser(spark):
     rows = []
     for i, (dt, af) in enumerate(cases):
         dur = 1000 + i * 997 + (2**33 if i % 2 == 1 else 0)
-        df = spark.range(1).select(
-            synth_mkv(
-                dt,
-                F.lit(1000000 + i),
-                F.lit(dur).cast("long"),
-                F.lit(640 + i).cast("int"),
-                F.lit(480 + i).cast("int"),
-                audio_first=af,
-            ).alias("p")
-        )
-        blob = bytes(df.collect()[0]["p"])
+        blob = synth_mkv(dt, 1000000 + i, dur, 640 + i, 480 + i,
+                         audio_first=af)
         rows.append((dt, af, dur, i, blob))
     for dt, af, dur, i, blob in rows:
         assert len(blob) == 32 + len(dt) + 53 + (16 if af else 0)
@@ -172,26 +167,17 @@ def test_synth_mkv_walks_with_independent_parser(spark):
         assert got["height"] == 480 + i
 
 
-def test_ebml_spark_parsers_match_independent_walker(spark):
+def test_ebml_spark_parsers_match_independent_walker():
     payloads, want = [], []
     for i in range(12):
         dt = "webm" if i % 2 == 0 else "matroska"
         af = i % 3 == 0
         tscale = [1000000, 500000, 2000000][i % 3]
         dur = 1 + i * 104729 + (2**33 if i % 4 == 1 else 0)
-        df = spark.range(1).select(
-            synth_mkv(
-                dt,
-                F.lit(tscale),
-                F.lit(dur).cast("long"),
-                F.lit(320 + 16 * i).cast("int"),
-                F.lit(240 + 9 * i).cast("int"),
-                audio_first=af,
-            ).alias("p")
-        )
-        payloads.append(bytes(df.collect()[0]["p"]))
+        payloads.append(synth_mkv(dt, tscale, dur, 320 + 16 * i, 240 + 9 * i,
+                                  audio_first=af))
         want.append((dt, tscale, dur))
-    got = spark_parse(spark, payloads)
+    got = engine_parse(payloads)
     for r, blob, (dt, tscale, dur) in zip(got, payloads, want):
         ind = walk_mkv(blob)
         assert r.dt == ind["doctype"] == dt
@@ -204,7 +190,7 @@ def test_ebml_spark_parsers_match_independent_walker(spark):
         )
 
 
-def test_ebml_duration_float32_and_default_timescale(spark):
+def test_ebml_duration_float32_and_default_timescale():
     """A 4-byte FLOAT Duration with NO TimestampScale element: the spec
     default 1,000,000 ns applies to duration_ms while the reported
     timescale stays NULL (applied, not observed)."""
@@ -212,13 +198,13 @@ def test_ebml_duration_float32_and_default_timescale(spark):
         info_children=elt("4489", struct.pack(">f", 12345.0))
     )
     assert walk_mkv(payload)["duration"] == 12345.0
-    r = spark_parse(spark, [payload])[0]
+    r = engine_parse([payload])[0]
     assert r.info.timescale_ns is None
     assert r.info.duration_ms == 12345  # units * 1e6 ns / 1e6
     assert r.dt == "webm"
 
 
-def test_ebml_unknown_size_segment(spark):
+def test_ebml_unknown_size_segment():
     """Streamed Matroska ships Segment with the all-ones unknown-size
     vint (extends to file end): the walks must still descend."""
     payload = build_mkv(seg_unknown_size=True)
@@ -226,12 +212,12 @@ def test_ebml_unknown_size_segment(spark):
     top = list(iter_elements(payload, 0, len(payload)))
     assert [t[0] for t in top] == ["1A45DFA3", "18538067"]
     assert top[1][3] is True  # unknown size
-    r = spark_parse(spark, [payload])[0]
+    r = engine_parse([payload])[0]
     assert r.info.timescale_ns == 1000000
     assert r.info.duration_ms == 5000
 
 
-def test_ebml_decoy_ids_inside_void_skipped(spark):
+def test_ebml_decoy_ids_inside_void_skipped():
     """A Void element (EC) whose PAYLOAD carries an aligned fake Info
     element (real ID bytes + plausible size + fake TimestampScale)
     sits BEFORE the real Info: a byte-locate would read the fake scale;
@@ -245,31 +231,31 @@ def test_ebml_decoy_ids_inside_void_skipped(spark):
     assert payload.find(bytes.fromhex("1549A966")) < payload.rfind(
         bytes.fromhex("1549A966")
     )
-    r = spark_parse(spark, [payload])[0]
+    r = engine_parse([payload])[0]
     assert r.info.timescale_ns == 1000000  # the real one, not 999
     assert r.info.duration_ms == 5000
 
 
-def test_ebml_doctype_decoy_in_header_void_skipped(spark):
+def test_ebml_doctype_decoy_in_header_void_skipped():
     """Same class one level up: a Void inside the EBML header carrying
     fake DocType bytes ('4282' + size + 'webm') before the real
     matroska DocType must not flip the route."""
     fake_dt = elt("4282", b"webm")
     header = elt("1A45DFA3", elt("EC", fake_dt) + elt("4282", b"matroska"))
     payload = header + elt("18538067", b"")
-    r = spark_parse(spark, [payload])[0]
+    r = engine_parse([payload])[0]
     assert r.dt == "matroska"
     assert r.mime == "video/x-matroska"
 
 
-def test_ebml_unknown_doctype_routes_octet_stream(spark):
+def test_ebml_unknown_doctype_routes_octet_stream():
     payload = build_mkv(doctype=b"weird")
-    r = spark_parse(spark, [payload])[0]
+    r = engine_parse([payload])[0]
     assert r.dt == "weird"
     assert r.mime == "application/octet-stream"
 
 
-def test_ebml_malformed_never_errors(spark):
+def test_ebml_malformed_never_errors():
     """Truncations at every length, oversized size-vints, invalid id
     bytes, empty, non-EBML: NULLs (or partial fields), never an
     exception — one malformed blob cannot fail a backfill."""
@@ -282,7 +268,7 @@ def test_ebml_malformed_never_errors(spark):
     cases += [b"", b"\x00" * 16, b"not ebml at all!", bytes.fromhex("1A45DFA3")]
     # invalid 0x00 id byte right after a valid header
     cases.append(elt("1A45DFA3", elt("4282", b"webm")) + b"\x00\x00")
-    rows = spark_parse(spark, cases)
+    rows = engine_parse(cases)
     for r in rows:
         # no exception is the main assertion; fields are None or ints
         for v in (r.info.timescale_ns, r.info.duration_ms,
@@ -290,7 +276,7 @@ def test_ebml_malformed_never_errors(spark):
             assert v is None or isinstance(v, int)
 
 
-def test_ebml_oversized_pixel_dims_stay_null(spark):
+def test_ebml_oversized_pixel_dims_stay_null():
     """A crafted 4-byte PixelWidth ≥ 2^31 must yield NULL dims, not an
     ANSI cast error — one malformed blob cannot fail a backfill."""
     video_te = elt(
@@ -302,12 +288,12 @@ def test_ebml_oversized_pixel_dims_stay_null(spark):
     payload = elt("1A45DFA3", elt("4282", b"webm")) + elt(
         "18538067", elt("1654AE6B", video_te)
     )
-    r = spark_parse(spark, [payload])[0]
+    r = engine_parse([payload])[0]
     assert r.dims.width is None
     assert r.dims.height == 1080
 
 
-def test_ebml_audio_first_pops_to_video_track(spark):
+def test_ebml_audio_first_pops_to_video_track():
     """The dims walk must skip a whole audio TrackEntry (descend, reach
     its end without a Video child, pop up) and read dims from the NEXT
     TrackEntry — built by hand so the layout is independent of
@@ -326,5 +312,5 @@ def test_ebml_audio_first_pops_to_video_track(spark):
     )
     ind = walk_mkv(payload)
     assert (ind["width"], ind["height"]) == (1920, 1080)
-    r = spark_parse(spark, [payload])[0]
+    r = engine_parse([payload])[0]
     assert (r.dims.width, r.dims.height) == (1920, 1080)

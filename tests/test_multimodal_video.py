@@ -1,6 +1,6 @@
 """The synthesized MP4 prefixes are REAL ISO-BMFF: an independent
 pure-python box walker (this file, no shared code with the engine's
-expression parser) must extract the same ftyp brand and mvhd fields the
+parser in multimodal/pymedia.py) must extract the same ftyp brand and mvhd fields the
 in-engine parser does — a differential test against a second
 implementation, beyond the DuckDB oracle's analytic check of the
 [video_meta]/[mime_sniff] queries."""
@@ -8,14 +8,21 @@ implementation, beyond the DuckDB oracle's analytic check of the
 from __future__ import annotations
 
 import struct
+from collections import namedtuple
 
-from pyspark.sql import functions as F
-
-from crypto_market_tracker_etl_spark.multimodal.binary import (
+from crypto_market_tracker_etl_spark.multimodal import pymedia as pm
+from crypto_market_tracker_etl_spark.multimodal.pymedia import (
     sniff_mime,
     synth_mp4,
-    video_meta,
 )
+
+VideoMeta = namedtuple(
+    "VideoMeta", "mime_type brand timescale duration_ms n_tracks"
+)
+
+
+def video_meta(payload: bytes) -> VideoMeta:
+    return VideoMeta(*pm.parse_video_mp4(payload))
 
 
 def walk_boxes(payload: bytes, start: int = 0):
@@ -41,7 +48,7 @@ def parse_mvhd(body: bytes):
     """Version-dispatching mvhd parse (r11): v0 as above; v1 has u64
     creation/modification/duration — timescale at +20, duration u64 at
     +24, next_track at +108 (body offsets exclude the 8-byte box
-    header the Spark parser's tag-relative offsets include)."""
+    header the engine parser's tag-relative offsets include)."""
     version = body[0]
     if version == 0:
         return parse_mvhd_v0(body)
@@ -52,128 +59,78 @@ def parse_mvhd(body: bytes):
     return timescale, duration, next_track
 
 
-def test_synth_mp4_v1_walks_and_parses(spark):
+def test_synth_mp4_v1_walks_and_parses():
     """r11 version-1 mvhd: the 64-bit layout must walk with the
     independent parser (which validates the box sizes structurally)
-    and the Spark parse must agree on every field — including
+    and the engine parse must agree on every field — including
     durations PAST 2^32, where the v0 read would be meaningless."""
-    big = F.when(F.col("id") % 2 == 1, F.lit(2**33)).otherwise(F.lit(0))
-    df = spark.range(10).select(
-        "id",
-        synth_mp4(
-            F.lit("isom"),
-            F.lit(90000),
-            (F.lit(7000) + F.col("id").cast("long") * 4391 + big),
-            (F.col("id") % 4 + 1).cast("int"),
-            version1=True,
-        ).alias("payload"),
-    )
-    got = df.select("id", video_meta(F.col("payload")).alias("m"), "payload").collect()
-    for r in got:
-        blob = bytes(r.payload)
+    for i in range(10):
+        want_dur = 7000 + i * 4391 + (2**33 if i % 2 == 1 else 0)
+        blob = synth_mp4("isom", 90000, want_dur, i % 4 + 1, version1=True)
+        m = video_meta(blob)
         assert len(blob) == 148
         boxes = dict(walk_boxes(blob))
         assert set(boxes) == {"ftyp", "moov"}
         moov_children = dict(walk_boxes(blob, start=28))
         ts, dur, next_track = parse_mvhd(moov_children["mvhd"])
-        want_dur = 7000 + r.id * 4391 + (2**33 if r.id % 2 == 1 else 0)
         assert dur == want_dur
-        assert r.m.mime_type == "video/mp4"
-        assert r.m.timescale == ts == 90000
-        assert r.m.duration_ms == dur * 1000 // ts
-        assert r.m.n_tracks == next_track - 1 == r.id % 4 + 1
+        assert m.mime_type == "video/mp4"
+        assert m.timescale == ts == 90000
+        assert m.duration_ms == dur * 1000 // ts
+        assert m.n_tracks == next_track - 1 == i % 4 + 1
 
 
-def test_video_meta_v1_unknown_duration_stays_null(spark):
+def test_video_meta_v1_unknown_duration_stays_null():
     """The spec's 'all ones = unknown duration' v1 sentinel must stay
     NULL (the gated two-halves read) — an unguarded 8-byte read would
-    overflow ANSI long and fail the whole backfill row."""
-    df = spark.range(1).select(
-        synth_mp4(
-            F.lit("isom"), F.lit(600), F.lit(0), F.lit(1).cast("int"),
-            version1=True,
-        ).alias("p0")
-    )
-    blob = bytearray(bytes(df.collect()[0]["p0"]))
+    overflow the bigint column and fail the whole backfill batch."""
+    blob = bytearray(synth_mp4("isom", 600, 0, 1, version1=True))
     # duration u64 lives at moov(28)+8(box hdr)+24 = byte 60..67
     blob[60:68] = b"\xff" * 8
-    got = (
-        spark.createDataFrame([(bytes(blob),)], "payload binary")
-        .select(video_meta(F.col("payload")).alias("m"))
-        .collect()[0]["m"]
-    )
-    assert got["mime_type"] == "video/mp4"
-    assert got["timescale"] == 600
-    assert got["duration_ms"] is None
-    assert got["n_tracks"] == 1
+    got = video_meta(bytes(blob))
+    assert got.mime_type == "video/mp4"
+    assert got.timescale == 600
+    assert got.duration_ms is None
+    assert got.n_tracks == 1
 
 
-def test_synth_mp4_walks_with_independent_parser(spark):
-    rows = (
-        spark.range(8)
-        .select(
-            "id",
-            synth_mp4(
-                F.when(F.col("id") % 2 == 0, F.lit("isom")).otherwise(F.lit("mp42")),
-                (F.lit(600) + F.col("id").cast("int") * 100),
-                (F.lit(5000) + F.col("id").cast("int") * 997),
-                (F.col("id") % 3 + 1).cast("int"),
-            ).alias("payload"),
-        )
-        .collect()
-    )
-    for r in rows:
-        boxes = dict(walk_boxes(bytes(r.payload)))
+def test_synth_mp4_walks_with_independent_parser():
+    for i in range(8):
+        payload = synth_mp4("isom" if i % 2 == 0 else "mp42", 600 + i * 100,
+                            5000 + i * 997, i % 3 + 1)
+        boxes = dict(walk_boxes(payload))
         assert set(boxes) == {"ftyp", "moov"}
-        assert boxes["ftyp"][:4].decode() == ("isom" if r.id % 2 == 0 else "mp42")
+        assert boxes["ftyp"][:4].decode() == ("isom" if i % 2 == 0 else "mp42")
         assert boxes["ftyp"][8:12] == b"mp41"  # compatible brand
-        moov_children = dict(walk_boxes(bytes(r.payload), start=28))
+        moov_children = dict(walk_boxes(payload, start=28))
         ts, dur, next_track = parse_mvhd_v0(moov_children["mvhd"])
-        assert ts == 600 + r.id * 100
-        assert dur == 5000 + r.id * 997
-        assert next_track == r.id % 3 + 2
+        assert ts == 600 + i * 100
+        assert dur == 5000 + i * 997
+        assert next_track == i % 3 + 2
 
 
-def test_video_meta_matches_independent_parser(spark):
-    df = spark.range(12).select(
-        synth_mp4(
-            F.lit("isom"),
-            F.lit(90000),
-            (F.lit(1000) + F.col("id").cast("int") * 4391),
-            (F.col("id") % 4 + 1).cast("int"),
-        ).alias("payload")
-    )
-    got = df.select(video_meta(F.col("payload")).alias("m"), "payload").collect()
-    for r in got:
-        moov_children = dict(walk_boxes(bytes(r.payload), start=28))
+def test_video_meta_matches_independent_parser():
+    for i in range(12):
+        payload = synth_mp4("isom", 90000, 1000 + i * 4391, i % 4 + 1)
+        m = video_meta(payload)
+        moov_children = dict(walk_boxes(payload, start=28))
         ts, dur, next_track = parse_mvhd_v0(moov_children["mvhd"])
-        assert r.m.mime_type == "video/mp4"
-        assert r.m.brand == "isom"
-        assert r.m.timescale == ts == 90000
-        assert r.m.duration_ms == dur * 1000 // ts
-        assert r.m.n_tracks == next_track - 1
+        assert m.mime_type == "video/mp4"
+        assert m.brand == "isom"
+        assert m.timescale == ts == 90000
+        assert m.duration_ms == dur * 1000 // ts
+        assert m.n_tracks == next_track - 1
 
 
-def test_video_meta_runtime_box_scan_tolerates_layout_drift(spark):
+def test_video_meta_runtime_box_scan_tolerates_layout_drift():
     """mvhd is found by the runtime scan, not a fixed offset: inject a
     free box between ftyp and moov and the parse must still succeed."""
-    base = (
-        spark.range(1)
-        .select(
-            synth_mp4(
-                F.lit("mp42"), F.lit(1000), F.lit(12345), F.lit(2).cast("int")
-            ).alias("p")
-        )
-        .collect()[0]
-        .p
-    )
-    raw = bytes(base)
+    raw = synth_mp4("mp42", 1000, 12345, 2)
     free = struct.pack(">I4s", 16, b"free") + b"\x00" * 8
     shifted = raw[:20] + free + raw[20:]
     # the independent walker agrees the shifted layout is still valid BMFF
     assert [t for t, _ in walk_boxes(shifted)] == ["ftyp", "free", "moov"]
-    df = spark.createDataFrame([(shifted,)], "payload binary")
-    m = df.select(video_meta(F.col("payload")).alias("m")).collect()[0].m
+    m = video_meta(shifted)
     assert m.mime_type == "video/mp4"
     assert m.brand == "mp42"
     assert m.timescale == 1000
@@ -181,23 +138,12 @@ def test_video_meta_runtime_box_scan_tolerates_layout_drift(spark):
     assert m.n_tracks == 2
 
 
-def test_video_meta_decoy_mvhd_before_moov_ignored(spark):
+def test_video_meta_decoy_mvhd_before_moov_ignored():
     """The mvhd scan is moov-ANCHORED: 'mvhd' bytes appearing in data
     BEFORE the moov box (here: inside a free box payload) must not
     mislead the parse — and a MISALIGNED decoy cannot mask the real
-    aligned tag either (the spaced-hex locate is structurally
-    byte-aligned)."""
-    base = (
-        spark.range(1)
-        .select(
-            synth_mp4(
-                F.lit("isom"), F.lit(600), F.lit(54321), F.lit(3).cast("int")
-            ).alias("p")
-        )
-        .collect()[0]
-        .p
-    )
-    raw = bytes(base)
+    aligned tag either."""
+    raw = synth_mp4("isom", 600, 54321, 3)
     # free box whose payload contains an ALIGNED decoy 'mvhd' + fake fields
     decoy_aligned = struct.pack(">I4s", 24, b"free") + b"mvhd" + b"\x99" * 12
     # free box whose payload contains a MISALIGNED decoy (offset by 1 byte)
@@ -205,49 +151,34 @@ def test_video_meta_decoy_mvhd_before_moov_ignored(spark):
     for decoy in (decoy_aligned, decoy_misaligned):
         shifted = raw[:20] + decoy + raw[20:]
         assert [t for t, _ in walk_boxes(shifted)] == ["ftyp", "free", "moov"]
-        df = spark.createDataFrame([(shifted,)], "payload binary")
-        m = df.select(video_meta(F.col("payload")).alias("m")).collect()[0].m
+        m = video_meta(shifted)
         assert m.mime_type == "video/mp4"
         assert m.timescale == 600
         assert m.duration_ms == 54321 * 1000 // 600
         assert m.n_tracks == 3
 
 
-def test_video_meta_unknown_bytes_never_error(spark):
-    df = spark.createDataFrame(
-        [(b"\x00",), (b"",), (b"ftypnot at offset 5",), (b"not video at all",)],
-        "payload binary",
-    )
-    got = df.select(video_meta(F.col("payload")).alias("m")).collect()
-    for r in got:
-        assert r.m.mime_type == "application/octet-stream"
-        assert r.m.brand is None
-        assert r.m.timescale is None and r.m.duration_ms is None
-        assert r.m.n_tracks is None
+def test_video_meta_unknown_bytes_never_error():
+    for payload in (b"\x00", b"", b"ftypnot at offset 5", b"not video at all"):
+        m = video_meta(payload)
+        assert m.mime_type == "application/octet-stream"
+        assert m.brand is None
+        assert m.timescale is None and m.duration_ms is None
+        assert m.n_tracks is None
 
 
-def test_sniff_mime_routes_mp4(spark):
-    mp4 = (
-        spark.range(1)
-        .select(
-            synth_mp4(
-                F.lit("isom"), F.lit(600), F.lit(600), F.lit(1).cast("int")
-            ).alias("p")
-        )
-        .collect()[0]
-        .p
-    )
+def test_sniff_mime_routes_mp4():
+    mp4 = synth_mp4("isom", 600, 600, 1)
     cases = [
-        (bytes(mp4), "video/mp4"),
+        (mp4, "video/mp4"),
         (b"xxxxftyp" + b"rest", "video/mp4"),  # any ftyp-at-5 container
         (b"ftyp at wrong offset", "application/octet-stream"),
     ]
-    df = spark.createDataFrame([(p,) for p, _ in cases], "payload binary")
-    got = [r[0] for r in df.select(sniff_mime(F.col("payload"))).collect()]
+    got = [sniff_mime(p) for p, _ in cases]
     assert got == [m for _, m in cases]
 
 
-def test_sniff_mime_routes_bmff_brands(spark):
+def test_sniff_mime_routes_bmff_brands():
     """ISO-BMFF major-brand routing: HEIC/AVIF stills and M4A audio must
     NOT fall through to the video pipeline (ADVICE r6); movie brands and
     unknown brands keep the documented video/mp4 default."""
@@ -267,6 +198,5 @@ def test_sniff_mime_routes_bmff_brands(spark):
         (bmff(b"mp42"), "video/mp4"),
         (bmff(b"qt  "), "video/mp4"),
     ]
-    df = spark.createDataFrame([(p,) for p, _ in cases], "payload binary")
-    got = [r[0] for r in df.select(sniff_mime(F.col("payload"))).collect()]
+    got = [sniff_mime(p) for p, _ in cases]
     assert got == [m for _, m in cases]

@@ -1052,57 +1052,39 @@ def test_real_decoder_is_stub(spark):
     )
 
 
-def test_image_meta_parses_real_headers(spark):
-    """The expression parser must decode genuine container bytes — a real
-    161×81 PNG header (as any PNG encoder writes it), a real GIF89a
-    header, and an unknown format (graceful NULLs, never an error)."""
-    from crypto_market_tracker_etl_spark.multimodal.binary import image_meta
+def test_image_meta_parses_real_headers():
+    """The parser must decode genuine container bytes — a real 161×81
+    PNG header (as any PNG encoder writes it), a real GIF89a header,
+    and an unknown format (graceful NULLs, never an error)."""
+    from crypto_market_tracker_etl_spark.multimodal.pymedia import (
+        parse_image_meta,
+    )
 
     real_png = bytes.fromhex(
         "89504e470d0a1a0a0000000d49484452000000a1000000510806000000"
     )
     real_gif = b"GIF89a" + bytes([0x40, 0x01, 0xF0, 0x00]) + b"\xf7\x00\x00"
     junk = b"\x00\x01\x02not an image"
-    df = spark.createDataFrame(
-        [(1, real_png), (2, real_gif), (3, junk)], "id long, payload binary"
-    )
-    got = {
-        r["id"]: (r["m"]["mime_type"], r["m"]["width"], r["m"]["height"])
-        for r in df.select("id", image_meta(F.col("payload")).alias("m")).collect()
-    }
+    got = {k: parse_image_meta(p)
+           for k, p in ((1, real_png), (2, real_gif), (3, junk))}
     assert got[1] == ("image/png", 161, 81)
     assert got[2] == ("image/gif", 320, 240)  # 0x0140 LE, 0x00F0 LE
     assert got[3] == ("application/octet-stream", None, None)
 
 
-def test_synth_headers_roundtrip(spark):
+def test_synth_headers_roundtrip():
     """synth_png/synth_gif emit bytes the parser reads back exactly —
     including the endianness flip between the two formats."""
-    from crypto_market_tracker_etl_spark.multimodal.binary import (
-        image_meta,
+    from crypto_market_tracker_etl_spark.multimodal.pymedia import (
+        parse_image_meta,
         synth_gif,
         synth_png,
     )
 
-    df = spark.range(1, 50).select(
-        "id",
-        image_meta(
-            synth_png((F.col("id") * 37 % 4096).cast("int") + 1,
-                      (F.col("id") * 11 % 4096).cast("int") + 1)
-        ).alias("p"),
-        image_meta(
-            synth_gif((F.col("id") * 37 % 4096).cast("int") + 1,
-                      (F.col("id") * 11 % 4096).cast("int") + 1)
-        ).alias("g"),
-    )
-    for r in df.collect():
-        w, h = r["id"] * 37 % 4096 + 1, r["id"] * 11 % 4096 + 1
-        assert (r["p"]["mime_type"], r["p"]["width"], r["p"]["height"]) == (
-            "image/png", w, h,
-        )
-        assert (r["g"]["mime_type"], r["g"]["width"], r["g"]["height"]) == (
-            "image/gif", w, h,
-        )
+    for i in range(1, 50):
+        w, h = i * 37 % 4096 + 1, i * 11 % 4096 + 1
+        assert parse_image_meta(synth_png(w, h)) == ("image/png", w, h)
+        assert parse_image_meta(synth_gif(w, h)) == ("image/gif", w, h)
 
 
 def test_cache_scope_releases_on_exit_and_on_error(spark):
@@ -1210,12 +1192,14 @@ def _py_jpeg_dims(b: bytes):
     return None
 
 
-def test_jpeg_meta_segment_walk(spark):
+def test_jpeg_meta_segment_walk():
     """The JPEG SOF walk must be a real segment walk, not a fixed offset:
     dims parse with SOF0 after a deep APPn stack, with progressive SOF2,
     and degenerate streams (SOS before any SOF; desynced bytes) yield
     NULL dims — mime stays image/jpeg on a valid signature."""
-    from crypto_market_tracker_etl_spark.multimodal.binary import image_meta
+    from crypto_market_tracker_etl_spark.multimodal.pymedia import (
+        parse_image_meta,
+    )
 
     def seg(marker, payload=b""):
         return bytes([0xFF, marker]) + (len(payload) + 2).to_bytes(2, "big") + payload
@@ -1237,15 +1221,7 @@ def test_jpeg_meta_segment_walk(spark):
         # 17 APP segments: past the 16-step bound → NULLs, not an error
         5: (soi + app1 * 17 + sof0, None, None),
     }
-    df = spark.createDataFrame(
-        [(k, v[0]) for k, v in cases.items()], "id long, payload binary"
-    )
-    got = {
-        r["id"]: (r["m"]["mime_type"], r["m"]["width"], r["m"]["height"])
-        for r in df.select(
-            "id", image_meta(F.col("payload")).alias("m")
-        ).collect()
-    }
+    got = {k: parse_image_meta(v[0]) for k, v in cases.items()}
     for k, (_, w, h) in cases.items():
         assert got[k] == ("image/jpeg", w, h), (k, got[k])
     # the independent parser agrees on every parseable case
@@ -1255,33 +1231,22 @@ def test_jpeg_meta_segment_walk(spark):
     assert _py_jpeg_dims(cases[4][0]) is None
 
 
-def test_synth_jpeg_roundtrip_and_independent_parser(spark):
-    """synth_jpeg emits bytes BOTH parsers read back exactly: the Spark
-    expression walk and the pure-Python reference — so the analytic
-    oracle of [image_meta]/[media_catalog] rests on independently
-    verified bytes, not the parser grading its own homework."""
-    from crypto_market_tracker_etl_spark.multimodal.binary import (
-        image_meta,
+def test_synth_jpeg_roundtrip_and_independent_parser():
+    """synth_jpeg emits bytes BOTH parsers read back exactly: the
+    engine's segment walk and the pure-Python reference — so the
+    analytic oracle of [image_meta]/[media_catalog] rests on
+    independently verified bytes, not the parser grading its own
+    homework."""
+    from crypto_market_tracker_etl_spark.multimodal.pymedia import (
+        parse_image_meta,
         synth_jpeg,
     )
 
-    df = spark.range(1, 50).select(
-        "id",
-        synth_jpeg(
-            (F.col("id") * 37 % 4096).cast("int") + 1,
-            (F.col("id") * 11 % 4096).cast("int") + 1,
-        ).alias("payload"),
-    )
-    rows = df.select(
-        "id", "payload", image_meta(F.col("payload")).alias("m")
-    ).collect()
-    assert len(rows) == 49
-    for r in rows:
-        w, h = r["id"] * 37 % 4096 + 1, r["id"] * 11 % 4096 + 1
-        assert (r["m"]["mime_type"], r["m"]["width"], r["m"]["height"]) == (
-            "image/jpeg", w, h,
-        )
-        assert _py_jpeg_dims(bytes(r["payload"])) == (w, h)
+    for i in range(1, 50):
+        w, h = i * 37 % 4096 + 1, i * 11 % 4096 + 1
+        payload = synth_jpeg(w, h)
+        assert parse_image_meta(payload) == ("image/jpeg", w, h)
+        assert _py_jpeg_dims(payload) == (w, h)
 
 
 def _py_webp_dims(b: bytes):
@@ -1330,52 +1295,35 @@ def _py_webp_dims(b: bytes):
     return None
 
 
-def test_synth_webp_roundtrip_and_independent_parser(spark):
+def test_synth_webp_roundtrip_and_independent_parser():
     """All three synth_webp variants emit bytes BOTH parsers read back
-    exactly — Spark's fixed-offset expression parse and the pure-Python
+    exactly — the engine's fixed-offset parse and the pure-Python
     reference — including at the 14-bit boundary dims (16383/16384)
     where the VP8 scale bits and the VP8L bitfield packing would first
     betray an off-by-one."""
-    from crypto_market_tracker_etl_spark.multimodal.binary import (
-        image_meta,
+    from crypto_market_tracker_etl_spark.multimodal.pymedia import (
+        parse_image_meta,
         synth_webp_vp8,
         synth_webp_vp8l,
         synth_webp_vp8x,
     )
 
-    w = (F.col("id") * 37 % 16383).cast("int") + 1  # VP8 max 16383
-    h = (F.col("id") * 11 % 16383).cast("int") + 1
-    df = spark.range(1, 50).select(
-        "id",
-        synth_webp_vp8(w, h).alias("p8"),
-        synth_webp_vp8l(w, h).alias("p8l"),
-        synth_webp_vp8x(w, h).alias("p8x"),
-    )
-    rows = df.select(
-        "id",
-        "p8",
-        "p8l",
-        "p8x",
-        image_meta(F.col("p8")).alias("m8"),
-        image_meta(F.col("p8l")).alias("m8l"),
-        image_meta(F.col("p8x")).alias("m8x"),
-    ).collect()
-    assert len(rows) == 49
-    for r in rows:
-        w_, h_ = r["id"] * 37 % 16383 + 1, r["id"] * 11 % 16383 + 1
-        for m, p in (("m8", "p8"), ("m8l", "p8l"), ("m8x", "p8x")):
-            assert (
-                r[m]["mime_type"], r[m]["width"], r[m]["height"]
-            ) == ("image/webp", w_, h_), (m, r["id"])
-            assert _py_webp_dims(bytes(r[p])) == (w_, h_), (p, r["id"])
+    for i in range(1, 50):
+        w, h = i * 37 % 16383 + 1, i * 11 % 16383 + 1  # VP8 max 16383
+        for synth in (synth_webp_vp8, synth_webp_vp8l, synth_webp_vp8x):
+            payload = synth(w, h)
+            assert parse_image_meta(payload) == ("image/webp", w, h), (
+                synth.__name__, i,
+            )
+            assert _py_webp_dims(payload) == (w, h), (synth.__name__, i)
 
 
-def test_webp_malformed_and_routing(spark):
+def test_webp_malformed_and_routing():
     """Malformed WebP yields NULL dims (never an error) with mime still
     image/webp on a valid RIFF+WEBP shell; sniff_mime routes WebP to the
     image pipeline and keeps WAV (the other RIFF tenant) on audio."""
-    from crypto_market_tracker_etl_spark.multimodal.binary import (
-        image_meta,
+    from crypto_market_tracker_etl_spark.multimodal.pymedia import (
+        parse_image_meta,
         sniff_mime,
     )
 
@@ -1393,18 +1341,12 @@ def test_webp_malformed_and_routing(spark):
         # truncated: RIFF+WEBP only, no chunk at all
         4: b"RIFF\x04\x00\x00\x00WEBP",
     }
-    df = spark.createDataFrame(
-        list(cases.items()), "id long, payload binary"
-    ).select(
-        "id",
-        image_meta(F.col("payload")).alias("m"),
-        sniff_mime(F.col("payload")).alias("mime"),
-    )
-    for r in df.collect():
-        assert r["m"]["mime_type"] == "image/webp", r["id"]
-        assert r["m"]["width"] is None and r["m"]["height"] is None, r["id"]
-        assert r["mime"] == "image/webp", r["id"]
-        assert _py_webp_dims(cases[r["id"]]) is None, r["id"]
+    for k, payload in cases.items():
+        mime, w, h = parse_image_meta(payload)
+        assert mime == "image/webp", k
+        assert w is None and h is None, k
+        assert sniff_mime(payload) == "image/webp", k
+        assert _py_webp_dims(payload) is None, k
 
 
 def _py_tiff_dims(b: bytes):
@@ -1447,44 +1389,32 @@ def _py_tiff_dims(b: bytes):
     return (w, h) if (w is not None and h is not None) else None
 
 
-def test_synth_tiff_roundtrip_and_independent_parser(spark):
+def test_synth_tiff_roundtrip_and_independent_parser():
     """synth_tiff in BOTH byte orders emits bytes BOTH parsers read back
-    exactly — the Spark bounded IFD walk and the pure-Python reference —
-    so the analytic oracle of [image_meta]/[media_catalog] rests on
-    independently verified bytes."""
-    from crypto_market_tracker_etl_spark.multimodal.binary import (
-        image_meta,
+    exactly — the engine's bounded IFD walk and the pure-Python
+    reference — so the analytic oracle of [image_meta]/[media_catalog]
+    rests on independently verified bytes."""
+    from crypto_market_tracker_etl_spark.multimodal.pymedia import (
+        parse_image_meta,
         synth_tiff,
     )
 
-    w = (F.col("id") * 37 % 4096).cast("int") + 1
-    h = (F.col("id") * 11 % 4096).cast("int") + 1
-    df = spark.range(1, 50).select(
-        "id",
-        synth_tiff(w, h, little_endian=True).alias("le"),
-        synth_tiff(w, h, little_endian=False).alias("be"),
-    )
-    rows = df.select(
-        "id", "le", "be",
-        image_meta(F.col("le")).alias("ml"),
-        image_meta(F.col("be")).alias("mb"),
-    ).collect()
-    assert len(rows) == 49
-    for r in rows:
-        w_, h_ = r["id"] * 37 % 4096 + 1, r["id"] * 11 % 4096 + 1
-        for m, p in (("ml", "le"), ("mb", "be")):
-            assert (
-                r[m]["mime_type"], r[m]["width"], r[m]["height"]
-            ) == ("image/tiff", w_, h_), (m, r["id"])
-            assert _py_tiff_dims(bytes(r[p])) == (w_, h_), (p, r["id"])
+    for i in range(1, 50):
+        w, h = i * 37 % 4096 + 1, i * 11 % 4096 + 1
+        for le in (True, False):
+            payload = synth_tiff(w, h, little_endian=le)
+            assert parse_image_meta(payload) == ("image/tiff", w, h), (le, i)
+            assert _py_tiff_dims(payload) == (w, h), (le, i)
 
 
-def test_tiff_walk_is_a_real_walk_and_malformed_never_errors(spark):
+def test_tiff_walk_is_a_real_walk_and_malformed_never_errors():
     """The IFD walk must handle displaced IFDs, preceding decoy entries,
     LONG-typed dims, offset-valued (non-inline) dims → NULL, and entry
     counts past the 32 bound → NULL; mime stays image/tiff on a valid
     endian header."""
-    from crypto_market_tracker_etl_spark.multimodal.binary import image_meta
+    from crypto_market_tracker_etl_spark.multimodal.pymedia import (
+        parse_image_meta,
+    )
 
     def tiff(entries, ifd_at=8, order="little", count=None, pad=b""):
         hdr = (b"II\x2a\x00" if order == "little" else b"MM\x00\x2a") + (
@@ -1542,15 +1472,7 @@ def test_tiff_walk_is_a_real_walk_and_malformed_never_errors(spark):
         # negative int
         7: (tiff([(256, 4, 1, 2**31), (257, 4, 1, 2**32 - 1)]), None, None),
     }
-    df = spark.createDataFrame(
-        [(k, v[0]) for k, v in cases.items()], "id long, payload binary"
-    )
-    got = {
-        r["id"]: (r["m"]["mime_type"], r["m"]["width"], r["m"]["height"])
-        for r in df.select(
-            "id", image_meta(F.col("payload")).alias("m")
-        ).collect()
-    }
+    got = {k: parse_image_meta(v[0]) for k, v in cases.items()}
     for k, (_, w, h) in cases.items():
         assert got[k] == ("image/tiff", w, h), (k, got[k])
     assert _py_tiff_dims(cases[1][0]) == (70000, 81)
@@ -1558,59 +1480,54 @@ def test_tiff_walk_is_a_real_walk_and_malformed_never_errors(spark):
     assert _py_tiff_dims(cases[3][0]) is None
 
 
-def test_tiff_multi_ifd_and_vp8x_wrapped_roundtrip(spark):
+def test_tiff_multi_ifd_and_vp8x_wrapped_roundtrip():
     """The r10 exotic layouts: a TIFF whose dims sit in IFD1 behind a
     metadata-only IFD0 (both byte orders), and an extended WebP whose
     bitstream chunk (VP8L and VP8) sits behind the VP8X chunk list with
     canvas dims that DISAGREE — the parse must return the bitstream
     dims (what a decoder renders), not the canvas. Both parsers and the
     independent pure-Python references agree."""
-    from crypto_market_tracker_etl_spark.multimodal.binary import (
-        image_meta,
+    from crypto_market_tracker_etl_spark.multimodal.pymedia import (
+        parse_image_meta,
         synth_tiff,
         synth_webp_vp8x_wrapped,
     )
 
-    w = (F.col("id") * 37 % 4096).cast("int") + 1
-    h = (F.col("id") * 11 % 4096).cast("int") + 1
-    cw = (F.col("id") * 5 % 1000).cast("int") + 2  # mismatched canvas
-    ch = (F.col("id") * 3 % 1000).cast("int") + 2
-    df = spark.range(1, 40).select(
-        "id",
-        synth_tiff(w, h, little_endian=True, dims_in_ifd1=True).alias("t1l"),
-        synth_tiff(w, h, little_endian=False, dims_in_ifd1=True).alias("t1b"),
-        synth_webp_vp8x_wrapped(cw, ch, w, h, lossless=True).alias("xl"),
-        synth_webp_vp8x_wrapped(cw, ch, w, h, lossless=False).alias("x8"),
-    )
-    rows = df.select(
-        "id", "t1l", "t1b", "xl", "x8",
-        image_meta(F.col("t1l")).alias("m1l"),
-        image_meta(F.col("t1b")).alias("m1b"),
-        image_meta(F.col("xl")).alias("mxl"),
-        image_meta(F.col("x8")).alias("mx8"),
-    ).collect()
-    assert len(rows) == 39
-    for r in rows:
-        w_, h_ = r["id"] * 37 % 4096 + 1, r["id"] * 11 % 4096 + 1
-        for m, p, mime in (
-            ("m1l", "t1l", "image/tiff"), ("m1b", "t1b", "image/tiff"),
-            ("mxl", "xl", "image/webp"), ("mx8", "x8", "image/webp"),
-        ):
-            assert (
-                r[m]["mime_type"], r[m]["width"], r[m]["height"]
-            ) == (mime, w_, h_), (m, r["id"])
-            assert _py_webp_dims(bytes(r[p])) == (w_, h_) if p.startswith(
+    def vp8x_wrapped_lossy(cw, ch, w, h):
+        """The same VP8X + ICCP chunk list with a lossy VP8 bitstream."""
+        chunks = synth_webp_vp8x_wrapped(cw, ch, w, h)[12:42]
+        stream = (b"VP8 " + (10).to_bytes(4, "little") + b"\x90\x02\x00"
+                  + b"\x9d\x01\x2a" + w.to_bytes(2, "little")
+                  + h.to_bytes(2, "little"))
+        body = b"WEBP" + chunks + stream
+        return b"RIFF" + len(body).to_bytes(4, "little") + body
+
+    for i in range(1, 40):
+        w, h = i * 37 % 4096 + 1, i * 11 % 4096 + 1
+        cw, ch = i * 5 % 1000 + 2, i * 3 % 1000 + 2  # mismatched canvas
+        payloads = {
+            "t1l": synth_tiff(w, h, little_endian=True, dims_in_ifd1=True),
+            "t1b": synth_tiff(w, h, little_endian=False, dims_in_ifd1=True),
+            "xl": synth_webp_vp8x_wrapped(cw, ch, w, h),
+            "x8": vp8x_wrapped_lossy(cw, ch, w, h),
+        }
+        for p, payload in payloads.items():
+            mime = "image/webp" if p.startswith("x") else "image/tiff"
+            assert parse_image_meta(payload) == (mime, w, h), (p, i)
+            assert _py_webp_dims(payload) == (w, h) if p.startswith(
                 "x"
-            ) else _py_tiff_dims(bytes(r[p])) == (w_, h_), (p, r["id"])
+            ) else _py_tiff_dims(payload) == (w, h), (p, i)
 
 
-def test_tiff_hop_and_webp_walk_malformed_never_error(spark):
+def test_tiff_hop_and_webp_walk_malformed_never_error():
     """Hostile inputs against the r10 dereferences: a next-IFD offset
     past the payload, a self-referential IFD loop (the single-hop
     budget must end it), a VP8X whose chunk list dead-ends, a hostile
     chunk size walking past the end, and an ANMF-only animation
     (canvas fallback). NULL or canvas dims, never an error."""
-    from crypto_market_tracker_etl_spark.multimodal.binary import image_meta
+    from crypto_market_tracker_etl_spark.multimodal.pymedia import (
+        parse_image_meta,
+    )
 
     def tiff_le(entries, nxt, ifd_at=8):
         hdr = b"II\x2a\x00" + ifd_at.to_bytes(4, "little")
@@ -1656,30 +1573,22 @@ def test_tiff_hop_and_webp_walk_malformed_never_error(spark):
         7: (webp([vp8x, (b"VP8L", b"\x00\x0f\x00\xc0\x03")]), "image/webp",
             10, 20),
     }
-    df = spark.createDataFrame(
-        [(k, v[0]) for k, v in cases.items()], "id long, payload binary"
-    )
-    got = {
-        r["id"]: (r["m"]["mime_type"], r["m"]["width"], r["m"]["height"])
-        for r in df.select(
-            "id", image_meta(F.col("payload")).alias("m")
-        ).collect()
-    }
+    got = {k: parse_image_meta(v[0]) for k, v in cases.items()}
     for k, (_, mime, w, h) in cases.items():
         assert got[k] == (mime, w, h), (k, got[k])
 
 
-def test_parser_random_roundtrip_sweep(spark):
-    """Seeded random sweep over ALL image synth/parse pairs in one job:
-    500 random dim pairs (plus the corner dims pinned separately) must
-    round-trip bit-exactly through every format's Spark parse AND its
-    independent pure-Python reference."""
+def test_parser_random_roundtrip_sweep():
+    """Seeded random sweep over ALL image synth/parse pairs: 500 random
+    dim pairs (plus the corner dims pinned separately) must round-trip
+    bit-exactly through every format's parse AND its independent
+    pure-Python reference."""
     import random
 
     rng = random.Random(0xC0FFEE)
     dims = [(rng.randint(1, 16383), rng.randint(1, 16383)) for _ in range(500)]
-    from crypto_market_tracker_etl_spark.multimodal.binary import (
-        image_meta,
+    from crypto_market_tracker_etl_spark.multimodal.pymedia import (
+        parse_image_meta,
         synth_gif,
         synth_jpeg,
         synth_png,
@@ -1689,7 +1598,6 @@ def test_parser_random_roundtrip_sweep(spark):
         synth_webp_vp8x,
     )
 
-    df = spark.createDataFrame(dims, "w int, h int")
     synths = {
         "png": synth_png,
         "gif": lambda w, h: synth_gif(w, h),
@@ -1700,52 +1608,55 @@ def test_parser_random_roundtrip_sweep(spark):
         "tiff_le": lambda w, h: synth_tiff(w, h, little_endian=True),
         "tiff_be": lambda w, h: synth_tiff(w, h, little_endian=False),
     }
-    cols = [
-        image_meta(fn(F.col("w"), F.col("h"))).alias(name)
-        for name, fn in synths.items()
-        if name != "gif"  # GIF dims are u16: separate bounded sweep below
-    ]
-    rows = df.select("w", "h", *cols).collect()
-    for r in rows:
-        for name in synths:
+    refs = {"jpeg": _py_jpeg_dims, "vp8": _py_webp_dims, "vp8l": _py_webp_dims,
+            "vp8x": _py_webp_dims, "tiff_le": _py_tiff_dims,
+            "tiff_be": _py_tiff_dims}
+    for w, h in dims:
+        for name, fn in synths.items():
             if name == "gif":
-                continue
-            m = r[name]
-            assert (m["width"], m["height"]) == (r["w"], r["h"]), (
-                name, r["w"], r["h"], m,
-            )
-    gif_rows = (
-        df.select(
-            (F.col("w") % 65535 + 1).alias("w"),
-            (F.col("h") % 65535 + 1).alias("h"),
-        )
-        .select("w", "h", image_meta(synth_gif(F.col("w"), F.col("h"))).alias("m"))
-        .collect()
-    )
-    for r in gif_rows:
-        assert (r["m"]["width"], r["m"]["height"]) == (r["w"], r["h"])
+                continue  # GIF dims are u16: separate bounded sweep below
+            payload = fn(w, h)
+            m = parse_image_meta(payload)
+            assert (m[1], m[2]) == (w, h), (name, w, h, m)
+            if name in refs:
+                assert refs[name](payload) == (w, h), (name, w, h)
+    for w, h in dims:
+        w, h = w % 65535 + 1, h % 65535 + 1
+        m = parse_image_meta(synth_gif(w, h))
+        assert (m[1], m[2]) == (w, h)
 
 
-def test_parsers_never_error_on_random_bytes(spark):
+def test_parsers_never_error_on_random_bytes():
     """Fuzz: 2000 seeded random blobs (1-64 bytes, plus truncated
     prefixes of every real signature) through image_meta, audio_meta,
-    video_meta, and sniff_mime in ONE plan — parsers must never raise,
-    and any parsed dims/rates must be non-negative."""
+    video_meta, the EBML walks and sniff_mime — parsers must never
+    raise, any parsed dims/rates must be non-negative, and every int
+    field must fit its column type in the query's DDL (one value that
+    does not would fail the whole Arrow batch)."""
     import random
 
-    from crypto_market_tracker_etl_spark.multimodal.binary import (
-        audio_meta,
-        image_meta,
-        sniff_mime,
-        video_meta,
-    )
+    from crypto_market_tracker_etl_spark.multimodal import pymedia as pm
 
+    def ddl_bits(ddl):
+        """Bit width per field after doc_id and n_bytes (0: not an int)."""
+        return [{"int": 32, "bigint": 64}.get(col.split()[1], 0)
+                for col in ddl.split(", ")[2:]]
+
+    def fits(values, bits):
+        return all(
+            v is None or not n or -(2 ** (n - 1)) <= v < 2 ** (n - 1)
+            for v, n in zip(values, bits)
+        )
+
+    image_bits = ddl_bits(pm.IMAGE_META_DDL)
+    audio_bits = ddl_bits(pm.AUDIO_META_DDL)
+    video_bits = ddl_bits(pm.VIDEO_META_DDL)  # mime, brand, ts, dur, n, w, h
     rng = random.Random(0xBEEF)
     sigs = [
         b"\x89PNG\r\n\x1a\n", b"GIF89a", b"\xff\xd8\xff", b"RIFF",
         b"RIFF1234WEBP", b"RIFF1234WAVE", b"II\x2a\x00", b"MM\x00\x2a",
         b"fLaC", b"ID3", b"\xff\xfb", b"%PDF", b"PK\x03\x04", b"\x1f\x8b",
-        b"\x00\x00\x00\x14ftyp",
+        b"\x00\x00\x00\x14ftyp", bytes.fromhex("1A45DFA3"),
     ]
     blobs = [bytes(rng.randrange(256) for _ in range(rng.randint(1, 64)))
              for _ in range(2000)]
@@ -1753,24 +1664,24 @@ def test_parsers_never_error_on_random_bytes(spark):
         blobs.append(s + bytes(rng.randrange(256) for _ in range(32)))
         for i in range(len(s)):
             blobs.append(s[:i])
-    df = spark.createDataFrame([(b,) for b in blobs], "payload binary")
-    rows = df.select(
-        image_meta(F.col("payload")).alias("im"),
-        audio_meta(F.col("payload")).alias("am"),
-        video_meta(F.col("payload")).alias("vm"),
-        sniff_mime(F.col("payload")).alias("mime"),
-    ).collect()
-    assert len(rows) == len(blobs)
-    for r in rows:
-        assert r["mime"]  # routing always lands somewhere
-        for m, fields in (
-            ("im", ("width", "height")),
-            ("am", ("channels", "sample_rate_hz", "bits_per_sample")),
-            ("vm", ("timescale", "n_tracks")),
+    for b in blobs:
+        assert pm.sniff_mime(b)  # routing always lands somewhere
+        im, am, vm = (pm.parse_image_meta(b), pm.parse_audio_meta(b),
+                      pm.parse_video_mp4(b))
+        ei, ed = pm.ebml_info(b), pm.ebml_video_dims(b)
+        for m, vals, fields in (
+            ("im", im[1:], (0, 1)),  # width, height
+            ("am", am[1:4], (0, 1, 2)),  # channels, rate, bits
+            ("vm", (vm[2], vm[4]), (0, 1)),  # timescale, n_tracks
         ):
             for f in fields:
-                v = r[m][f]
+                v = vals[f]
                 assert v is None or v >= 0, (m, f, v)
+        assert fits(im, image_bits), (b.hex(), im)
+        assert fits(am, audio_bits), (b.hex(), am)
+        assert fits(vm, video_bits), (b.hex(), vm)
+        assert fits(ei, video_bits[2:4]), (b.hex(), ei)
+        assert fits(ed, video_bits[5:7]), (b.hex(), ed)
 
 
 def test_frame_sample_deterministic(spark):
@@ -2746,54 +2657,37 @@ def _py_bmp_dims(b: bytes):
     return (w, abs(h))
 
 
-def test_bmp_roundtrip_both_layouts(spark):
+def test_bmp_roundtrip_both_layouts():
     """r10 BMP: INFO layout (signed LE32 dims — the top-down half
     stores a NEGATIVE height the parse must report as |height|) and the
-    legacy CORE layout (unsigned LE16 at different offsets). Spark
+    legacy CORE layout (unsigned LE16 at different offsets). Engine
     parse ≡ the independent pure-Python reference on every row."""
-    from crypto_market_tracker_etl_spark.multimodal.binary import (
-        image_meta,
+    import struct
+
+    from crypto_market_tracker_etl_spark.multimodal.pymedia import (
+        parse_image_meta,
         sniff_mime,
         synth_bmp,
     )
 
-    w = (F.col("id") * 37 % 4096).cast("int") + 1
-    h = (F.col("id") * 11 % 4096).cast("int") + 1
-    rows = (
-        spark.range(1, 40)
-        .select(
-            "id",
-            synth_bmp(w, h, top_down=(F.col("id") % 2 == 0)).alias("info"),
-            synth_bmp(w, h, core=True).alias("core"),
-        )
-        .select(
-            "id", "info", "core",
-            image_meta(F.col("info")).alias("mi"),
-            image_meta(F.col("core")).alias("mc"),
-            sniff_mime(F.col("info")).alias("si"),
-        )
-        .collect()
-    )
-    for r in rows:
-        w_, h_ = r["id"] * 37 % 4096 + 1, r["id"] * 11 % 4096 + 1
-        for m, p in (("mi", "info"), ("mc", "core")):
-            assert (
-                r[m]["mime_type"], r[m]["width"], r[m]["height"]
-            ) == ("image/bmp", w_, h_), (m, r["id"])
-            assert _py_bmp_dims(bytes(r[p])) == (w_, h_), (p, r["id"])
-        assert r["si"] == "image/bmp"
-        if r["id"] % 2 == 0:  # the top-down half really stores negative
-            import struct
-
-            assert struct.unpack("<i", bytes(r["info"])[22:26])[0] == -h_
+    for i in range(1, 40):
+        w, h = i * 37 % 4096 + 1, i * 11 % 4096 + 1
+        info = synth_bmp(w, h, top_down=i % 2 == 0)
+        core = synth_bmp(w, h, core=True)
+        for p in (info, core):
+            assert parse_image_meta(p) == ("image/bmp", w, h), (p[14:18], i)
+            assert _py_bmp_dims(p) == (w, h), (p[14:18], i)
+        assert sniff_mime(info) == "image/bmp"
+        if i % 2 == 0:  # the top-down half really stores negative
+            assert struct.unpack("<i", info[22:26])[0] == -h
 
 
-def test_bmp_weak_magic_gate(spark):
+def test_bmp_weak_magic_gate():
     """"BM" alone is two bytes of text; the gate requires the
     spec-mandated zero reserved bytes, so "BMW motorcycles are..." is
     NOT routed as an image (the MP3-sync tightening applied to BMP)."""
-    from crypto_market_tracker_etl_spark.multimodal.binary import (
-        image_meta,
+    from crypto_market_tracker_etl_spark.multimodal.pymedia import (
+        parse_image_meta,
         sniff_mime,
     )
 
@@ -2802,22 +2696,13 @@ def test_bmp_weak_magic_gate(spark):
         (2, b"BM"),  # too short for any header
         (3, b"BM\x00\x00\x00\x00\x00\x00\x00\x00"),  # reserved ok, no DIB
     ]
-    rows = (
-        spark.createDataFrame(cases, "id long, payload binary")
-        .select(
-            "id",
-            sniff_mime(F.col("payload")).alias("mime"),
-            image_meta(F.col("payload")).alias("m"),
-        )
-        .collect()
-    )
-    by_id = {r["id"]: r for r in rows}
-    assert by_id[1]["mime"] == "application/octet-stream"
-    assert by_id[1]["m"]["mime_type"] == "application/octet-stream"
-    assert by_id[2]["mime"] == "application/octet-stream"
+    by_id = {k: (sniff_mime(p), parse_image_meta(p)) for k, p in cases}
+    assert by_id[1][0] == "application/octet-stream"
+    assert by_id[1][1][0] == "application/octet-stream"
+    assert by_id[2][0] == "application/octet-stream"
     # truncated-but-gated: routed image/bmp, dims NULL, never an error
-    assert by_id[3]["mime"] == "image/bmp"
-    assert by_id[3]["m"]["width"] is None and by_id[3]["m"]["height"] is None
+    assert by_id[3][0] == "image/bmp"
+    assert by_id[3][1][1] is None and by_id[3][1][2] is None
 
 
 def _py_ispe_dims(b: bytes):
@@ -2844,51 +2729,30 @@ def _py_ispe_dims(b: bytes):
     return walk(0, len(b))
 
 
-def test_heic_avif_ispe_roundtrip(spark):
+def test_heic_avif_ispe_roundtrip():
     """r10 HEIF family: genuine BMFF prefixes with the real
     meta→hdlr→iprp→ipco→ispe nesting under HEIC and AVIF major brands;
-    dims come from the ispe box via the meta-anchored locate. Spark
+    dims come from the ispe box via the bounded box descent. Engine
     parse ≡ the independent pure-Python box WALKER (which descends the
     actual nesting, proving the synth is a real HEIF layout)."""
-    from crypto_market_tracker_etl_spark.multimodal.binary import (
-        image_meta,
+    from crypto_market_tracker_etl_spark.multimodal.pymedia import (
+        parse_image_meta,
         sniff_mime,
         synth_heic,
     )
 
-    w = (F.col("id") * 37 % 4096).cast("int") + 1
-    h = (F.col("id") * 11 % 4096).cast("int") + 1
-    rows = (
-        spark.range(1, 40)
-        .select(
-            "id",
-            synth_heic(F.lit("heic"), w, h).alias("hc"),
-            synth_heic(F.lit("avif"), w, h).alias("av"),
-            synth_heic(F.lit("mif1"), w, h).alias("mf"),
-        )
-        .select(
-            "id", "hc", "av", "mf",
-            image_meta(F.col("hc")).alias("mc"),
-            image_meta(F.col("av")).alias("ma"),
-            image_meta(F.col("mf")).alias("mm"),
-            sniff_mime(F.col("hc")).alias("sc"),
-        )
-        .collect()
-    )
-    for r in rows:
-        w_, h_ = r["id"] * 37 % 4096 + 1, r["id"] * 11 % 4096 + 1
-        for m, p, mime in (
-            ("mc", "hc", "image/heic"), ("ma", "av", "image/avif"),
-            ("mm", "mf", "image/heif"),
-        ):
-            assert (
-                r[m]["mime_type"], r[m]["width"], r[m]["height"]
-            ) == (mime, w_, h_), (m, r["id"])
-            assert _py_ispe_dims(bytes(r[p])) == (w_, h_), (p, r["id"])
-        assert r["sc"] == "image/heic"  # router and parser agree
+    for i in range(1, 40):
+        w, h = i * 37 % 4096 + 1, i * 11 % 4096 + 1
+        for brand, mime in (("heic", "image/heic"), ("avif", "image/avif"),
+                            ("mif1", "image/heif")):
+            p = synth_heic(brand, w, h)
+            assert parse_image_meta(p) == (mime, w, h), (brand, i)
+            assert _py_ispe_dims(p) == (w, h), (brand, i)
+        # router and parser agree
+        assert sniff_mime(synth_heic("heic", w, h)) == "image/heic"
 
 
-def test_heic_decoy_ispe_defeated_by_descent(spark):
+def test_heic_decoy_ispe_defeated_by_descent():
     """r11 HEIF hardening: the decoy synth plants a byte-aligned fake
     'ispe' pattern (with dims +9999) inside the hdlr NAME, between the
     meta header and the real property chain — exactly where the r10
@@ -2897,69 +2761,42 @@ def test_heic_decoy_ispe_defeated_by_descent(spark):
     pure-Python walker (which descends the true nesting) must agree —
     and must ALSO be undeceived, proving the decoy is inside a box
     body, not accidentally a well-formed sibling box."""
-    from crypto_market_tracker_etl_spark.multimodal.binary import (
-        image_meta,
+    from crypto_market_tracker_etl_spark.multimodal.pymedia import (
+        parse_image_meta,
         sniff_mime,
         synth_heic,
     )
 
-    w = (F.col("id") * 37 % 4096).cast("int") + 1
-    h = (F.col("id") * 11 % 4096).cast("int") + 1
-    rows = (
-        spark.range(1, 40)
-        .select(
-            "id",
-            synth_heic(F.lit("heic"), w, h, decoy=True).alias("hc"),
-            synth_heic(F.lit("avif"), w, h, decoy=True).alias("av"),
-        )
-        .select(
-            "id", "hc", "av",
-            image_meta(F.col("hc")).alias("mc"),
-            image_meta(F.col("av")).alias("ma"),
-            sniff_mime(F.col("hc")).alias("sc"),
-        )
-        .collect()
-    )
-    for r in rows:
-        w_, h_ = r["id"] * 37 % 4096 + 1, r["id"] * 11 % 4096 + 1
-        for m, p, mime in (("mc", "hc", "image/heic"), ("ma", "av", "image/avif")):
-            blob = bytes(r[p])
+    for i in range(1, 40):
+        w, h = i * 37 % 4096 + 1, i * 11 % 4096 + 1
+        for brand, mime in (("heic", "image/heic"), ("avif", "image/avif")):
+            blob = synth_heic(brand, w, h, decoy=True)
             assert b"ispe" in blob[:81], "decoy missing from hdlr area"
-            assert (
-                r[m]["mime_type"], r[m]["width"], r[m]["height"]
-            ) == (mime, w_, h_), (m, r["id"], r[m])
-            assert _py_ispe_dims(blob) == (w_, h_), (p, r["id"])
-        assert r["sc"] == "image/heic"
+            got = parse_image_meta(blob)
+            assert got == (mime, w, h), (brand, i, got)
+            assert _py_ispe_dims(blob) == (w, h), (brand, i)
+        assert sniff_mime(synth_heic("heic", w, h, decoy=True)) == "image/heic"
 
 
-def test_heic_gate_and_malformed_never_error(spark):
+def test_heic_gate_and_malformed_never_error():
     """The brand gate and the honest NULLs: a video-brand BMFF is NOT
     an image here (video_meta's territory — the catalog routes it);
     an HEIC ftyp with no meta box, and one whose meta carries no ispe,
     are routed image/heic with NULL dims, never an error."""
-    from crypto_market_tracker_etl_spark.multimodal.binary import (
-        image_meta,
+    from crypto_market_tracker_etl_spark.multimodal.pymedia import (
+        parse_image_meta,
         synth_heic,
         synth_mp4,
     )
 
-    df = spark.range(1).select(
-        synth_mp4(
-            F.lit("isom"), F.lit(600), F.lit(6000), F.lit(1).cast("int")
-        ).alias("vid"),
-        synth_heic(F.lit("heic"), F.lit(9).cast("int"), F.lit(9).cast("int"))
-        .substr(1, 20)
-        .alias("nometa"),  # ftyp only
-        synth_heic(F.lit("heic"), F.lit(9).cast("int"), F.lit(9).cast("int"))
-        .substr(1, 60)
-        .alias("noispe"),  # meta truncated before the property chain
-    )
-    r = df.select(
-        image_meta(F.col("vid")).alias("v"),
-        image_meta(F.col("nometa")).alias("nm"),
-        image_meta(F.col("noispe")).alias("ni"),
-    ).collect()[0]
-    assert r["v"]["mime_type"] == "application/octet-stream"  # not an image
+    heic = synth_heic("heic", 9, 9)
+    r = {
+        "v": parse_image_meta(synth_mp4("isom", 600, 6000, 1)),
+        "nm": parse_image_meta(heic[:20]),  # ftyp only
+        # meta truncated before the property chain
+        "ni": parse_image_meta(heic[:60]),
+    }
+    assert r["v"][0] == "application/octet-stream"  # not an image
     for k in ("nm", "ni"):
-        assert r[k]["mime_type"] == "image/heic"
-        assert r[k]["width"] is None and r[k]["height"] is None, k
+        assert r[k][0] == "image/heic"
+        assert r[k][1] is None and r[k][2] is None, k

@@ -961,9 +961,10 @@ def test_multimodal_task_binaries_stay_bounded(spark):
     every executor core deserializes per task — r12 lesson: expression
     reuse expanded media_catalog's to 3.3 MB and 32 concurrent
     deserializations OOM'd the vanilla 1 GB driver the external
-    verifier uses. The let-binding/staging fixes brought it to ~2.0 MB
-    (multimodal/binary.py::_ebml_let); this budget pin catches the next
-    silent tree blow-up mechanically, before any OOM."""
+    verifier uses. The five queries now run one constant-size
+    mapInArrow stage (multimodal/pymedia.py) and the expression trees
+    are gone; this budget pin catches the next silent plan blow-up
+    mechanically, before any OOM."""
     from crypto_market_tracker_etl_spark import queries as qmod
 
     ser = spark._jvm.org.apache.spark.SparkEnv.get().closureSerializer()

@@ -1,168 +1,131 @@
-"""Differential pins for multimodal/pymedia.py (the r13 mapInArrow port
-of the five media metadata queries) against the expression path kept in
-multimodal/binary.py.
+"""Golden pins for multimodal/pymedia.py, the only implementation of the
+five media metadata queries (image_meta / audio_meta / video_meta /
+mime_sniff / media_catalog). No Spark session: every check is pure Python.
 
-Two layers, both over a doc_id range that covers every payload class AND
-every per-class parity branch (k = d//cycle walks the decoy/Xing-vs-Info/
-ogg-full/ebml-doctype alternations):
+tests/fixtures/media_golden.json was frozen at commit
+a32195155eb769292095eab0dcefa954f4c60163 from the expression-tree path
+that commit still carried (multimodal/binary.py and the
+``_*_payload_expr`` builders in queries_ext.py), which pymedia was ported
+from. It holds two layers:
 
-1. SYNTH bytes: pymedia.<family>_payload(d) must equal the expression
-   synth byte-for-byte — the port may not change a single payload bit.
-2. PARSE fields: binary.py's expression parsers evaluated over the
-   pymedia payloads must equal pymedia's parsers field-for-field — the
-   port may not change a single parsed value.
+1. ``payload_md5``: the first 16 hex digits of md5(payload) for doc_id
+   0..479 of every payload cycle. 480 ≥ 2 full parity cycles of the
+   largest class (19 × 2 × 2), so every class AND every per-class parity
+   branch is covered (k = d // cycle walks the decoy, Xing-vs-Info,
+   ogg-full and EBML-doctype alternations).
+2. ``parse``: the expression parsers' fields for 914 pymedia payloads
+   (image 0..299, audio 0..199, media 0..199, mime 0..63, video 0..149)
+   as ``[family, doc_id, sniff_mime, image_meta, audio_meta, video_meta,
+   ebml_doctype, ebml_info, ebml_video_dims]``. A ``null`` tuple is a
+   parser that did not recognize the payload: octet-stream (where the
+   parser reports a mime) and all-NULL fields.
 
-The build+execute of the expression trees is exactly the cost the port
-removes, so this differential is `slow`-tier; the default run keeps the
-five queries oracle-checked in the parity smoke sample instead."""
+Generating snippet, run at that commit in a session ``spark``; ``mime``
+and ``video`` are the two cycles rebuilt from binary.py synths in that
+commit's test_mime_and_video_synth_cycles_match::
+
+    ids = spark.range(480).select(F.col("id").alias("doc_id"))
+    exprs = {"image": qe._image_payload_expr(),
+             "audio": qe._audio_payload_expr(),
+             "media": qe._media_payload_expr(),
+             "mime": mime_expr, "video": video_expr}
+    md5 = {fam: [hashlib.md5(bytes(r.p)).hexdigest()[:16] for r in
+                 sorted(ids.select("doc_id", e.alias("p")).collect())]
+           for fam, e in exprs.items()}
+    payloads = [PAYLOADS[fam](d) for fam, d in parse_set]  # layer 2's 914
+    df = spark.createDataFrame(list(enumerate(payloads)), "i int, payload binary")
+    parsed = df.select("i", bx.sniff_mime("payload"), bx.image_meta("payload"),
+                       bx.audio_meta("payload"), bx.video_meta("payload"),
+                       bx.ebml_doctype("payload"), bx.ebml_info("payload"),
+                       bx.ebml_video_dims("payload")).collect()
+
+The independent pure-Python parsers in test_multimodal_{audio,ebml,video}
+and test_operators check the same parsers from the other side."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
+import hashlib
+import json
+import os
 
-from crypto_market_tracker_etl_spark.multimodal import binary as bx
+import pyarrow as pa
+import pytest
+
 from crypto_market_tracker_etl_spark.multimodal import pymedia as pm
 
-pytestmark = pytest.mark.slow
-
-N = 480  # ≥ 2 full parity cycles of the largest class (19 × 2 × 2)
+GOLDEN = os.path.join(os.path.dirname(__file__), "fixtures", "media_golden.json")
+PAYLOADS = {
+    "image": pm.image_payload,
+    "audio": pm.audio_payload,
+    "media": pm.media_payload,
+    "mime": pm.mime_payload,
+    "video": pm.video_payload,
+}
+OCTET = "application/octet-stream"
 
 
 @pytest.fixture(scope="module")
-def ids(spark):
-    return spark.range(N).select(F.col("id").alias("doc_id"))
+def golden():
+    with open(GOLDEN) as f:
+        return json.load(f)
 
 
-def _expr_payloads(ids, expr):
-    rows = ids.select("doc_id", expr.alias("p")).collect()
-    return {r["doc_id"]: bytes(r["p"]) for r in rows}
+def test_synth_bytes_match_golden(golden):
+    digits = golden["md5_hex_digits"]
+    for fam, digests in golden["payload_md5"].items():
+        fn = PAYLOADS[fam]
+        bad = [d for d, want in enumerate(digests)
+               if hashlib.md5(fn(d)).hexdigest()[:digits] != want]
+        assert not bad, f"{fam}: synth bytes diverge at doc_ids {bad[:5]}"
+    assert set(golden["payload_md5"]) == set(PAYLOADS)
 
 
-def test_synth_bytes_match_expression_path(ids):
-    from crypto_market_tracker_etl_spark.queries_ext import (
-        _audio_payload_expr,
-        _image_payload_expr,
-        _media_payload_expr,
-    )
+def test_parsers_match_golden(golden):
+    def full(t, n, mime):
+        if t is not None:
+            return tuple(t)
+        return (OCTET,) + (None,) * (n - 1) if mime else (None,) * n
 
-    for name, expr, fn in [
-        ("image", _image_payload_expr(), pm.image_payload),
-        ("audio", _audio_payload_expr(), pm.audio_payload),
-        ("media", _media_payload_expr(), pm.media_payload),
-    ]:
-        truth = _expr_payloads(ids, expr)
-        bad = [d for d, b in truth.items() if fn(d) != b]
-        assert not bad, f"{name}: synth bytes diverge at doc_ids {bad[:5]}"
-
-
-def test_mime_and_video_synth_cycles_match(ids):
-    """The mime/video payload cycles live inline in pymedia (the old
-    query bodies); rebuild them from binary.py synths and compare."""
-    d = F.col("doc_id")
-    m = d % 16
-    w = (F.lit(100) + d % 800).cast("int")
-    h = (F.lit(100) + (d * 7) % 800).cast("int")
-    mime_expr = (
-        F.when(m == 0, bx.synth_png(w, h))
-        .when(m == 1, bx.synth_gif(w, h))
-        .when(m == 2, bx.synth_wav(F.lit(16000), F.lit(1).cast("int"),
-                                   F.lit(16), F.lit(16000)))
-        .when(m == 3, bx.synth_mp4(F.lit("isom"), F.lit(600), F.lit(6000),
-                                   F.lit(1).cast("int")))
-        .when(m == 4, F.unhex(F.lit("FFD8FFE000104A464946")))
-        .when(m == 5, F.unhex(F.lit("255044462D312E34")))
-        .when(m == 6, F.unhex(F.lit("504B03041400")))
-        .when(m == 7, F.unhex(F.lit("1F8B08000000")))
-        .when(m == 8, bx.synth_mp4(F.lit("heic"), F.lit(600), F.lit(6000),
-                                   F.lit(1).cast("int")))
-        .when(m == 9, bx.synth_mp4(F.lit("M4A "), F.lit(600), F.lit(6000),
-                                   F.lit(1).cast("int")))
-        .when(m == 10, bx.synth_webp_vp8(w, h))
-        .when(m == 11, bx.synth_tiff(w, h, little_endian=False))
-        .when(m == 12, bx.synth_flac(F.lit(44100), F.lit(2).cast("int"),
-                                     F.lit(16), F.lit(44100)))
-        .when(m == 13, bx.synth_mp3(F.lit(3), F.lit(0), F.lit(False)))
-        .when(m == 14, bx.synth_bmp(w, h))
-        .otherwise(bx.synth_ogg(F.lit(48000).cast("int"),
-                                F.lit(2).cast("int"), F.lit(160).cast("int")))
-    )
-    truth = _expr_payloads(ids, mime_expr)
-    bad = [d_ for d_, b in truth.items() if pm.mime_payload(d_) != b]
-    assert not bad, f"mime: synth bytes diverge at doc_ids {bad[:5]}"
-
-    ts = F.element_at(
-        F.array(F.lit(600), F.lit(1000), F.lit(30000), F.lit(90000)),
-        (d % 4 + 1).cast("int"),
-    ).cast("int")
-    dur = (F.lit(1000) + (d * 53) % 900000).cast("int")
-    dur64 = (dur + (d % 2) * F.lit(2 ** 33)).cast("long")
-    edur = (dur + (F.floor(d / 10) % 2) * F.lit(2 ** 33)).cast("long")
-    tracks = (d % 3 + 1).cast("int")
-    brand = F.when(d % 2 == 0, F.lit("isom")).otherwise(F.lit("mp42"))
-    ew = (F.lit(320) + (d * 3) % 1600).cast("int")
-    eh = (F.lit(240) + (d * 7) % 840).cast("int")
-    is_wav_row = d % 7 == 6
-    is_ebml_row = (d % 5 == 2) & ~is_wav_row
-    video_expr = (
-        F.when(is_wav_row, bx.synth_wav(F.lit(16000), F.lit(1).cast("int"),
-                                        F.lit(16), F.lit(16000)))
-        .when(is_ebml_row & (d % 2 == 0),
-              bx.synth_mkv("webm", F.lit(1000000), edur, ew, eh))
-        .when(is_ebml_row,
-              bx.synth_mkv("matroska", F.lit(500000), edur, ew, eh,
-                           audio_first=True))
-        .when(d % 3 == 1, bx.synth_mp4(brand, ts, dur64, tracks,
-                                       version1=True))
-        .otherwise(bx.synth_mp4(brand, ts, dur, tracks))
-    )
-    truth = _expr_payloads(ids, video_expr)
-    bad = [d_ for d_, b in truth.items() if pm.video_payload(d_) != b]
-    assert not bad, f"video: synth bytes diverge at doc_ids {bad[:5]}"
+    assert len(golden["parse"]) == 914
+    for fam, d, mime, im, am, vm, dt, ei, ed in golden["parse"]:
+        b = PAYLOADS[fam](d)
+        where = (fam, d, b.hex()[:60])
+        assert pm.sniff_mime(b) == mime, where
+        assert pm.parse_image_meta(b) == full(im, 3, True), where
+        assert pm.parse_audio_meta(b) == full(am, 6, True), where
+        assert pm.parse_video_mp4(b) == full(vm, 5, True), where
+        assert pm.ebml_doctype(b) == dt, where
+        assert pm.ebml_info(b) == full(ei, 2, False), where
+        assert pm.ebml_video_dims(b) == full(ed, 2, False), where
 
 
-def test_parsers_match_expression_path(spark):
-    """binary.py's expression parsers over pymedia's payload bytes must
-    equal pymedia's parsers — covering every class of all five cycles
-    plus raw-magic and truncated blobs."""
-    payloads = (
-        [pm.image_payload(d) for d in range(0, 300)]
-        + [pm.audio_payload(d) for d in range(0, 200)]
-        + [pm.media_payload(d) for d in range(0, 200)]
-        + [pm.mime_payload(d) for d in range(0, 64)]
-        + [pm.video_payload(d) for d in range(0, 150)]
-    )
-    df = spark.createDataFrame(
-        [(i, p) for i, p in enumerate(payloads)], "i int, payload binary"
-    )
-    parsed = df.select(
-        "i",
-        bx.sniff_mime("payload").alias("mime"),
-        bx.image_meta("payload").alias("im"),
-        bx.audio_meta("payload").alias("am"),
-        bx.video_meta("payload").alias("vm"),
-        bx.ebml_doctype("payload").alias("dt"),
-        bx.ebml_info("payload").alias("ei"),
-        bx.ebml_video_dims("payload").alias("ed"),
-    ).collect()
-    for row in sorted(parsed, key=lambda r: r["i"]):
-        b = payloads[row["i"]]
-        assert pm.sniff_mime(b) == row["mime"], (row["i"], b.hex()[:60])
-        im = row["im"]
-        assert pm.parse_image_meta(b) == (
-            im["mime_type"], im["width"], im["height"]), (row["i"], im)
-        am = row["am"]
-        assert pm.parse_audio_meta(b) == (
-            am["mime_type"], am["channels"], am["sample_rate_hz"],
-            am["bits_per_sample"], am["duration_ms"], am["bitrate_kbps"],
-        ), (row["i"], am)
-        vm = row["vm"]
-        got = pm.parse_video_mp4(b)
-        assert got == (vm["mime_type"], vm["brand"], vm["timescale"],
-                       vm["duration_ms"], vm["n_tracks"]), (row["i"], vm, got)
-        assert pm._ebml_doctype(b) == row["dt"], row["i"]
-        ei, ed = row["ei"], row["ed"]
-        assert pm._ebml_info(b) == (
-            ei["timescale_ns"], ei["duration_ms"]), (row["i"], ei)
-        assert pm._ebml_video_dims(b) == (
-            ed["width"], ed["height"]), (row["i"], ed)
+def test_out_of_range_header_ints_parse_as_null():
+    """A header field the query's DDL column cannot hold parses as NULL,
+    so one hostile blob cannot fail ``pa.array(..., pa.int32())`` and
+    with it the whole batch."""
+
+    def tiff_long_dims(w, h):
+        entry = lambda tag, v: (tag.to_bytes(2, "little") + b"\x04\x00"  # noqa: E731
+                                + b"\x01\x00\x00\x00" + v.to_bytes(4, "little"))
+        return (b"II*\x00\x08\x00\x00\x00\x02\x00" + entry(256, w)
+                + entry(257, h) + b"\x00" * 4)
+
+    bmp = bytearray(pm.synth_bmp(10, 20))
+    bmp[22:26] = (2**31).to_bytes(4, "little")  # INFO height -2^31
+    wav = bytearray(pm.synth_wav(16000, 1, 16, 100))
+    wav[24:28] = b"\xff" * 4  # sample_rate_hz 0xFFFFFFFF
+    mp4 = pm.synth_mp4("isom", 600, 6000, 2**32 - 2)  # next_track_id 2^32-1
+    cases = [
+        (pm.parse_image_meta(tiff_long_dims(2**31, 2**32 - 1)),
+         ("image/tiff", None, None)),
+        (pm.parse_image_meta(pm.synth_png(2**31, 2**32 - 1)),
+         ("image/png", None, None)),
+        (pm.parse_image_meta(pm.synth_png(2**31 - 1, 7)),
+         ("image/png", 2**31 - 1, 7)),  # the largest int still fits
+        (pm.parse_image_meta(bytes(bmp)), ("image/bmp", 10, None)),
+        (pm.parse_audio_meta(bytes(wav))[:3], ("audio/x-wav", 1, None)),
+        (pm.parse_video_mp4(mp4), ("video/mp4", "isom", 600, 10000, None)),
+    ]
+    for got, want in cases:
+        assert got == want
+        pa.array([v for v in got if not isinstance(v, str)], pa.int32())
