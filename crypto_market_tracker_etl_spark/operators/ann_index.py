@@ -223,13 +223,13 @@ class IvfPqIndex:
         """Fold per-batch small files: rewrite each partition's accumulated
         files into one sorted file via a staged swap.
 
-        Single-writer contract (same as ParquetUpsertSink — document, don't
-        pretend): the swap is two renames, so a crash in between leaves
-        ``data`` missing with the complete pre-compact copy parked under a
-        unique ``data.old-*`` name; ``_recover()`` (run on every
-        construction and read) renames it back, so the index self-heals on
-        next open instead of requiring manual surgery. Leftover ``.old``
-        dirs from runs that crashed AFTER the swap are reclaimed here."""
+        Single-writer contract (document, don't pretend): the swap is two
+        renames, so a crash in between leaves ``data`` missing with the
+        complete pre-compact copy parked under a unique ``data.old-*``
+        name; ``_recover()`` (run on every construction and read) renames
+        it back, so the index self-heals on next open instead of requiring
+        manual surgery. Leftover ``.old`` dirs from runs that crashed AFTER
+        the swap are reclaimed here."""
         import shutil
         import uuid
 

@@ -12,8 +12,9 @@ for what changed:
   in its own ``batch=N`` partition — nothing is rewritten at write time,
   regardless of corpus size. ``read()`` collapses to the latest signature
   per doc (one keyed window); ``compact()`` folds old batches into one
-  when the partition count grows — same trade ParquetUpsertSink
-  documents, invariance pinned by test.
+  when the partition count grows — the small-file trade every
+  incremental table makes (``ManifestParquetSink.compact``), invariance
+  pinned by test.
 - **Incremental pair search**: new-batch band keys (small side, broadcast)
   equi-join the accumulated band index — emitted pairs are exactly those
   touching a new doc. Old×old pairs were emitted by earlier runs, so the

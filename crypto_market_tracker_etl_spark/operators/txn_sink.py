@@ -1,13 +1,12 @@
 """Transactional parquet table: manifest-pointer commits with optimistic
-concurrency — the multi-writer MERGE story ``ParquetUpsertSink`` explicitly
-does not have.
+concurrency — the engine's one keyed-MERGE table.
 
 The reference upserts into Postgres (``src/db.py:87-99``), where MVCC gives
 concurrent writers serialization and readers a consistent snapshot for
-free. ``ParquetUpsertSink`` (operators/upsert.py) trades that away for
-dependency-free parquet: last-swap-wins between concurrent writers (lost
-updates) and no cross-partition read snapshot. This module restores both
-using the same public design Iceberg and Delta Lake are built on — an
+free. Plain parquet has neither: rewriting a day's directory in place
+loses one writer's rows when two writers overlap (last swap wins) and lets
+a reader see one partition new and the next one old. This module restores
+both using the same public design Iceberg and Delta Lake are built on — an
 immutable-data / atomic-metadata-pointer log — implemented with nothing but
 parquet files and POSIX filesystem atomicity:
 
@@ -33,12 +32,12 @@ parquet files and POSIX filesystem atomicity:
   conflict the writer re-reads the NEW current snapshot, re-merges its
   batch, and retries: optimistic concurrency, no locks, no lost updates.
 
-Scale shape: identical to ``ParquetUpsertSink`` — an upsert reads and
-rewrites only the partitions its batch touches (the manifest repoints
-touched days; untouched days keep referencing their old commit dirs, zero
-I/O). The manifest itself is O(|days|) JSON — thousands of partitions is
-kilobytes; at millions-of-partitions scale you shard the manifest exactly
-as Iceberg splits manifests per partition range.
+Scale shape: an upsert reads and rewrites only the partitions its batch
+touches (the manifest repoints touched days; untouched days keep
+referencing their old commit dirs, zero I/O). The manifest itself is
+O(|days|) JSON — thousands of partitions is kilobytes; at
+millions-of-partitions scale you shard the manifest exactly as Iceberg
+splits manifests per partition range.
 
 **Honest caveat (same one Delta documents):** the commit relies on
 ``os.link`` EEXCL atomicity, which local/POSIX filesystems and NFSv4+
@@ -1745,11 +1744,11 @@ class ManifestParquetSink:
         repointed/added/removed days are scanned on either side. A daily
         upsert into a 10-year table diffs one day, not 3 650.
 
-        Contract (both sinks share it): a key's day must be stable — the
-        partition date derives from an event time that identifies the key
-        (the reference's (asset, day) shape), not from a mutable
-        attribute. A key whose day changed would be duplicated by the
-        partition-local MERGE itself; ``changes`` would then see it twice.
+        Contract: a key's day must be stable — the partition date derives
+        from an event time that identifies the key (the reference's
+        (asset, day) shape), not from a mutable attribute. A key whose day
+        changed would be duplicated by the partition-local MERGE itself;
+        ``changes`` would then see it twice.
         """
         to_version = self.current_version() if to_version is None else to_version
         old_m = self._load_manifest(from_version)

@@ -15,16 +15,13 @@ metrics bucket by each row's own UTC date rather than "today in IST"
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.txn_sink import ManifestParquetSink
-from ..operators.upsert import ParquetUpsertSink, dedup_keep_latest
-
-# either sink works everywhere a PricesSink is taken: both expose the same
-# keyed-MERGE upsert(batch) surface — swap-based for single-writer
-# simplicity, manifest-based for concurrent writers + snapshot reads
-PricesSink = ParquetUpsertSink | ManifestParquetSink
+from ..operators.upsert import dedup_keep_latest
 from ..sources.config import asset_universe_df
 from ..sources.rest import (
     Fetcher,
@@ -62,7 +59,7 @@ def run_incremental(
     spark: SparkSession,
     assets: list[str],
     fetcher: Fetcher,
-    prices_sink: PricesSink,
+    prices_sink: ManifestParquetSink,
     days: int = 1,
 ) -> dict[str, DataFrame]:
     """One incremental pass; returns the three upsert-ready frames and
@@ -86,7 +83,7 @@ def run_backfill(
     spark: SparkSession,
     assets: list[str],
     fetcher: Fetcher,
-    prices_sink: PricesSink,
+    prices_sink: ManifestParquetSink,
     days: int = BACKFILL_MAX_DAYS,
     pacing_s: float = 0.0,
 ) -> DataFrame:
@@ -102,21 +99,17 @@ def run_backfill(
 
 
 def refresh_daily_metrics(
-    prices_sink: PricesSink,
-    daily_sink: ParquetUpsertSink,
-    touched_days: "DataFrame | list[str]",
+    prices_sink: ManifestParquetSink,
+    daily_sink: ManifestParquetSink,
+    days: Sequence[str],
 ) -> None:
     """Incrementally maintain the daily_metrics aggregate table after a
     prices upsert (reference src/etl.py:57-59 recomputes and upserts daily
     rows every cron run — here only the TOUCHED days are recomputed).
 
-    ``touched_days`` is a 1-column ``dt`` frame (e.g. the batch's distinct
-    days). The prices scan is pruned to those partitions — the swap sink
-    via the broadcast semi-join its merge uses (dynamic partition pruning
-    on the physical ``dt=`` dirs), the manifest sink via ``read(days=...)``
-    (its ``dt`` is a regular data column, so the semi-join alone would
-    scan every partition's files: manifest-level pruning is the only path
-    that skips them). The daily aggregate is recomputed exactly (not
+    ``days`` are ISO day strings. The prices scan is pruned to those
+    partitions by ``read(days=...)`` at the manifest level, before Spark
+    lists a file. The daily aggregate is recomputed exactly (not
     incrementally patched — OHLC open/close are not decomposable under
     late data), and the result merges into the daily table keyed
     (asset_id, date). Work per refresh is proportional to the days
@@ -124,24 +117,7 @@ def refresh_daily_metrics(
     """
     from .market_views import daily_metrics_from_ticks
 
-    if not isinstance(touched_days, DataFrame):
-        days = sorted(set(touched_days))  # caller already knows the list
-        touched_days = prices_sink.spark.createDataFrame(
-            [(d,) for d in days], "dt string"
-        )
-    else:
-        days = None
-    if isinstance(prices_sink, ManifestParquetSink):
-        if days is None:
-            days = [
-                r["dt"] for r in touched_days.select("dt").distinct().collect()
-            ]
-        pruned = prices_sink.read(days=days)
-    else:
-        pruned = prices_sink.read().join(
-            F.broadcast(touched_days), "dt", "left_semi"
-        )
-    daily = daily_metrics_from_ticks(pruned)
+    daily = daily_metrics_from_ticks(prices_sink.read(days=days))
     daily_sink.upsert(daily.withColumn("ts", F.col("date").cast("timestamp")))
 
 
@@ -161,8 +137,8 @@ def upsert_assets_dim(old: DataFrame, new: DataFrame) -> DataFrame:
 
 
 def maintain_daily_from_feed(
-    prices_sink: "ManifestParquetSink",
-    daily_sink: ParquetUpsertSink,
+    prices_sink: ManifestParquetSink,
+    daily_sink: ManifestParquetSink,
     checkpoint_path: str,
 ) -> int:
     """Incremental view maintenance driven by the prices table's change

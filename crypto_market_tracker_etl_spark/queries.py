@@ -667,7 +667,7 @@ def q_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[§2.3 extension] EXISTS/NOT EXISTS per customer in ONE pass: distinct
     order keys + left join + flag, instead of a left_semi ∪ left_anti pair
     that scans orders twice. (The dedicated left_semi path is exercised by
-    ParquetUpsertSink's touched-partition probe and the bucketed layouts.)"""
+    the curation survivors' doc_id probes and the bucketed layouts.)"""
     customer = load_table(spark, sf_dir, "customer")
     hit = (
         load_table(spark, sf_dir, "orders")

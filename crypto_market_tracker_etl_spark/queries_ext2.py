@@ -1006,12 +1006,12 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cdc_stream_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[streaming ≡ batch, driver-attested] The incremental-upsert path —
     ``streaming/incremental.py::incremental_upsert_stream`` draining into
-    ``operators/upsert.py::ParquetUpsertSink`` — replayed deterministically
-    and checked against a from-scratch batch MERGE oracle in DuckDB (the
-    [curation_stream_eq] promotion pattern, r8 verdict #8; the real
-    availableNow wiring of the same foreachBatch body is pytest-pinned in
-    test_incremental_upsert_stream_available_now). The replay is
-    adversarial on purpose:
+    ``operators/txn_sink.py::ManifestParquetSink`` — replayed
+    deterministically and checked against a from-scratch batch MERGE
+    oracle in DuckDB (the [curation_stream_eq] promotion pattern, r8
+    verdict #8; the real availableNow wiring of the same foreachBatch body
+    is pytest-pinned in test_incremental_stream_into_manifest_sink). The
+    replay is adversarial on purpose:
 
     * the events changelog is split into four micro-batches by
       event_id % 4 delivered OUT OF ORDER (3, 1, 2, 0) — later versions
@@ -1024,28 +1024,27 @@ def q_cdc_stream_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
       re-fetching the trailing window);
     * compact() folds the accumulated small files mid-run — invisible to
       the result;
-    * expire() drops the earliest day after the drain — the
+    * drop_days() drops the earliest day after the drain — the
       partition-retention path, mirrored by the oracle's day > min(day).
 
     Entity grain is (user_id, day): the partition day is a function of
     the key, which is exactly the sink's partition-local-merge contract
-    (dt= dirs swap independently; a key never straddles days). Oracle:
-    argmax by (ts, event_id) per (user_id, day) over the full changelog,
-    minus the expired day — hash equality re-proves each round that
-    upsert-merge under reordering, retry, compaction, and retention
+    (each day is rewritten independently; a key never straddles days).
+    Oracle: argmax by (ts, event_id) per (user_id, day) over the full
+    changelog, minus the dropped day — hash equality re-proves each round
+    that upsert-merge under reordering, retry, compaction, and retention
     resolves to the one-shot batch answer.
 
     Stores live under a (sf_dir, applicationId)-keyed temp path, wiped
-    and rebuilt per invocation; concurrent sessions cannot collide.
-    Driver-side work stays bounded: one 1-row min(dt) lookup for the
-    retention cutoff (job-driver metadata, the r6 ruling)."""
-    import datetime as _dt
+    and rebuilt per invocation; concurrent sessions cannot collide. The
+    retention cutoff comes from the manifest (a metadata-only commit), so
+    it launches no Spark job."""
     import hashlib
     import os
     import shutil
     import tempfile
 
-    from .operators.upsert import ParquetUpsertSink
+    from .operators.txn_sink import ManifestParquetSink
 
     log = (
         _events(spark, sf_dir)
@@ -1057,7 +1056,7 @@ def q_cdc_stream_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).hexdigest()[:12]
     path = os.path.join(tempfile.gettempdir(), "cdc_stream_eq_" + run_token)
     shutil.rmtree(path, ignore_errors=True)
-    sink = ParquetUpsertSink(
+    sink = ManifestParquetSink(
         spark, path, keys=["user_id", "dt"], ts_col="ts",
         order=["ts", "event_id"],
     )
@@ -1067,11 +1066,10 @@ def q_cdc_stream_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
             sink.upsert(log.filter(F.col("event_id") % 4 == rem))
         if rem == 1:  # small-file fold mid-run — must be invisible
             sink.compact(max_records_per_file=100_000)
-    first_day = sink.read().agg(F.min("dt")).first()[0]
-    sink.expire((first_day + _dt.timedelta(days=1)).isoformat())
+    sink.drop_days(sink.partition_days()[:1])
     return sink.read().select(
         "user_id",
-        F.col("dt").alias("day"),
+        F.to_date("dt").alias("day"),
         "ts",
         "event_id",
         "value",

@@ -7,8 +7,9 @@ declarative and scale-safe:
 - AQE on (runtime re-plan: skew joins, partition coalescing),
 - UTC session timezone (deterministic timestamp semantics vs the oracle),
 - Arrow for any pandas exchange (vectorized, never row-at-a-time),
-- shuffle partitions sized from the environment (32 locally; on a real
-  cluster this should be ~2-3× total cores or left to AQE's coalescing).
+- shuffle partitions sized from the environment (``SPARK_GRAFT_CPUS``, else
+  the process's CPU affinity locally; on a real cluster this should be
+  ~2-3× total cores or left to AQE's coalescing).
 """
 
 from __future__ import annotations
@@ -33,7 +34,9 @@ CODEGEN_CACHE_MAX_ENTRIES = 4096
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``SPARK_GRAFT_CPUS`` when set, else the CPUs this process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
 
 
 def get_session(

@@ -14,26 +14,20 @@ recovery never duplicates or drops changes, WITHIN VACUUM RETENTION:
 replaying an offset whose manifest was vacuumed fails loudly, the same
 contract as ``changes_since_checkpoint``.
 
-Two readers share one diff core (``_diff_select``):
-
-- **Partitioned reader (default)** — ``DataSourceStreamReader``. The
-  driver touches only the two ~KB manifests (``partitions`` plans from
-  manifest + zone-stats row counts alone); each executor task reads both
-  versions of ONE day — or, when the day's recorded rows exceed
-  ``maxRowsPerTask`` (default 1 M), one KEY-HASH SLICE of the day,
-  stream-filtered batch by batch so per-task memory stays bounded by the
-  slice — and emits that slice's diff. Correct because a key's day is
-  stable by the sink's contract (the partition date derives from an
-  event time that identifies the key — ``changes()`` documents the same
-  invariant) and the slice hash is a pure function of the key, so no
-  diff pair ever spans two tasks. Scale follows the cluster in BOTH
-  dimensions: 365 changed days = 365 parallel tasks, and one re-ingested
-  500 GB hot day still fans out as rows/maxRowsPerTask slices instead of
-  one task holding 2× the day in pandas (SCALE.md §CDF).
-- **Simple reader** (``.option("reader", "simple")``) — the Spark-managed
-  prefetch wrapper around ``SimpleDataSourceStreamReader``; the whole
-  diff runs in the driver's planning thread. Kept for parity testing and
-  zero-task-overhead reads of small tables.
+The reader is a partitioned ``DataSourceStreamReader``. The driver
+touches only the two ~KB manifests (``partitions`` plans from manifest +
+zone-stats row counts alone); each executor task reads both versions of
+ONE day — or, when the day's recorded rows exceed ``maxRowsPerTask``
+(default 1 M), one KEY-HASH SLICE of the day, stream-filtered batch by
+batch so per-task memory stays bounded by the slice — and emits that
+slice's diff (``_diff_select``). Correct because a key's day is stable by
+the sink's contract (the partition date derives from an event time that
+identifies the key — ``changes()`` documents the same invariant) and the
+slice hash is a pure function of the key, so no diff pair ever spans two
+tasks. Scale follows the cluster in BOTH dimensions: 365 changed days =
+365 parallel tasks, and one re-ingested 500 GB hot day still fans out as
+rows/maxRowsPerTask slices instead of one task holding 2× the day in
+pandas (SCALE.md §CDF).
 
 Semantics match ``changes()`` exactly: I/U rows carry the NEW values, D
 rows the deleted row's PRE-IMAGE; a day whose manifest entry is identical
@@ -43,13 +37,11 @@ Options: ``path`` (table root), ``keys`` (comma-separated merge keys),
 ``startingVersion`` (default 0 — the FIRST batch then delivers the whole
 current snapshot as inserts, the CDF bootstrap convention; on a large
 existing table pass ``startingVersion = current_version`` to start from
-new changes only), ``reader`` ("partitioned" default | "simple"),
-``maxRowsPerTask`` (within-day split threshold, partitioned reader only).
+new changes only), ``maxRowsPerTask`` (within-day split threshold).
 """
 
 from __future__ import annotations
 
-import datetime as _dtm
 import json
 import os
 from collections.abc import Iterator
@@ -58,19 +50,18 @@ from typing import NamedTuple
 import pandas as pd
 import pyarrow as pa
 import pyarrow.dataset as pa_ds
-from pyspark.errors import PySparkNotImplementedError
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 _SPARK_META_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 # ONE implementation of the manifest layout, shared with the sink — a
-# format change (e.g. manifest sharding) lands in both readers at once
+# format change (e.g. manifest sharding) lands in the sink and this reader
+# at once
 from ..operators.txn_sink import (  # noqa: E402
     manifest_current_version as _current_version,
     manifest_load as _load_manifest,
@@ -247,63 +238,36 @@ def _read_days_slice(
     return merged.to_pandas(integer_object_nulls=True)
 
 
-def _py(v):
-    """pandas/numpy value → plain Python for the row tuples. Naive
-    timestamps get UTC attached: pandas hands back Spark's UTC-normalized
-    parquet instants as NAIVE wall-times, and pyspark's tuple conversion
-    interprets a naive datetime in the MACHINE's timezone — on a non-UTC
-    host every ts would shift by the tz offset (and diverge from the
-    partitioned reader's arrow path, whose naive→timestamptz cast
-    correctly assumes UTC)."""
-    if v is None or (pd.api.types.is_scalar(v) and pd.isna(v)):
-        return None
-    if isinstance(v, pd.Timestamp):
-        t = v.to_pydatetime()
-        return t if t.tzinfo is not None else t.replace(tzinfo=_dtm.timezone.utc)
-    return v.item() if hasattr(v, "item") else v
-
-
 _INT_TYPES = {"byte", "short", "integer", "long"}
-_FLOAT_TYPES = {"float", "double"}
 
 
 class _CdfConf(NamedTuple):
-    """Everything both readers derive from (options, schema) — parsed once
-    so the two readers cannot drift."""
+    """Everything the reader derives from (options, schema), parsed once."""
 
     path: str
     keys: list[str]
     start_version: int
     cols: list[str]       # data columns, declared order (no _op/_commit_*)
     non_keys: list[str]
-    coerce: dict[str, type]
-    rows_per_task: int    # within-day split threshold (partitioned reader)
+    int_cols: list[str]   # integer columns, read as nullable Int64
+    rows_per_task: int    # within-day split threshold
 
 
 def _parse_conf(options: dict, schema: StructType) -> _CdfConf:
     if "path" not in options or "keys" not in options:
         raise ValueError("manifest_cdf requires options 'path' and 'keys'")
     keys = [k.strip() for k in options["keys"].split(",") if k.strip()]
-    cols = [
-        f.name for f in schema.fields if f.name not in ("_op", "_commit_version")
+    fields = [
+        f for f in schema.fields if f.name not in ("_op", "_commit_version")
     ]
-    # pandas outer merges NaN-promote int columns to float (ver 1 → 1.0),
-    # which the source API would reject for an IntegerType field — coerce
-    # each value back to its declared Spark type at row-build time
-    coerce: dict[str, type] = {}
-    for f in schema.fields:
-        t = f.dataType.typeName()
-        if t in _INT_TYPES:
-            coerce[f.name] = int
-        elif t in _FLOAT_TYPES:
-            coerce[f.name] = float
+    cols = [f.name for f in fields]
     return _CdfConf(
         path=options["path"],
         keys=keys,
         start_version=int(options.get("startingversion", "0")),
         cols=cols,
         non_keys=[c for c in cols if c not in keys],
-        coerce=coerce,
+        int_cols=[f.name for f in fields if f.dataType.typeName() in _INT_TYPES],
         # split threshold: 1 M rows/day is the measured comfortable
         # single-task size (SCALE.md §CDF: 2.3 s drain, bounded pandas);
         # below it the unsplit path avoids the split's n× day-decode
@@ -323,9 +287,8 @@ def _normalize(frame: pd.DataFrame, conf: _CdfConf) -> pd.DataFrame:
     silently corrupting values past 2^53 and making 2^60 == 2^60+1
     compare equal (a suppressed update)."""
     frame = frame.reindex(columns=conf.cols)
-    for c, f in conf.coerce.items():
-        if f is int and c in frame.columns:
-            frame[c] = frame[c].astype("Int64")
+    for c in conf.int_cols:
+        frame[c] = frame[c].astype("Int64")
     return frame
 
 
@@ -379,7 +342,7 @@ def _minus_dv_keys(
 def _diff_select(
     old: pd.DataFrame, new: pd.DataFrame, conf: _CdfConf
 ) -> pd.DataFrame | None:
-    """The diff core both readers share: outer-merge two normalized
+    """The diff core: outer-merge two normalized
     snapshots of the same day set and SELECT the (I, U, D) change rows —
     returned as a pandas frame with columns ``conf.cols + ['_op']``
     (I/U carry the NEW values, D the deleted row's PRE-IMAGE).
@@ -439,36 +402,12 @@ def _diff_select(
     return pd.concat(groups, ignore_index=True)
 
 
-def _to_tuples(sel: pd.DataFrame | None, conf: _CdfConf, v2: int) -> list[tuple]:
-    """Change rows as python tuples — the simple reader's emission (its
-    prefetch wrapper pickles rows)."""
-    if sel is None or sel.empty:
-        return []
-    coerce = [conf.coerce.get(c) for c in conf.cols]
-    series = [sel[c] for c in conf.cols]
-    ops = sel["_op"].tolist()
-    rows: list[tuple] = []
-    # .tolist(), not .to_numpy(): numpy would hand back np.datetime64
-    # (ns precision → .item() is an int, and the Arrow serializer
-    # requires datetime) while Series.tolist() converts to
-    # pd.Timestamp / python scalars the _py conversion understands
-    for i, vals in enumerate(zip(*(s.tolist() for s in series))):
-        out = []
-        for v, f in zip(vals, coerce):
-            v = _py(v)
-            if v is not None and f is not None:
-                v = f(v)
-            out.append(v)
-        rows.append(tuple(out) + (ops[i], v2))
-    return rows
-
-
 def _to_record_batch(
     sel: pd.DataFrame, schema: StructType, v2: int
 ) -> pa.RecordBatch:
     """Change rows as ONE Arrow RecordBatch conforming to the declared
-    schema — the partitioned reader's emission. Skips the per-value
-    python conversion entirely: columns cast arrow→arrow (pandas
+    schema — the reader's emission. Skips the per-value python
+    conversion entirely: columns cast arrow→arrow (pandas
     datetime64 naive carries Spark's UTC-normalized parquet instants, and
     an arrow cast naive→timestamp[us, tz=UTC] interprets naive as UTC —
     exactly the INT96 semantics; nullable Int64 / object-int columns cast
@@ -488,56 +427,6 @@ def _to_record_batch(
                 arr = arr.cast(field.type)
         arrays.append(arr)
     return pa.RecordBatch.from_arrays(arrays, schema=pa_schema)
-
-
-def _diff_window(conf: _CdfConf, v1: int, v2: int) -> list[tuple]:
-    """Whole-window diff (all changed days at once) — the simple reader's
-    path; the partitioned reader does the same per single day."""
-    old_m, new_m, old_dv, new_dv = _load_window(conf.path, v1, v2)
-    changed = _changed_days(old_m, new_m, old_dv, new_dv)
-    if not changed:
-        return []
-    old = _minus_dv_keys(
-        _read_days(conf.path, old_m, changed),
-        _read_days(conf.path, old_dv, changed),
-        conf.keys,
-    )
-    new = _minus_dv_keys(
-        _read_days(conf.path, new_m, changed),
-        _read_days(conf.path, new_dv, changed),
-        conf.keys,
-    )
-    return _to_tuples(
-        _diff_select(_normalize(old, conf), _normalize(new, conf), conf),
-        conf,
-        v2,
-    )
-
-
-# --------------------------------------------------------------- readers
-
-
-class ManifestCdfStreamReader(SimpleDataSourceStreamReader):
-    """Driver-side reader (``reader=simple``): the whole window diff runs
-    in the streaming engine's prefetch thread. No task overhead, but
-    single-process — use the default partitioned reader beyond ~1 M rows
-    per micro-batch (SCALE.md §CDF)."""
-
-    def __init__(self, options: dict, schema: StructType):
-        self.conf = _parse_conf(options, schema)
-
-    def initialOffset(self) -> dict:
-        return {"version": self.conf.start_version}
-
-    def read(self, start: dict):
-        cur = _current_version(self.conf.path)
-        start_v = start["version"]
-        if cur <= start_v:
-            return iter([]), start
-        return iter(_diff_window(self.conf, start_v, cur)), {"version": cur}
-
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        return iter(_diff_window(self.conf, start["version"], end["version"]))
 
 
 class CdfPartition(InputPartition):
@@ -568,7 +457,7 @@ class CdfPartition(InputPartition):
 
 
 class ManifestCdfPartitionedReader(DataSourceStreamReader):
-    """Executor-side reader (default): ``partitions`` plans from the two
+    """Executor-side reader: ``partitions`` plans from the two
     ~KB manifests (+ their zone-stats row counts) only — the driver never
     touches data files — and each task diffs ONE changed day, or one
     key-hash slice of it when the day's recorded rows exceed
@@ -693,17 +582,7 @@ class ManifestCdfDataSource(DataSource):
         )
 
     def streamReader(self, schema: StructType) -> ManifestCdfPartitionedReader:
-        if self.options.get("reader", "partitioned").lower() == "simple":
-            # raising NOT_IMPLEMENTED is the API's documented fallback
-            # path: the engine then wraps simpleStreamReader instead
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "streamReader"},
-            )
         return ManifestCdfPartitionedReader(self.options, schema)
-
-    def simpleStreamReader(self, schema) -> ManifestCdfStreamReader:
-        return ManifestCdfStreamReader(self.options, schema)
 
 
 def register_cdf(spark) -> None:

@@ -21,12 +21,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.txn_sink import ManifestParquetSink
-from ..operators.upsert import ParquetUpsertSink
 
 
 def incremental_upsert_stream(
     stream: DataFrame,
-    sink: ParquetUpsertSink | ManifestParquetSink,
+    sink: ManifestParquetSink,
     checkpoint_dir: str,
     available_now: bool = True,
 ) -> StreamingQuery:
@@ -35,12 +34,10 @@ def incremental_upsert_stream(
     foreachBatch gets a normal batch DataFrame per micro-batch; the sink's
     MERGE (dedup-keep-latest over touched partitions) makes replays and
     overlapping fetch windows idempotent — restarting after failure cannot
-    duplicate rows, same guarantee as the reference's ON CONFLICT. Both
-    sinks share the ``upsert(batch)`` surface: pass a ``ParquetUpsertSink``
-    when this stream is the table's ONLY writer (its documented contract),
-    or a ``ManifestParquetSink`` when batch jobs may upsert the same table
-    concurrently — its manifest CAS serializes the stream's commits against
-    theirs, and readers get snapshot isolation during every micro-batch.
+    duplicate rows, same guarantee as the reference's ON CONFLICT. Each
+    micro-batch is one manifest CAS commit, so batch jobs may upsert the
+    same table while the stream runs: their commits serialize against the
+    stream's, and readers get snapshot isolation during every micro-batch.
     """
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:

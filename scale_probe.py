@@ -443,18 +443,16 @@ def probe_ann(spark) -> None:
 
 
 def probe_sinks(spark) -> None:
-    """Write-path probe: swap sink vs manifest (transactional) sink on the
-    same workload — build a 30-day table, then time a single-day upsert
-    (the incremental steady state) and compaction. Quantifies what the
-    manifest CAS costs over raw stage-and-swap. Prints; numbers are
-    hand-recorded into SCALE.md's analysis."""
+    """Write-path probe for the manifest (transactional) sink: build a
+    30-day table, then time a single-day upsert (the incremental steady
+    state) and compaction. Prints; numbers are hand-recorded into
+    SCALE.md's analysis."""
     import shutil
     import tempfile
 
     from crypto_market_tracker_etl_spark.operators.txn_sink import (
         ManifestParquetSink,
     )
-    from crypto_market_tracker_etl_spark.operators.upsert import ParquetUpsertSink
 
     n_base, n_day = 5_000_000, 200_000
 
@@ -473,36 +471,31 @@ def probe_sinks(spark) -> None:
 
     root = tempfile.mkdtemp(prefix="sink_probe_")
     try:
-        # warm the JVM/codegen/parquet-writer paths so the first-listed sink
-        # doesn't absorb session startup into its build time
-        warm = ParquetUpsertSink(
+        # warm the JVM/codegen/parquet-writer paths so the build time
+        # doesn't absorb session startup
+        warm = ManifestParquetSink(
             spark, os.path.join(root, "_warm"), keys=["k"], ts_col="ts"
         )
         warm.upsert(synth(100_000, 2, 99))
         warm.upsert(synth(100_000, 2, 98))
-        for label, make in (
-            ("swap", lambda p: ParquetUpsertSink(spark, p, keys=["k"], ts_col="ts")),
-            (
-                "manifest",
-                lambda p: ManifestParquetSink(spark, p, keys=["k"], ts_col="ts"),
-            ),
-        ):
-            sink = make(os.path.join(root, label))
-            t0 = time.perf_counter()
-            sink.upsert(synth(n_base, 30, 1))
-            t_build = time.perf_counter() - t0
-            t0 = time.perf_counter()
-            sink.upsert(synth(n_day, 1, 7))  # one-day incremental batch
-            t_day = time.perf_counter() - t0
-            t0 = time.perf_counter()
-            sink.compact()
-            t_compact = time.perf_counter() - t0
-            print(
-                f"sink={label}: build {n_base / 1e6:.0f}M/30d {t_build:.1f}s, "
-                f"1-day {n_day / 1e3:.0f}k upsert {t_day:.1f}s, "
-                f"compact {t_compact:.1f}s",
-                flush=True,
-            )
+        sink = ManifestParquetSink(
+            spark, os.path.join(root, "manifest"), keys=["k"], ts_col="ts"
+        )
+        t0 = time.perf_counter()
+        sink.upsert(synth(n_base, 30, 1))
+        t_build = time.perf_counter() - t0
+        t0 = time.perf_counter()
+        sink.upsert(synth(n_day, 1, 7))  # one-day incremental batch
+        t_day = time.perf_counter() - t0
+        t0 = time.perf_counter()
+        sink.compact()
+        t_compact = time.perf_counter() - t0
+        print(
+            f"sink=manifest: build {n_base / 1e6:.0f}M/30d {t_build:.1f}s, "
+            f"1-day {n_day / 1e3:.0f}k upsert {t_day:.1f}s, "
+            f"compact {t_compact:.1f}s",
+            flush=True,
+        )
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -775,25 +768,17 @@ def probe_curation(spark) -> None:
 
 
 def probe_cdf(spark) -> None:
-    """Change-feed source sizing probe, both readers over the SAME version
-    windows: (a) the simple reader's whole-window diff exactly as the
-    engine's prefetch thread runs it — driver-side, single-process; (b) a
-    real availableNow drain through the DEFAULT partitioned reader —
-    manifest-only planning on the driver, per-day diff tasks on
-    executors. Puts numbers on the round-3 verdict's '~1 M rows per
-    micro-batch driver ceiling' and on its removal."""
+    """Change-feed source sizing probe: a real availableNow drain through
+    the partitioned reader — manifest-only planning on the driver,
+    per-day diff tasks on executors — over growing version windows,
+    each checked against the batch ``changes(v1, v2)`` row count."""
     import shutil
     import tempfile
 
     from crypto_market_tracker_etl_spark.operators.txn_sink import (
         ManifestParquetSink,
     )
-    from crypto_market_tracker_etl_spark.sources.cdf_source import (
-        ManifestCdfStreamReader,
-        _table_schema,
-        register_cdf,
-    )
-    from pyspark.sql.types import LongType, StringType, StructField
+    from crypto_market_tracker_etl_spark.sources.cdf_source import register_cdf
 
     register_cdf(spark)
     root = tempfile.mkdtemp(prefix="cdf_probe_")
@@ -806,9 +791,8 @@ def probe_cdf(spark) -> None:
             # day derives from the KEY (kid), not the row id: the sink's
             # contract requires a key's day to be stable across commits —
             # an id-derived day made re-used keys "move" days, and on such
-            # contract-violating data the whole-window merge (nets a move
-            # to one U) and the per-day diff (D+I pair) legitimately
-            # disagree
+            # contract-violating data the per-day drain sees a D+I pair
+            # where the whole-window changes() nets one U
             kid = F.pmod(F.xxhash64("id", F.lit(seed)), F.lit(n))
             return spark.range(n).select(
                 F.concat(F.lit("k"), kid).alias("k"),
@@ -824,22 +808,10 @@ def probe_cdf(spark) -> None:
             v1 = sink.current_version()
             sink.upsert(batch(n_changed, v1 + 7))
             v2 = sink.current_version()
-            schema = _table_schema(root + "/t")
-            schema = type(schema)(
-                schema.fields
-                + [StructField("_op", StringType()), StructField("_commit_version", LongType())]
-            )
-            reader = ManifestCdfStreamReader(
-                {"path": root + "/t", "keys": "k"}, schema
-            )
-            t0 = time.perf_counter()
-            rows = list(
-                reader.readBetweenOffsets({"version": v1}, {"version": v2})
-            )
-            dt_simple = time.perf_counter() - t0
+            want = sink.changes(v1, v2).count()
 
-            # the DEFAULT partitioned reader, as a genuine streaming drain
-            # (includes per-query engine startup — noted, not subtracted)
+            # a genuine streaming drain (includes per-query engine
+            # startup — noted, not subtracted)
             counts: list[int] = []
             t0 = time.perf_counter()
             q = (
@@ -857,15 +829,12 @@ def probe_cdf(spark) -> None:
             )
             q.awaitTermination(600)
             dt_part = time.perf_counter() - t0
-            assert sum(counts) == len(rows), (
-                f"reader divergence: simple {len(rows)} vs "
-                f"partitioned {sum(counts)}"
+            assert sum(counts) == want, (
+                f"reader divergence: changes() {want} vs drain {sum(counts)}"
             )
             print(
-                f"cdf[changed={n_changed/1e3:.0f}k]: simple(driver) diff "
-                f"{dt_simple:.1f}s / {len(rows)/1e3:.0f}k rows; "
-                f"partitioned(executor) drain {dt_part:.1f}s / "
-                f"{sum(counts)/1e3:.0f}k rows",
+                f"cdf[changed={n_changed/1e3:.0f}k]: partitioned(executor) "
+                f"drain {dt_part:.1f}s / {sum(counts)/1e3:.0f}k rows",
                 flush=True,
             )
     finally:
@@ -879,7 +848,7 @@ def probe_cdf_split(spark) -> None:
     reader with maxRowsPerTask=250k. Reports the planned slice count,
     the per-slice materialized row bound (the task-memory proxy: a task
     touches ≤ old+new slice rows, not the whole day), and drain-time
-    parity of split vs unsplit vs simple."""
+    parity of split vs unsplit."""
     import shutil
     import tempfile
 

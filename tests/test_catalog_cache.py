@@ -1,5 +1,6 @@
 """Warm-session reuse: the parquet schema cache in ``catalog.read_parquet``
-and the codegen class cache sized in ``session.get_session``."""
+and the codegen class cache sized in ``session.get_session``; and the
+session's default parallelism."""
 
 from __future__ import annotations
 
@@ -16,6 +17,7 @@ import pytest
 
 from tests.conftest import SF_DIR
 from crypto_market_tracker_etl_spark.catalog import load_table
+from crypto_market_tracker_etl_spark.session import default_parallelism
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -135,3 +137,12 @@ def test_warm_market_pass_reuses_compiled_classes():
     first, second = json.loads(out.strip().splitlines()[-1])
     assert first > 100, (first, second)
     assert second <= 0.1 * first, (first, second)
+
+
+def test_default_parallelism_falls_back_to_cpu_affinity(monkeypatch):
+    """Without ``SPARK_GRAFT_CPUS`` a session gets one local thread per CPU
+    this process may run on, not a fixed count; the variable overrides it."""
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_parallelism() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_parallelism() == 3

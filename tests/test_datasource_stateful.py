@@ -120,6 +120,15 @@ def _drain_to_parquet(out_stream, out_dir: str, ck_dir: str) -> None:
     q.awaitTermination(180)
 
 
+def _batch_feed(sink, v1: int, v2: int, cols) -> list[tuple]:
+    """``sink.changes(v1, v2)`` as the cdf stream delivers that window:
+    ``cols`` of each change row, stamped ``_commit_version = v2``."""
+    return sorted(
+        tuple(r[c] for c in cols) + (v2,)
+        for r in sink.changes(v1, v2).collect()
+    )
+
+
 def test_running_stats_stream(spark, tmp_path):
     from crypto_market_tracker_etl_spark.streaming.stateful import running_stats_stream
 
@@ -972,12 +981,11 @@ def test_cdc_stream_null_id_on_ts_tie(spark, tmp_path):
     assert got[1]["final_value"] == 2.0 and got[2]["final_value"] == 5.0
 
 
-def test_cdf_partitioned_reader_plans_per_day_and_matches_simple(spark, tmp_path):
-    """The DEFAULT cdf reader is the executor-side partitioned one:
+def test_cdf_partitioned_reader_plans_per_day_and_matches_changes(spark, tmp_path):
+    """The cdf reader is the executor-side partitioned one:
     partitions(start, end) must plan exactly one InputPartition per
     CHANGED day (the driver reads only the two ~KB manifests), and a
-    drain through .option('reader', 'simple') must produce identical
-    change rows — the two readers share one diff core."""
+    streamed drain must produce exactly the batch ``changes()`` rows."""
     import datetime as dtm
 
     from crypto_market_tracker_etl_spark.operators.txn_sink import (
@@ -1004,7 +1012,7 @@ def test_cdf_partitioned_reader_plans_per_day_and_matches_simple(spark, tmp_path
 
     src = ManifestCdfDataSource({"path": tbl, "keys": "k"})
     reader = src.streamReader(src.schema())
-    assert isinstance(reader, ManifestCdfPartitionedReader)  # the default
+    assert isinstance(reader, ManifestCdfPartitionedReader)
     parts = reader.partitions({"version": 1}, {"version": 2})
     assert sorted(p.day for p in parts) == ["2024-01-01", "2024-01-03"]
     # full-history window: all three days changed vs the empty v0
@@ -1015,22 +1023,20 @@ def test_cdf_partitioned_reader_plans_per_day_and_matches_simple(spark, tmp_path
     rows = [d for b in batches for d in b.to_pylist()]
     assert [(d["k"], d["_op"], d["v"]) for d in rows] == [("k0", "U", 10.0)]
 
-    def drain(tag, **opts):
-        out, ck = str(tmp_path / f"out{tag}"), str(tmp_path / f"ck{tag}")
-        s = spark.readStream.format("manifest_cdf").option(
-            "path", tbl).option("keys", "k")
-        for k, v in opts.items():
-            s = s.option(k, v)
-        _drain_to_parquet(s.load(), out, ck)
-        return sorted(
-            # ts included: the two readers emit through different paths
-            # (arrow cast vs python tuples) and a tz-interpretation skew
-            # between them would shift instants on non-UTC hosts
-            (r["k"], r["_op"], r["v"], r["ts"], r["_commit_version"])
-            for r in spark.read.parquet(out).collect()
-        )
-
-    assert drain("p") == drain("s", reader="simple")  # byte-equal feeds
+    out = str(tmp_path / "out")
+    _drain_to_parquet(
+        spark.readStream.format("manifest_cdf")
+        .option("path", tbl).option("keys", "k").load(),
+        out, str(tmp_path / "ck"),
+    )
+    drained = sorted(
+        # ts included: the reader emits through an arrow cast, and a
+        # tz-interpretation skew there would shift instants on non-UTC
+        # hosts
+        (r["k"], r["_op"], r["v"], r["ts"], r["_commit_version"])
+        for r in spark.read.parquet(out).collect()
+    )
+    assert drained == _batch_feed(sink, 0, 2, ["k", "_op", "v", "ts"])
 
 
 def test_cdf_within_day_split_slices_match_whole_diff(spark, tmp_path):
@@ -1038,8 +1044,8 @@ def test_cdf_within_day_split_slices_match_whole_diff(spark, tmp_path):
     MULTIPLE key-hash slices (the r4 weak mark: one huge re-ingested day
     used to be a single task holding 2x the day in pandas). The slices
     must be disjoint, their union must equal the unsplit diff exactly,
-    and a full streamed drain must match the simple reader byte-for-byte
-    — including D rows from a deletion vector."""
+    and a full streamed drain must match the batch ``changes()`` rows
+    exactly — the deletion-vector D rows included in the sliced reads."""
     import datetime as dtm
 
     from crypto_market_tracker_etl_spark.operators.txn_sink import (
@@ -1097,19 +1103,18 @@ def test_cdf_within_day_split_slices_match_whole_diff(spark, tmp_path):
     assert union == ref
     assert {op for (_, op, _) in ref} == {"U", "I", "D"}
 
-    def drain(tag, **opts):
-        out, ck = str(tmp_path / f"out{tag}"), str(tmp_path / f"ck{tag}")
-        s = spark.readStream.format("manifest_cdf").option(
-            "path", tbl).option("keys", "k")
-        for kk, vv in opts.items():
-            s = s.option(kk, vv)
-        _drain_to_parquet(s.load(), out, ck)
-        return sorted(
-            (r["k"], r["_op"], r["v"], r["ts"], r["_commit_version"])
-            for r in spark.read.parquet(out).collect()
-        )
-
-    assert drain("split", maxRowsPerTask="200") == drain("s", reader="simple")
+    out = str(tmp_path / "out")
+    _drain_to_parquet(
+        spark.readStream.format("manifest_cdf")
+        .option("path", tbl).option("keys", "k")
+        .option("maxRowsPerTask", "200").load(),
+        out, str(tmp_path / "ck"),
+    )
+    drained = sorted(
+        (r["k"], r["_op"], r["v"], r["ts"], r["_commit_version"])
+        for r in spark.read.parquet(out).collect()
+    )
+    assert drained == _batch_feed(sink, 0, v, ["k", "_op", "v", "ts"])
 
 
 def test_key_slice_hash_null_batch_dtype_stable(tmp_path):
@@ -1154,8 +1159,8 @@ def test_key_slice_hash_null_batch_dtype_stable(tmp_path):
 
 def test_cdf_partitioned_reader_vacuumed_offset_fails_loudly(spark, tmp_path):
     """Replaying a window whose manifest vacuum removed must raise the
-    documented resync error in the PARTITIONED reader's planning step —
-    same contract as the simple reader and changes_since_checkpoint."""
+    documented resync error in the reader's planning step — same
+    contract as changes_since_checkpoint."""
     import datetime as dtm
 
     import pytest
@@ -1185,10 +1190,10 @@ def test_cdf_partitioned_reader_vacuumed_offset_fails_loudly(spark, tmp_path):
 
 
 def test_cdf_stream_surfaces_delete_fast(spark, tmp_path):
-    """A delete_fast commit repoints only the manifest's dvs section —
-    both cdf readers must still surface the suppressed keys as _op='D'
-    with pre-images, in a LATER offset window than the insert, and agree
-    with each other exactly."""
+    """A delete_fast commit repoints only the manifest's dvs section — the
+    cdf stream must still surface the suppressed keys as _op='D' with
+    pre-images, in a LATER offset window than the insert, and agree with
+    the batch ``changes()`` of each window exactly."""
     import datetime as dtm
 
     from crypto_market_tracker_etl_spark.operators.txn_sink import (
@@ -1204,13 +1209,13 @@ def test_cdf_stream_surfaces_delete_fast(spark, tmp_path):
     S = "k string, ts timestamp, ver int, v double"
     d1 = dtm.datetime(2024, 1, 1, 10)
 
-    def drain(tag, **opts):
-        out, ck = str(tmp_path / f"out{tag}"), str(tmp_path / f"ck{tag}")
-        s = spark.readStream.format("manifest_cdf").option(
-            "path", tbl).option("keys", "k")
-        for kk, vv in opts.items():
-            s = s.option(kk, vv)
-        _drain_to_parquet(s.load(), out, ck)
+    def drain():
+        out = str(tmp_path / "out")
+        _drain_to_parquet(
+            spark.readStream.format("manifest_cdf")
+            .option("path", tbl).option("keys", "k").load(),
+            out, str(tmp_path / "ck"),
+        )
         return sorted(
             (r["k"], r["_op"], r["v"], r["_commit_version"])
             for r in spark.read.parquet(out).collect()
@@ -1218,8 +1223,9 @@ def test_cdf_stream_surfaces_delete_fast(spark, tmp_path):
 
     sink.upsert(spark.createDataFrame(
         [("a", d1, 1, 1.0), ("b", d1, 1, 2.0)], S))
-    assert drain("p") == [("a", "I", 1.0, 1), ("b", "I", 2.0, 1)]
-    assert drain("s", reader="simple") == drain("p")
+    cols = ["k", "_op", "v"]
+    first = _batch_feed(sink, 0, 1, cols)
+    assert drain() == first == [("a", "I", 1.0, 1), ("b", "I", 2.0, 1)]
 
     sink.delete_fast(spark.createDataFrame([("a", d1, 1, 0.0)], S))
     want = [
@@ -1227,5 +1233,4 @@ def test_cdf_stream_surfaces_delete_fast(spark, tmp_path):
         ("a", "I", 1.0, 1),
         ("b", "I", 2.0, 1),
     ]
-    assert drain("p") == want
-    assert drain("s", reader="simple") == want
+    assert drain() == sorted(first + _batch_feed(sink, 1, 2, cols)) == want

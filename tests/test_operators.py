@@ -1,5 +1,5 @@
 """Unit tests for operators without a SQL oracle: generalized as-of join,
-upsert sink, streaming, multimodal plumbing, market-view plans, LSH recall."""
+keyed merge, streaming, multimodal plumbing, market-view plans, LSH recall."""
 
 from __future__ import annotations
 
@@ -10,10 +10,7 @@ from pyspark.sql import functions as F
 
 from crypto_market_tracker_etl_spark.catalog import load_table
 from crypto_market_tracker_etl_spark.operators.asof import asof_join
-from crypto_market_tracker_etl_spark.operators.upsert import (
-    ParquetUpsertSink,
-    merge_upsert,
-)
+from crypto_market_tracker_etl_spark.operators.upsert import merge_upsert
 from crypto_market_tracker_etl_spark.multimodal.binary import (
     decode_media,
     documents_as_media,
@@ -122,245 +119,7 @@ def test_asof_join_tolerance(spark, quotes):
     assert out[ts(13)] is None  # 2h old quote, outside tolerance
 
 
-# ------------------------------------------------------------- upsert sink
-
-
-def test_parquet_upsert_sink_partitions(spark, tmp_path):
-    path = str(tmp_path / "tbl")
-    sink = ParquetUpsertSink(spark, path, keys=["k", "ts"], ts_col="ts")
-    day1 = dt.datetime(2024, 1, 1, 10)
-    day2 = dt.datetime(2024, 1, 2, 10)
-    first = spark.createDataFrame(
-        [("a", day1, 1.0), ("a", day2, 2.0)], "k string, ts timestamp, v double"
-    )
-    sink.upsert(first)
-    assert sink.read().count() == 2
-
-    # revised value for an existing key + one new key, same day
-    second = spark.createDataFrame(
-        [("a", day2, 20.0), ("b", day2, 5.0)], "k string, ts timestamp, v double"
-    )
-    sink.upsert(second)
-    got = {(r["k"], r["ts"]): r["v"] for r in sink.read().collect()}
-    assert got == {("a", day1): 1.0, ("a", day2): 20.0, ("b", day2): 5.0}
-
-    # dynamic partition overwrite: day1's partition untouched by day2 batch
-    import os
-
-    assert sorted(p for p in os.listdir(path) if p.startswith("dt=")) == [
-        "dt=2024-01-01",
-        "dt=2024-01-02",
-    ]
-
-
-def test_upsert_sink_concurrent_writers_last_swap_wins(spark, tmp_path):
-    """The sink's documented single-writer contract, pinned down: two
-    writers that each merge against the same pre-swap state both install
-    complete, well-formed partitions, but the second swap replaces the
-    first — writer 1's new key is silently lost (the lost-update anomaly a
-    transaction-log format like Delta/Iceberg would prevent). Untouched
-    partitions survive both swaps. See the ParquetUpsertSink docstring."""
-    import os
-
-    from crypto_market_tracker_etl_spark.operators.upsert import merge_upsert
-
-    path = str(tmp_path / "tbl")
-    sink = ParquetUpsertSink(spark, path, keys=["k"], ts_col="ts", order=["ver"])
-    day1 = dt.datetime(2024, 1, 1, 10)
-    day2 = dt.datetime(2024, 1, 2, 10)
-    schema = "k string, ts timestamp, ver int, v double"
-    sink.upsert(
-        spark.createDataFrame([("a", day1, 1, 1.0), ("b", day2, 1, 2.0)], schema)
-    )
-
-    # both writers snapshot the table BEFORE either commits (checkpoint
-    # emulates a read that started pre-swap; the real sink's lazy read is
-    # exactly why interleaving is unsafe)
-    old_snap = sink.read().localCheckpoint(eager=True)
-
-    def writer_merge(batch):
-        batch = batch.withColumn("dt", F.to_date("ts"))
-        touched = F.broadcast(batch.select("dt").distinct())
-        old = old_snap.join(touched, "dt", "left_semi")
-        return merge_upsert(old, batch, ["k"], ["ver"])
-
-    m1 = writer_merge(spark.createDataFrame([("c", day2, 2, 30.0)], schema))
-    m2 = writer_merge(spark.createDataFrame([("d", day2, 2, 40.0)], schema))
-    sink._stage_and_swap(m1)  # writer 1 commits
-    sink._stage_and_swap(m2)  # writer 2 commits second: last swap wins
-
-    got = {r["k"]: r["v"] for r in sink.read().collect()}
-    # well-formed table, but writer 1's key "c" is gone — lost update
-    assert got == {"a": 1.0, "b": 2.0, "d": 40.0}
-    assert sorted(p for p in os.listdir(path) if p.startswith("dt=")) == [
-        "dt=2024-01-01",
-        "dt=2024-01-02",
-    ]
-
-
-def test_parquet_upsert_sink_multiday_incremental_sf01(spark, tmp_path):
-    """Multi-day incremental sequence at sf0.1 (~100k rows): three
-    overlapping version-tagged batches merged in order must equal one
-    keep-latest over their union, and a final single-day batch must leave
-    every other day's partition byte-identical (stage-and-swap only
-    replaces touched directories)."""
-    import os
-
-    from crypto_market_tracker_etl_spark.catalog import load_table
-    from crypto_market_tracker_etl_spark.operators.upsert import dedup_keep_latest
-
-    ev = load_table(spark, "/root/testdata/sf0.1", "events").select(
-        "event_id", "ts", "user_id", "value"
-    )
-    path = str(tmp_path / "tbl")
-    sink = ParquetUpsertSink(
-        spark, path, keys=["user_id", "ts"], ts_col="ts", order=["version"]
-    )
-    batches = [
-        ev.filter(F.col("event_id") % 3 < 2).withColumn("version", F.lit(1)),
-        ev.filter(F.col("event_id") % 3 > 0)
-        .withColumn("value", F.col("value") + 1000.0)
-        .withColumn("version", F.lit(2)),
-        ev.filter(F.col("event_id") % 2 == 0)
-        .withColumn("value", F.col("value") + 5000.0)
-        .withColumn("version", F.lit(3)),
-    ]
-    for b in batches:
-        sink.upsert(b)
-
-    union = batches[0]
-    for b in batches[1:]:
-        union = union.unionByName(b)
-    expected = dedup_keep_latest(
-        union.withColumn("dt", F.to_date("ts")), ["user_id", "ts"], ["version"]
-    )
-    got = sink.read()
-    assert got.count() == expected.count()
-    assert got.exceptAll(expected).count() == 0
-    assert expected.exceptAll(got).count() == 0
-
-    # single-day revision touches exactly one partition directory
-    max_day = ev.agg(F.max(F.to_date("ts")).alias("d")).collect()[0]["d"]
-    before = {
-        p: os.path.getmtime(os.path.join(path, p))
-        for p in os.listdir(path)
-        if p.startswith("dt=")
-    }
-    last = (
-        ev.filter(F.to_date("ts") == F.lit(max_day))
-        .withColumn("value", F.col("value") - 7.0)
-        .withColumn("version", F.lit(4))
-    )
-    sink.upsert(last)
-    after = {
-        p: os.path.getmtime(os.path.join(path, p))
-        for p in os.listdir(path)
-        if p.startswith("dt=")
-    }
-    changed = {p for p in before if before[p] != after[p]}
-    assert changed == {f"dt={max_day}"}
-    # and the revision is live
-    revised = sink.read().filter(
-        (F.to_date("ts") == F.lit(max_day)) & (F.col("version") == 4)
-    )
-    assert revised.count() == ev.filter(F.to_date("ts") == F.lit(max_day)).count()
-
-
-def test_parquet_upsert_sink_additive_schema_evolution(spark, tmp_path):
-    """A batch introducing a NEW column merges cleanly: old rows read as
-    null for it, new rows carry it, nothing is rewritten except the
-    touched partitions — additive evolution with zero migration."""
-    sink = ParquetUpsertSink(
-        spark, str(tmp_path / "t"), keys=["asset_id", "ts"], ts_col="ts"
-    )
-    sink.upsert(
-        spark.createDataFrame(
-            [("btc", dt.datetime(2024, 1, 1, 1), 100.0)],
-            "asset_id string, ts timestamp, price double",
-        )
-    )
-    sink.upsert(
-        spark.createDataFrame(
-            [("btc", dt.datetime(2024, 1, 2, 1), 200.0, 9.5)],
-            "asset_id string, ts timestamp, price double, spread double",
-        )
-    )
-    rows = {str(r["dt"]): r for r in sink.read().collect()}
-    assert rows["2024-01-01"]["spread"] is None
-    assert rows["2024-01-02"]["spread"] == 9.5
-    assert rows["2024-01-01"]["price"] == 100.0
-
-
-def test_parquet_upsert_sink_expire_drops_old_partitions(spark, tmp_path):
-    """Retention removes exactly the partitions before the cutoff and
-    leaves surviving data untouched (no rewrite)."""
-    sink = ParquetUpsertSink(
-        spark, str(tmp_path / "t"), keys=["asset_id", "ts"], ts_col="ts"
-    )
-    rows = [
-        ("btc", dt.datetime(2024, 1, d, 1), float(d)) for d in (1, 2, 3, 4)
-    ]
-    sink.upsert(
-        spark.createDataFrame(rows, "asset_id string, ts timestamp, price double")
-    )
-    removed = sink.expire("2024-01-03")
-    assert removed == ["dt=2024-01-01", "dt=2024-01-02"]
-    left = {str(r["dt"]) for r in sink.read().select("dt").distinct().collect()}
-    assert left == {"2024-01-03", "2024-01-04"}
-    assert sink.expire("2024-01-03") == []  # idempotent
-
-
-def test_parquet_upsert_sink_compact(spark, tmp_path):
-    """Compaction folds accumulated per-batch small files into one file per
-    partition (below the record cap) with identical data."""
-    import glob
-    import os
-
-    path = str(tmp_path / "tbl")
-    sink = ParquetUpsertSink(spark, path, keys=["k", "ts"], ts_col="ts", order=["v"])
-    day = dt.datetime(2024, 1, 1, 10)
-    sink.upsert(
-        spark.createDataFrame(
-            [(f"k0-{j}", day, 0.0) for j in range(25)],
-            "k string, ts timestamp, v double",
-        )
-    )
-    part = os.path.join(path, "dt=2024-01-01")
-    for i in range(1, 4):  # simulate many-task writers appending small files
-        spark.createDataFrame(
-            [(f"k{i}-{j}", day, float(i)) for j in range(25)],
-            "k string, ts timestamp, v double",
-        ).coalesce(1).write.mode("append").parquet(part)
-    before = len(glob.glob(os.path.join(part, "*.parquet")))
-    assert before >= 4
-    data_before = sorted((r["k"], r["v"]) for r in sink.read().collect())
-    sink.compact()
-    after = len(glob.glob(os.path.join(part, "*.parquet")))
-    assert after == 1
-    assert sorted((r["k"], r["v"]) for r in sink.read().collect()) == data_before
-
-
-def test_merge_upsert_with_changes_actions(spark):
-    """Change feed: inserts for new keys, updates for value changes,
-    NOTHING for identical re-deliveries; merged output matches plain
-    merge_upsert."""
-    from crypto_market_tracker_etl_spark.operators.upsert import (
-        merge_upsert_with_changes,
-    )
-
-    old = spark.createDataFrame(
-        [("a", 1, 10.0), ("b", 1, 20.0)], "k string, ver int, v double"
-    )
-    new = spark.createDataFrame(
-        [("b", 2, 25.0), ("c", 1, 30.0), ("a", 1, 10.0)],
-        "k string, ver int, v double",
-    )
-    merged, changes = merge_upsert_with_changes(old, new, ["k"], ["ver"])
-    acts = {r["k"]: r["action"] for r in changes.collect()}
-    assert acts == {"b": "update", "c": "insert"}  # 'a' unchanged → absent
-    got = {(r["k"], r["ver"], r["v"]) for r in merged.collect()}
-    want = {(r["k"], r["ver"], r["v"]) for r in merge_upsert(old, new, ["k"], ["ver"]).collect()}
-    assert got == want == {("a", 1, 10.0), ("b", 2, 25.0), ("c", 1, 30.0)}
+# ------------------------------------------------------------- keyed merge
 
 
 def test_merge_upsert_tie_prefers_new(spark):
@@ -846,6 +605,9 @@ def test_ttl_cache_expires_and_rebuilds(spark):
 
 
 def test_incremental_upsert_stream_available_now(spark, tmp_path):
+    from crypto_market_tracker_etl_spark.operators.txn_sink import (
+        ManifestParquetSink,
+    )
     from crypto_market_tracker_etl_spark.streaming.incremental import (
         incremental_upsert_stream,
     )
@@ -861,7 +623,7 @@ def test_incremental_upsert_stream_available_now(spark, tmp_path):
     )
     batch.write.mode("overwrite").parquet(src_dir)
     stream = spark.readStream.schema(batch.schema).parquet(src_dir)
-    sink = ParquetUpsertSink(spark, str(tmp_path / "out"), keys=["k", "ts"], ts_col="ts")
+    sink = ManifestParquetSink(spark, str(tmp_path / "out"), keys=["k", "ts"], ts_col="ts")
     q = incremental_upsert_stream(stream, sink, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
     got = {(r["k"], r["ts"]): r["v"] for r in sink.read().collect()}

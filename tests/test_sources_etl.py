@@ -7,7 +7,7 @@ import json
 
 import pytest
 
-from crypto_market_tracker_etl_spark.operators.upsert import ParquetUpsertSink
+from crypto_market_tracker_etl_spark.operators.txn_sink import ManifestParquetSink
 from crypto_market_tracker_etl_spark.plans.etl_job import (
     run_backfill,
     run_incremental,
@@ -126,26 +126,8 @@ def test_retry_exhausted():
         fetch_with_retry(always_429, "u", sleep=lambda s: None)
 
 
-def test_run_incremental_end_to_end(spark, tmp_path):
-    sink = ParquetUpsertSink(
-        spark, str(tmp_path / "prices"), keys=["asset_id", "ts"], ts_col="ts"
-    )
-    out = run_incremental(spark, ASSETS, fake_fetch, sink, days=1)
-    assert out["assets"].count() == 3
-    assert out["prices"].count() == 72  # 3 assets × 24 hourly points
-    daily = {
-        (r["asset_id"], str(r["date"])): r for r in out["daily_metrics"].collect()
-    }
-    assert len(daily) == 6  # 24 hourly points straddle 2 UTC dates
-    stored = sink.read()
-    assert stored.count() == 72
-    # idempotent re-run: same data upserted again → no duplicates
-    run_incremental(spark, ASSETS, fake_fetch, sink, days=1)
-    assert sink.read().count() == 72
-
-
 def test_run_backfill_caps_days(spark, tmp_path):
-    sink = ParquetUpsertSink(
+    sink = ManifestParquetSink(
         spark, str(tmp_path / "bf"), keys=["asset_id", "ts"], ts_col="ts"
     )
     prices = run_backfill(spark, ["bitcoin"], fake_fetch, sink, days=365)
@@ -157,17 +139,15 @@ def test_refresh_daily_metrics_incremental(spark, tmp_path):
     must equal a full recompute after overlapping multi-day upserts."""
     import datetime as dt
 
-    from pyspark.sql import functions as F
-
     from crypto_market_tracker_etl_spark.plans.etl_job import refresh_daily_metrics
     from crypto_market_tracker_etl_spark.plans.market_views import (
         daily_metrics_from_ticks,
     )
 
-    prices_sink = ParquetUpsertSink(
+    prices_sink = ManifestParquetSink(
         spark, str(tmp_path / "prices"), keys=["asset_id", "ts"], ts_col="ts"
     )
-    daily_sink = ParquetUpsertSink(
+    daily_sink = ManifestParquetSink(
         spark, str(tmp_path / "daily"), keys=["asset_id", "date"], ts_col="ts"
     )
     schema = "asset_id string, ts timestamp, price double, market_cap double, volume double"
@@ -180,9 +160,8 @@ def test_refresh_daily_metrics_incremental(spark, tmp_path):
         ],
     ]
     for rows in batches:
-        batch = spark.createDataFrame(rows, schema)
-        prices_sink.upsert(batch)
-        touched = batch.select(F.to_date("ts").alias("dt")).distinct()
+        prices_sink.upsert(spark.createDataFrame(rows, schema))
+        touched = sorted({r[1].date().isoformat() for r in rows})
         refresh_daily_metrics(prices_sink, daily_sink, touched)
 
     got = {
@@ -231,7 +210,7 @@ def test_observe_quality_zero_extra_pass(spark, tmp_path):
             assert_quality(obs, 0.0, ["props"])
 
 
-def test_upsert_with_changes_feeds_refresh_minimally(spark, tmp_path):
+def test_changes_feed_refresh_minimally(spark, tmp_path):
     """CDC-driven incremental maintenance: re-delivering one unchanged day
     alongside one revised day must produce changes ONLY for the revised
     day, so the daily-aggregate refresh recomputes one partition, not
@@ -239,40 +218,34 @@ def test_upsert_with_changes_feeds_refresh_minimally(spark, tmp_path):
     a full recompute."""
     import datetime as dt
 
-    from pyspark.sql import functions as F
-
     from crypto_market_tracker_etl_spark.plans.etl_job import refresh_daily_metrics
     from crypto_market_tracker_etl_spark.plans.market_views import (
         daily_metrics_from_ticks,
     )
 
-    prices_sink = ParquetUpsertSink(
+    prices_sink = ManifestParquetSink(
         spark, str(tmp_path / "prices"), keys=["asset_id", "ts"], ts_col="ts"
     )
-    daily_sink = ParquetUpsertSink(
+    daily_sink = ManifestParquetSink(
         spark, str(tmp_path / "daily"), keys=["asset_id", "date"], ts_col="ts"
     )
     schema = "asset_id string, ts timestamp, price double, market_cap double, volume double"
     day1 = ("btc", dt.datetime(2024, 1, 1, 1), 100.0, 1e9, 1e6)
     day2 = ("btc", dt.datetime(2024, 1, 2, 1), 200.0, 2e9, 2e6)
-    first = spark.createDataFrame([day1, day2], schema)
-    changes1 = prices_sink.upsert_with_changes(first)
-    assert {r["action"] for r in changes1.collect()} == {"insert"}
-    refresh_daily_metrics(
-        prices_sink, daily_sink, changes1.select("dt").distinct()
-    )
+    v = prices_sink.upsert(spark.createDataFrame([day1, day2], schema))
+    ch = prices_sink.changes(v - 1, v).collect()
+    assert {r["_op"] for r in ch} == {"I"}
+    refresh_daily_metrics(prices_sink, daily_sink, sorted({r["dt"] for r in ch}))
 
     # replay day1 unchanged + revise day2
     second = spark.createDataFrame(
         [day1, ("btc", dt.datetime(2024, 1, 2, 1), 210.0, 2e9, 2e6)], schema
     )
-    changes2 = prices_sink.upsert_with_changes(second)
-    ch = changes2.collect()
-    assert {str(r["dt"]) for r in ch} == {"2024-01-02"}  # day1 replay is a no-op
-    assert {r["action"] for r in ch} == {"update"}
-    refresh_daily_metrics(
-        prices_sink, daily_sink, changes2.select("dt").distinct()
-    )
+    v = prices_sink.upsert(second)
+    ch = prices_sink.changes(v - 1, v).collect()
+    # the day-1 replay is a no-op: day 2's update is the only change row
+    assert [(r["dt"], r["_op"]) for r in ch] == [("2024-01-02", "U")]
+    refresh_daily_metrics(prices_sink, daily_sink, [r["dt"] for r in ch])
     got = {
         (r["asset_id"], str(r["date"])): r["close"]
         for r in daily_sink.read().collect()
@@ -369,22 +342,22 @@ def test_quarantine_requires_permissive(spark):
 
 
 def test_run_incremental_with_transactional_sink(spark, tmp_path):
-    """The ETL entry points are sink-agnostic: the same incremental pass
-    through a ManifestParquetSink gives the reference pipeline concurrent
-    writers + snapshot reads (the Postgres-parity posture), with identical
-    data and idempotency."""
-    from crypto_market_tracker_etl_spark.operators.txn_sink import (
-        ManifestParquetSink,
-    )
-
+    """One incremental pass end to end through the manifest sink: the three
+    upsert-ready frames, the stored prices, and an idempotent re-run
+    (keyed MERGE, no duplicates; the change feed shows no inserts)."""
     sink = ManifestParquetSink(
         spark, str(tmp_path / "prices_txn"), keys=["asset_id", "ts"],
         ts_col="ts", order=["inserted_at"],
     )
-    run_incremental(spark, ASSETS, fake_fetch, sink, days=1)
+    out = run_incremental(spark, ASSETS, fake_fetch, sink, days=1)
+    assert out["assets"].count() == 3
+    assert out["prices"].count() == 72  # 3 assets × 24 hourly points
+    daily = {
+        (r["asset_id"], str(r["date"])): r for r in out["daily_metrics"].collect()
+    }
+    assert len(daily) == 6  # 24 hourly points straddle 2 UTC dates
     assert sink.read().count() == 72
     v1 = sink.current_version()
-    # idempotent re-run: keyed MERGE, no duplicates; CDF shows no inserts
     run_incremental(spark, ASSETS, fake_fetch, sink, days=1)
     assert sink.read().count() == 72
     ch = sink.changes(v1)
@@ -398,9 +371,6 @@ def test_maintain_daily_from_feed(spark, tmp_path):
     derivable) — and a no-change poll refreshes nothing."""
     import datetime as dtm
 
-    from crypto_market_tracker_etl_spark.operators.txn_sink import (
-        ManifestParquetSink,
-    )
     from crypto_market_tracker_etl_spark.plans.etl_job import (
         maintain_daily_from_feed,
     )
@@ -409,7 +379,7 @@ def test_maintain_daily_from_feed(spark, tmp_path):
         spark, str(tmp_path / "prices"), keys=["asset_id", "ts"],
         ts_col="ts", order=["inserted_at"],
     )
-    daily = ParquetUpsertSink(
+    daily = ManifestParquetSink(
         spark, str(tmp_path / "daily"), keys=["asset_id", "date"], ts_col="ts"
     )
     ck = str(tmp_path / "ck")

@@ -1,7 +1,7 @@
-"""ManifestParquetSink: the transactional (optimistic-concurrency) upgrade
-of ParquetUpsertSink. These tests pin down exactly the guarantees the
-stage-and-swap sink's contract test shows it lacking: no lost updates
-between concurrent writers, and cross-partition snapshot reads."""
+"""ManifestParquetSink, the engine's keyed-MERGE table with optimistic
+concurrency. These tests pin down the guarantees a table rewritten in
+place lacks: no lost updates between concurrent writers, and
+cross-partition snapshot reads."""
 
 from __future__ import annotations
 
