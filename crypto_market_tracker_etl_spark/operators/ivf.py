@@ -9,11 +9,14 @@ clustered corpora (the common case for model embeddings).
 
 Scale shape, piece by piece:
 
-- **Assignment is a pure Catalyst expression** — centroids are embedded as
-  array literals, nearest-centroid is an ``array_min`` over k ``(distance,
-  cid)`` structs. Zero joins, zero shuffles: indexing 100 TB of vectors is
-  one narrow scan stage writing ``list_id``-partitioned parquet (write
-  once, probe many).
+- **Assignment is one narrow Arrow scan**: ``corpus_assign_udf`` runs the
+  numpy kernel ``np_coarse_nd`` over each batch (k quantized cosines per
+  vector, argmin with centroid-id tiebreak). Zero joins, zero shuffles:
+  indexing 100 TB of vectors is one narrow scan stage writing
+  ``list_id``-partitioned parquet (write once, probe many). The same
+  argmin as a Catalyst expression, ``assign_list`` (centroids as array
+  literals, ``array_min`` over k ``(distance, cid)`` structs), serves
+  training and ``semdedup``.
 - **Training is unrolled Lloyd's**: per iteration one scan assigns, then a
   ``posexplode`` → ``groupBy(cid, pos)`` partial-agg computes element-wise
   means (map-side combine does nearly all the work; the shuffle carries
@@ -21,10 +24,10 @@ Scale shape, piece by piece:
   to become next iteration's literals — the same bounded-collect anchor
   pattern as the max-ts anchors in queries.py (k·dim ≪ 10⁵ values for any
   sane k), never a corpus collect.
-- **Probing** explodes each query to its ``nprobe`` list ids (expression-
-  level ``array_sort`` + ``slice`` over the same k-struct array), then one
-  broadcast equi-join on ``list_id`` against the indexed corpus — work is
-  Σ per-list |Q_l|·|C_l|, the IVF contract.
+- **Probing** explodes each query to its ``nprobe`` list ids (the same
+  numpy kernel, ``query_probe_udf``: stable argsort, nearest first), then
+  one broadcast equi-join on ``list_id`` against the indexed corpus — work
+  is Σ per-list |Q_l|·|C_l|, the IVF contract.
 
 Determinism: centroid seeds are the k corpus vectors with the smallest
 ``md5(id)`` (engine-portable hash order), distances are rounded before
@@ -109,17 +112,17 @@ def assign_list(
     return F.array_min(_neg_cos_entries(vec, centroids, round_scale))["cid"]
 
 
-# -- Arrow-vectorized twins ---------------------------------------------------
+# -- numpy kernels -------------------------------------------------------------
 #
-# The expression path above is the oracle-semantics reference, but Spark
-# evaluates higher-order functions interpreted (outside whole-stage codegen)
-# and re-evaluates lambda-body subexpressions per element — measured ~17 ms
-# per ROW for k=8 centroids at dim 64. The numpy kernels below are
-# bit-identical (sequential small-axis reductions match the fold order,
-# float32→float64 widening is exact, sign-aware floor(|x|·10^s+0.5) matches
-# HALF_UP rounding) and ~1000× faster; equivalence is pinned by
-# test_ivf_vectorized_matches_expression / test_ivfpq_vectorized_matches_
-# expression on real data.
+# ivf_index and ivf_knn assign and probe through Arrow UDFs over the kernels
+# below. At k ≤ EXACT_COARSE_MAX_K they equal the ``assign_list`` expression
+# bit for bit: sequential small-axis reductions match the fold order,
+# float32→float64 widening is exact, and sign-aware floor(|x|·10^s+0.5)
+# matches HALF_UP rounding (test_np_kernels_match_sequential_fold on random
+# data, the knn_ivf oracle row end to end). They cost a fixed Arrow-stage
+# overhead and then scale far better than the interpreted higher-order
+# functions: 200k 64-dim vectors, k=8, indexed in 0.9 s vs 3.0 s on 4 cores
+# (SCALE.md §IVF-PQ).
 
 
 # coarse quantizers up to this size use the bit-exact (fold-order-matched)
@@ -240,14 +243,6 @@ def query_probe_udf(
     return _f
 
 
-def probe_lists(
-    vec: Column, centroids: list[list[float]], nprobe: int, round_scale: int = 4
-) -> Column:
-    """The ``nprobe`` nearest centroid ids, nearest first (array<int>)."""
-    ordered = F.array_sort(_neg_cos_entries(vec, centroids, round_scale))
-    return F.transform(F.slice(ordered, 1, nprobe), lambda e: e["cid"])
-
-
 def train_centroids(
     corpus: DataFrame,
     k: int,
@@ -306,7 +301,6 @@ def ivf_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_scale: int = 4,
-    vectorized: bool = True,
 ) -> DataFrame:
     """Corpus with its inverted-list assignment: (id, v, n, list_id).
 
@@ -317,18 +311,14 @@ def ivf_index(
     base = corpus.select(
         F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cv")
     )
-    if vectorized:
-        return base.withColumn(
-            "__a", corpus_assign_udf(centroids, round_scale)(F.col("cv"))
-        ).select(
-            "neighbor_id",
-            "cv",
-            F.col("__a.list_id").alias("list_id"),
-            F.col("__a.cn").alias("cn"),
-        )
     return base.withColumn(
-        "list_id", assign_list(F.col("cv"), centroids, round_scale)
-    ).withColumn("cn", norm(F.col("cv")))
+        "__a", corpus_assign_udf(centroids, round_scale)(F.col("cv"))
+    ).select(
+        "neighbor_id",
+        "cv",
+        F.col("__a.list_id").alias("list_id"),
+        F.col("__a.cn").alias("cn"),
+    )
 
 
 def ivf_knn(
@@ -340,7 +330,6 @@ def ivf_knn(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_scale: int = 4,
-    vectorized: bool = True,
 ) -> DataFrame:
     """Approximate top-k cosine via IVF: score only the ``nprobe`` nearest
     inverted lists per query.
@@ -350,24 +339,17 @@ def ivf_knn(
     interchangeable.
     """
     c = ivf_index(corpus, centroids, id_col=id_col, vec_col=vec_col,
-                  round_scale=round_scale, vectorized=vectorized)
-    qbase = queries.select(
+                  round_scale=round_scale)
+    q = queries.select(
         F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
+    ).withColumn(
+        "__q", query_probe_udf(centroids, nprobe, round_scale)(F.col("qv"))
+    ).select(
+        "query_id",
+        "qv",
+        F.col("__q.qn").alias("qn"),
+        F.explode(F.col("__q.probes")).alias("list_id"),
     )
-    if vectorized:
-        q = qbase.withColumn(
-            "__q", query_probe_udf(centroids, nprobe, round_scale)(F.col("qv"))
-        ).select(
-            "query_id",
-            "qv",
-            F.col("__q.qn").alias("qn"),
-            F.explode(F.col("__q.probes")).alias("list_id"),
-        )
-    else:
-        q = qbase.withColumn("qn", norm(F.col("qv"))).withColumn(
-            "list_id",
-            F.explode(probe_lists(F.col("qv"), centroids, nprobe, round_scale)),
-        )
     scored = (
         c.join(F.broadcast(q), "list_id")
         .filter(F.col("neighbor_id") != F.col("query_id"))

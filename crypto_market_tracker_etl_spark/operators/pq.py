@@ -12,13 +12,10 @@ computation), never against the raw vectors.
 
 Scale shape (the 100 TB story):
 
-- **Encoding is one narrow scan, no joins, no shuffles** — by default an
-  Arrow-batched numpy kernel (see ``pq_encode``: Spark evaluates
-  higher-order functions interpreted, so the pure-Catalyst reference path,
-  kept as ``vectorized=False``, is ~1000× slower per row and exists for
-  oracle-semantics documentation and the bit-equivalence pytest).
+- **Encoding is one narrow scan, no joins, no shuffles**: an Arrow-batched
+  numpy kernel (``_np_encode``) over each batch of vectors.
 - **ADC is table lookup, not arithmetic**: each query precomputes an
-  ``m × ks`` table of subspace distances (a few KB). By default the fused
+  ``m × ks`` table of subspace distances (a few KB). The fused
   ``_adc_scan`` scores ALL queries inside the same Arrow pass and emits
   only per-partition top-R partials — the |corpus|×|Q| pair relation never
   materializes — and the scan reads only the codes column (m bytes per
@@ -35,8 +32,9 @@ are seeded from the ``ks`` corpus vectors with the smallest ``md5(id)``
 subspace distance is integer-quantized — ``round(10⁴·‖a−b‖²)`` as BIGINT —
 before any argmin/sum/rank, so encoding, ADC sums, and the final ranking
 are exact integer arithmetic, bit-reproducible in ANSI SQL. The fold that
-feeds the rounding is sequential (``F.aggregate`` ≡ DuckDB
-``list_reduce``), same add order both engines.
+feeds the rounding is sequential (the dim-by-dim numpy loop, the
+re-rank's ``F.aggregate`` and DuckDB's ``list_reduce``), same add order in
+both engines.
 
 Reference parity note: the reference repo has no vector search; this module
 is part of the LLM-data-pipeline extension surface (SURVEY.md §2.11
@@ -102,39 +100,17 @@ def _sq_dist_int_cols(a: Column, b: Column) -> Column:
     return F.round(sq * DIST_SCALE, 0).cast("long")
 
 
-def _lit_codebook(codebook: list[list[float]]) -> Column:
-    """One subspace codebook as a 2-D array literal (ks × dsub doubles)."""
-    return F.array(
-        *[F.array(*[F.lit(float(x)) for x in code]) for code in codebook]
-    )
-
-
-def _sub_dists(vec: Column, sub: int, dsub: int, codebook: list[list[float]]) -> Column:
-    """Array of ks integer-quantized distances from ``vec``'s subspace-
-    ``sub`` slice to each codebook entry. Data-driven ``transform`` over
-    the codebook LITERAL (one lambda, not ks unrolled folds): the
-    expression tree stays small enough for whole-stage codegen — the
-    unrolled per-code variant compiled to a huge method that fell out of
-    codegen and ran ~10× slower."""
-    sl = _sub_slice(vec, sub, dsub)
-    return F.transform(_lit_codebook(codebook), lambda c: _sq_dist_int_cols(sl, c))
-
-
-def _sub_slice(vec: Column, sub: int, dsub: int) -> Column:
-    return F.slice(vec, sub * dsub + 1, dsub)
-
-
 def _np_sub_dists_int(V: np.ndarray, sub: int, codebook: list[list[float]]) -> np.ndarray:
-    """(n × ks) integer-quantized squared subspace distances in numpy —
-    the vectorized twin of ``_sub_dists``, bit-identical by construction:
-    float32→float64 widening is exact, (x−y)² is elementwise, the
-    reduction accumulates DIM BY DIM in an explicit left-to-right loop —
+    """(n × ks) integer-quantized squared subspace distances in numpy, equal
+    to the oracle SQL's ``round(10⁴ · list_reduce((x−y)²))`` by
+    construction: float32→float64 widening is exact, (x−y)² is elementwise,
+    the reduction accumulates DIM BY DIM in an explicit left-to-right loop —
     ``ndarray.sum`` must NOT be used here: numpy reduces even short axes
     with an unrolled multi-accumulator tree, which differs from the
-    Catalyst/DuckDB sequential fold in the last ulp often enough to flip
-    an integer quantization on boundary values — and floor(x·SCALE + 0.5)
-    equals Spark's HALF_UP round for these positive magnitudes. Pinned by
-    test_pq_vectorized_encode_matches_expression on real data and by
+    DuckDB sequential fold in the last ulp often enough to flip an integer
+    quantization on boundary values — and floor(x·SCALE + 0.5) equals
+    HALF_UP rounding for these positive magnitudes. Pinned by the
+    knn_pq / knn_ivfpq / knn_ivfadc oracle rows on real data and by
     test_np_kernels_match_sequential_fold on random data."""
     CB = np.asarray(codebook, dtype=np.float64)
     dsub = CB.shape[1]
@@ -146,34 +122,22 @@ def _np_sub_dists_int(V: np.ndarray, sub: int, codebook: list[list[float]]) -> n
     return np.floor(d * DIST_SCALE + 0.5).astype(np.int64)
 
 
-def _codes_udf(codebooks: Codebooks):
-    m = len(codebooks)
+def _np_encode(V: np.ndarray, codebooks: Codebooks) -> np.ndarray:
+    """(n × m) int32 PQ codes: per subspace the argmin quantized distance,
+    smallest sid on ties (``argmin`` returns the first minimum)."""
+    codes = np.empty((V.shape[0], len(codebooks)), dtype=np.int32)
+    for s, cb in enumerate(codebooks):
+        codes[:, s] = _np_sub_dists_int(V, s, cb).argmin(1)
+    return codes
 
+
+def _codes_udf(codebooks: Codebooks):
     @F.pandas_udf("array<int>")
     def _f(emb: pd.Series) -> pd.Series:
         V = _np_matrix(emb)
         if V.shape[0] == 0:
             return pd.Series([], dtype=object)
-        out = np.empty((V.shape[0], m), dtype=np.int32)
-        for s in range(m):
-            out[:, s] = _np_sub_dists_int(V, s, codebooks[s]).argmin(1)
-        return pd.Series(list(out))
-
-    return _f
-
-
-def _tables_udf(codebooks: Codebooks):
-    m = len(codebooks)
-
-    @F.pandas_udf("array<array<bigint>>")
-    def _f(emb: pd.Series) -> pd.Series:
-        V = _np_matrix(emb)
-        if V.shape[0] == 0:
-            return pd.Series([], dtype=object)
-        tbl = np.stack(
-            [_np_sub_dists_int(V, s, codebooks[s]) for s in range(m)], axis=1
-        )  # n × m × ks
-        return pd.Series([t.tolist() for t in tbl])
+        return pd.Series(list(_np_encode(V, codebooks)))
 
     return _f
 
@@ -183,12 +147,9 @@ def _coded_corpus_udf(
     centroids: list[list[float]],
     residual: bool = False,
 ):
-    """One Arrow pass over the corpus: PQ codes + coarse list assignment.
-    Fusing them matters — each was individually cheap in numpy but the
-    interpreted expression twins cost seconds per scan, and one UDF means
-    one scan, one Python round-trip. ``residual=True`` encodes
+    """One Arrow pass over the corpus: PQ codes + coarse list assignment
+    (one scan, one Python round-trip). ``residual=True`` encodes
     ``v − centroid(list)`` (IVFADC; pass residual codebooks)."""
-    m = len(codebooks)
     C = np.asarray(centroids, dtype=np.float64)
 
     @F.pandas_udf("struct<codes: array<int>, list_id: int>")
@@ -202,40 +163,8 @@ def _coded_corpus_udf(
                 }
             )
         lid = _np_coarse_nd(V, centroids).argmin(1)
-        base = V - C[lid] if residual else V
-        codes = np.empty((V.shape[0], m), dtype=np.int32)
-        for s in range(m):
-            codes[:, s] = _np_sub_dists_int(base, s, codebooks[s]).argmin(1)
+        codes = _np_encode(V - C[lid] if residual else V, codebooks)
         return pd.DataFrame({"codes": list(codes), "list_id": lid.astype(np.int32)})
-
-    return _f
-
-
-def _probed_queries_udf(
-    codebooks: Codebooks, centroids: list[list[float]], nprobe: int
-):
-    """One Arrow pass over the query set: ADC tables + nprobe probe list,
-    nearest list first (stable argsort ≡ the (nd, cid) struct sort)."""
-    m = len(codebooks)
-
-    @F.pandas_udf("struct<qtbl: array<array<bigint>>, probes: array<int>>")
-    def _f(emb: pd.Series) -> pd.DataFrame:
-        V = _np_matrix(emb)
-        if V.shape[0] == 0:
-            return pd.DataFrame(
-                {
-                    "qtbl": pd.Series([], dtype=object),
-                    "probes": pd.Series([], dtype=object),
-                }
-            )
-        tbl = np.stack(
-            [_np_sub_dists_int(V, s, codebooks[s]) for s in range(m)], axis=1
-        )
-        nd = _np_coarse_nd(V, centroids)
-        probes = np.argsort(nd, axis=1, kind="stable")[:, :nprobe].astype(np.int32)
-        return pd.DataFrame(
-            {"qtbl": [t.tolist() for t in tbl], "probes": list(probes)}
-        )
 
     return _f
 
@@ -244,81 +173,14 @@ def pq_encode(
     df: DataFrame,
     codebooks: Codebooks,
     vec_col: str = "embedding",
-    vectorized: bool = True,
 ) -> DataFrame:
     """Add ``codes: array<int>`` (length m): per subspace the argmin-
-    distance codebook id, deterministic smallest-sid tiebreak. Indexing a
-    corpus is one narrow scan either way.
-
-    ``vectorized=True`` (default): Arrow-batched numpy kernel. This is the
-    one place in the engine where a Pandas UDF beats the built-in
-    expression: the encode is m·ks lambda-evaluated folds per ROW, and
-    Spark evaluates higher-order functions interpreted (they are excluded
-    from whole-stage codegen), at ~µs per lambda call — measured 35 ms/row
-    at m=8, ks=16 vs ~10 µs/row for the numpy batch kernel. The kernel is
-    bit-identical to the expression path (see ``_np_sub_dists_int``), so
-    the oracle attestation covers both; ``vectorized=False`` keeps the
-    pure-Catalyst reference implementation (codebook-literal ``transform``,
-    slices pre-projected once per row — the naive per-code unrolling was
-    another 10× slower)."""
-    if vectorized:
-        return df.withColumn("codes", _codes_udf(codebooks)(F.col(vec_col)))
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    slice_cols = [f"__pq_s{s}" for s in range(m)]
-    pre = df.withColumn("__pq_v", as_double(F.col(vec_col)))
-    for s in range(m):
-        pre = pre.withColumn(
-            slice_cols[s], F.slice(F.col("__pq_v"), s * dsub + 1, dsub)
-        )
-    def _dist_fn(sl):
-        return lambda c: _sq_dist_int_cols(sl, c)
-
-    per_sub = []
-    for s in range(m):
-        sl = F.col(slice_cols[s])
-        dists = F.transform(_lit_codebook(codebooks[s]), _dist_fn(sl))
-        entries = F.transform(
-            dists, lambda d, i: F.struct(d.alias("d"), i.alias("sid"))
-        )
-        per_sub.append(F.array_min(entries).getField("sid"))
-    return pre.withColumn("codes", F.array(*per_sub)).drop("__pq_v", *slice_cols)
-
-
-def query_distance_tables(
-    queries: DataFrame,
-    codebooks: Codebooks,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    vectorized: bool = True,
-) -> DataFrame:
-    """Per-query ADC lookup table: ``qtbl[s][sid]`` = integer-quantized
-    squared distance from the query's subspace-``s`` slice to codebook
-    entry ``sid``. m·ks BIGINTs per query (~1 KB) — broadcastable for any
-    bounded query set. Same vectorized-vs-expression twin story as
-    ``pq_encode`` (bit-identical, pytest-pinned)."""
-    if vectorized:
-        return queries.select(
-            F.col(id_col).alias("query_id"),
-            _tables_udf(codebooks)(F.col(vec_col)).alias("qtbl"),
-        )
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    v = as_double(F.col(vec_col))
-    tbl = F.array(*[_sub_dists(v, s, dsub, codebooks[s]) for s in range(m)])
-    return queries.select(F.col(id_col).alias("query_id"), tbl.alias("qtbl"))
-
-
-def _adc_col() -> Column:
-    """Per-pair ADC score: m table lookups summed via a zip_with fold —
-    exact BIGINT arithmetic over ``codes`` and the broadcast ``qtbl``."""
-    return F.aggregate(
-        F.zip_with(
-            F.col("codes"), F.col("qtbl"), lambda c, row: F.element_at(row, c + 1)
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    distance codebook id, deterministic smallest-sid tiebreak. One narrow
+    Arrow scan running the numpy kernel ``_np_encode``: 1.1 s for 200k
+    64-dim vectors on 4 cores, where the same encode as Catalyst
+    higher-order functions (m·ks interpreted folds per row) took 19 s
+    (SCALE.md §IVF-PQ)."""
+    return df.withColumn("codes", _codes_udf(codebooks)(F.col(vec_col)))
 
 
 def _topk(scored: DataFrame, order_col: str, k: int) -> DataFrame:
@@ -420,26 +282,6 @@ def _collect_query_arrays(queries: DataFrame, id_col: str, vec_col: str):
     return qids[order], Qv[order]
 
 
-def ivfadc_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centroids: list[list[float]],
-    codebooks: Codebooks,
-    k: int = 3,
-    nprobe: int = 2,
-    rerank: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Convenience wrapper: residual IVF-PQ (IVFADC) on the arrow scan —
-    pass codebooks built by ``seed_residual_codebooks``."""
-    return ivf_pq_topk(
-        corpus, queries, centroids, codebooks, k=k, nprobe=nprobe,
-        rerank=rerank, id_col=id_col, vec_col=vec_col,
-        scan="arrow", residual=True,
-    )
-
-
 def _adc_scan(
     corpus: DataFrame,
     qids: np.ndarray,
@@ -458,8 +300,8 @@ def _adc_scan(
     each query's probed lists, score ALL queries at once via int64 table
     gathers, and emit only each query's per-partition top-``shortlist``
     partial — so the full |corpus|×|Q| pair relation is NEVER
-    materialized (the join-based reference path materializes it and pays
-    an interpreted fold per pair: fine at 10⁵ pairs, minutes at 10⁸).
+    materialized (a pair join with a per-pair fold measured minutes at
+    2.5×10⁸ pairs, SCALE.md §IVF-PQ).
     Output rows ≤ partitions·|Q|·shortlist; the global top-k window after
     it touches only that sliver. At deployment scale the optional coarse
     filter is instead partition pruning on a list_id-partitioned codes
@@ -467,16 +309,16 @@ def _adc_scan(
 
     Exactness: gathers and adds are int64; the per-partition partial
     top-R keeps every global top-R candidate by construction, so the
-    final ranking is bit-identical to the join path (pytest-pinned)."""
+    final ranking equals a global sort of all pairs (the knn_pq /
+    knn_ivfpq / knn_ivfadc oracle rows rank every pair in SQL)."""
     if qids.size == 0:
-        # the join path returns empty for an empty query set; match it
-        # instead of letting the kernels hit zero-size shape errors
+        # an empty query set has no neighbors; return before the
+        # kernels hit zero-size shape errors
         return corpus.sparkSession.createDataFrame(
             [], "query_id long, neighbor_id long, adc long"
         )
     qt = _QueryTables(qids, Qv, codebooks, centroids, nprobe, residual)
     C = qt.C
-    m = len(codebooks)
 
     def gen(batches):
         for pdf in batches:
@@ -489,10 +331,7 @@ def _adc_scan(
                 if centroids is not None
                 else None
             )
-            base = V - C[lid] if residual else V
-            codes = np.empty((len(nid), m), dtype=np.int32)
-            for s in range(m):
-                codes[:, s] = _np_sub_dists_int(base, s, codebooks[s]).argmin(1)
+            codes = _np_encode(V - C[lid] if residual else V, codebooks)
             out = qt.score_batch(codes, nid, lid, shortlist)
             if out is not None:
                 yield out
@@ -613,14 +452,13 @@ def pq_adc_topk(
     rerank: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vectorized: bool = True,
-    scan: str = "arrow",
 ) -> DataFrame:
     """Approximate top-k per query by ADC over PQ codes (full-corpus scan
     — no coarse pruning; see ``ivf_pq_topk`` for the composed index), with
     optional exact re-ranking of the ADC shortlist. Per-pair score = m
     table lookups summed in exact BIGINT; ties broken by
-    (adc, neighbor_id) ascending.
+    (adc, neighbor_id) ascending. Scoring runs in the fused ``_adc_scan``,
+    which never materializes the pair relation.
 
     ``rerank=R`` turns ADC into a candidate generator (the production PQ
     posture): the ADC top-R per query is re-scored with EXACT integer-
@@ -634,30 +472,12 @@ def pq_adc_topk(
 
     Without re-rank returns (query_id, neighbor_id, adc, rank); with it
     (query_id, neighbor_id, sqdist, rank), sqdist the exact quantized
-    squared distance.
-
-    ``scan='arrow'`` (default) uses the fused ``_adc_scan`` kernel —
-    never materializes the pair relation; ``scan='join'`` is the
-    reference plan (coded corpus ⨯ broadcast tables, per-pair fold),
-    bit-identical and pytest-pinned, quadratic-materialization-bound."""
-    if scan == "arrow":
-        qids, Qv = _collect_query_arrays(queries, id_col, vec_col)
-        scored = _adc_scan(
-            corpus, qids, Qv, codebooks, rerank or k,
-            id_col=id_col, vec_col=vec_col,
-        )
-    else:
-        coded = pq_encode(
-            corpus, codebooks, vec_col=vec_col, vectorized=vectorized
-        ).select(F.col(id_col).alias("neighbor_id"), "codes")
-        qt = query_distance_tables(
-            queries, codebooks, id_col=id_col, vec_col=vec_col,
-            vectorized=vectorized,
-        )
-        pairs = coded.join(
-            F.broadcast(qt), F.col("neighbor_id") != F.col("query_id"), "inner"
-        )
-        scored = pairs.select("query_id", "neighbor_id", _adc_col().alias("adc"))
+    squared distance."""
+    qids, Qv = _collect_query_arrays(queries, id_col, vec_col)
+    scored = _adc_scan(
+        corpus, qids, Qv, codebooks, rerank or k,
+        id_col=id_col, vec_col=vec_col,
+    )
     if rerank is None:
         return _topk(scored, "adc", k)
     cand = _topk(scored, "adc", rerank).select("query_id", "neighbor_id")
@@ -674,8 +494,6 @@ def ivf_pq_topk(
     rerank: int = 50,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vectorized: bool = True,
-    scan: str = "arrow",
     residual: bool = False,
 ) -> DataFrame:
     """IVF-PQ: the two prunings composed — the canonical billion-scale ANN
@@ -689,71 +507,24 @@ def ivf_pq_topk(
     index (codes persisted partitioned by list_id, probing = partition
     pruning, streaming appends) see operators/ann_index.py.
 
-    ``scan='arrow'`` (default): the fused ``_adc_scan`` — one mapInPandas
-    pass encodes each batch, probe-filters it, scores all queries, and
-    emits per-partition top-R partials; then windowed top-R and exact
-    re-rank of the shortlist. ``scan='join'`` is the bit-identical
-    reference plan (broadcast list-id equi-join, per-pair interpreted
-    fold — fine at sf scale, quadratic-materialization-bound beyond).
+    The fused ``_adc_scan`` — one mapInPandas pass encodes each batch,
+    probe-filters it, scores all queries, and emits per-partition top-R
+    partials; then windowed top-R and exact re-rank of the shortlist.
 
-    ``residual=True`` (arrow scan only) is IVFADC proper: codes quantize
+    ``residual=True`` is IVFADC proper: codes quantize
     ``v − centroid(list)`` with codebooks built over residuals
     (``seed_residual_codebooks`` must supply ``codebooks``), and each
     query carries per-probed-list tables. On clustered corpora this is
     the difference between ADC working and ADC degenerating to chance
     within a list (scale-probe recall@3: 0.06 raw → 0.75 residual, see
-    SCALE.md). The registered oracle query stays non-residual: per-(query,
-    list) tables are SQL-expressible but roughly double the oracle, and
-    the quality gap only appears on clustered data the sf testdata
-    doesn't have."""
-    if scan == "arrow":
-        qids, Qv = _collect_query_arrays(queries, id_col, vec_col)
-        scored = _adc_scan(
-            corpus, qids, Qv, codebooks, rerank,
-            centroids=centroids, nprobe=nprobe, residual=residual,
-            id_col=id_col, vec_col=vec_col,
-        )
-        cand = _topk(scored, "adc", rerank).select("query_id", "neighbor_id")
-        return _exact_rerank(cand, corpus, queries, k, id_col, vec_col)
-    if residual:
-        raise ValueError("residual IVFADC is implemented on the arrow scan only")
-    if vectorized:
-        coded = corpus.withColumn(
-            "__e", _coded_corpus_udf(codebooks, centroids)(F.col(vec_col))
-        ).select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col("__e.codes").alias("codes"),
-            F.col("__e.list_id").alias("list_id"),
-        )
-        qjoined = queries.withColumn(
-            "__q", _probed_queries_udf(codebooks, centroids, nprobe)(F.col(vec_col))
-        ).select(
-            F.col(id_col).alias("query_id"),
-            F.col("__q.qtbl").alias("qtbl"),
-            F.explode(F.col("__q.probes")).alias("list_id"),
-        )
-    else:
-        from .ivf import assign_list, probe_lists
-
-        v = as_double(F.col(vec_col))
-        coded = pq_encode(
-            corpus, codebooks, vec_col=vec_col, vectorized=False
-        ).select(
-            F.col(id_col).alias("neighbor_id"),
-            "codes",
-            assign_list(v, centroids).alias("list_id"),
-        )
-        qt = query_distance_tables(
-            queries, codebooks, id_col=id_col, vec_col=vec_col, vectorized=False
-        )
-        qp = queries.select(
-            F.col(id_col).alias("query_id"),
-            F.explode(probe_lists(v, centroids, nprobe)).alias("list_id"),
-        )
-        qjoined = qt.join(qp, "query_id")
-    pairs = coded.join(F.broadcast(qjoined), "list_id").filter(
-        F.col("neighbor_id") != F.col("query_id")
+    SCALE.md). ``knn_ivfpq`` registers the raw form and ``knn_ivfadc``
+    the residual form (a micro configuration whose per-(query, list)
+    tables fit the oracle SQL)."""
+    qids, Qv = _collect_query_arrays(queries, id_col, vec_col)
+    scored = _adc_scan(
+        corpus, qids, Qv, codebooks, rerank,
+        centroids=centroids, nprobe=nprobe, residual=residual,
+        id_col=id_col, vec_col=vec_col,
     )
-    scored = pairs.select("query_id", "neighbor_id", _adc_col().alias("adc"))
     cand = _topk(scored, "adc", rerank).select("query_id", "neighbor_id")
     return _exact_rerank(cand, corpus, queries, k, id_col, vec_col)

@@ -943,10 +943,11 @@ IVF_NPROBE = 2
 def q_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate top-3: k=8 inverted lists from a deterministic
     md5-seeded coarse quantizer, each query scores its 2 nearest lists
-    only. Exercises the full index/probe/score path (expression-level
-    assignment → list equi-join → window top-k) bit-reproducibly; the
-    LEARNED-centroid path (train_centroids, parallel-sum means) is
-    covered by pytest invariants instead — see operators/ivf.py."""
+    only. Exercises the full index/probe/score path (Arrow/numpy list
+    assignment and probing → list equi-join → window top-k)
+    bit-reproducibly; the LEARNED-centroid path (train_centroids,
+    parallel-sum means) is covered by pytest invariants instead — see
+    operators/ivf.py."""
     from .operators.ivf import ivf_knn, seed_centroids
 
     emb = _embeddings(spark, sf_dir)
@@ -1209,7 +1210,7 @@ SQL_KNN_IVFPQ = _sql_knn_ivfpq()
 # RESIDUAL codebooks — small enough that the per-(query, probed-list)
 # residual ADC tables fit one SQL CTE, which is what pins the residual
 # arithmetic (v − centroid before encoding; query tables against EACH
-# probed list's centroid) the pytest-only full-size ivfadc_topk relies on.
+# probed list's centroid) that full-size residual ivf_pq_topk relies on.
 IVFADC_KC = 2
 IVFADC_NPROBE = 1
 IVFADC_KS = 4
@@ -1227,16 +1228,16 @@ def q_knn_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds are the md5-order rows AFTER the centroid rows (seeding from
     the centroids themselves would yield all-zero residual codebooks)."""
     from .operators.ivf import seed_centroids
-    from .operators.pq import ivfadc_topk, residual_codebooks_from_seeds
+    from .operators.pq import ivf_pq_topk, residual_codebooks_from_seeds
 
     emb = _embeddings(spark, sf_dir)
     seeds = seed_centroids(emb, IVFADC_KC + IVFADC_KS)
     cents = seeds[:IVFADC_KC]
     cbs = residual_codebooks_from_seeds(seeds[IVFADC_KC:], cents, IVFADC_M)
     queries = emb.filter(F.col("vec_id") % 250 == 0)
-    return ivfadc_topk(
+    return ivf_pq_topk(
         emb, queries, cents, cbs,
-        k=3, nprobe=IVFADC_NPROBE, rerank=IVFADC_RERANK,
+        k=3, nprobe=IVFADC_NPROBE, rerank=IVFADC_RERANK, residual=True,
     )
 
 

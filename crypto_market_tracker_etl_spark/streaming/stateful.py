@@ -7,10 +7,6 @@ state that evolves across micro-batches with arbitrary logic:
 - ``running_stats_stream``: per-key cumulative count/sum/min/max and last
   value+ts, emitted once per key per micro-batch. The streaming analogue of
   the dashboard KPI row, without recomputing history each trigger.
-- ``streaming_dedup_keys``: emit a key's row only the FIRST time it is ever
-  seen (state = seen marker) — exactly-once semantics for keys whose
-  arrival may repeat across batches, with a processing-time TTL bound on
-  state so it cannot grow forever.
 
 State is a tiny fixed-width tuple per key (bounded memory, spillable to the
 state store); batches arrive as pandas DataFrames via Arrow.
@@ -18,7 +14,7 @@ state store); batches arrive as pandas DataFrames via Arrow.
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -173,43 +169,6 @@ def ewma_stream(
 
     return stream.groupBy(key).applyInPandasWithState(
         update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-
-
-def streaming_dedup_keys(
-    stream: DataFrame,
-    keys: Sequence[str],
-    out_schema: T.StructType,
-    ttl_ms: int = 24 * 3600 * 1000,
-) -> DataFrame:
-    """First-occurrence-only emission per key across micro-batches.
-
-    State is a single seen-flag with a processing-time TTL: after ``ttl_ms``
-    of key silence the flag is dropped (bounded state — the 100 TB
-    requirement), re-admitting the key like the reference's daily upsert
-    window would.
-    """
-    state_schema = T.StructType([T.StructField("seen", T.BooleanType())])
-
-    def update(
-        key_tuple: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        first_time = not state.exists
-        state.update((True,))
-        state.setTimeoutDuration(ttl_ms)
-        if first_time:
-            for pdf in pdfs:
-                yield pdf.head(1)
-                return
-        else:
-            for _ in pdfs:
-                pass
-
-    return stream.groupBy(*keys).applyInPandasWithState(
-        update, out_schema, state_schema, "update", GroupStateTimeout.ProcessingTimeTimeout
     )
 
 

@@ -38,6 +38,19 @@ def duck():
     con.close()
 
 
+def await_drain(query, timeout: float) -> None:
+    """Wait for an ``availableNow`` streaming query: assert that it
+    terminated within ``timeout`` seconds (a drain that hangs must fail,
+    not pass on whatever output it wrote so far), and stop it either way.
+    A query that failed raises from ``awaitTermination`` itself."""
+    try:
+        assert query.awaitTermination(timeout), (
+            f"streaming query {query.id} still active after {timeout} s"
+        )
+    finally:
+        query.stop()
+
+
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
     """Driver-style normalization: columns sorted by name, datetimes to µs
     ISO strings, NaN→None, rows sorted by every column."""

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from crypto_market_tracker_etl_spark.catalog import load_table
 from crypto_market_tracker_etl_spark.operators.ann_index import IvfPqIndex
 from crypto_market_tracker_etl_spark.operators.pq import ivf_pq_topk
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, await_drain
 
 
 def _rows(df):
@@ -72,7 +72,7 @@ def test_stream_maintains_ann_index(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_drain(q, 120)
 
     queries = emb.filter(F.col("vec_id") % 50 == 0)
     got = _rows(idx.probe(queries, k=3, nprobe=2, rerank=50))
@@ -113,11 +113,10 @@ def test_residual_index_round_trip(spark, tmp_path):
     r1 = _rows(idx.probe(q, k=3, nprobe=2, rerank=50))
     r2 = _rows(idx.probe(q, k=3, nprobe=2, rerank=50))
     assert r1 == r2 and r1
-    from crypto_market_tracker_etl_spark.operators.pq import ivfadc_topk
-
     want = _rows(
-        ivfadc_topk(
-            emb, q, idx.centroids, idx.codebooks, k=3, nprobe=2, rerank=50
+        ivf_pq_topk(
+            emb, q, idx.centroids, idx.codebooks, k=3, nprobe=2, rerank=50,
+            residual=True,
         )
     )
     assert r1 == want

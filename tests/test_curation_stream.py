@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from crypto_market_tracker_etl_spark.plans.curation_job import run_curation
 from crypto_market_tracker_etl_spark.plans.curation_stream import CurationStream
+from tests.conftest import await_drain
 from tests.test_curation_job import _corpus
 
 
@@ -73,7 +74,7 @@ def test_curation_stream_foreachbatch_wiring(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_drain(q, 300)
 
     want = _clean_ids(run_curation(spark, corpus).clean)
     assert _clean_ids(cs.clean()) == want

@@ -6,7 +6,8 @@ import datetime as dt
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from tests.conftest import await_drain
 
 
 def test_coingecko_datasource_synthetic(spark):
@@ -81,7 +82,7 @@ def test_coingecko_stream_source(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(180)
+        await_drain(q, 180)
         return spark.read.parquet(out).collect()
 
     # each cron-style run resumes from the checkpointed offset and pulls
@@ -117,7 +118,7 @@ def _drain_to_parquet(out_stream, out_dir: str, ck_dir: str) -> None:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    await_drain(q, 180)
 
 
 def _batch_feed(sink, v1: int, v2: int, cols) -> list[tuple]:
@@ -207,7 +208,7 @@ def test_stream_interval_join(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    await_drain(q, 180)
     rows = spark.read.parquet(out).collect()
     assert [(r["user_id"], r["value"], r["right_amount"]) for r in rows] == [
         (1, 10.0, 100.0)
@@ -281,57 +282,6 @@ def test_running_stats_stream_string_key(spark, tmp_path):
     )
     got = {r["asset_id"]: r for r in spark.read.parquet(out).collect()}
     assert got["a"]["n_total"] == 2 and got["a"]["last_value"] == 4.0
-
-
-def test_streaming_dedup_keys(spark, tmp_path):
-    from crypto_market_tracker_etl_spark.streaming.stateful import streaming_dedup_keys
-
-    src = str(tmp_path / "src2")
-    _write_stream_batch(
-        spark,
-        src,
-        [
-            (1, dt.datetime(2024, 1, 1, 1), 10.0),
-            (1, dt.datetime(2024, 1, 1, 2), 20.0),
-            (2, dt.datetime(2024, 1, 1, 1), 5.0),
-        ],
-    )
-    schema_str = "user_id long, ts timestamp, value double"
-    stream = spark.readStream.schema(schema_str).parquet(src)
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    out1 = str(tmp_path / "dout1")
-    _drain_to_parquet(
-        streaming_dedup_keys(stream, ["user_id"], out_schema),
-        out1,
-        str(tmp_path / "ck2"),
-    )
-    rows = spark.read.parquet(out1).collect()
-    assert {r["user_id"] for r in rows} == {1, 2}
-    assert len(rows) == 2  # one emission per key, duplicates swallowed
-
-    # re-arrival in a later batch: key already in state → not re-emitted
-    _write_stream_batch(spark, src, [(1, dt.datetime(2024, 1, 1, 5), 99.0)])
-    out2 = str(tmp_path / "dout2")
-    stream2 = spark.readStream.schema(schema_str).parquet(src)
-    _drain_to_parquet(
-        streaming_dedup_keys(stream2, ["user_id"], out_schema),
-        out2,
-        str(tmp_path / "ck2"),
-    )
-    import os
-
-    n2 = (
-        spark.read.parquet(out2).count()
-        if os.path.isdir(out2) and any(f.endswith(".parquet") for f in os.listdir(out2))
-        else 0
-    )
-    assert n2 == 0
 
 
 def test_ewma_stream_matches_batch_fold(spark, tmp_path):
@@ -516,14 +466,14 @@ def test_stream_static_contamination_join(spark, tmp_path):
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )
     out = str(tmp_path / "cont_out")
-    (
+    q = (
         stream.writeStream.outputMode("complete")
         .trigger(availableNow=True)
         .format("memory")
         .queryName("cont")
         .start()
-        .awaitTermination()
     )
+    await_drain(q, 180)
     got = {
         (r.doc_id, r.eval_id): r.n_shared
         for r in spark.sql("select * from cont").collect()

@@ -24,7 +24,7 @@ from crypto_market_tracker_etl_spark.plans.market_views import (
     v_price_change_24h,
     v_sparkline_7d,
 )
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, await_drain
 
 
 def ts(h: int, m: int = 0) -> dt.datetime:
@@ -430,9 +430,9 @@ def test_quantized_vectors_bound_error_and_preserve_neighbors(spark):
 
 
 def test_ivf_index_is_shuffle_free(spark):
-    """List assignment is a pure expression: the index build plan must be
-    a single narrow scan stage — no Exchange anywhere (at 100 TB this is
-    what makes indexing a one-pass write)."""
+    """List assignment is a per-row Arrow UDF: the index build plan must
+    be a single narrow scan stage — no Exchange anywhere (at 100 TB this
+    is what makes indexing a one-pass write)."""
     from crypto_market_tracker_etl_spark.operators.ivf import ivf_index, seed_centroids
 
     emb = load_table(spark, SF_DIR, "embeddings")
@@ -625,7 +625,7 @@ def test_incremental_upsert_stream_available_now(spark, tmp_path):
     stream = spark.readStream.schema(batch.schema).parquet(src_dir)
     sink = ManifestParquetSink(spark, str(tmp_path / "out"), keys=["k", "ts"], ts_col="ts")
     q = incremental_upsert_stream(stream, sink, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
+    await_drain(q, 120)
     got = {(r["k"], r["ts"]): r["v"] for r in sink.read().collect()}
     assert got[("b", dt.datetime(2024, 1, 1, 2))] == 2.0
     assert len(got) == 2  # duplicate key collapsed
@@ -651,7 +651,7 @@ def test_windowed_ohlc_stream_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    await_drain(q, 180)
     got = {
         (r["user_id"], r["window_start"]): (r["open"], r["high"], r["low"], r["close"], r["n_obs"])
         for r in spark.sql("select * from ohlc_stream").collect()
@@ -702,7 +702,7 @@ def test_tokenize_count_stream_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    await_drain(q, 180)
     # NO row filter: the stream must reproduce batch's exact row SET too
     # (zero-token docs appear in neither side)
     got = {
@@ -753,7 +753,7 @@ def test_stream_asof_join_matches_batch(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        await_drain(q, 300)
 
     drain()
     far = F.expr("timestamp'2099-01-01 00:00:00'")
@@ -1766,41 +1766,6 @@ def test_pq_rerank_recovers_recall(spark):
     assert r_rr > r_adc, (r_adc, r_rr)
 
 
-def test_pq_vectorized_encode_matches_expression(spark):
-    """The Arrow/numpy PQ kernels must be BIT-identical to the Catalyst
-    expression path on real data — codes, ADC tables, and the end-to-end
-    top-k (this is what lets the oracle attestation cover the vectorized
-    default). Covers the float32→float64 widening, the sequential-order
-    subspace reduction, and floor(x+0.5)-vs-HALF_UP rounding."""
-    from crypto_market_tracker_etl_spark.operators.pq import (
-        pq_adc_topk,
-        pq_encode,
-        query_distance_tables,
-        seed_codebooks,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    cbs = seed_codebooks(emb, ks=16, m=8)
-    expr = {r.vec_id: r.codes for r in pq_encode(emb, cbs, vectorized=False).collect()}
-    vec = {r.vec_id: r.codes for r in pq_encode(emb, cbs, vectorized=True).collect()}
-    assert expr == vec
-
-    q = emb.filter(F.col("vec_id") % 50 == 0)
-    te = {r.query_id: r.qtbl for r in query_distance_tables(q, cbs, vectorized=False).collect()}
-    tv = {r.query_id: r.qtbl for r in query_distance_tables(q, cbs, vectorized=True).collect()}
-    assert te == tv
-
-    rows = lambda df: sorted(map(tuple, df.collect()))
-    join_expr = rows(
-        pq_adc_topk(emb, q, cbs, k=3, rerank=50, vectorized=False, scan="join")
-    )
-    join_vec = rows(
-        pq_adc_topk(emb, q, cbs, k=3, rerank=50, vectorized=True, scan="join")
-    )
-    arrow = rows(pq_adc_topk(emb, q, cbs, k=3, rerank=50, scan="arrow"))
-    assert join_expr == join_vec == arrow
-
-
 def test_ivfpq_subset_of_probed_lists(spark):
     """IVF-PQ candidates must respect the coarse pruning: every reported
     neighbor's assigned list is one of its query's nprobe probed lists,
@@ -1810,7 +1775,6 @@ def test_ivfpq_subset_of_probed_lists(spark):
 
     from crypto_market_tracker_etl_spark.operators.ivf import (
         assign_list,
-        probe_lists,
         seed_centroids,
     )
     from crypto_market_tracker_etl_spark.operators.pq import (
@@ -1830,10 +1794,12 @@ def test_ivfpq_subset_of_probed_lists(spark):
         r.vec_id: r.lid
         for r in emb.select("vec_id", assign_list(v, cents).alias("lid")).collect()
     }
-    probed = {
-        r.vec_id: set(r.ls)
-        for r in q.select("vec_id", probe_lists(v, cents, 2).alias("ls")).collect()
-    }
+    # nprobe=2 nearest lists per query, (nd, cid) order, from a pure-
+    # Python model over the collected query vectors
+    probed = {}
+    for r in q.select("vec_id", v.alias("v")).collect():
+        nd = [(_py_quantized_neg_cos(r.v, c), cid) for cid, c in enumerate(cents)]
+        probed[r.vec_id] = {cid for _nd, cid in sorted(nd)[:2]}
     for r in got:
         assert assigned[r.neighbor_id] in probed[r.query_id], r
     # ranks are contiguous from 1 per query
@@ -1841,57 +1807,6 @@ def test_ivfpq_subset_of_probed_lists(spark):
     for r in got:
         by_q.setdefault(r.query_id, []).append(r.rank)
     assert all(sorted(v) == list(range(1, len(v) + 1)) for v in by_q.values())
-
-
-def test_ivfpq_vectorized_matches_expression(spark):
-    """The fused Arrow kernel (codes + coarse assignment + probes in one
-    pass) must produce the IDENTICAL end-to-end result as the pure-
-    expression reference path — including the sign-aware HALF_UP rounding
-    of the quantized negative cosines feeding the coarse argmin."""
-    from crypto_market_tracker_etl_spark.operators.ivf import seed_centroids
-    from crypto_market_tracker_etl_spark.operators.pq import (
-        ivf_pq_topk,
-        seed_codebooks,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    cents = seed_centroids(emb, 8)
-    cbs = seed_codebooks(emb, ks=16, m=8)
-    q = emb.filter(F.col("vec_id") % 50 == 0)
-    rows = lambda df: sorted(map(tuple, df.collect()))
-    join_expr = rows(
-        ivf_pq_topk(
-            emb, q, cents, cbs, k=3, nprobe=2, rerank=50,
-            vectorized=False, scan="join",
-        )
-    )
-    join_vec = rows(
-        ivf_pq_topk(
-            emb, q, cents, cbs, k=3, nprobe=2, rerank=50,
-            vectorized=True, scan="join",
-        )
-    )
-    arrow = rows(
-        ivf_pq_topk(emb, q, cents, cbs, k=3, nprobe=2, rerank=50, scan="arrow")
-    )
-    assert join_expr == join_vec == arrow
-
-
-def test_ivf_vectorized_matches_expression(spark):
-    """ivf_knn's Arrow-vectorized assignment/probing must equal the
-    expression reference path end to end (cosines, ranks, everything)."""
-    from crypto_market_tracker_etl_spark.operators.ivf import (
-        ivf_knn,
-        seed_centroids,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    cents = seed_centroids(emb, 8)
-    q = emb.filter(F.col("vec_id") % 50 == 0)
-    rows = lambda df: sorted(map(tuple, df.collect()))
-    assert rows(ivf_knn(emb, q, cents, 3, nprobe=2, vectorized=False)) == rows(
-        ivf_knn(emb, q, cents, 3, nprobe=2, vectorized=True)
-    )
 
 
 def test_ivfadc_residual_beats_raw_codes_on_clustered_data(spark):
@@ -1908,7 +1823,6 @@ def test_ivfadc_residual_beats_raw_codes_on_clustered_data(spark):
     from crypto_market_tracker_etl_spark.operators.ivf import seed_centroids
     from crypto_market_tracker_etl_spark.operators.pq import (
         ivf_pq_topk,
-        ivfadc_topk,
         seed_codebooks,
         seed_residual_codebooks,
     )
@@ -1944,12 +1858,43 @@ def test_ivfadc_residual_beats_raw_codes_on_clustered_data(spark):
         return hits / tot
 
     raw = ivf_pq_topk(emb, q, cents, raw_cbs, k=3, nprobe=2, rerank=50).collect()
-    res1 = ivfadc_topk(emb, q, cents, res_cbs, k=3, nprobe=2, rerank=50).collect()
-    res2 = ivfadc_topk(emb, q, cents, res_cbs, k=3, nprobe=2, rerank=50).collect()
+    def residual():
+        return ivf_pq_topk(
+            emb, q, cents, res_cbs, k=3, nprobe=2, rerank=50, residual=True
+        ).collect()
+
+    res1, res2 = residual(), residual()
     assert sorted(map(tuple, res1)) == sorted(map(tuple, res2))  # deterministic
     r_raw, r_res = recall(raw), recall(res1)
     assert r_res >= r_raw + 0.25, (r_raw, r_res)
     assert r_res >= 0.5, (r_raw, r_res)
+
+
+def _py_sq_dist_int(a, b) -> int:
+    """round(10⁴·‖a − b‖²) as a plain-Python left-to-right fold + HALF_UP
+    (the oracle SQL's list_reduce arithmetic)."""
+    import math
+
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + (x - y) * (x - y)
+    return math.floor(acc * 10_000 + 0.5)
+
+
+def _py_quantized_neg_cos(v, c) -> float:
+    """-cos(v, c) rounded HALF_UP to 4 places, every sum a sequential
+    fold — the coarse quantizer's per-centroid score."""
+    import math
+
+    vn = cn = num = 0.0
+    for x in v:
+        vn = vn + x * x
+    for x in c:
+        cn = cn + float(x) * float(x)
+    for x, y in zip(v, c):
+        num = num + x * y
+    x = -(num / (math.sqrt(vn) * math.sqrt(cn)))
+    return math.copysign(math.floor(abs(x) * 1e4 + 0.5) / 1e4, x)
 
 
 def test_np_kernels_match_sequential_fold():
@@ -1957,14 +1902,14 @@ def test_np_kernels_match_sequential_fold():
     RANDOM data — not just the shipped testdata. This is the guard against
     numpy's multi-accumulator axis reductions (ndarray.sum differs from a
     left-to-right fold in the last ulp on 40-80% of random rows, enough to
-    flip an integer quantization on boundary values)."""
-    import math
-
+    flip an integer quantization on boundary values). The PQ encode is
+    checked against a pure-Python argmin, with duplicated codewords so
+    that exact distance ties occur and the smallest sid must win."""
     import numpy as np
 
     from crypto_market_tracker_etl_spark.operators.ivf import np_coarse_nd
     from crypto_market_tracker_etl_spark.operators.pq import (
-        DIST_SCALE,
+        _np_encode,
         _np_sub_dists_int,
     )
 
@@ -1974,29 +1919,25 @@ def test_np_kernels_match_sequential_fold():
     d = _np_sub_dists_int(V, 3, [list(r) for r in cb])
     for i in range(0, 200, 7):
         for j in range(16):
-            acc = 0.0
-            for t in range(8):
-                diff = V[i, 24 + t] - cb[j, t]
-                acc = acc + diff * diff
-            assert d[i, j] == math.floor(acc * DIST_SCALE + 0.5), (i, j)
+            assert d[i, j] == _py_sq_dist_int(V[i, 24:32], cb[j]), (i, j)
 
     C = [list(r) for r in rng.standard_normal((8, 64))]
     nd = np_coarse_nd(V, C)
     for i in range(0, 200, 7):
-        vn_acc = 0.0
-        for t in range(64):
-            vn_acc = vn_acc + V[i, t] * V[i, t]
-        vn = math.sqrt(vn_acc)
         for j in range(8):
-            cn_acc = 0.0
-            for x in C[j]:
-                cn_acc = cn_acc + float(x) * float(x)
-            num = 0.0
-            for t in range(64):
-                num = num + V[i, t] * C[j][t]
-            x = -(num / (vn * math.sqrt(cn_acc)))
-            expect = math.copysign(math.floor(abs(x) * 1e4 + 0.5) / 1e4, x)
-            assert nd[i, j] == expect, (i, j)
+            assert nd[i, j] == _py_quantized_neg_cos(V[i], C[j]), (i, j)
+
+    # m=8 subspaces × ks=16 codewords of 8 dims; sid 12 repeats sid 4
+    cbs = rng.standard_normal((8, 16, 8))
+    cbs[:, 12] = cbs[:, 4]
+    codes = _np_encode(V, [[list(c) for c in sub] for sub in cbs])
+    for i in range(200):
+        want = []
+        for s in range(8):
+            dists = [_py_sq_dist_int(V[i, 8 * s : 8 * s + 8], c) for c in cbs[s]]
+            want.append(dists.index(min(dists)))  # first minimum = smallest sid
+        assert list(codes[i]) == want, i
+    assert (codes == 4).any() and not (codes == 12).any()
 
 
 def test_cms_sketch_stream_matches_batch(spark, tmp_path):
@@ -2033,7 +1974,7 @@ def test_cms_sketch_stream_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    await_drain(q, 180)
     got = {
         (r["d"], r["b"]): r["cnt"]
         for r in spark.sql("select * from cms_stream").collect()

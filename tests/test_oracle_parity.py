@@ -37,7 +37,7 @@ _SMOKE_CORE = {
     "minhash_bands", "simhash", "cosine_topk", "bm25_topk",
     "image_meta", "audio_meta", "video_meta", "mime_sniff",
     "media_catalog", "upsert_keep_latest", "sequence_packing",
-    "gram_novelty",
+    "gram_novelty", "knn_pq", "knn_ivfpq", "knn_ivfadc", "semdedup",
 }
 # multi-batch store workloads and model-table builds measured ≥10s at
 # sf0.01 — never in the smoke sample regardless of the every-Nth draw

@@ -15,7 +15,7 @@ from crypto_market_tracker_etl_spark.sources.parquet_layout import (
     read_pruned,
     write_time_partitioned,
 )
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, await_drain
 
 
 def test_salted_aggregate_equals_plain(spark):
@@ -281,7 +281,7 @@ def test_rocksdb_state_store_runs_stateful_dedup(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        await_drain(q, 300)
         got = spark.sql("select count(*) n from rocksdb_dedup").collect()[0]["n"]
         want = ev.select("user_id", "event_type").distinct().count()
         assert got == want

@@ -16,6 +16,7 @@ from crypto_market_tracker_etl_spark.operators.txn_sink import (
     CommitConflictError,
     ManifestParquetSink,
 )
+from tests.conftest import await_drain
 
 SCHEMA = "k string, ts timestamp, ver int, v double"
 DAY1 = dt.datetime(2024, 1, 1, 10)
@@ -194,7 +195,7 @@ def test_incremental_stream_into_manifest_sink(spark, tmp_path):
     sink.upsert(spark.createDataFrame([("c", DAY2, 1, 30.0)], SCHEMA))
     stream = spark.readStream.schema(batch.schema).parquet(src_dir)
     q = incremental_upsert_stream(stream, sink, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
+    await_drain(q, 120)
     assert table(sink) == {"a": 9.0, "b": 2.0, "c": 30.0}
     # replay idempotence: re-running the drained stream commits nothing new
     q2 = incremental_upsert_stream(
@@ -202,7 +203,7 @@ def test_incremental_stream_into_manifest_sink(spark, tmp_path):
         sink,
         str(tmp_path / "ckpt"),
     )
-    q2.awaitTermination(120)
+    await_drain(q2, 120)
     assert table(sink) == {"a": 9.0, "b": 2.0, "c": 30.0}
 
 

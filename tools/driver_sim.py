@@ -14,11 +14,14 @@ from __future__ import annotations
 import hashlib
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, so a second copy (an A/B parent)
+# imports its own package
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 TABLES = (
     "region nation customer supplier part orders lineitem "
@@ -51,6 +54,8 @@ def canon(df: pd.DataFrame) -> str:
 def main() -> int:
     from pyspark.sql import SparkSession
 
+    # local[32] whatever the box: the external driver builds its session
+    # this way, and the simulation mirrors it rather than the host
     spark = (
         SparkSession.builder.master("local[32]")
         .appName("driver-sim")
