@@ -9,12 +9,15 @@ for what changed:
   store on (doc_id, content_fp), so an unchanged re-delivered document
   costs one hash + one join probe, not a re-shingling.
 - **Append-only batches, merge-on-read** (the LSM shape): each batch lands
-  in its own ``batch=N`` partition — nothing is rewritten at write time,
-  regardless of corpus size. ``read()`` collapses to the latest signature
-  per doc (one keyed window); ``compact()`` folds old batches into one
-  when the partition count grows — the small-file trade every
-  incremental table makes (``ManifestParquetSink.compact``), invariance
-  pinned by test.
+  in its own directory, listed by the store's ``StoreManifest``
+  (operators/store_manifest.py) and stamped with a ``batch`` column —
+  nothing is rewritten at write time, regardless of corpus size.
+  ``read()`` collapses to the latest signature per doc (one keyed window
+  over ``batch``); ``compact()`` folds the batches into one when their
+  count grows — the small-file trade every incremental table makes
+  (``ManifestParquetSink.compact``), invariance pinned by test. Every
+  mutation (append, erasure rewrite, fold) is one manifest commit, so a
+  crash leaves either the old or the new batch set, never a torn one.
 - **Incremental pair search**: new-batch band keys (small side, broadcast)
   equi-join the accumulated band index — emitted pairs are exactly those
   touching a new doc. Old×old pairs were emitted by earlier runs, so the
@@ -22,16 +25,13 @@ for what changed:
   (asserted in tests). Per-batch cost is O(|batch| + collisions), never
   O(corpus).
 
-Signature rows stay lean on purpose: (doc_id, content_fp, minhash, bands)
-— no shingle arrays. The Jaccard verify stage re-shingles only the
+Signature rows stay lean on purpose: (doc_id, content_fp, minhash, bands,
+batch) — no shingle arrays. The Jaccard verify stage re-shingles only the
 candidate docs by joining back to the corpus, which at real duplicate
 rates is orders of magnitude smaller than storing every doc's shingles.
 """
 
 from __future__ import annotations
-
-import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,16 +39,33 @@ from pyspark.sql import functions as F
 from ..functions.textstats import normalize_ws
 from .dedup import lsh_band_keys, minhash_signatures
 from .latest import latest_per_key
+from .store_manifest import StoreManifest
+
+
+def id_frame(spark: SparkSession, ids, col: str = "doc_id") -> DataFrame:
+    """``ids`` — a driver-side iterable, or a DataFrame whose first
+    column holds them — as a one-column long frame named ``col``: the
+    one shape every erasure path anti-joins against."""
+    if isinstance(ids, DataFrame):
+        return ids.select(F.col(ids.columns[0]).cast("long").alias(col))
+    return spark.createDataFrame([(int(i),) for i in ids], f"{col} long")
 
 
 class MinHashSignatureStore:
-    """Persisted (doc_id, content_fp, minhash, bands) table with
-    batch-incremental maintenance and incremental banded pair search."""
+    """Persisted (doc_id, content_fp, minhash, bands, batch) table with
+    batch-incremental maintenance and incremental banded pair search.
+
+    ``store`` is the ``StoreManifest`` the batches commit through — a
+    caller keeping other stores beside this one (CurationStream) passes
+    its own, so one commit moves them all — or a directory to open one
+    over."""
+
+    STORE = "sigs"
 
     def __init__(
         self,
         spark: SparkSession,
-        path: str,
+        store: str | StoreManifest,
         num_hashes: int = 12,
         band_size: int = 4,
         shingle_words: int = 3,
@@ -57,7 +74,9 @@ class MinHashSignatureStore:
         text_col: str = "text",
     ):
         self.spark = spark
-        self.path = path
+        self.manifest = (
+            store if isinstance(store, StoreManifest) else StoreManifest(store)
+        )
         self.num_hashes = num_hashes
         self.band_size = band_size
         self.shingle_words = shingle_words
@@ -67,139 +86,40 @@ class MinHashSignatureStore:
 
     # ------------------------------------------------------------- storage
 
-    def _batch_dirs(self, committed_only: bool) -> list[int]:
-        if not os.path.isdir(self.path):
-            return []
-        self._recover_batch_swaps()
-        return sorted(
-            int(m.group(1))
-            for name in os.listdir(self.path)
-            if (m := re.fullmatch(r"batch=(\d+)", name))
-            and (
-                not committed_only
-                or os.path.exists(os.path.join(self.path, name, "_SUCCESS"))
-            )
-        )
-
-    def _recover_batch_swaps(self) -> None:
-        """Finish any interrupted delete_docs per-batch swap (protocol:
-        write ``batch=N.compacting`` → rename batch=N → ``batch=N.old``
-        → rename .compacting → batch=N → rmtree .old). Same rules as the
-        curation stores' _recover_swap, run by every directory listing:
-        live missing → promote the completed stage (_SUCCESS) or restore
-        the set-aside original; leftovers beside a live dir are garbage.
-        Steady-state cost: the listdir the caller was doing anyway."""
-        import shutil
-
-        from .storeutil import OLD_SUFFIX, STAGED_SUFFIX
-
-        # suffixes from storeutil so recovery (incl. the leftover regex)
-        # can never drift from the writer's staged_swap (review r9)
-        suffix_alt = f"{STAGED_SUFFIX[1:]}|{OLD_SUFFIX[1:]}"
-        for name in os.listdir(self.path):
-            m = re.fullmatch(rf"(batch=\d+)\.({suffix_alt})", name)
-            if not m:
-                continue
-            live = os.path.join(self.path, m.group(1))
-            staged, old = live + STAGED_SUFFIX, live + OLD_SUFFIX
-            if not os.path.isdir(live):
-                if os.path.isdir(staged) and os.path.exists(
-                    os.path.join(staged, "_SUCCESS")
-                ):
-                    os.rename(staged, live)
-                elif os.path.isdir(old):
-                    os.rename(old, live)
-            if os.path.isdir(live):
-                for leftover in (staged, old):
-                    if os.path.isdir(leftover):
-                        shutil.rmtree(leftover, ignore_errors=True)
-
     def delete_docs(self, ids) -> int:
         """PHYSICALLY erase the signature rows of ``ids`` (GDPR-class
         erasure — signatures are content-derived, so tombstone filtering
-        alone would retain derived personal data). ``ids`` is either a
-        bounded driver-side list (operational erasure requests; isin()
-        compiles them into the scan filter) or a DataFrame whose first
-        column is the ids (r12 — scan-derived victim sets stay
-        distributed: containment probe via left_semi, purge via
-        left_anti, no driver materialization).
-
-        Per-batch staged swap: only partitions containing a deleted id
-        are rewritten, and BATCH IDENTITY IS PRESERVED — a caller keying
-        per-batch side effects by batch number (CurationStream's
-        pair-completeness markers) stays consistent with no re-marking.
-        Crash anywhere mid-swap is healed by _recover_batch_swaps (every
-        listing runs it); the caller's durable delete intent
-        (CurationStream._apply_deletes) replays the whole operation, so
-        a crash BETWEEN batch rewrites also converges. Same
-        single-writer contract as upsert_batch/compact. Returns the
-        number of partitions rewritten."""
-        from pyspark.sql import DataFrame
-
-        from .storeutil import staged_swap
-
-        if isinstance(ids, DataFrame):
-            vid = ids.select(
-                F.col(ids.columns[0]).cast("long").alias(self.id_col)
-            ).distinct()
-            if vid.isEmpty():
-                return 0
-            rewritten = 0
-            for b in self._batches():
-                rows = self.batch_rows(b)
-                if rows.join(vid, self.id_col, "left_semi").isEmpty():
+        alone would retain derived personal data). ``ids`` is a
+        driver-side iterable or a DataFrame whose first column is the
+        ids; either way the purge is a containment probe (left_semi) and
+        a rewrite (left_anti) of only the batch directories holding a
+        victim — a DataFrame caller should hold it, every directory
+        probes it. The rewrites commit as one manifest commit (or join
+        the caller's open transaction). Returns the number of
+        directories rewritten."""
+        idc = self.id_col
+        vid = id_frame(self.spark, ids, idc)
+        rewritten = 0
+        with self.manifest.transaction("delete_docs"):
+            for d in self.manifest.dirs(self.STORE):
+                rows = self.spark.read.parquet(d)
+                if rows.join(vid, idc, "left_semi").isEmpty():
                     continue
-                live = os.path.join(self.path, f"batch={b}")
-                kept = rows.join(vid, self.id_col, "left_anti")
-                staged_swap(
-                    live,
-                    lambda staged, kept=kept: kept.write.mode(
-                        "overwrite"
-                    ).parquet(staged),
+                self.manifest.replace(
+                    self.STORE, rows.join(vid, idc, "left_anti"), old=[d]
                 )
                 rewritten += 1
-            return rewritten
-        ids = sorted({int(i) for i in ids})
-        if not ids:
-            return 0
-        rewritten = 0
-        for b in self._batches():
-            rows = self.batch_rows(b)
-            if rows.filter(F.col(self.id_col).isin(ids)).isEmpty():
-                continue
-            live = os.path.join(self.path, f"batch={b}")
-            kept = rows.filter(~F.col(self.id_col).isin(ids))
-            staged_swap(
-                live,
-                lambda staged, kept=kept: kept.write.mode("overwrite").parquet(
-                    staged
-                ),
-            )
-            rewritten += 1
         return rewritten
-
-    def _batches(self) -> list[int]:
-        """COMMITTED batch partitions only (_SUCCESS present): a write
-        that died mid-flight leaves a partial dir that must stay
-        invisible to readers — otherwise one crashed compact()/upsert
-        wedges every subsequent read with a schema-inference error."""
-        return self._batch_dirs(committed_only=True)
-
-    def _next_seq(self) -> int:
-        """Next batch number, counting PARTIAL dirs too: numbering past a
-        crashed write's leftover keeps errorifexists from colliding."""
-        dirs = self._batch_dirs(committed_only=False)
-        return (dirs[-1] + 1) if dirs else 0
 
     def read(self) -> DataFrame:
         """Latest signature per doc across all batches (later batch wins —
-        a changed document's re-signed row shadows its old one)."""
-        batches = self._batches()
-        if not batches:
-            raise FileNotFoundError(f"no signature batches under {self.path}")
-        df = self.spark.read.option("basePath", self.path).parquet(
-            *[os.path.join(self.path, f"batch={b}") for b in batches]
-        )
+        a changed document's re-signed row shadows its old one). Batch
+        order rides in the rows' ``batch`` column."""
+        df = self.manifest.read(self.spark, self.STORE)
+        if df is None:
+            raise FileNotFoundError(
+                f"no signature batches under {self.manifest.path}"
+            )
         return latest_per_key(df, [self.id_col], [F.col("batch")])
 
     def read_or_none(self) -> DataFrame | None:
@@ -209,7 +129,7 @@ class MinHashSignatureStore:
         ``upsert_batch(known=...)`` and ``incremental_pairs(base=...)``,
         halving the per-batch store scans; persist the result across
         those two consumers)."""
-        return self.read() if self._batches() else None
+        return self.read() if self.manifest.dirs(self.STORE) else None
 
     # ------------------------------------------------------------- signing
 
@@ -241,12 +161,12 @@ class MinHashSignatureStore:
         )
 
     def upsert_batch(self, docs: DataFrame, known: DataFrame | None = None) -> DataFrame:
-        """Sign the batch's new/changed docs, append them as the next
-        ``batch=N`` partition, and return the newly signed rows (the input
-        to ``incremental_pairs``). Unchanged docs cost one anti-join probe.
-        The committed partition number is left on ``self.last_seq`` so a
-        caller tracking per-batch pair completeness (CurationStream) can
-        key its marker by the same id.
+        """Sign the batch's new/changed docs, commit them as the next
+        batch directory, and return the newly signed rows (the input to
+        ``incremental_pairs``). Unchanged docs cost one anti-join probe.
+        Each row's ``batch`` is the manifest version that commits it, so
+        later batches sort later; inside a caller's open transaction the
+        write joins that commit.
 
         ``known`` (optional): a pre-read latest-per-doc store view (from
         ``read_or_none``) to anti-join against instead of re-scanning the
@@ -260,92 +180,43 @@ class MinHashSignatureStore:
         caller-supplied column (the one-md5-pass-per-batch optimization)
         and a differently derived fingerprint would corrupt change
         detection with no error."""
-        incoming = self._fingerprinted(docs)
+        todo = self._fingerprinted(docs)
+        if known is None:
+            known = self.read_or_none()
         if known is not None:
-            todo = incoming.join(
+            todo = todo.join(
                 known.select(self.id_col, "content_fp"),
                 [self.id_col, "content_fp"],
                 "left_anti",
             )
-        elif self._batches():
-            known_read = self.read().select(self.id_col, "content_fp")
-            todo = incoming.join(
-                known_read, [self.id_col, "content_fp"], "left_anti"
-            )
-        else:
-            todo = incoming
-        seq = self._next_seq()
-        signed = self._sign(todo)
-        signed.write.mode("errorifexists").parquet(
-            os.path.join(self.path, f"batch={seq}")
+        # the manifest version this batch commits in (alone, or as part
+        # of the caller's open transaction): later batches sort later
+        signed = self._sign(todo).withColumn(
+            "batch", F.lit(self.manifest.version + 1).cast("long")
         )
-        self.last_seq = seq
-        return self.batch_rows(seq)
+        return self.spark.read.parquet(self.manifest.append(self.STORE, signed))
 
-    def committed_batches(self) -> list[int]:
-        """Public view of the committed partition numbers (for callers
-        reconciling per-batch side effects, e.g. pair-completeness)."""
-        return self._batches()
+    def compact(self) -> int:
+        """Fold every batch directory into one latest-per-doc directory
+        (the LSM compaction the module docstring promises): read()
+        collapses N directories through a keyed window on every call, so
+        a long-running stream pays O(total appended rows) per read until
+        someone folds. The folded rows keep their ``batch``, and the fold
+        replaces the batches in one manifest commit — readers see the
+        old batches or the fold, never a mix. Returns the number of
+        directories folded. Invariants pinned by test: read() is
+        row-identical before/after, and incremental_pairs over a
+        post-compaction upsert equals the uncompacted run.
 
-    def batch_rows(self, seq: int) -> DataFrame:
-        """The signature rows of one committed ``batch=N`` partition —
-        the replay input for re-deriving that batch's candidate pairs."""
-        return self.spark.read.parquet(os.path.join(self.path, f"batch={seq}"))
-
-    def compact(self, force_sweep: bool = False) -> int:
-        """Fold every batch partition into one latest-per-doc batch (the
-        LSM compaction the module docstring promises): read() collapses
-        N partitions through a keyed window on every call, so a
-        long-running stream pays O(total appended rows) per read until
-        someone folds. Compaction writes the collapsed view as the NEXT
-        batch number (readers always see a complete store — the fold is
-        an append like any other), then unlinks the old partitions;
-        read()'s latest-per-key keeps working mid-compaction because the
-        new batch shadows everything older, and a compact() that DIES
-        mid-write leaves only an uncommitted dir (no _SUCCESS) that
-        _batches() ignores and the next compact()/upsert numbers past —
-        the store never wedges. Leftover partials are swept here.
-        Returns the number of partitions folded. Invariants pinned by
-        test: read() is row-identical before/after, and incremental_pairs
-        over a post-compaction upsert equals the uncompacted run.
-
-        SINGLE-WRITER REQUIREMENT: the store assumes one writer process
-        at a time (upsert_batch or compact, never concurrently from two
-        processes) — the same contract as a Delta/Iceberg table without a
-        locking catalog. The partial-dir sweep below is additionally
-        restricted to dirs numbered BELOW the max committed batch: an
-        in-flight upsert always writes at _next_seq (past every existing
-        dir), so even a contract-violating concurrent writer's dir is
-        never deleted mid-write — only leftovers that a later successful
-        commit has already numbered past.
-
-        ``force_sweep=True`` is the caller's EXPLICIT exclusivity
-        assertion ("no upsert is in flight anywhere"): it additionally
-        reclaims uncommitted dirs numbered >= the max committed batch
-        (and dirs in a store with no committed batch at all) — the
-        leftovers of a crashed write that would otherwise pin disk and
-        _next_seq forever in a store receiving no further commits. Unsafe
-        under a concurrent writer, hence never the default."""
-        import shutil
-
-        batches = self._batches()
-        # sweep uncommitted leftovers from crashed writes (invisible to
-        # readers, but they hold disk and pin _next_seq forward)
-        high_water = -1 if force_sweep else (batches[-1] if batches else None)
-        if high_water is not None:
-            for b in self._batch_dirs(committed_only=False):
-                if b not in batches and (high_water < 0 or b < high_water):
-                    shutil.rmtree(os.path.join(self.path, f"batch={b}"))
-        if len(batches) <= 1:
+        SINGLE-WRITER REQUIREMENT: one writer process at a time
+        (upsert_batch, delete_docs or compact) — the same contract as a
+        Delta/Iceberg table without a locking catalog; a second writer
+        loses the manifest CAS with ``CommitConflictError``."""
+        n = len(self.manifest.dirs(self.STORE))
+        if n <= 1:
             return 0
-        folded = self.read()
-        seq = self._next_seq()
-        folded.drop("batch").write.mode("errorifexists").parquet(
-            os.path.join(self.path, f"batch={seq}")
-        )
-        for b in batches:
-            shutil.rmtree(os.path.join(self.path, f"batch={b}"))
-        return len(batches)
+        self.manifest.replace(self.STORE, self.read())
+        return n
 
     # ------------------------------------------------------ pair search
 

@@ -82,6 +82,36 @@ def manifest_current_version(path: str) -> int:
     return max(versions, default=0)
 
 
+def manifest_commit(path: str, base_version: int, doc: dict) -> bool:
+    """CAS: install ``doc`` as ``_manifests/v{base+1}.json`` iff that
+    version is still unclaimed; False when another writer got there
+    first. The temp manifest is fsync'd BEFORE the link and the manifest
+    dir after it: link(2) is metadata-only, so without the fsync a crash
+    could surface a committed v{N}.json with empty/partial bytes
+    (delayed allocation) — a bricked table. Module-level so every
+    manifest-committed store (the keyed-MERGE sink and the curation
+    stores) shares ONE commit protocol."""
+    mdir = os.path.join(path, "_manifests")
+    os.makedirs(mdir, exist_ok=True)
+    tmp = os.path.join(mdir, f".tmp-{uuid.uuid4().hex}.json")
+    with open(tmp, "w") as f:
+        json.dump(doc, f)
+        f.flush()
+        os.fsync(f.fileno())
+    try:
+        os.link(tmp, os.path.join(mdir, f"v{base_version + 1}.json"))
+        dir_fd = os.open(mdir, os.O_RDONLY)
+        try:
+            os.fsync(dir_fd)
+        finally:
+            os.close(dir_fd)
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
+
+
 _DOC_CACHE: dict[tuple, dict] = {}
 _DOC_CACHE_MAX = 8
 # guards eviction in both module caches — a streaming planning thread and
@@ -545,11 +575,9 @@ class ManifestParquetSink:
         files_checkpoint: str | None = None,
         schema_map: dict | None = None,
     ) -> bool:
-        """CAS: install ``partitions`` as v{base+1} iff still unclaimed.
-        The temp manifest is fsync'd BEFORE the link and the manifest dir
-        after it: link(2) is metadata-only, so without the fsync a crash
-        could surface a committed v{N}.json with empty/partial bytes
-        (delayed allocation) — a bricked table.
+        """CAS: install ``partitions`` as v{base+1} iff still unclaimed
+        (``manifest_commit``; False = another writer committed base+1
+        first — retry).
 
         The column mapping (``schema_map``) is carried forward from the
         base manifest AUTOMATICALLY unless the caller passes an explicit
@@ -557,7 +585,6 @@ class ManifestParquetSink:
         preserves the current logical schema without threading it."""
         import time
 
-        tmp = os.path.join(self._manifest_dir, f".tmp-{uuid.uuid4().hex}.json")
         doc = {
             "version": base_version + 1,
             "partitions": partitions,
@@ -595,22 +622,7 @@ class ManifestParquetSink:
             doc["stats"] = stats
         if dvs:
             doc["dvs"] = dvs
-        with open(tmp, "w") as f:
-            json.dump(doc, f)
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, os.path.join(self._manifest_dir, f"v{base_version + 1}.json"))
-            dir_fd = os.open(self._manifest_dir, os.O_RDONLY)
-            try:
-                os.fsync(dir_fd)
-            finally:
-                os.close(dir_fd)
-            return True
-        except FileExistsError:
-            return False  # another writer committed base+1 first — retry
-        finally:
-            os.unlink(tmp)
+        return manifest_commit(self.path, base_version, doc)
 
     def _write_files_checkpoint(
         self, name: str, stats: dict[str, dict]

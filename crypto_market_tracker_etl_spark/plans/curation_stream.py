@@ -25,16 +25,21 @@ Structured Streaming source):
 3. incremental MinHash signing + banded pair search against the
    accumulated index (operators/incremental_dedup.py — the union of
    per-batch pair outputs equals the from-scratch candidate set), pairs
-   appended to a pair store; a per-sig-batch PAIR-COMPLETENESS marker
-   (``pairs_done/N``) makes the sign-then-append sequence crash-proof —
-   see the protocol note on the class (r8; previously a crash between
-   the two commits lost the batch's pairs permanently);
-4. the batch's ingest counts appended to a durable funnel LEDGER keyed
+   appended to a pair store;
+4. the batch's ingest counts recorded in a durable funnel LEDGER keyed
    by batch id — NOT in-memory counters: a restarted stream (same
    store_dir, fresh CurationStream) reports the same funnel, and an
-   at-least-once foreachBatch RETRY re-appends under the same batch id,
-   which the read-side latest-per-key collapse makes idempotent (the
-   same self-healing the signature store gets from merge-on-read).
+   at-least-once foreachBatch RETRY rewrites the same batch id's entry
+   (the corpus and signature stores absorb the retry by merge-on-read).
+
+Steps 2–4 land in ONE commit: every store (corpus, vhash, pairs,
+signature batches) is a set of immutable directories listed by one
+versioned manifest under ``store_dir`` (operators/store_manifest.py),
+and the ledger rides inside that manifest as ``{bkey: [raw, quality]}``.
+A crash before the commit leaves the previous snapshot intact (the
+retry redoes the whole batch); a crash after it leaves only garbage
+that the next open sweeps. ``delete_docs`` and ``compact`` commit the
+same way, one commit per call.
 
 ``clean()`` derives the final survivor set from the stores: resolve
 exact dedup (min id per stored fingerprint), restrict accumulated
@@ -51,51 +56,23 @@ budget signal tracked across batches).
 Scale shape: each batch is O(|batch| + collisions) — one persisted
 stats projection, one anti-join probe into the signature store, one
 broadcast band join; the stores are append-only LSM-style parquet
-(merge-on-read, compactable). ``clean()`` touches the corpus store once
-and re-shingles only candidate-pair docs.
+directories (merge-on-read, compactable). ``clean()`` touches the corpus
+store once and re-shingles only candidate-pair docs.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.textstats import lang_id, n_tokens, normalize_ws, quality_score
 from ..operators.cache import cache_scope, materialize
 from ..operators.dedup import ngram_jaccard, word_shingles
-from ..operators.incremental_dedup import MinHashSignatureStore
+from ..operators.incremental_dedup import MinHashSignatureStore, id_frame
 from ..operators.latest import latest_per_key
-
-
-def _recover_swap(path: str) -> None:
-    """Finish an interrupted compaction swap (see CurationStream.compact:
-    the protocol is rename(path → .old), rename(.compacting → path),
-    rmtree(.old); each rename is atomic but a crash can land between
-    them). Recovery rules, checked by every reader: if the live dir is
-    missing, promote the completed stage (it has Spark's _SUCCESS
-    marker) or else restore the set-aside original; a leftover .old
-    beside a live dir is post-swap garbage and is removed."""
-    import shutil
-
-    from ..operators.storeutil import OLD_SUFFIX, STAGED_SUFFIX
-
-    # suffixes from storeutil so recovery can never drift from the
-    # writer's staged_swap (review r9)
-    staged, old = path + STAGED_SUFFIX, path + OLD_SUFFIX
-    if not os.path.isdir(path):
-        if os.path.isdir(staged) and os.path.exists(
-            os.path.join(staged, "_SUCCESS")
-        ):
-            os.rename(staged, path)
-        elif os.path.isdir(old):
-            os.rename(old, path)
-    if os.path.isdir(path):
-        for leftover in (staged, old):
-            if os.path.isdir(leftover):
-                shutil.rmtree(leftover, ignore_errors=True)
+from ..operators.store_manifest import StoreManifest
 
 
 def _latest_per_doc(corpus: DataFrame) -> DataFrame:
@@ -110,46 +87,14 @@ def _latest_per_doc(corpus: DataFrame) -> DataFrame:
     return latest_per_key(corpus, ["doc_id"], [F.col("bkey")])
 
 
-def _ledger_collapsed(ledger: DataFrame) -> DataFrame:
-    """Retry-idempotent view of the funnel ledger: one row per batch key
-    (re-appended retry rows carry identical values). ONE implementation,
-    shared by funnel() and compact() so the durable fold can never
-    disagree with the read-side view."""
-    return ledger.groupBy("bkey").agg(
-        F.first("raw").alias("raw"), F.first("quality").alias("quality")
-    )
-
-
-def _swap_in(path: str, view: DataFrame) -> None:
-    """Crash-safe store replacement — the shared swap dance
-    (operators/storeutil.py::staged_swap; compact(), _apply_deletes,
-    and the signature store's per-batch rewrites all run the same
-    implementation). Each rename is atomic; _recover_swap (run by
-    every reader) heals any intermediate state."""
-    from ..operators.storeutil import staged_swap
-
-    staged_swap(
-        path, lambda staged: view.write.mode("overwrite").parquet(staged)
-    )
-
-
-def _read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
-    """Read a store, returning None ONLY for the not-yet-written case;
-    any other read failure (corrupt footer, schema clash) raises — a
-    silent empty fallback would drop near-duplicates from the output.
-    Always recovers an interrupted compaction swap first."""
-    _recover_swap(path)
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" in str(exc):
-            return None
-        raise
-
-
 class CurationStream:
-    """Accumulating curation state: corpus store + signature store +
-    candidate-pair store + funnel ledger, fed one batch at a time."""
+    """Accumulating curation state: corpus, vhash, candidate-pair and
+    signature stores plus the funnel ledger, all committed through one
+    ``StoreManifest`` over ``store_dir``, fed one batch at a time.
+
+    SINGLE WRITER: one process mutates a ``store_dir`` at a time, and
+    opening one counts (the open sweeps unreferenced directories); a
+    second writer loses the manifest CAS with ``CommitConflictError``."""
 
     def __init__(
         self,
@@ -191,75 +136,22 @@ class CurationStream:
         # does not grow with the corpus. None disables (manual cadence).
         self.auto_compact_files = auto_compact_files
         self.auto_compactions = 0
-        self.corpus_path = os.path.join(store_dir, "corpus")
-        self.vhash_path = os.path.join(store_dir, "vhash")
-        self.pairs_path = os.path.join(store_dir, "pairs")
-        self.pairs_done_path = os.path.join(store_dir, "pairs_done")
-        self.ledger_path = os.path.join(store_dir, "funnel_ledger")
-        self.deletes_path = os.path.join(store_dir, "deletes")
+        # opening sweeps whatever a crashed writer left unreferenced
+        self.manifest = StoreManifest(store_dir)
         self.sigs = MinHashSignatureStore(
             spark,
-            os.path.join(store_dir, "sigs"),
+            self.manifest,
             num_hashes=num_hashes,
             band_size=band_size,
             portable=portable,
         )
-        ledger = _read_or_none(spark, self.ledger_path)
-        self._seq = (
-            (ledger.agg(F.max("bkey")).collect()[0][0] or 0) + 1
-            if ledger is not None
-            else 0
-        )
-        # startup half of the pair-completeness protocol: a run that died
-        # between the signature commit and the pair append is re-derived
-        # here (the retry's anti-join signs nothing, so without this the
-        # crashed batch's pairs would be lost permanently)
-        self._recover_pairs()
 
-    # ------------------------------------------- pair-completeness markers
-    #
-    # Crash window closed by this protocol: process_batch commits the
-    # signature batch FIRST (sigs/batch=N), then appends that batch's
-    # candidate pairs, then touches pairs_done/N. A crash anywhere between
-    # the two commits leaves sigs/batch=N committed but unmarked; on the
-    # at-least-once retry the (doc_id, content_fp) anti-join signs nothing,
-    # so the pairs can never be re-derived from the RETRY's (empty) batch —
-    # they are instead re-derived from the STORED batch=N rows by
-    # _recover_pairs, which runs at startup, before every batch, before
-    # every pair read, and before compaction folds the batch identity away.
-    # Re-deriving against the CURRENT store is safe: it can only emit
-    # extra candidate pairs that later batches also emit (distinct-ed
-    # merge-on-read, and clean() verifies every candidate with exact
-    # Jaccard), never lose one whose doc's latest signature lives in
-    # batch=N.
+    def _store(self, name: str) -> DataFrame | None:
+        return self.manifest.read(self.spark, name)
 
-    def _pairs_done(self) -> set[int]:
-        if not os.path.isdir(self.pairs_done_path):
-            return set()
-        return {int(n) for n in os.listdir(self.pairs_done_path) if n.isdigit()}
-
-    def _mark_pairs_done(self, seq: int) -> None:
-        os.makedirs(self.pairs_done_path, exist_ok=True)
-        with open(os.path.join(self.pairs_done_path, str(seq)), "w"):
-            pass
-
-    def _recover_pairs(self) -> int:
-        """Re-derive and append the candidate pairs of every committed
-        signature batch not yet marked pair-complete. No-op (one listdir)
-        in the steady state. Returns the number of batches recovered.
-
-        Pending DELETE intents are applied first: a pair re-derivation
-        must never read signature rows whose erasure is already durably
-        promised (it would re-append pairs referencing deleted docs)."""
-        self._apply_deletes()
-        done = self._pairs_done()
-        pending = [b for b in self.sigs.committed_batches() if b not in done]
-        for b in pending:
-            self.sigs.incremental_pairs(self.sigs.batch_rows(b)).write.mode(
-                "append"
-            ).parquet(self.pairs_path)
-            self._mark_pairs_done(b)
-        return len(pending)
+    def _ledger(self) -> dict[str, list[int]]:
+        """{bkey: [raw, quality]} of every processed batch."""
+        return self.manifest.doc.get("ledger", {})
 
     # ----------------------------------------------------------- erasure
     #
@@ -268,176 +160,69 @@ class CurationStream:
     # deletes in txn_sink, tombstone-filtered probes + compaction erasure
     # in ann_index) — the curation stores were the last component keeping
     # derived data (text, content fingerprints, MinHash signatures,
-    # candidate pairs) for a doc forever. Protocol: durable INTENT first
-    # (atomic rename — the erasure promise survives any crash), then
-    # apply (signature purge preserving batch identity, corpus + pair
-    # rewrites via the same _swap_in protocol compaction uses), intent
-    # cleared LAST. Every stage is idempotent, so replaying a
-    # half-applied intent converges; _recover_pairs applies pending
-    # intents before any pair work, and __init__ reaches it through
-    # _recover_pairs. The funnel LEDGER is deliberately untouched:
+    # perceptual hashes, candidate pairs) for a doc forever. Protocol:
+    # rewrite the touched signature batches and the filtered corpus,
+    # vhash and pair stores into fresh directories, then ONE manifest
+    # commit swaps them all in; the post-commit sweep (or, after a
+    # crash, the next open) removes the superseded directories — the
+    # physical erasure. The funnel LEDGER is deliberately untouched:
     # raw/quality are historical ingest counts (what was processed), and
     # contain no per-doc data; exact/clean/clean_tokens are derived from
     # the purged stores and reflect the deletion immediately. A deleted
-    # id may be re-ingested later like any new doc (the intent applies
-    # once and is cleared, never a standing ban).
-
-    def _pending_deletes(self) -> list[str]:
-        """Pending intents oldest-first: ``N`` text files (the bounded
-        operational-list path) and ``N.df`` parquet dirs (the DataFrame
-        path, r12), one shared integer sequence."""
-        if not os.path.isdir(self.deletes_path):
-            return []
-        return sorted(
-            (
-                n
-                for n in os.listdir(self.deletes_path)
-                if n.isdigit() or (n.endswith(".df") and n[:-3].isdigit())
-            ),
-            key=lambda n: int(n[:-3] if n.endswith(".df") else n),
-        )
-
-    def _next_intent(self) -> str:
-        existing = [
-            int(n[:-3] if n.endswith(".df") else n)
-            for n in os.listdir(self.deletes_path)
-            if n.isdigit() or (n.endswith(".df") and n[:-3].isdigit())
-        ]
-        return os.path.join(
-            self.deletes_path, str(max(existing, default=-1) + 1)
-        )
+    # id may be re-ingested later like any new doc (never a standing
+    # ban).
 
     def delete_docs(self, ids) -> dict:
         """Erase every trace of ``ids`` from the curation stores —
-        corpus text, signatures, candidate pairs — crash-safe and
+        corpus text, signatures, perceptual hashes, candidate pairs —
         physically (rewrites, not tombstones: fingerprints and MinHash
-        signatures are content-derived data).
+        signatures are content-derived data), in one commit.
 
         ``ids`` is either a bounded driver-side iterable (operational
-        erasure requests — compiled into scan filters via isin) or a
-        DataFrame whose FIRST column is the doc ids (r12, the judge's
-        scale directive: a victim set DERIVED from a corpus scan is not
-        operationally small at 100 TB — the DataFrame path writes the
-        intent as parquet and applies it with anti-joins, no driver
-        materialization). Returns {'deleted': n, 'applied': k} (k
-        intents applied, including any found pending from an earlier
-        crash)."""
-        if isinstance(ids, DataFrame):
-            vid = ids.select(
-                F.col(ids.columns[0]).cast("long").alias("doc_id")
-            ).distinct()
-            os.makedirs(self.deletes_path, exist_ok=True)
-            intent = self._next_intent() + ".df"
-            tmp = intent + ".tmp"
-            vid.write.mode("overwrite").parquet(tmp)
-            n = self.spark.read.parquet(tmp).count()
+        erasure requests) or a DataFrame whose FIRST column is the doc
+        ids (r12, the judge's scale directive: a victim set DERIVED from
+        a corpus scan is not operationally small at 100 TB). Both take
+        the same path: a one-column frame, held once, that every store
+        anti-joins — no driver materialization. Returns {'deleted': n},
+        n distinct ids requested."""
+        with cache_scope() as hold:
+            vid = hold(id_frame(self.spark, ids).distinct())
+            n = vid.count()
             if n == 0:
-                import shutil
-
-                shutil.rmtree(tmp, ignore_errors=True)
-                return {"deleted": 0, "applied": self._apply_deletes()}
-            os.replace(tmp, intent)  # durable promise (atomic dir rename)
-            return {"deleted": n, "applied": self._apply_deletes()}
-        ids = sorted({int(i) for i in ids})
-        if not ids:
-            return {"deleted": 0, "applied": self._apply_deletes()}
-        os.makedirs(self.deletes_path, exist_ok=True)
-        intent = self._next_intent()
-        tmp = intent + ".tmp"
-        with open(tmp, "w") as f:
-            f.write("\n".join(map(str, ids)))
-        os.replace(tmp, intent)  # the durable promise; apply may now crash
-        return {"deleted": len(ids), "applied": self._apply_deletes()}
-
-    def _apply_deletes(self) -> int:
-        """Apply every pending delete intent, oldest first; clear each
-        AFTER its stores are consistent. Idempotent per stage: re-running
-        a half-applied intent re-filters already-clean stores (a no-op)
-        and re-swaps at worst. Unfinished ``.tmp`` intent writes are
-        discarded (their delete_docs call never returned, so the
-        promise was never made). Steady state: one listdir.
-
-        List intents purge via isin filters; DataFrame intents (``.df``
-        parquet dirs) via anti-joins — sigs.delete_docs handles both."""
-        import shutil
-
-        applied = 0
-        if os.path.isdir(self.deletes_path):
-            for n in os.listdir(self.deletes_path):
-                if n.endswith(".tmp"):
-                    p = os.path.join(self.deletes_path, n)
-                    if os.path.isdir(p):
-                        shutil.rmtree(p, ignore_errors=True)
-                    else:
-                        os.unlink(p)
-        for name in self._pending_deletes():
-            path = os.path.join(self.deletes_path, name)
-            if name.endswith(".df"):
-                vid = self.spark.read.parquet(path).select("doc_id")
-                if not vid.isEmpty():
-                    self.sigs.delete_docs(vid)
-                    corpus = _read_or_none(self.spark, self.corpus_path)
-                    if corpus is not None:
-                        _swap_in(
-                            self.corpus_path,
-                            corpus.join(vid, "doc_id", "left_anti"),
+                return {"deleted": 0}
+            with self.manifest.transaction("delete_docs"):
+                self.sigs.delete_docs(vid)
+                for name in ("corpus", "vhash"):
+                    view = self._store(name)
+                    if view is not None:
+                        self.manifest.replace(
+                            name, view.join(vid, "doc_id", "left_anti")
                         )
-                    vh = _read_or_none(self.spark, self.vhash_path)
-                    if vh is not None:  # perceptual hashes are
-                        # content-derived: erase, don't tombstone
-                        _swap_in(
-                            self.vhash_path,
-                            vh.join(vid, "doc_id", "left_anti"),
-                        )
-                    pairs = _read_or_none(self.spark, self.pairs_path)
-                    if pairs is not None:
-                        no_a = pairs.join(
-                            vid, pairs["id_a"] == vid["doc_id"], "left_anti"
-                        )
-                        no_ab = no_a.join(
-                            vid, no_a["id_b"] == vid["doc_id"], "left_anti"
-                        )
-                        _swap_in(self.pairs_path, no_ab)
-                shutil.rmtree(path)
-                applied += 1
-                continue
-            with open(path) as f:
-                ids = [int(tok) for tok in f.read().split() if tok]
-            if ids:
-                self.sigs.delete_docs(ids)
-                corpus = _read_or_none(self.spark, self.corpus_path)
-                if corpus is not None:
-                    _swap_in(
-                        self.corpus_path,
-                        corpus.filter(~F.col("doc_id").isin(ids)),
-                    )
-                vh = _read_or_none(self.spark, self.vhash_path)
-                if vh is not None:
-                    _swap_in(
-                        self.vhash_path,
-                        vh.filter(~F.col("doc_id").isin(ids)),
-                    )
-                pairs = _read_or_none(self.spark, self.pairs_path)
+                pairs = self._store("pairs")
                 if pairs is not None:
-                    _swap_in(
-                        self.pairs_path,
-                        pairs.filter(
-                            ~F.col("id_a").isin(ids)
-                            & ~F.col("id_b").isin(ids)
-                        ),
-                    )
-            os.unlink(path)
-            applied += 1
-        return applied
+                    for side in ("id_a", "id_b"):
+                        pairs = pairs.join(
+                            vid.withColumnRenamed("doc_id", side),
+                            side,
+                            "left_anti",
+                        )
+                    self.manifest.replace("pairs", pairs)
+        return {"deleted": n}
 
     # ------------------------------------------------------------ ingest
 
     def process_batch(self, batch: DataFrame, batch_id: int | None = None) -> dict:
         """Curate one batch of (doc_id, source, text); returns per-batch
         counts. Safe to call directly or from foreachBatch (batch_id
-        keys the ledger row, making at-least-once retries idempotent)."""
+        keys the ledger entry, making at-least-once retries idempotent;
+        None takes the next id after every recorded one)."""
         t = F.col("text")
-        with cache_scope() as hold:
+        bkey = (
+            int(batch_id)
+            if batch_id is not None
+            else max(map(int, self._ledger()), default=-1) + 1
+        )
+        with cache_scope() as hold, self.manifest.transaction("process_batch"):
             stats = hold(
                 batch.select(
                     "doc_id",
@@ -466,10 +251,9 @@ class CurationStream:
             # latest-per-key), not an arbitrary one — without it a
             # changed-content redelivery could surface (and compaction
             # could permanently keep) the stale text
-            bkey = int(batch_id) if batch_id is not None else self._seq
-            batch_kept.withColumn("bkey", F.lit(bkey)).write.mode(
-                "append"
-            ).parquet(self.corpus_path)
+            self.manifest.append(
+                "corpus", batch_kept.withColumn("bkey", F.lit(bkey))
+            )
             if self.visual_col is not None:
                 # perceptual hashes for the kept rows only (same
                 # coverage as the corpus store) — tiles never persist,
@@ -477,15 +261,15 @@ class CurationStream:
                 # lazily imports this module for the attested queries)
                 from ..queries_ext import visual_hash_pair
 
-                visual_hash_pair(
-                    batch.join(batch_kept.select("doc_id"), "doc_id", "left_semi"),
-                    F.col(self.visual_col),
-                ).withColumn("bkey", F.lit(bkey)).write.mode("append").parquet(
-                    self.vhash_path
+                self.manifest.append(
+                    "vhash",
+                    visual_hash_pair(
+                        batch.join(
+                            batch_kept.select("doc_id"), "doc_id", "left_semi"
+                        ),
+                        F.col(self.visual_col),
+                    ).withColumn("bkey", F.lit(bkey)),
                 )
-            # close any pair-emission gap from a previously crashed batch
-            # BEFORE committing new signatures (see protocol note above)
-            self._recover_pairs()
             # ONE store read per batch: the pre-append latest-per-doc
             # view feeds BOTH the upsert's changed-doc anti-join and the
             # pair search's band index (as pre ∪ new-batch rows —
@@ -501,13 +285,13 @@ class CurationStream:
                 batch_kept.select("doc_id", "text", "content_fp"),
                 known=pre,
             )
-            pairs = self.sigs.incremental_pairs(new_sigs, base=pre)
-            pairs.write.mode("append").parquet(self.pairs_path)
-            self._mark_pairs_done(self.sigs.last_seq)
-        self._seq = max(self._seq, bkey) + 1
-        self.spark.createDataFrame(
-            [(bkey, n_raw, n_gated)], "bkey long, raw long, quality long"
-        ).write.mode("append").parquet(self.ledger_path)
+            self.manifest.append(
+                "pairs", self.sigs.incremental_pairs(new_sigs, base=pre)
+            )
+            self.manifest.doc.setdefault("ledger", {})[str(bkey)] = [
+                n_raw,
+                n_gated,
+            ]
         compacted = False
         if (
             self.auto_compact_files is not None
@@ -519,17 +303,17 @@ class CurationStream:
         return {"raw": n_raw, "quality": n_gated, "compacted": compacted}
 
     def _store_file_count(self) -> int:
-        """Parquet part-files across the corpus and signature stores —
-        the merge-on-read debt the auto-compaction trigger watches. A
-        recursive local walk here; on an object store this is the same
-        listing the next read pays anyway, issued once per batch."""
-        n = 0
-        for root in (self.corpus_path, self.sigs.path, self.vhash_path):
-            if not os.path.isdir(root):
-                continue
-            for _dir, _subdirs, files in os.walk(root):
-                n += sum(f.endswith(".parquet") for f in files)
-        return n
+        """Parquet part-files across the corpus, signature and vhash
+        stores' live directories — the merge-on-read debt the
+        auto-compaction trigger watches. A local listing here; on an
+        object store this is the same listing the next read pays anyway,
+        issued once per batch."""
+        return sum(
+            name.endswith(".parquet")
+            for store in ("corpus", MinHashSignatureStore.STORE, "vhash")
+            for d in self.manifest.dirs(store)
+            for name in os.listdir(d)
+        )
 
     def attach(self, stream: DataFrame, checkpoint: str, **opts):
         """Wire onto a streaming DataFrame: one process_batch per trigger."""
@@ -542,55 +326,26 @@ class CurationStream:
         )
 
     def compact(self) -> None:
-        """Fold all four stores (the LSM maintenance pass a long-running
+        """Fold the stores (the LSM maintenance pass a long-running
         stream schedules off-peak): signature batches fold latest-per-doc
-        (MinHashSignatureStore.compact), and the corpus / pair / ledger
-        stores rewrite as their own merge-on-read views (latest-per-doc
-        corpus keyed by bkey, distinct pairs, one row per batch key) —
-        every derived result (clean(), funnel()) is invariant across the
-        fold, pinned by test. No-op on stores that don't exist yet.
-
-        Crash-safe swap per store: write the collapsed view to
-        ``.compacting``, rename(live → .old), rename(.compacting → live),
-        remove ``.old``. Each rename is atomic; a crash between them
-        leaves either the completed stage (with its _SUCCESS marker) or
-        the set-aside original, and ``_recover_swap`` — run by every
-        reader — promotes whichever exists, so no window silently
-        disables near-dup removal."""
-        # pair completeness must be reconciled BEFORE the signature fold
-        # destroys the batch=N identity the recovery replays from; after
-        # the fold, the surviving batch numbers are all pair-complete by
-        # construction, so the marker set is rewritten to match.
-        self._recover_pairs()
-        self.sigs.compact()
-        # Mark-then-prune: the folded batch(es) become pair-complete
-        # markers BEFORE any stale marker is removed, so a crash anywhere
-        # in this block leaves at worst a stale extra marker file (benign
-        # — committed_batches() no longer contains its seq), never an
-        # unmarked folded batch that would make the next _recover_pairs
-        # re-derive candidate pairs for the ENTIRE corpus.
-        survivors = set(self.sigs.committed_batches())
-        for b in survivors:
-            self._mark_pairs_done(b)
-        if os.path.isdir(self.pairs_done_path):
-            for n in os.listdir(self.pairs_done_path):
-                if n.isdigit() and int(n) not in survivors:
-                    os.unlink(os.path.join(self.pairs_done_path, n))
-        folds = [
-            self.corpus_path, self.vhash_path, self.pairs_path,
-            self.ledger_path,
-        ]
-        for path in folds:
-            view = _read_or_none(self.spark, path)
-            if view is None:
-                continue
-            if path in (self.corpus_path, self.vhash_path):
-                view = _latest_per_doc(view)
-            elif path == self.pairs_path:
-                view = view.distinct()
-            else:
-                view = _ledger_collapsed(view)
-            _swap_in(path, view)
+        (MinHashSignatureStore.compact), and the corpus / vhash / pair
+        stores rewrite as ONE directory each holding their own
+        merge-on-read view (latest-per-doc keyed by bkey, distinct
+        pairs) — every derived result (clean(), funnel()) is invariant
+        across the fold, pinned by test. The ledger lives in the
+        manifest and needs no fold. All folds land in one manifest
+        commit, so a crash mid-compaction leaves the unfolded snapshot
+        and only unreferenced directories for the next sweep."""
+        with self.manifest.transaction("compact"):
+            self.sigs.compact()
+            for name, fold in (
+                ("corpus", _latest_per_doc),
+                ("vhash", _latest_per_doc),
+                ("pairs", DataFrame.distinct),
+            ):
+                view = self._store(name)
+                if view is not None:
+                    self.manifest.replace(name, fold(view))
 
     # ----------------------------------------------------- derived state
 
@@ -601,8 +356,7 @@ class CurationStream:
         # bkey) — the latest-per-doc collapse makes every read
         # retry-idempotent AND recency-correct, mirroring the signature
         # store's latest_per_key
-        _recover_swap(self.corpus_path)
-        return _latest_per_doc(self.spark.read.parquet(self.corpus_path))
+        return _latest_per_doc(self._store("corpus"))
 
     def exact_survivors(self) -> DataFrame:
         """Cross-batch exact dedup, merge-on-read: min doc_id per STORED
@@ -641,7 +395,7 @@ class CurationStream:
         store, not per batch."""
         if self.visual_col is None:
             return surv
-        vh = _read_or_none(self.spark, self.vhash_path)
+        vh = self._store("vhash")
         if vh is None:
             return surv
         from ..queries_ext import visual_band_pairs
@@ -661,8 +415,7 @@ class CurationStream:
     def _clean_from(self, surv: DataFrame) -> DataFrame:
         from .curation_job import keep_best_losers
 
-        self._recover_pairs()  # steady-state cost: one listdir
-        cand = _read_or_none(self.spark, self.pairs_path)
+        cand = self._store("pairs")
         if cand is None:
             return surv
         meta = surv.select("doc_id", "source")
@@ -726,9 +479,10 @@ class CurationStream:
         exact/clean counts and surviving tokens (the cross-batch budget
         signal). On a fresh stream (no batch processed yet) every store
         is absent — report a zeroed funnel rather than leaking a raw
-        AnalysisException (ADVICE r7)."""
-        ledger = _read_or_none(self.spark, self.ledger_path)
-        if ledger is None:
+        AnalysisException (ADVICE r7). The ingest counts are summed from
+        the manifest on the driver: no Spark job."""
+        ledger = self._ledger()
+        if not ledger:
             return {
                 "raw": 0,
                 "quality": 0,
@@ -736,11 +490,6 @@ class CurationStream:
                 "clean": 0,
                 "clean_tokens": 0,
             }
-        ing = (
-            _ledger_collapsed(ledger)
-            .agg(F.sum("raw").alias("raw"), F.sum("quality").alias("quality"))
-            .collect()[0]
-        )
         with cache_scope() as hold:
             surv = hold(self.exact_survivors())
             n_exact = surv.count()
@@ -753,8 +502,8 @@ class CurationStream:
                 .collect()[0]
             )
         return {
-            "raw": int(ing["raw"]),
-            "quality": int(ing["quality"]),
+            "raw": sum(raw for raw, _ in ledger.values()),
+            "quality": sum(q for _, q in ledger.values()),
             "exact": n_exact,
             "clean": int(row["n"]),
             "clean_tokens": int(row["tok"]),

@@ -334,9 +334,9 @@ def q_curation_delete_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     The victim set is passed as a DATAFRAME (r12 — the judge's scale
     directive: these victims are DERIVED from a corpus scan, ~1% of
     doc_ids, which is not "operationally small" at 100 TB; delete_docs
-    writes the intent as parquet and purges via anti-joins, nothing
-    driver-side). The bounded-list path stays for operational calls and
-    keeps its own pytest coverage. Store path keyed by
+    holds it once and purges every store via anti-joins in one manifest
+    commit, nothing driver-side). A bounded id list takes the same path
+    and keeps its own pytest coverage. Store path keyed by
     (sf_dir, applicationId), wiped per invocation."""
     import hashlib
     import os

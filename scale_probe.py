@@ -1852,16 +1852,15 @@ def probe_r10(spark) -> None:
         cur = CurationStream(spark, os.path.join(root, "store"))
 
         def store_sizes() -> str:
+            # each store is the set of live data dirs its manifest lists
             sz = {
-                k: du(p)
-                for k, p in (
-                    ("sigs", cur.sigs.path),
-                    ("corpus", cur.corpus_path),
-                    ("pairs", cur.pairs_path),
-                )
+                k: [du(d) for d in cur.manifest.dirs(k)]
+                for k in ("sigs", "corpus", "pairs")
             }
             return " ".join(
-                f"{k}={v[0] / 1e6:.0f}MB/{v[1]}f" for k, v in sz.items()
+                f"{k}={sum(b for b, _ in v) / 1e6:.0f}MB/"
+                f"{sum(f for _, f in v)}f/{len(v)}d"
+                for k, v in sz.items()
             )
 
         def timed_clean() -> str:

@@ -4,6 +4,7 @@ semantics, split partitioning, packing accounting, determinism."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from crypto_market_tracker_etl_spark.catalog import load_table
@@ -207,3 +208,157 @@ def test_stream_delete_promotes_same_batch_exact_copy(spark, tmp_path):
     }
     assert victim + 200000 in want
     assert got == want
+
+
+# --------------------------------------------------------------------------
+# Seconds-scale stream ≡ batch cases for the default tier. The full-corpus
+# originals live in tests/test_curation_stream.py (slow tier).
+
+
+def _small_corpus(spark, n=60):
+    """The first ``n`` documents with their near-dup (+100000) and exact
+    (+200000) copies — every funnel stage has work at a few hundred rows."""
+    return _corpus(spark).filter(F.col("doc_id") % 100000 < n)
+
+
+def _ids(df):
+    return {r.doc_id for r in df.select("doc_id").collect()}
+
+
+def _stream_halves(spark, store, corpus):
+    from crypto_market_tracker_etl_spark.plans.curation_stream import (
+        CurationStream,
+    )
+
+    cs = CurationStream(spark, store)
+    for bid in (0, 1):
+        cs.process_batch(corpus.filter(F.col("doc_id") % 2 == 1 - bid), bid)
+    return cs
+
+
+def _parquet_ids(store_dir):
+    """Every doc id any parquet file under ``store_dir`` still holds."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    ids = set()
+    for root, _dirs, files in os.walk(store_dir):
+        for name in files:
+            if not name.endswith(".parquet"):
+                continue
+            t = pq.read_table(os.path.join(root, name))
+            for col in ("doc_id", "id_a", "id_b"):
+                if col in t.column_names:
+                    ids |= set(t.column(col).to_pylist())
+    return ids
+
+
+def test_stream_batches_retry_compact_equal_batch(spark, tmp_path):
+    """Two batches, an at-least-once retry and a compact resolve to the
+    batch funnel's survivor set and counts; a fresh object on the same
+    store reads the same state."""
+    from crypto_market_tracker_etl_spark.plans.curation_stream import (
+        CurationStream,
+    )
+
+    corpus = _small_corpus(spark)
+    res = run_curation(spark, corpus)
+    want, want_funnel = _ids(res.clean), res.funnel()
+    store = str(tmp_path / "store")
+    cs = _stream_halves(spark, store, corpus)
+    cs.process_batch(corpus.filter(F.col("doc_id") % 2 == 0), batch_id=1)
+    cs.compact()
+    assert _ids(cs.clean()) == want
+    got = cs.funnel()
+    for k in ("raw", "quality", "exact", "clean"):
+        assert got[k] == want_funnel[k], k
+    assert CurationStream(spark, store).funnel() == got
+
+
+def test_stream_crash_before_commit_converges(spark, tmp_path):
+    """A batch that dies between its signature write and its pair write
+    — before its manifest commit — leaves the previous snapshot. An
+    in-process retry converges on the batch funnel, and so does a fresh
+    CurationStream over a copy of the crashed store, whose open sweeps
+    the dead batch's directories. (The slow tier's crash matrices cover
+    every other crash point.)"""
+    import os
+    import shutil
+
+    from crypto_market_tracker_etl_spark.plans.curation_stream import (
+        CurationStream,
+    )
+
+    corpus = _small_corpus(spark)
+    want = _ids(run_curation(spark, corpus).clean)
+    b0 = corpus.filter(F.col("doc_id") % 2 == 0)
+    b1 = corpus.filter(F.col("doc_id") % 2 == 1)
+    store = str(tmp_path / "store")
+    cs = CurationStream(spark, store)
+    cs.process_batch(b0, batch_id=0)
+    before = cs.funnel()
+
+    def boom(*a, **k):
+        raise RuntimeError("injected crash")
+
+    pairs = cs.sigs.incremental_pairs
+    cs.sigs.incremental_pairs = boom
+    with pytest.raises(RuntimeError, match="injected crash"):
+        cs.process_batch(b1, batch_id=1)
+    cs.sigs.incremental_pairs = pairs
+    assert cs.funnel() == before
+    shutil.copytree(store, str(tmp_path / "restart"))
+
+    cs.process_batch(b1, batch_id=1)
+    assert _ids(cs.clean()) == want
+
+    fresh = CurationStream(spark, str(tmp_path / "restart"))
+    live = {
+        os.path.basename(d)
+        for name in ("corpus", "pairs", "sigs")
+        for d in fresh.manifest.dirs(name)
+    }
+    assert set(os.listdir(str(tmp_path / "restart" / "data"))) == live
+    assert fresh.funnel() == before
+    fresh.process_batch(b1, batch_id=1)
+    assert _ids(fresh.clean()) == want
+
+
+def test_stream_delete_leaves_no_deleted_id_on_disk(spark, tmp_path, monkeypatch):
+    """After delete_docs, clean() equals the batch funnel over the corpus
+    minus the deleted docs, and no parquet file under the store holds a
+    deleted id — also when the writer died between the commit and the
+    sweep, once the store is reopened."""
+    from crypto_market_tracker_etl_spark.operators.store_manifest import (
+        StoreManifest,
+    )
+    from crypto_market_tracker_etl_spark.plans.curation_stream import (
+        CurationStream,
+    )
+
+    corpus = _small_corpus(spark)
+    base = _ids(run_curation(spark, corpus).clean)
+    originals = sorted(i for i in base if i < 100000)
+    # a clean original and its exact copy, plus one whose copy must be
+    # promoted when the original goes
+    deleted = {originals[0], originals[1], originals[1] + 200000}
+    want = _ids(
+        run_curation(spark, corpus.filter(~F.col("doc_id").isin(sorted(deleted)))).clean
+    )
+
+    store = str(tmp_path / "store")
+    cs = _stream_halves(spark, store, corpus)
+    assert cs.delete_docs(deleted) == {"deleted": 3}
+    assert _ids(cs.clean()) == want
+    assert not deleted & _parquet_ids(store)
+
+    crashed = str(tmp_path / "crashed")
+    cs = _stream_halves(spark, crashed, corpus)
+    with monkeypatch.context() as m:
+        m.setattr(StoreManifest, "sweep", lambda self: None)
+        cs.delete_docs(spark.createDataFrame([(i,) for i in deleted], "id long"))
+    assert deleted & _parquet_ids(crashed)  # superseded dirs still on disk
+    reopened = CurationStream(spark, crashed)
+    assert not deleted & _parquet_ids(crashed)
+    assert _ids(reopened.clean()) == want

@@ -272,9 +272,7 @@ def _near_dup_corpus(spark):
     return docs.unionByName(mutated)
 
 
-def test_minhash_store_incremental_equals_full(spark, tmp_path):
-    """Two incremental batches through the signature store must emit, in
-    union, exactly the from-scratch banded candidate-pair set."""
+def _assert_store_pairs_equal_full(spark, tmp_path, corpus):
     from crypto_market_tracker_etl_spark.operators.dedup import (
         lsh_candidate_pairs,
         minhash_signatures,
@@ -283,7 +281,6 @@ def test_minhash_store_incremental_equals_full(spark, tmp_path):
         MinHashSignatureStore,
     )
 
-    corpus = _near_dup_corpus(spark)
     a = corpus.filter(F.col("doc_id") % 2 == 0)
     b = corpus.filter(F.col("doc_id") % 2 == 1)
     store = MinHashSignatureStore(spark, str(tmp_path / "sigs"))
@@ -297,6 +294,19 @@ def test_minhash_store_incremental_equals_full(spark, tmp_path):
     want = {(r.id_a, r.id_b) for r in full.collect()}
     assert want, "augmented corpus must produce candidate pairs"
     assert got == want
+
+
+def test_minhash_store_incremental_equals_full(spark, tmp_path):
+    """Two incremental batches through the signature store must emit, in
+    union, exactly the from-scratch banded candidate-pair set."""
+    _assert_store_pairs_equal_full(spark, tmp_path, _near_dup_corpus(spark))
+
+
+def test_minhash_store_incremental_equals_full_small(spark, tmp_path):
+    """The same equality over the first 60 documents and their near-dup
+    copies: the default tier's seconds-scale case."""
+    corpus = _near_dup_corpus(spark).filter(F.col("doc_id") % 100000 < 60)
+    _assert_store_pairs_equal_full(spark, tmp_path, corpus)
 
 
 def test_minhash_store_signs_only_new_or_changed(spark, tmp_path):
@@ -2314,9 +2324,10 @@ def test_lm_perplexity_kn_matches_python_model(spark, tmp_path):
 
 
 def test_minhash_store_ignores_uncommitted_batch_dirs(spark, tmp_path):
-    """A crashed write leaves a batch dir without _SUCCESS: readers must
-    ignore it (no schema-inference wedge), new writes must number PAST it
-    (no errorifexists collision), and compact() sweeps it."""
+    """A write that died before its manifest commit leaves a data dir no
+    manifest references: readers never list it (no schema-inference
+    wedge on its torn file), the next commit's sweep removes it, and so
+    does opening the store."""
     import os
 
     from crypto_market_tracker_etl_spark.operators.incremental_dedup import (
@@ -2324,25 +2335,60 @@ def test_minhash_store_ignores_uncommitted_batch_dirs(spark, tmp_path):
     )
 
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    store = MinHashSignatureStore(spark, str(tmp_path / "sigs"))
+    path = str(tmp_path / "sigs")
+    store = MinHashSignatureStore(spark, path)
     n = docs.count()
     assert store.upsert_batch(docs).count() == n
-    # simulate a write that died mid-flight
-    partial = os.path.join(store.path, "batch=7")
-    os.makedirs(partial)
-    with open(os.path.join(partial, "part-00000.parquet"), "w") as f:
-        f.write("torn write")
+
+    def torn(name):
+        d = os.path.join(path, "data", name)
+        os.makedirs(d)
+        with open(os.path.join(d, "part-00000.parquet"), "w") as f:
+            f.write("torn write")
+        return d
+
+    partial = torn("crashed-upsert")
     assert store.read().count() == n  # partial dir invisible
     changed = docs.withColumn(
         "text",
         F.when(F.col("doc_id") == 3, F.concat(F.col("text"), F.lit(" x")))
         .otherwise(F.col("text")),
     )
-    assert store.upsert_batch(changed).count() == 1  # numbers past batch=7
-    assert os.path.isdir(os.path.join(store.path, "batch=8"))
-    store.compact()
-    assert not os.path.isdir(partial)  # swept
-    assert store.read().count() == n
+    assert store.upsert_batch(changed).count() == 1
+    assert not os.path.isdir(partial)  # swept by the commit
+    partial = torn("crashed-compact")
+    reopened = MinHashSignatureStore(spark, path)
+    assert not os.path.isdir(partial)  # swept by the open
+    assert reopened.read().count() == n
+    assert reopened.compact() == 2
+    assert len(os.listdir(os.path.join(path, "data"))) == 1
+    assert reopened.read().count() == n
+
+
+def test_minhash_store_second_writer_loses_cas(spark, tmp_path):
+    """Two writers on one store: the one committing from a stale
+    manifest version raises CommitConflictError (no retry, no merge),
+    the winner's batch is the store, and the loser's directory is swept
+    at the next open."""
+    import os
+
+    from crypto_market_tracker_etl_spark.operators.incremental_dedup import (
+        MinHashSignatureStore,
+    )
+    from crypto_market_tracker_etl_spark.operators.txn_sink import (
+        CommitConflictError,
+    )
+
+    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
+    path = str(tmp_path / "sigs")
+    first = MinHashSignatureStore(spark, path)
+    second = MinHashSignatureStore(spark, path)
+    n = first.upsert_batch(docs.filter(F.col("doc_id") % 2 == 0)).count()
+    with pytest.raises(CommitConflictError):
+        second.upsert_batch(docs.filter(F.col("doc_id") % 2 == 1))
+    reopened = MinHashSignatureStore(spark, path)
+    assert reopened.read().count() == n
+    assert len(os.listdir(os.path.join(path, "data"))) == 1
 
 
 def _py_bmp_dims(b: bytes):

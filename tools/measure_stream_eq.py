@@ -2,6 +2,12 @@
 sweep monsters: 53 s / 57 s in the committed r12 detail). Times each
 process_batch, delete_docs, compact, and the final clean+noop separately
 so the optimization targets the measured phase, not a guess (guide §1).
+Each phase runs under its own Spark job group; the table also reports
+the jobs each phase launched (``statusTracker``) and the live data
+directories per store after it — a read over more than 32 directories
+pays Spark's parallel-listing job.
+
+    python tools/measure_stream_eq.py [stream|delete]
 """
 
 from __future__ import annotations
@@ -51,46 +57,54 @@ def main() -> None:
     store = os.path.join(tempfile.gettempdir(), "measure_eq_" + run_token)
     shutil.rmtree(store, ignore_errors=True)
 
+    sc = spark.sparkContext
     t_all = time.perf_counter()
     cs = CurationStream(spark, store)
-    marks = [("init", time.perf_counter() - t_all)]
+    marks = [("init", time.perf_counter() - t_all, 0, "")]
 
-    def mark(label, t0):
-        marks.append((label, time.perf_counter() - t0))
+    def phase(label, fn):
+        sc.setJobGroup(label, label)
+        t0 = time.perf_counter()
+        fn()
+        sec = time.perf_counter() - t0
+        jobs = len(sc.statusTracker().getJobIdsForGroup(label))
+        dirs = " ".join(
+            f"{k}={len(v)}" for k, v in sorted(cs.manifest.doc["stores"].items())
+        )
+        marks.append((label, sec, jobs, dirs))
 
     for bid, rem in enumerate((2, 1, 0)):
-        t0 = time.perf_counter()
-        spark.sparkContext.setJobDescription(f"process_batch {bid}")
-        cs.process_batch(corpus.filter(F.col("doc_id") % 3 == rem), batch_id=bid)
-        mark(f"batch{bid}", t0)
+        phase(
+            f"batch{bid}",
+            lambda rem=rem, bid=bid: cs.process_batch(
+                corpus.filter(F.col("doc_id") % 3 == rem), batch_id=bid
+            ),
+        )
     if WHICH == "stream":
-        t0 = time.perf_counter()
-        spark.sparkContext.setJobDescription("retry batch 1")
-        cs.process_batch(corpus.filter(F.col("doc_id") % 3 == 1), batch_id=1)
-        mark("retry_b1", t0)
+        phase(
+            "retry_b1",
+            lambda: cs.process_batch(
+                corpus.filter(F.col("doc_id") % 3 == 1), batch_id=1
+            ),
+        )
     else:
         victims = corpus.select("doc_id").where(
             (F.col("doc_id") % 100 == 7)
             | ((F.col("doc_id") % 100 == 11) & (F.col("doc_id") < 100000))
         )
-        t0 = time.perf_counter()
-        spark.sparkContext.setJobDescription("delete_docs")
-        cs.delete_docs(victims)
-        mark("delete_docs", t0)
-    t0 = time.perf_counter()
-    spark.sparkContext.setJobDescription("compact")
-    cs.compact()
-    mark("compact", t0)
-    t0 = time.perf_counter()
-    spark.sparkContext.setJobDescription("clean+noop")
-    cs.clean().select(
-        "doc_id", "source", F.col("n_tok").cast("long").alias("n_tok"),
-        "content_fp",
-    ).write.format("noop").mode("overwrite").save()
-    mark("clean_noop", t0)
+        phase("delete_docs", lambda: cs.delete_docs(victims))
+    phase("compact", cs.compact)
+    phase(
+        "clean_noop",
+        lambda: cs.clean().select(
+            "doc_id", "source", F.col("n_tok").cast("long").alias("n_tok"),
+            "content_fp",
+        ).write.format("noop").mode("overwrite").save(),
+    )
     total = time.perf_counter() - t_all
-    for label, sec in marks:
-        print(f"{label:12s} {sec:7.3f}s")
+    print(f"{'phase':12s} {'wall':>8s} {'jobs':>5s}  dirs per store")
+    for label, sec, jobs, dirs in marks:
+        print(f"{label:12s} {sec:7.3f}s {jobs:5d}  {dirs}")
     print(f"{'TOTAL':12s} {total:7.3f}s")
     shutil.rmtree(store, ignore_errors=True)
     spark.stop()
