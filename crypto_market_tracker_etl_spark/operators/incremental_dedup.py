@@ -33,6 +33,8 @@ rates is orders of magnitude smaller than storing every doc's shingles.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -91,25 +93,38 @@ class MinHashSignatureStore:
         erasure — signatures are content-derived, so tombstone filtering
         alone would retain derived personal data). ``ids`` is a
         driver-side iterable or a DataFrame whose first column is the
-        ids; either way the purge is a containment probe (left_semi) and
-        a rewrite (left_anti) of only the batch directories holding a
-        victim — a DataFrame caller should hold it, every directory
-        probes it. The rewrites commit as one manifest commit (or join
-        the caller's open transaction). Returns the number of
-        directories rewritten."""
+        ids. One job finds the batch directories holding a victim (a
+        left_semi over one scan of the store, each row tagged with its
+        file); only those are rewritten (left_anti), as one manifest
+        commit (or joining the caller's open transaction). A DataFrame
+        caller should hold it: the probe and every rewrite read it.
+        Returns the number of directories rewritten."""
         idc = self.id_col
         vid = id_frame(self.spark, ids, idc)
-        rewritten = 0
+        rows = self.manifest.read(self.spark, self.STORE)
+        if rows is None:
+            return 0
+        hit = {
+            r[0].rsplit("/", 2)[-2]
+            for r in rows.select(idc, F.col("_metadata.file_path").alias("f"))
+            .join(vid, idc, "left_semi")
+            .select("f")
+            .distinct()
+            .collect()
+        }
+        dirs = [
+            d
+            for d in self.manifest.dirs(self.STORE)
+            if os.path.basename(d) in hit
+        ]
         with self.manifest.transaction("delete_docs"):
-            for d in self.manifest.dirs(self.STORE):
-                rows = self.spark.read.parquet(d)
-                if rows.join(vid, idc, "left_semi").isEmpty():
-                    continue
+            for d in dirs:
                 self.manifest.replace(
-                    self.STORE, rows.join(vid, idc, "left_anti"), old=[d]
+                    self.STORE,
+                    self.spark.read.parquet(d).join(vid, idc, "left_anti"),
+                    old=[d],
                 )
-                rewritten += 1
-        return rewritten
+        return len(dirs)
 
     def read(self) -> DataFrame:
         """Latest signature per doc across all batches (later batch wins —

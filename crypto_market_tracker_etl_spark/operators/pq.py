@@ -504,8 +504,9 @@ def ivf_pq_topk(
     (m table lookups). Work per query is Σ_probed |list| ADC lookups
     instead of n, and the codes scan reads m·log2(ks)/8 bytes per vector
     instead of 4·dim. For the write-once/probe-many form of the same
-    index (codes persisted partitioned by list_id, probing = partition
-    pruning, streaming appends) see operators/ann_index.py.
+    index (codes persisted partitioned by list_id under one manifest
+    commit per mutation, probing = partition pruning, streaming appends)
+    see operators/ann_index.py.
 
     The fused ``_adc_scan`` — one mapInPandas pass encodes each batch,
     probe-filters it, scores all queries, and emits per-partition top-R

@@ -7,8 +7,13 @@ Layout::
       data/<uuid>/*.parquet              # immutable store directories
 
 ``v{N}.json`` lists, per named store (the curation corpus, vhash, pairs
-and signature stores), the data directories that make it up, plus the
-small metadata its owners keep beside them (the curation funnel ledger).
+and signature stores; the ANN index's lists and tombstones), the data
+directories that make it up, plus the small metadata its owners keep
+beside them (the curation funnel ledger, the index's quantizers). A
+store may lay its directories out by a partition column
+(``data/<uuid>/list_id=<cid>/``). ``read``'s single scan is for
+unpartitioned stores: Spark refuses one scan over two partitioned
+roots, so a partitioned store's owner reads ``dirs`` one scan each.
 Every mutation writes only fresh ``data/<uuid>`` directories and then
 makes exactly ONE commit through the CAS the keyed-MERGE sink uses
 (``txn_sink.manifest_commit``), so all stores move together:
@@ -76,34 +81,53 @@ class StoreManifest:
         dirs = self.dirs(store)
         return spark.read.parquet(*dirs) if dirs else None
 
-    def append(self, store: str, df: DataFrame) -> str:
+    def append(
+        self, store: str, df: DataFrame, partition_by: str | None = None
+    ) -> str | None:
         """Write ``df`` to a fresh directory and add it to ``store``;
-        returns the directory. Commits by itself outside a transaction."""
+        returns the directory, or None when a partitioned write produced
+        no partition (see ``_write``). Commits by itself outside a
+        transaction."""
         with self.transaction(f"append {store}"):
-            d = self._write(df)
-            self.doc["stores"].setdefault(store, []).append(d)
-        return os.path.join(self._data_dir, d)
+            d = self._write(df, partition_by)
+            if d is not None:
+                self.doc["stores"].setdefault(store, []).append(d)
+        return d and os.path.join(self._data_dir, d)
 
     def replace(
-        self, store: str, df: DataFrame, old: list[str] | None = None
+        self,
+        store: str,
+        df: DataFrame,
+        old: list[str] | None = None,
+        partition_by: str | None = None,
     ) -> None:
         """Write ``df`` to a fresh directory that takes the place of the
         directories ``old`` (absolute, as ``dirs`` returns them; default:
         all of ``store``'s)."""
         with self.transaction(f"replace {store}"):
-            d = self._write(df)
+            d = self._write(df, partition_by)
             keep = []
             if old is not None:
                 gone = {os.path.basename(p) for p in old}
                 keep = [x for x in self.doc["stores"][store] if x not in gone]
-            self.doc["stores"][store] = keep + [d]
+            self.doc["stores"][store] = keep + ([d] if d else [])
 
-    def _write(self, df: DataFrame) -> str:
+    def _write(self, df: DataFrame, partition_by: str | None) -> str | None:
+        """``partition_by`` lays the directory out as ``<col>=<v>/``
+        children. An empty frame written that way leaves no child and no
+        schema to read back, so it is removed and None returned."""
         name = uuid.uuid4().hex
-        df.write.mode("errorifexists").parquet(
-            os.path.join(self._data_dir, name)
-        )
-        return name
+        path = os.path.join(self._data_dir, name)
+        w = df.write.mode("errorifexists")
+        if partition_by is not None:
+            w = w.partitionBy(partition_by)
+        w.parquet(path)
+        if partition_by is None or any(
+            n.startswith(partition_by + "=") for n in os.listdir(path)
+        ):
+            return name
+        shutil.rmtree(path)
+        return None
 
     @contextlib.contextmanager
     def transaction(self, op: str) -> Iterator[None]:

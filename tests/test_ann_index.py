@@ -1,9 +1,13 @@
 """Persistent IVF-PQ index (operators/ann_index.py): build / append /
-stream-maintain / probe, with probe parity against the ad-hoc scorer and a
-partition-pruning plan assertion (pruning IS the index lookup)."""
+stream-maintain / probe, with probe parity against the ad-hoc scorer, a
+partition-pruning plan assertion (pruning IS the index lookup) and crash
+safety through a failed manifest commit."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from crypto_market_tracker_etl_spark.catalog import load_table
@@ -14,6 +18,29 @@ from tests.conftest import SF_DIR, await_drain
 
 def _rows(df):
     return sorted(map(tuple, df.collect()))
+
+
+def _failed_commit(monkeypatch, spark, path, op):
+    """Run ``op`` with every manifest commit raising, then reopen the
+    index: the reopened index must be the last committed version, with
+    no data directory its manifest does not reference."""
+    from crypto_market_tracker_etl_spark.operators import store_manifest
+
+    def crash(*_a, **_k):
+        raise OSError("crash at commit")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(store_manifest, "manifest_commit", crash)
+        with pytest.raises(OSError, match="crash at commit"):
+            op()
+    idx = IvfPqIndex(spark, path)
+    live = {
+        os.path.basename(d)
+        for store in ("lists", "deletes")
+        for d in idx.manifest.dirs(store)
+    }
+    assert set(os.listdir(os.path.join(path, "data"))) == live
+    return idx
 
 
 def test_index_probe_matches_adhoc_scorer(spark, tmp_path):
@@ -88,17 +115,25 @@ def test_index_probe_prunes_partitions(spark, tmp_path):
     """The probed-lists filter must reach the scan as a PARTITION filter —
     non-probed lists' files are skipped before Spark lists them. This is
     the at-scale index lookup."""
+    import re
+
     emb = load_table(spark, SF_DIR, "embeddings")
-    idx = IvfPqIndex.build(spark, str(tmp_path / "idx"), emb, k_lists=8)
+    idx = IvfPqIndex.build(
+        spark, str(tmp_path / "idx"), emb.filter(F.col("vec_id") < 250),
+        k_lists=8,
+    )
+    idx.append(emb.filter(F.col("vec_id") >= 250))
+    assert len(idx.manifest.dirs("lists")) == 2
     q = emb.filter(F.col("vec_id") % 50 == 0)
     df = idx.probe(q, k=3, nprobe=2, rerank=50)
     jvm = spark._jvm
     s = df._jdf.queryExecution().explainString(
         jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
-    assert "PartitionFilters: [list_id" in s.replace("\n", " ") or (
-        "PartitionFilters" in s and "list_id" in s
-    ), s[:2000]
+    # one scan per directory, and every scan keeps the list_id filter
+    filters = re.findall(r"PartitionFilters: \[([^\]]*)\]", s)
+    assert len(filters) >= 2, s[:2000]
+    assert all("list_id" in f for f in filters), filters
     assert "SortMergeJoin" not in s and "CartesianProduct" not in s
 
 
@@ -128,51 +163,63 @@ def test_residual_index_round_trip(spark, tmp_path):
 
 def test_build_refuses_existing_index(spark, tmp_path):
     """In-place rebuild would mix codes from different quantizers under
-    one meta — build must refuse a path that already holds an index."""
-    import pytest
-
+    one meta — build must refuse a path that already holds an index, and
+    refuse any other non-empty path before opening it (opening sweeps
+    ``data/``), leaving its files alone."""
     emb = load_table(spark, SF_DIR, "embeddings")
     path = str(tmp_path / "idx")
     IvfPqIndex.build(spark, path, emb, k_lists=8)
-    with pytest.raises(ValueError, match="already holds an index"):
+    with pytest.raises(ValueError, match="not empty"):
         IvfPqIndex.build(spark, path, emb, k_lists=8)
+    other = tmp_path / "other"
+    (other / "data" / "keep").mkdir(parents=True)
+    with pytest.raises(ValueError, match="not empty"):
+        IvfPqIndex.build(spark, str(other), emb, k_lists=8)
+    with pytest.raises(FileNotFoundError, match="holds no index"):
+        IvfPqIndex(spark, str(other))
+    assert os.listdir(other / "data") == ["keep"]
 
 
-def test_compact_crash_recovery(spark, tmp_path):
-    """A compact that dies between its two renames leaves data/ missing
-    with the pre-compact copy under data.old-*; the next open must
-    self-heal and probe identically."""
-    import os
-    import shutil
-
+def test_compact_crash_recovery(spark, tmp_path, monkeypatch):
+    """A delete or a compact whose manifest commit fails leaves the index
+    exactly as it was: a fresh open probes identically, keeps the
+    tombstones the failed compact would have cleared, and sweeps the
+    failed call's directories."""
     emb = load_table(spark, SF_DIR, "embeddings")
     path = str(tmp_path / "idx")
     idx = IvfPqIndex.build(spark, path, emb, k_lists=8)
     q = emb.filter(F.col("vec_id") % 50 == 0)
-    want = _rows(idx.probe(q, k=3, nprobe=2, rerank=50))
-    # simulate the crash window: data renamed away, staged never landed
-    os.rename(os.path.join(path, "data"), os.path.join(path, "data.old-dead"))
-    idx2 = IvfPqIndex(spark, path)  # construction self-heals
-    assert _rows(idx2.probe(q, k=3, nprobe=2, rerank=50)) == want
-    # stale .old dirs from post-swap crashes are reclaimed by compact
-    shutil.copytree(
-        os.path.join(path, "data"), os.path.join(path, "data.old-stale")
-    )
-    idx2.compact()
-    assert not [
-        n for n in os.listdir(path) if n.startswith("data.old-")
-    ]
-    assert _rows(idx2.probe(q, k=3, nprobe=2, rerank=50)) == want
+    want = _rows(idx.probe(q, k=3, nprobe=8, rerank=50))
+    victims = sorted({r[1] for r in want})[:3]
+
+    idx = _failed_commit(monkeypatch, spark, path, lambda: idx.delete(victims))
+    assert _rows(idx.probe(q, k=3, nprobe=8, rerank=50)) == want
+
+    idx.delete(victims)
+    after = _rows(idx.probe(q, k=3, nprobe=8, rerank=50))
+    assert after != want and not {r[1] for r in after} & set(victims)
+    idx = _failed_commit(monkeypatch, spark, path, idx.compact)
+    assert _rows(idx.probe(q, k=3, nprobe=8, rerank=50)) == after
+    assert idx.read().count() == emb.count()  # nothing erased yet
+    idx.compact()
+    assert idx.read().count() == emb.count() - len(victims)
+    assert _rows(idx.probe(q, k=3, nprobe=8, rerank=50)) == after
 
 
 def test_probe_handles_empty_and_excess_nprobe(spark, tmp_path):
-    """Empty query sets return empty frames (not numpy shape errors), and
-    nprobe beyond the list count degrades to probing every list."""
+    """Empty query sets return empty frames (not numpy shape errors), an
+    empty batch (a foreachBatch micro-batch with no rows) commits no
+    unreadable directory, and nprobe beyond the list count degrades to
+    probing every list."""
     emb = load_table(spark, SF_DIR, "embeddings")
     idx = IvfPqIndex.build(spark, str(tmp_path / "idx"), emb, k_lists=8,
                            residual=True)
     none = emb.filter(F.col("vec_id") < 0)
     assert idx.probe(none, k=3).count() == 0
+    version = idx.manifest.version
+    idx.append(none)
+    assert idx.manifest.version == version
+    assert len(os.listdir(tmp_path / "idx" / "data")) == 1
     q = emb.filter(F.col("vec_id") % 100 == 0)
     big = idx.probe(q, k=3, nprobe=99, rerank=50)
     assert big.count() > 0
@@ -238,8 +285,6 @@ def test_delete_tombstones_then_compact_erases(spark, tmp_path):
     leave the data files, the tombstone dir clears, and probes are
     unchanged. Probe parity holds against the ad-hoc scorer over the
     corpus minus the deleted ids (same frozen quantizers)."""
-    import os
-
     emb = load_table(spark, SF_DIR, "embeddings")
     idx = IvfPqIndex.build(spark, str(tmp_path / "idx"), emb, k_lists=8)
     q = emb.filter(F.col("vec_id") % 50 == 0)
@@ -261,7 +306,7 @@ def test_delete_tombstones_then_compact_erases(spark, tmp_path):
     assert idx.read().count() == emb.count()  # suppressed, not yet erased
     idx.compact()
     assert idx.read().count() == n_live  # physically gone
-    assert not os.path.isdir(str(tmp_path / "idx" / "_deletes"))
+    assert idx.manifest.dirs("deletes") == []
     assert _rows(idx.probe(q, k=3, nprobe=8, rerank=50)) == want
 
 
@@ -269,8 +314,6 @@ def test_compact_refuses_to_empty_the_index(spark, tmp_path):
     """Tombstoning EVERY vector then compacting must refuse (a file-less
     data dir would brick reads and clearing tombstones would lose the
     deletes) — and leave suppression fully intact."""
-    import pytest
-
     emb = load_table(spark, SF_DIR, "embeddings")
     idx = IvfPqIndex.build(spark, str(tmp_path / "idx"), emb, k_lists=4)
     idx.delete(emb.select("vec_id"))
@@ -296,8 +339,7 @@ def test_delete_plain_iterable_matches_stored_id_type(spark, tmp_path):
     n = idx.read().count()
     victims = ["doc-0", "doc-7"]
     idx.delete(victims)  # plain python list of STRING ids
-    tombs = {r["sid"] for r in spark.read.parquet(
-        str(tmp_path / "idx_s" / "_deletes")).collect()}
+    tombs = {r["sid"] for r in idx.manifest.read(spark, "deletes").collect()}
     assert tombs == set(victims)  # typed string, not a long-cast crash
     idx.compact()  # physical erasure path anti-joins on the string ids
     left = {r["sid"] for r in idx.read().select("sid").collect()}
@@ -309,32 +351,25 @@ def test_delete_plain_iterable_on_empty_index_is_loud(spark, tmp_path):
     """Regression (review r4): a plain-iterable delete before the first
     append cannot know the id type — it must raise the documented error,
     not crash in spark.read or silently write a mistyped tombstone."""
-    import json as _json
-    import os as _os
-
-    import pytest
+    from crypto_market_tracker_etl_spark.operators.txn_sink import (
+        manifest_commit,
+    )
 
     idx_path = str(tmp_path / "empty_idx")
-    _os.makedirs(idx_path)
-    _json.dump(
-        {"centroids": [[0.0] * 64], "codebooks": [], "residual": False,
-         "id_col": "vec_id", "vec_col": "embedding"},
-        open(_os.path.join(idx_path, "_index_meta.json"), "w"),
-    )
+    meta = {"centroids": [[0.0] * 64], "codebooks": [], "residual": False,
+            "id_col": "vec_id", "vec_col": "embedding"}
+    assert manifest_commit(idx_path, 0, {"stores": {}, "index": meta})
     idx = IvfPqIndex(spark, idx_path)
     with pytest.raises(ValueError, match="no stored vectors"):
         idx.delete([1, 2])
 
 
-def test_maintain_recluster_lifecycle(spark, tmp_path):
+def test_maintain_recluster_lifecycle(spark, tmp_path, monkeypatch):
     """The detect→repair loop: build → append a far-away cluster →
-    drift() trips the threshold → maintain() rebuilds with fresh
-    quantizers and swaps → reconstruction health and probe recall are
-    restored, tombstones resolved, and an interrupted swap rolls back
-    to the intact original on the next open."""
-    import os
-    import shutil
-
+    drift() trips the threshold → a maintain() whose commit fails leaves
+    the index as it was → maintain() re-derives the quantizers in one
+    commit → reconstruction health and probe recall are restored and
+    tombstones resolved."""
     emb = load_table(spark, SF_DIR, "embeddings")
     path = str(tmp_path / "idx")
     idx = IvfPqIndex.build(spark, path, emb, k_lists=8)
@@ -357,6 +392,15 @@ def test_maintain_recluster_lifecycle(spark, tmp_path):
     assert idx.drift()["ratio"] > 2.0
 
     n_live = idx.read().count() - 2
+    q0 = emb.filter(F.col("vec_id") % 50 == 0)
+    before = _rows(idx.probe(q0, k=3, nprobe=2, rerank=50))
+    centroids = idx.centroids
+    idx = _failed_commit(monkeypatch, spark, path, idx.maintain)
+    assert idx.centroids == centroids
+    assert _rows(idx.probe(q0, k=3, nprobe=2, rerank=50)) == before
+    assert idx.read().count() == n_live + 2
+    assert idx.drift()["ratio"] > 2.0
+
     rep1 = idx.maintain()
     assert rep1["rebuilt"] is True and rep1["ratio"] > 2.0
     # fresh quantizers: health restored to a self-consistent baseline
@@ -365,12 +409,13 @@ def test_maintain_recluster_lifecycle(spark, tmp_path):
     assert rep1["mse_after"] == rep2["mse"]
     # tombstones physically resolved, none carried over
     assert idx.read().count() == n_live
-    assert idx._tombstones() is None
+    assert idx.manifest.dirs("deletes") == []
+    assert len(idx.manifest.dirs("lists")) == 1
+    assert idx.centroids != centroids
     stored = {r.vec_id for r in idx.read().select("vec_id").collect()}
     assert not set(victims) & stored
-    assert not os.path.isdir(path + ".rebuilding")
 
-    # probe correctness after the swap: the shifted cluster is now
+    # probe correctness after the rebuild: the shifted cluster is now
     # IN-distribution, so its nearest neighbor must be found exactly
     # probe correctness vs BRUTE FORCE (probes exclude self by design):
     # the rerank pool must cover the whole 100-vector cluster — its
@@ -394,38 +439,6 @@ def test_maintain_recluster_lifecycle(spark, tmp_path):
         d[ids == r.vec_id] = np.inf  # the probe's self-exclusion
         want[r.vec_id] = int(ids[int(np.argmin(d))])
     assert got == want
-
-    # interrupted swap: live path renamed aside (no meta at path) — the
-    # next open must roll back to the parked original, intact
-    parked = path + ".old-deadbeef"
-    os.rename(path, parked)
-    shutil.copytree(parked, path + ".rebuilding")  # half-promoted debris
-    idx2 = IvfPqIndex(spark, path)
-    assert idx2.read().count() == n_live
-    assert not os.path.isdir(parked)
-    assert not os.path.isdir(path + ".rebuilding")
-
-    # crash mid-BUILD (before any swap): only a staging orphan exists
-    # next to an intact live index. The next open must reclaim it even
-    # though drift is back under the threshold — maintain()'s own
-    # cleanup would never run again (review r9)
-    shutil.copytree(path, path + ".rebuilding")
-    idx3 = IvfPqIndex(spark, path)
-    assert not os.path.isdir(path + ".rebuilding")
-    assert idx3.read().count() == n_live
-    # but a staging dir next to a META-LESS live path with no parked
-    # original is NOT reclaimed: it may be the only surviving copy
-    shutil.copytree(path, path + ".rebuilding")
-    os.remove(os.path.join(path, "_index_meta.json"))
-    try:
-        IvfPqIndex(spark, path)
-    except Exception:
-        pass  # meta-less live path cannot open; only recovery matters
-    assert os.path.isdir(path + ".rebuilding")
-    # restore for any later assertions
-    shutil.rmtree(path)
-    os.rename(path + ".rebuilding", path)
-    assert IvfPqIndex(spark, path).read().count() == n_live
 
 
 def test_drift_baseline_and_distribution_shift(spark, tmp_path):

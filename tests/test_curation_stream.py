@@ -217,11 +217,11 @@ def _crash_matrix(spark, tmp_path, monkeypatch, tag, prepare, op):
     crash_at = [None]
     real_write = StoreManifest._write
 
-    def write(self, df):
+    def write(self, df, partition_by):
         writes.append(df)
         if len(writes) == crash_at[0]:
             raise RuntimeError("injected crash")
-        return real_write(self, df)
+        return real_write(self, df, partition_by)
 
     ref = str(tmp_path / f"{tag}-ref")
     shutil.copytree(base, ref)

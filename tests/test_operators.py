@@ -333,6 +333,39 @@ def test_minhash_store_signs_only_new_or_changed(spark, tmp_path):
     assert fp[1] == resigned.collect()[0].content_fp
 
 
+def test_minhash_store_delete_docs_rewrites_only_victim_dirs(spark, tmp_path):
+    """delete_docs over three batch directories, one holding no victim:
+    it rewrites exactly the two that do (the third keeps its directory),
+    returns 2, and leaves every other signature row in place."""
+    import os
+
+    from crypto_market_tracker_etl_spark.operators.incremental_dedup import (
+        MinHashSignatureStore,
+    )
+
+    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
+    store = MinHashSignatureStore(spark, str(tmp_path / "sigs"))
+    for r in range(3):
+        store.upsert_batch(docs.filter(F.col("doc_id") % 3 == r))
+    dirs = store.manifest.dirs(store.STORE)
+    assert len(dirs) == 3
+    ids = sorted(r.doc_id for r in docs.select("doc_id").collect())
+    victims = [i for i in ids if i % 3 == 0][:2]
+    victims += [i for i in ids if i % 3 == 1][:1]
+    before = {(r.doc_id, tuple(r.minhash)) for r in store.read().collect()}
+
+    assert store.delete_docs(victims + [-1]) == 2
+    after = store.manifest.dirs(store.STORE)
+    assert len(after) == 3 and [d for d in dirs if d in after] == [dirs[2]]
+    assert {(r.doc_id, tuple(r.minhash)) for r in store.read().collect()} == {
+        x for x in before if x[0] not in victims
+    }
+    assert store.delete_docs(victims) == 0
+    assert sorted(os.listdir(tmp_path / "sigs" / "data")) == sorted(
+        os.path.basename(d) for d in after
+    )
+
+
 def test_chunk_documents_invariants(spark):
     """Chunking must tile the token stream: chunk 0 starts the doc, full
     chunks are exactly chunk_tokens long, consecutive chunks overlap by

@@ -528,6 +528,32 @@ def test_cms_sketch_is_mergeable(spark):
     assert merged == whole
 
 
+def _assert_setsim_matches_model(spark, rows, tau):
+    """set_similarity_join over (doc_id, w) membership ``rows`` vs the
+    pure-Python pair census over the same rows read as sets."""
+    from crypto_market_tracker_etl_spark.operators.dedup import (
+        set_similarity_join,
+    )
+
+    sets: dict = {}
+    for doc, w in rows:
+        sets.setdefault(doc, set()).add(w)
+    tokens = spark.createDataFrame(rows, "doc_id long, w string")
+    got = {
+        (r["doc_a"], r["doc_b"]): r["jaccard"]
+        for r in set_similarity_join(tokens, tau).collect()
+    }
+    want = {}
+    docs = sorted(sets)
+    for i, a in enumerate(docs):
+        for b in docs[i + 1 :]:
+            o = len(sets[a] & sets[b])
+            j = o / len(sets[a] | sets[b])
+            if j >= tau:
+                want[(a, b)] = round(j, 4)
+    assert got == want, (got, want, sets, tau)
+
+
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
     sets=st.lists(
@@ -544,43 +570,32 @@ def test_set_similarity_join_matches_brute_force(spark, sets, tau):
     collections across thresholds — the pure-Python model here is the
     third independent check beyond the DuckDB brute-force oracle and the
     planted-duplicate corpus."""
-    from crypto_market_tracker_etl_spark.operators.dedup import (
-        set_similarity_join,
-    )
-
     rows = [(i, f"e{e}") for i, s in enumerate(sets) for e in s]
-    tokens = spark.createDataFrame(rows, "doc_id long, w string")
-    got = {
-        (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in set_similarity_join(tokens, tau).collect()
-    }
-    want = {}
-    for a in range(len(sets)):
-        for b in range(a + 1, len(sets)):
-            o = len(sets[a] & sets[b])
-            j = o / len(sets[a] | sets[b])
-            if j >= tau:
-                want[(a, b)] = round(j, 4)
-    assert got == want, (got, want, sets, tau)
+    _assert_setsim_matches_model(spark, rows, tau)
 
 
-@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
-@given(
-    edge_set=st.sets(
-        st.tuples(
-            st.integers(min_value=0, max_value=12),
-            st.integers(min_value=0, max_value=12),
-        ),
-        min_size=1,
-        max_size=30,
-    )
-)
-def test_triangle_stats_matches_brute_force(spark, edge_set):
-    """triangle_stats vs an O(n³) pure-Python census on random small
-    graphs: the degree-orientation packing (deg·2³² + id, rank-domain
-    guards) is subtle enough to deserve the same third independent check
-    the setsim join has (the id-domain guard bug was found by exactly
-    this kind of test)."""
+def test_set_similarity_join_matches_brute_force_small(spark):
+    """The same check on one fixed collection at two thresholds: the
+    default tier's seconds-scale case. Docs 0 and 3 repeat membership
+    rows; a repeated (doc_id, w) row is the same element, so J must come
+    out as for the deduplicated sets."""
+    sets = [
+        {1, 2, 3, 4},
+        {1, 2, 3, 5},
+        {1, 2, 3, 4, 6},
+        {7, 8},
+        {7, 8, 9},
+        {2, 10},
+    ]
+    rows = [(i, f"e{e}") for i, s in enumerate(sets) for e in sorted(s)]
+    rows += [(0, "e1"), (0, "e4"), (3, "e7"), (3, "e7")]
+    for tau in (0.5, 0.8):
+        _assert_setsim_matches_model(spark, rows, tau)
+
+
+def _assert_triangles_match_model(spark, edge_set):
+    """triangle_stats vs an O(n³) pure-Python census of the undirected
+    simple graph ``edge_set`` describes (self-loops dropped)."""
     from itertools import combinations
 
     from crypto_market_tracker_etl_spark.operators.graph import triangle_stats
@@ -610,6 +625,36 @@ def test_triangle_stats_matches_brute_force(spark, edge_set):
     assert got["n_triangles"] == n_tri
     want_cc = round(3 * n_tri / max(n_wedges, 1), 4)
     assert abs(got["global_clustering"] - want_cc) < 1e-9, (got, und)
+
+
+@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    edge_set=st.sets(
+        st.tuples(
+            st.integers(min_value=0, max_value=12),
+            st.integers(min_value=0, max_value=12),
+        ),
+        min_size=1,
+        max_size=30,
+    )
+)
+def test_triangle_stats_matches_brute_force(spark, edge_set):
+    """triangle_stats vs an O(n³) pure-Python census on random small
+    graphs: the degree-orientation packing (deg·2³² + id, rank-domain
+    guards) is subtle enough to deserve the same third independent check
+    the setsim join has (the id-domain guard bug was found by exactly
+    this kind of test)."""
+    _assert_triangles_match_model(spark, edge_set)
+
+
+def test_triangle_stats_matches_brute_force_small(spark):
+    """The same census on one fixed graph: the default tier's
+    seconds-scale case. A 4-clique (4 triangles) shares vertex 3 with a
+    triangle 3-4-5, vertex 0 is a hub with two pendant leaves, and a
+    self-loop is dropped."""
+    clique = {(a, b) for a in range(4) for b in range(a + 1, 4)}
+    edge_set = clique | {(3, 4), (4, 5), (3, 5), (0, 6), (0, 7), (8, 8)}
+    _assert_triangles_match_model(spark, edge_set)
 
 
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
